@@ -8,12 +8,16 @@ checks REPORT violations, they never fail the pipeline — real SEC data is
 known-dirty (backend/ValidationsNote.md).
 
 Each Check produces a violations DataFrame (rows that break the rule —
-dbt's store-failures shape); `run_checks` folds them into one summary.
+dbt's store-failures shape), which `store_failures` persists. `run_checks`
+counts the whole suite in one Spark action: a table's per-row checks share
+one conditional-count aggregate over that table, and each unique or
+foreign-key check adds one one-row count.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame
@@ -27,11 +31,14 @@ class Check:
     # tables dict -> violations DataFrame
     build: Callable[[dict[str, DataFrame]], DataFrame]
     severity: str = "warn"
+    # per-row predicate (row checks only): a row violates the rule where
+    # it is true; `run_checks` counts these without building violations
+    bad: Column | None = None
 
 
 def row_check(name: str, table: str, bad: Column, severity: str = "warn") -> Check:
     """Per-row predicate check: violations are rows where `bad` is true."""
-    return Check(name, table, lambda tables: tables[table].filter(bad), severity)
+    return Check(name, table, lambda tables: tables[table].filter(bad), severity, bad)
 
 
 def not_null(table: str, col: str) -> Check:
@@ -158,17 +165,40 @@ def sec_checks() -> list[Check]:
 
 def run_checks(tables: dict[str, DataFrame], checks: list[Check]) -> DataFrame:
     """Evaluate checks → one summary DataFrame (rule, table, n_violations,
-    severity). Warn-severity: callers report, never raise.
+    severity), one row per check in `checks` order. Warn-severity: callers
+    report, never raise.
 
-    Each check is a separate tiny Spark job; at scale, group the per-row
-    checks of one table into a single pass with conditional counts
-    (see `run_row_checks_fused`).
+    The suite runs as a single Spark action. The row checks of one table
+    become ``count_if(bad)`` columns of one aggregate over that table (one
+    scan, however many rules); each other check (unique key, foreign key)
+    counts its violations frame to one row. The parts are unioned and
+    collected once, and the summary is built from the collected counts.
+    ``count_if`` counts 0 over an empty table, where ``SUM(CASE …)`` gives
+    NULL.
     """
     spark = next(iter(tables.values())).sparkSession
-    rows = []
-    for check in checks:
-        n = check.build(tables).count()
-        rows.append((check.name, check.table, n, check.severity))
+    # (indexes into `checks`, frame, one count column per index)
+    parts: list[tuple[list[int], DataFrame, list[Column]]] = []
+    row_checks: dict[str, list[int]] = {}
+    for i, check in enumerate(checks):
+        if check.bad is None:
+            parts.append(([i], check.build(tables), [F.count(F.lit(1))]))
+        else:
+            row_checks.setdefault(check.table, []).append(i)
+    for table, idx in row_checks.items():
+        parts.append((idx, tables[table], [F.count_if(checks[i].bad) for i in idx]))
+
+    n_violations: dict[int, int] = {}
+    if parts:
+        counted = [
+            frame.agg(F.lit(p).alias("part"), F.array(*counts).alias("n"))
+            for p, (_, frame, counts) in enumerate(parts)
+        ]
+        for row in reduce(DataFrame.union, counted).collect():
+            n_violations.update(zip(parts[row.part][0], row.n))
+    rows = [
+        (c.name, c.table, n_violations[i], c.severity) for i, c in enumerate(checks)
+    ]
     return spark.createDataFrame(
         rows, "rule string, table string, n_violations long, severity string"
     )
@@ -190,8 +220,8 @@ def store_failures(
     ``failures_path`` column pointing at each audit table.
 
     Scale note: one write job per check, each a single scan + filter (or
-    agg for unique/FK) — the same jobs `run_checks` runs, with a sink
-    instead of a count, so the audit pass costs no extra scans.
+    agg for unique/FK), plus a count of what it wrote. Use it for an audit
+    pass; `run_checks` gives the same counts in one action.
     """
     import os
 
@@ -207,19 +237,4 @@ def store_failures(
         rows,
         "rule string, table string, n_violations long, severity string, "
         "failures_path string",
-    )
-
-
-def run_row_checks_fused(df: DataFrame, bads: dict[str, Column]) -> DataFrame:
-    """Scale path: evaluate many per-row predicates on one table in a
-    single scan — SUM(CASE WHEN bad) per rule, one job instead of N."""
-    aggs = [
-        F.sum(F.when(bad, 1).otherwise(0)).cast("long").alias(name)
-        for name, bad in bads.items()
-    ]
-    wide = df.agg(*aggs)
-    names = list(bads)
-    stack = ", ".join(f"'{n}', `{n}`" for n in names)
-    return wide.selectExpr(
-        f"stack({len(names)}, {stack}) as (rule, n_violations)"
     )

@@ -221,19 +221,40 @@ def test_validation_suite(tables):
     assert by_rule["sec_sub.adsh_not_null"] == 0
 
 
-def test_fused_row_checks(tables):
-    from dynaledger_spark.functions.validation import run_row_checks_fused
-
-    sub = tables["sec_sub"]
-    out = run_row_checks_fused(
-        sub,
-        {
-            "sic_range": ~F.col("sic").between(100, 9999) & F.col("sic").isNotNull(),
-            "period_null": F.col("period").isNull(),
-        },
+def test_run_checks_matches_per_check_violations(tables):
+    """The fused summary equals each check's own violations frame, row for
+    row in suite order, with the summary schema."""
+    clean = {k: v.drop(ROW_ID) for k, v in tables.items()}
+    checks = sec_checks()
+    summary = run_checks(clean, checks)
+    assert summary.schema.simpleString() == (
+        "struct<rule:string,table:string,n_violations:bigint,severity:string>"
     )
-    got = {r.rule: r.n_violations for r in out.collect()}
-    assert got == {"sic_range": 1, "period_null": 1}
+    got = [tuple(r) for r in summary.collect()]
+    want = [(c.name, c.table, c.build(clean).count(), c.severity) for c in checks]
+    assert got == want
+
+
+def test_run_checks_empty_tables_count_zero(tables):
+    empty = {k: v.drop(ROW_ID).where(F.lit(False)) for k, v in tables.items()}
+    rows = run_checks(empty, sec_checks()).collect()
+    assert len(rows) == len(sec_checks()) == 43
+    assert all(r.n_violations == 0 for r in rows)
+
+
+def test_run_checks_is_one_action(spark, tables):
+    """One action for the whole suite: Spark jobs are the union's shuffle
+    and broadcast stages, not one (or more) per rule."""
+    clean = {k: v.drop(ROW_ID) for k, v in tables.items()}
+    sc = spark.sparkContext
+    group = "test_run_checks_is_one_action"
+    sc.setJobGroup(group, "run_checks")
+    try:
+        run_checks(clean, sec_checks()).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 20
 
 
 # ---------------------------------------------------------------------------
