@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dynaledger_spark.functions.sanitize import sanitize_floats
+from dynaledger_spark.operators.backfill import RAW_COLUMNS, raw_statement_join
 
 # data_type → pre.stmt code for RAW queries (backend/main.py:156-160).
 # Note the reference maps Income Statement to 'IC' here while the dbt fact
@@ -71,25 +72,10 @@ class SecEngine:
             sub = self.tables["sec_sub"].filter(F.col("source_file") == tag)
             pre = self.tables["sec_pre"].filter(F.col("source_file") == tag)
             num = self.tables["sec_num"].filter(F.col("source_file") == tag)
-            # 3-way join: sub ⋈_adsh pre ⋈_(adsh,tag,version) num
-            # (backend/main.py:163-177); sub is one-row-per-filing →
-            # broadcastable against millions of num facts.
             return (
-                sub.alias("s")
-                .join(pre.alias("p"), F.col("s.adsh") == F.col("p.adsh"))
-                .join(
-                    num.alias("n"),
-                    (F.col("s.adsh") == F.col("n.adsh"))
-                    & (F.col("p.tag") == F.col("n.tag"))
-                    & (F.col("p.version") == F.col("n.version")),
-                )
+                raw_statement_join(sub, pre, num)
                 .filter(F.col("p.stmt") == stmt)
-                .select(
-                    "s.adsh", "s.cik", "s.name", "s.sic", "s.countryba",
-                    "s.stprba", "s.cityba", "s.filed",
-                    "p.line", "p.plabel",
-                    "n.tag", "n.version", "n.ddate", "n.qtrs", "n.uom", "n.value",
-                )
+                .select(*RAW_COLUMNS)
                 .orderBy("adsh", "line")
             )
         if source == "FACT TABLES":

@@ -1,11 +1,12 @@
 """Multi-quarter SEC backfill: quarterly accretion into a partitioned
-fact store and a bucketed raw store.
+fact store and a partitioned RAW statement store.
 
 The reference operates strictly per quarter: the loader names every raw
 table `sec_{sub,tag,num,pre}_{Y}Q{q}` (snowflake_raw_data_loader.py:50)
 and discovers the latest loaded quarter before appending
 (load_json_data_snowflake.py:30-59). Here that operating mode is two
-layouts written once per quarter:
+layouts written once per quarter, both laid out for the dashboard's
+recurring (quarter, statement) read:
 
 * **Partitioned facts** — `build_facts_single_pass` output appended
   under `partitionBy(source_file, statement_type)`. A statement query
@@ -13,24 +14,28 @@ layouts written once per quarter:
   (~40 quarters x 3 statements) the recurring dashboard read touches
   <1% of the store, and the pruning is directory-level (no data files
   opened), plan-visible as PartitionFilters.
-* **Bucketed raw tables** — sec_sub / sec_pre / sec_num appended into
-  tables co-bucketed on `adsh`. The recurring RAW statement query
+* **RAW statement store** — the RAW statement query
   (backend/main.py:163-177: sub ⋈_adsh pre ⋈_(adsh,tag,version) num)
-  then plans with ZERO Exchange: every join key set contains adsh, both
-  sides of each join arrive hash-distributed on adsh from the scan, so
-  the shuffle is paid once at ingest and never again — for every later
-  quarter's append AND every later query. That is the large-large
-  posture: at 100 TB neither num (billions of facts) nor pre (hundreds
-  of millions of lines) is broadcastable.
+  is run once per quarter at append time and its rows are written into
+  one catalog table, `sec_statement_<suffix>`, partitioned by
+  `(source_file, stmt)`. The join is paid once at ingest; every later
+  refresh is a scan of one leaf directory with both predicates as
+  PartitionFilters — no join, no exchange, no other quarter's files
+  opened. This is the ingest-time serving layout of Krypton
+  (VLDB 2023): materialize what the read needs, partitioned the way the
+  read filters. The table keeps SecEngine's 16-column RAW projection
+  plus `stmt`, and both build the join through `raw_statement_join`.
 
-Subset-key co-partitioning: the pre ⋈ num join keys are (adsh, tag,
-version), a SUPERSET of the bucket key. Spark >= 3.3 refuses to reuse a
-subset partitioning by default (`requireAllClusterKeysForCoPartition` —
-hashing fewer keys can concentrate skew), so `bucketed_statement_join`
-flips that conf off for its session: adsh is the per-filing accession
-number — unique per filing, group size bounded by one filing's fact
-count — so distributing on adsh alone cannot skew, and the reuse is
-exactly what the layout was built for.
+Re-running a quarter is safe: the statement table is created with the
+table option `partitionOverwriteMode='dynamic'` and each append is an
+`insertInto(..., overwrite=True)`, so a re-run replaces only the
+`(source_file, stmt)` partitions it writes and leaves every other
+quarter untouched. The option lives on the table, not on the session,
+so no other query's writes change behaviour.
+
+Latest-quarter discovery reads the fact store's `source_file=`
+directory names through the root's Hadoop FileSystem: no Spark job and
+no data file opened, on local disk, HDFS and S3 alike.
 """
 
 from __future__ import annotations
@@ -40,7 +45,18 @@ from pyspark.sql import functions as F
 
 from dynaledger_spark.operators.facts import build_facts_single_pass
 
-RAW_BUCKETED = ("sec_sub", "sec_pre", "sec_num")
+# SecEngine's RAW projection (backend/main.py:163-177), over the
+# aliases of `raw_statement_join`
+RAW_COLUMNS = (
+    "s.adsh", "s.cik", "s.name", "s.sic", "s.countryba", "s.stprba", "s.cityba",
+    "s.filed", "p.line", "p.plabel",
+    "n.tag", "n.version", "n.ddate", "n.qtrs", "n.uom", "n.value",
+)
+# the dashboard refresh's projection of a statement store row
+REFRESH_COLUMNS = (
+    "adsh", "cik", "name", "filed", "line", "plabel",
+    "tag", "version", "ddate", "qtrs", "uom", "value",
+)
 
 
 def append_quarter_facts(
@@ -66,10 +82,16 @@ def read_facts(spark: SparkSession, root: str) -> DataFrame:
 
 def latest_fact_quarter(spark: SparkSession, root: str) -> str | None:
     """Latest-partition discovery (load_json_data_snowflake.py:30-59):
-    source_file is a partition column, so MAX folds directory names —
-    no fact data files are read."""
-    row = read_facts(spark, root).agg(F.max("source_file")).first()
-    return row[0] if row else None
+    the max over the `source_file=` directory names under `root`, listed
+    through the path's Hadoop FileSystem. Runs no Spark job and opens no
+    fact file; None for a missing or empty root."""
+    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(root)
+    fs = path.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    if not fs.exists(path):
+        return None
+    prefix = "source_file="
+    names = (status.getPath().getName() for status in fs.listStatus(path) if status.isDirectory())
+    return max((n[len(prefix):] for n in names if n.startswith(prefix)), default=None)
 
 
 def statement_facts(
@@ -83,75 +105,11 @@ def statement_facts(
     )
 
 
-def append_quarter_bucketed(
-    typed: dict[str, DataFrame], n_buckets: int = 8, suffix: str = "bkt"
-) -> None:
-    """Accrete one quarter's raw sub/pre/num into adsh-bucketed tables.
-
-    All three tables share (bucket col, bucket count), so every join of
-    the RAW statement query is bucket-co-located; appends preserve the
-    bucket spec, keeping the property across an arbitrarily long
-    backfill."""
-    for table in RAW_BUCKETED:
-        (
-            typed[table]
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(n_buckets, "adsh")
-            .sortBy("adsh")
-            .saveAsTable(f"{table}_{suffix}")
-        )
-
-
-def drop_bucketed(spark: SparkSession, suffix: str = "bkt") -> None:
-    """Idempotence helper for tests/benches: clear the bucketed store."""
-    import os
-    import shutil
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    for table in RAW_BUCKETED:
-        name = f"{table}_{suffix}"
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        loc = os.path.join(warehouse.removeprefix("file:"), name.lower())
-        shutil.rmtree(loc, ignore_errors=True)
-
-
-def bucketed_statement_join(
-    spark: SparkSession, quarter: str, stmt: str, suffix: str = "bkt"
-) -> DataFrame:
-    """The RAW statement query (api.SecEngine.financial_data_frame,
-    reference backend/main.py:163-177) over the bucketed store:
-
-        sub ⋈_adsh pre ⋈_(adsh, tag, version) num,  pre.stmt = <S>
-
-    Both join key sets contain the bucket column adsh, and all three
-    scans emit the same HashPartitioning(adsh, n) — Catalyst plans a
-    SortMergeJoin chain with no Exchange on any side (plan-pinned with
-    broadcast disabled in tests). The presentation ORDER BY from the
-    API layer is intentionally omitted: a global sort is a range
-    exchange by definition and belongs to the client edge, not the
-    recurring join."""
-    # allow HashPartitioning(adsh) to satisfy the (adsh, tag, version)
-    # join distribution — skew-safe here, see module docstring. The
-    # conf is consulted at PLAN time (first action), so flipping it on
-    # the shared session would silently change join planning for every
-    # later query (ADVICE r9 item 3). Scope it to a cloned session
-    # instead: newSession() shares the SparkContext and the persistent
-    # catalog (the bucketed tables) but has its own SQLConf; copy the
-    # parent's runtime-set confs so test-pinned settings (e.g.
-    # autoBroadcastJoinThreshold) carry over, then flip the subset-key
-    # conf only on the clone. The returned DataFrame is bound to the
-    # clone, so the relaxed co-partitioning lives exactly as long as it.
-    scoped = spark.newSession()
-    for row in spark.sql("SET").collect():
-        try:
-            scoped.conf.set(row.key, row.value)
-        except Exception:
-            pass  # static/immutable confs can't be re-set; inherited anyway
-    scoped.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    sub = scoped.table(f"sec_sub_{suffix}").where(F.col("source_file") == quarter)
-    pre = scoped.table(f"sec_pre_{suffix}").where(F.col("source_file") == quarter)
-    num = scoped.table(f"sec_num_{suffix}").where(F.col("source_file") == quarter)
+def raw_statement_join(sub: DataFrame, pre: DataFrame, num: DataFrame) -> DataFrame:
+    """sub ⋈_adsh pre ⋈_(adsh, tag, version) num (backend/main.py:163-177)
+    with the sides aliased s, p and n; callers filter and project (see
+    RAW_COLUMNS). sub is one row per filing, so it broadcasts against
+    the facts."""
     return (
         sub.alias("s")
         .join(pre.alias("p"), F.col("s.adsh") == F.col("p.adsh"))
@@ -161,10 +119,56 @@ def bucketed_statement_join(
             & (F.col("p.tag") == F.col("n.tag"))
             & (F.col("p.version") == F.col("n.version")),
         )
-        .filter(F.col("p.stmt") == stmt)
-        .select(
-            "s.adsh", "s.cik", "s.name", "s.filed",
-            "p.line", "p.plabel",
-            "n.tag", "n.version", "n.ddate", "n.qtrs", "n.uom", "n.value",
-        )
+    )
+
+
+def statement_table(suffix: str = "bkt") -> str:
+    return f"sec_statement_{suffix}"
+
+
+def append_quarter_bucketed(typed: dict[str, DataFrame], suffix: str = "bkt") -> None:
+    """Accrete one quarter's RAW statement rows into the statement store.
+
+    `typed` holds the quarter's sec_sub / sec_pre / sec_num, each with
+    its `source_file` column. The join runs once here; its rows land in
+    `(source_file, stmt)` partitions of `statement_table(suffix)`,
+    replacing only those partitions if the quarter was appended before
+    (dynamic partition overwrite, set as a table option)."""
+    rows = raw_statement_join(typed["sec_sub"], typed["sec_pre"], typed["sec_num"]).select(
+        *RAW_COLUMNS, "s.source_file", "p.stmt"
+    )
+    name = statement_table(suffix)
+    columns = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in rows.schema)
+    rows.sparkSession.sql(
+        f"CREATE TABLE IF NOT EXISTS {name} ({columns}) USING parquet "
+        "PARTITIONED BY (source_file, stmt) "
+        "OPTIONS ('partitionOverwriteMode' = 'dynamic')"
+    )
+    rows.write.insertInto(name, overwrite=True)
+
+
+def drop_bucketed(spark: SparkSession, suffix: str = "bkt") -> None:
+    """Idempotence helper for tests/benches: clear the statement store."""
+    import os
+    import shutil
+
+    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+    name = statement_table(suffix)
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    shutil.rmtree(os.path.join(warehouse.removeprefix("file:"), name.lower()), ignore_errors=True)
+
+
+def bucketed_statement_join(
+    spark: SparkSession, quarter: str, stmt: str, suffix: str = "bkt"
+) -> DataFrame:
+    """The RAW statement query (api.SecEngine.financial_data_frame,
+    reference backend/main.py:163-177) for one quarter and statement,
+    read from the statement store: one FileScan whose PartitionFilters
+    carry both predicates, so only that leaf directory is listed and
+    read. The join ran at append time. The presentation ORDER BY from
+    the API layer is left to the client edge."""
+    return (
+        spark.table(statement_table(suffix))
+        .where((F.col("source_file") == quarter) & (F.col("stmt") == stmt))
+        .select(*REFRESH_COLUMNS)
     )

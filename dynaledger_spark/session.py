@@ -13,6 +13,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of physical memory, between 1g and 48g. The JVM grows its heap
+    towards the maximum under allocation pressure, so a maximum larger
+    than the machine ends with the kernel killing the driver."""
+    gb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**30
+    return f"{max(1, min(48, gb // 2))}g"
+
+
 def get_spark(
     app_name: str = "dynaledger_spark",
     shuffle_partitions: int | None = None,
@@ -40,7 +48,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.crossJoin.enabled", "true")
         # Parquet TIMESTAMP(NANOS) is illegal for Spark's vectorized reader;

@@ -8,12 +8,12 @@ module drives FOUR synthetic quarters through the full engine path —
     ZIP -> extract -> typed parquet -> append_quarter_facts
         -> partition-pruned statement read     (plan-asserted, DPP shape)
         -> DuckDB row parity on a quarter's facts
-    and the adsh-bucketed raw store
-        -> zero-Exchange statement join        (plan-pinned)
-        -> DuckDB row parity on the join
+    and the (source_file, stmt)-partitioned RAW statement store
+        -> pruned single-scan statement read   (plan-pinned)
+        -> DuckDB row parity, SecEngine RAW parity, safe re-runs
 
-— so the partition layout, the accretion semantics, and the bucketed
-join are all proven on SEC-shaped data, not just on TPC-H tables.
+— so the partition layout, the accretion semantics, and the statement
+store are all proven on SEC-shaped data, not just on TPC-H tables.
 """
 
 from __future__ import annotations
@@ -25,20 +25,23 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from dynaledger_spark.api import RAW_STMT_TYPES, SecEngine
 from dynaledger_spark.operators.backfill import (
+    REFRESH_COLUMNS,
     append_quarter_bucketed,
     append_quarter_facts,
     bucketed_statement_join,
     drop_bucketed,
     latest_fact_quarter,
     statement_facts,
+    statement_table,
 )
 from dynaledger_spark.sources.parquet_io import write_partitioned
 from dynaledger_spark.sources.tsv import extract_zip, ingest_quarter
 from tests.oracle_compare import compare
 
 QUARTERS = ("2024Q1", "2024Q2", "2024Q3", "2024Q4")
-_BKT = "bktq"  # bucketed-store suffix for this module
+_BKT = "bktq"  # statement-store suffix for this module
 
 
 def _ingest_bench():
@@ -56,7 +59,7 @@ def _ingest_bench():
 @pytest.fixture(scope="module")
 def backfill(spark, tmp_path_factory):
     """Four quarters ingested and accreted into (a) the partitioned fact
-    store and (b) the adsh-bucketed raw tables; typed parquet kept on
+    store and (b) the RAW statement store; typed parquet kept on
     disk for DuckDB parity."""
     bench = _ingest_bench()
     root = tmp_path_factory.mktemp("sec_backfill")
@@ -74,7 +77,7 @@ def backfill(spark, tmp_path_factory):
         append_quarter_facts(
             typed["sec_num"], typed["sec_sub"], typed["sec_pre"], q, facts_root
         )
-        append_quarter_bucketed(typed, n_buckets=8, suffix=_BKT)
+        append_quarter_bucketed(typed, suffix=_BKT)
     yield {"facts": facts_root, "typed": typed_root}
     drop_bucketed(spark, suffix=_BKT)
 
@@ -93,10 +96,52 @@ def duck_typed(backfill):
     con.close()
 
 
+def _typed(spark, backfill):
+    return {
+        t: spark.read.parquet(os.path.join(backfill["typed"], t))
+        for t in ("sec_sub", "sec_pre", "sec_num")
+    }
+
+
+def _in_job_group(spark, group, fn):
+    """fn() and the ids of the Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _conf(spark):
+    return {r.key: r.value for r in spark.sql("SET").collect()}
+
+
 def test_latest_partition_discovery(spark, backfill):
     """load_json_data_snowflake.py:30-59's probe: the MAX over the
     partition column folds directory names only."""
     assert latest_fact_quarter(spark, backfill["facts"]) == "2024Q4"
+
+
+def test_latest_quarter_missing_or_empty_root(spark, tmp_path):
+    assert latest_fact_quarter(spark, str(tmp_path / "absent")) is None
+    assert latest_fact_quarter(spark, str(tmp_path)) is None
+    (tmp_path / "_SUCCESS").write_text("")
+    (tmp_path / "_temporary").mkdir()
+    assert latest_fact_quarter(spark, str(tmp_path)) is None
+
+
+def test_latest_quarter_runs_no_spark_job(spark, backfill):
+    """The discovery is a directory listing: no Spark job, no fact file
+    read."""
+    latest, jobs = _in_job_group(
+        spark, "test_latest_quarter_runs_no_spark_job",
+        lambda: latest_fact_quarter(spark, backfill["facts"]),
+    )
+    assert latest == "2024Q4"
+    assert len(jobs) == 0
 
 
 def test_statement_read_prunes_partitions(spark, backfill):
@@ -161,31 +206,89 @@ def test_cross_quarter_facts_are_disjoint_and_complete(spark, backfill):
     assert leaks == 0
 
 
-def test_bucketed_statement_join_zero_exchange(spark, backfill):
-    """VERDICT item 6: over the adsh-bucketed raw store the RAW
-    statement join (backend/main.py:163-177 shape) plans with ZERO
-    Exchange — for EVERY accreted quarter, i.e. the shuffle was paid
-    once at ingest and never again. Broadcast is disabled to surface
-    the large-large (100 TB) plan; at toy scale AQE would broadcast."""
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        for q in ("2024Q1", "2024Q4"):
-            df = bucketed_statement_join(spark, q, "BS", suffix=_BKT)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            assert "SortMergeJoin" in plan, plan[:2000]
-            assert "Exchange" not in plan, plan[:2000]
-            assert df.count() > 0
-        # ADVICE r9 item 3: the subset-key co-partition relaxation is
-        # scoped to the clone session the DataFrame is bound to — the
-        # SHARED session keeps the default safety for every later query.
-        assert (
-            spark.conf.get("spark.sql.requireAllClusterKeysForCoPartition")
-            == "true"
+def test_statement_store_read_plan(spark, backfill):
+    """The refresh's RAW statement read is one FileScan pruned by
+    PartitionFilters on both source_file and stmt: no join and no
+    exchange at read time, and the shared session's conf is left as it
+    was."""
+    before = _conf(spark)
+    df = bucketed_statement_join(spark, "2024Q3", "BS", suffix=_BKT)
+    assert tuple(df.columns) == REFRESH_COLUMNS
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1, plan
+    assert "Join" not in plan and "Exchange" not in plan, plan
+    pushed = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+    assert "source_file" in pushed and "stmt" in pushed, plan
+    files = [r[0] for r in df.select(F.input_file_name()).distinct().collect()]
+    assert files
+    for f in files:
+        assert "source_file=2024Q3" in f and "stmt=BS" in f, f
+    assert _conf(spark) == before
+
+
+def test_refresh_spark_jobs(spark, backfill):
+    """One dashboard refresh — latest quarter, the pruned fact read and
+    the RAW statement read — launches at most 5 Spark jobs."""
+
+    def refresh():
+        latest = latest_fact_quarter(spark, backfill["facts"])
+        facts = statement_facts(spark, backfill["facts"], latest, "BS").count()
+        raw = bucketed_statement_join(spark, latest, "BS", suffix=_BKT).count()
+        return facts, raw
+
+    (facts, raw), jobs = _in_job_group(spark, "test_refresh_spark_jobs", refresh)
+    assert facts > 0 and raw > 0
+    assert 0 < len(jobs) <= 5, len(jobs)
+
+
+def _store_counts(spark):
+    return {
+        (r["source_file"], r["stmt"]): r["count"]
+        for r in spark.table(statement_table(_BKT))
+        .groupBy("source_file", "stmt")
+        .count()
+        .collect()
+    }
+
+
+def test_statement_store_rerun_append_replaces_only_its_quarter(spark, backfill):
+    """Appending a quarter a second time replaces that quarter's
+    partitions: every (quarter, stmt) count is unchanged, and the other
+    quarters' files are not rewritten."""
+    def other_quarters_files():
+        files = spark.table(statement_table(_BKT)).inputFiles()
+        return sorted(f for f in files if "source_file=2024Q2" not in f)
+
+    before, others = _store_counts(spark), other_quarters_files()
+    rerun = {
+        t: df.where(F.col("source_file") == "2024Q2")
+        for t, df in _typed(spark, backfill).items()
+    }
+    append_quarter_bucketed(rerun, suffix=_BKT)
+    assert {q for q, _ in before} == set(QUARTERS)
+    assert _store_counts(spark) == before
+    assert other_quarters_files() == others
+
+
+@pytest.mark.parametrize("data_type", ["Balance Sheet", "Cash Flow"])
+def test_statement_store_matches_sec_engine_raw(spark, backfill, data_type):
+    """SecEngine's RAW pull and the statement store are one join: the
+    store's rows for a (quarter, stmt) equal SecEngine's RAW frame as
+    multisets on the shared columns."""
+    engine = SecEngine(spark, tables=_typed(spark, backfill)).financial_data_frame(
+        2024, "Q3", data_type, "RAW"
+    )
+    store = (
+        spark.table(statement_table(_BKT))
+        .where(
+            (F.col("source_file") == "2024Q3")
+            & (F.col("stmt") == RAW_STMT_TYPES[data_type])
         )
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-        )
+        .select(*engine.columns)
+    )
+    assert engine.count() > 0
+    assert engine.exceptAll(store).count() == 0
+    assert store.exceptAll(engine).count() == 0
 
 
 def test_bucketed_statement_join_parity(spark, backfill, duck_typed):

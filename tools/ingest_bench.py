@@ -285,9 +285,10 @@ def main() -> None:
         # --- multi-quarter backfill (the reference's actual operating
         # mode: quarterly accretion). 4 quarters at N/8 num rows each:
         # ZIP -> typed -> facts appended partitionBy(source_file,
-        # statement_type) AND raw tables appended into adsh-bucketed
-        # tables; then the two recurring reads — the partition-pruned
-        # statement read and the zero-Exchange bucketed statement join.
+        # statement_type) AND the RAW statement rows appended into the
+        # (source_file, stmt)-partitioned statement store; then the two
+        # recurring reads — the partition-pruned statement read and the
+        # pruned RAW statement read.
         from dynaledger_spark.operators.backfill import (
             append_quarter_bucketed,
             append_quarter_facts,
@@ -313,7 +314,7 @@ def main() -> None:
             append_quarter_facts(
                 qtyped["sec_num"], qtyped["sec_sub"], qtyped["sec_pre"], q, bf_root
             )
-            append_quarter_bucketed(qtyped, n_buckets=32, suffix="bench")
+            append_quarter_bucketed(qtyped, suffix="bench")
         backfill_s = time.perf_counter() - t5
         assert latest_fact_quarter(spark, bf_root) == bf_quarters[-1]
 
@@ -325,7 +326,7 @@ def main() -> None:
         t7 = time.perf_counter()
         bkt_n = bucketed_statement_join(spark, "2024Q2", "IS", suffix="bench").count()
         bucketed_join_s = time.perf_counter() - t7
-        assert bkt_n > 0, "bucketed statement join empty"
+        assert bkt_n > 0, "RAW statement read empty"
         drop_bucketed(spark, suffix="bench")
 
         total = extract_s + load_s + facts_s
