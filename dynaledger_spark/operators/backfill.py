@@ -8,7 +8,7 @@ and discovers the latest loaded quarter before appending
 layouts written once per quarter, both laid out for the dashboard's
 recurring (quarter, statement) read:
 
-* **Partitioned facts** — `build_facts_single_pass` output appended
+* **Partitioned facts** — `build_facts_single_pass` output written
   under `partitionBy(source_file, statement_type)`. A statement query
   for one (quarter, stmt) prunes to a single leaf directory: at 100 TB
   (~40 quarters x 3 statements) the recurring dashboard read touches
@@ -26,12 +26,14 @@ recurring (quarter, statement) read:
   read filters. The table keeps SecEngine's 16-column RAW projection
   plus `stmt`, and both build the join through `raw_statement_join`.
 
-Re-running a quarter is safe: the statement table is created with the
-table option `partitionOverwriteMode='dynamic'` and each append is an
-`insertInto(..., overwrite=True)`, so a re-run replaces only the
-`(source_file, stmt)` partitions it writes and leaves every other
-quarter untouched. The option lives on the table, not on the session,
-so no other query's writes change behaviour.
+Re-running a quarter is safe in both stores: each write is a dynamic
+partition overwrite, so a re-run replaces only the partitions it writes
+and leaves every other quarter untouched. The fact write passes
+`partitionOverwriteMode='dynamic'` as a write option of its path-based
+overwrite. The statement table carries it as a table option and each
+append is an `insertInto(..., overwrite=True)`: passed to `insertInto`
+as a write option, it wiped the whole table on Spark 4.1.2. Neither
+touches the session's conf, so no other query's writes change behaviour.
 
 Latest-quarter discovery reads the fact store's `source_file=`
 directory names through the root's Hadoop FileSystem: no Spark job and
@@ -63,14 +65,17 @@ def append_quarter_facts(
     num: DataFrame, sub: DataFrame, pre: DataFrame, quarter: str, root: str
 ) -> None:
     """One quarter's accretion step: single-pass facts for all three
-    statements, appended as (source_file=quarter, statement_type=...)
-    partitions. Append-only — a re-run of history never rewrites
-    earlier quarters (the reference's per-quarter table naming, as
-    partitions)."""
+    statements, written as (source_file=quarter, statement_type=...)
+    partitions (the reference's per-quarter table naming, as
+    partitions). The write is a dynamic partition overwrite, set as a
+    write option: a re-run replaces only the partitions it writes, so
+    the quarter's facts are not duplicated and every other quarter is
+    left as it was."""
     (
         build_facts_single_pass(num, sub, pre)
         .withColumn("source_file", F.lit(quarter))
-        .write.mode("append")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("source_file", "statement_type")
         .parquet(root, compression="snappy")
     )

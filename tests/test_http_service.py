@@ -5,6 +5,7 @@ an ephemeral port, asserting parity with direct engine calls."""
 from __future__ import annotations
 
 import json
+import threading
 import urllib.error
 import urllib.parse
 import urllib.request
@@ -69,6 +70,30 @@ def test_get_financial_data_matches_engine(service):
     want = json.loads(json.dumps(direct["data"], default=str))
     assert out["data"] == want
     assert out["execution_time"] > 0
+
+
+def test_concurrent_identical_pulls_match(service):
+    """8 identical pulls at once, racing to prepare the pull and then
+    re-collecting it, all return the engine's rows."""
+    svc, eng = service
+    path = "/get-financial-data?year=2023&quarter=Q1&data_type=Cash%20Flow&source=RAW"
+    start = threading.Barrier(8)
+    replies = [None] * 8
+
+    def pull(i):
+        start.wait()
+        replies[i] = _get(svc, path)
+
+    threads = [threading.Thread(target=pull, args=(i,)) for i in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    direct = eng.get_financial_data(2023, "Q1", "Cash Flow", "RAW")["data"]
+    want = json.loads(json.dumps(direct, default=str))
+    assert want
+    assert [status for status, _ in replies] == [200] * 8
+    assert all(out["data"] == want for _, out in replies)
 
 
 def test_custom_query_roundtrip(service):

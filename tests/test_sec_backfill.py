@@ -187,7 +187,7 @@ def test_backfill_facts_parity_duckdb(spark, backfill, duck_typed):
 
 
 def test_cross_quarter_facts_are_disjoint_and_complete(spark, backfill):
-    """Accretion is append-only: every quarter's partition exists, and
+    """Accretion keeps every quarter: each quarter's partition exists, and
     no filing leaks across quarters (disjoint adsh pools by
     construction)."""
     facts = spark.read.parquet(backfill["facts"])
@@ -268,6 +268,43 @@ def test_statement_store_rerun_append_replaces_only_its_quarter(spark, backfill)
     assert {q for q, _ in before} == set(QUARTERS)
     assert _store_counts(spark) == before
     assert other_quarters_files() == others
+
+
+def _fact_totals(spark, root):
+    return {
+        (r["source_file"], r["statement_type"]): (r["n"], r["total"])
+        for r in spark.read.parquet(root)
+        .groupBy("source_file", "statement_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("total_value").cast("decimal(38,6)")).alias("total"),
+        )
+        .collect()
+    }
+
+
+def test_facts_rerun_append_replaces_only_its_quarter(spark, backfill):
+    """Appending a quarter's facts a second time replaces that quarter's
+    partitions: every (quarter, statement) count and sum is unchanged,
+    the other quarters' files are not rewritten, and the session's conf
+    is left as it was."""
+    def other_quarters_files():
+        files = spark.read.parquet(backfill["facts"]).inputFiles()
+        return sorted(f for f in files if "source_file=2024Q2" not in f)
+
+    conf = _conf(spark)
+    before, others = _fact_totals(spark, backfill["facts"]), other_quarters_files()
+    rerun = {
+        t: df.where(F.col("source_file") == "2024Q2")
+        for t, df in _typed(spark, backfill).items()
+    }
+    append_quarter_facts(
+        rerun["sec_num"], rerun["sec_sub"], rerun["sec_pre"], "2024Q2", backfill["facts"]
+    )
+    assert {q for q, _ in before} == set(QUARTERS)
+    assert _fact_totals(spark, backfill["facts"]) == before
+    assert other_quarters_files() == others
+    assert _conf(spark) == conf
 
 
 @pytest.mark.parametrize("data_type", ["Balance Sheet", "Cash Flow"])

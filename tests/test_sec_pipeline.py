@@ -260,10 +260,19 @@ def test_run_checks_is_one_action(spark, tables):
 # ---------------------------------------------------------------------------
 # API surface (§3.1/§3.2)
 # ---------------------------------------------------------------------------
-def test_api_raw_financial_data(spark, tables):
+def _engine(spark, tables) -> SecEngine:
     eng = SecEngine(spark)
     for name, df in tables.items():
         eng.register(name, df.drop(ROW_ID))
+    return eng
+
+
+def _multiset(rows: list[dict]) -> list[str]:
+    return sorted(repr(sorted(r.items())) for r in rows)
+
+
+def test_api_raw_financial_data(spark, tables):
+    eng = _engine(spark, tables)
     assert eng.check_availability(2023, "Q1") == {"available": True}
     assert eng.check_availability(2024, "Q4") == {"available": False}
 
@@ -276,6 +285,45 @@ def test_api_raw_financial_data(spark, tables):
     }
     # joins on (adsh, tag, version) + stmt filter; ordered by adsh, line
     assert [r["adsh"] for r in rows] == sorted(r["adsh"] for r in rows)
+
+
+def test_repeated_raw_pull_runs_one_job(spark, tables):
+    """A repeated pull re-collects the prepared plan: AQE's broadcast and
+    shuffle stages are already materialized, so only the result stage
+    runs (a fresh RAW pull runs 5 jobs)."""
+    eng = _engine(spark, tables)
+    first = eng.get_financial_data(2023, "Q1", "Balance Sheet", "RAW")["data"]
+    sc = spark.sparkContext
+    group = "test_repeated_raw_pull_runs_one_job"
+    sc.setJobGroup(group, "repeated pull")
+    try:
+        second = eng.get_financial_data(2023, "Q1", "Balance Sheet", "RAW")["data"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert first and second == first
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+
+
+def test_replaced_table_changes_next_pull(spark, tables):
+    """A prepared pull is only reused while every table is the object it
+    was built over: `register` and a direct `tables[...] =` write both
+    make the next pull read the new table."""
+    eng = _engine(spark, tables)
+
+    def pull():
+        return eng.get_financial_data(2023, "Q1", "Balance Sheet", "RAW")["data"]
+
+    before = pull()
+    assert before and pull() == before
+    eng.register("sec_num", eng.tables["sec_num"].withColumn("value", F.col("value") + 1))
+    shifted = pull()
+    assert _multiset(shifted) == _multiset(
+        [{**r, "value": None if r["value"] is None else r["value"] + 1} for r in before]
+    )
+    assert any(r["adsh"] == A1 for r in shifted)
+    eng.tables["sec_sub"] = eng.tables["sec_sub"].where(F.col("adsh") != A1)
+    assert _multiset(pull()) == _multiset([r for r in shifted if r["adsh"] != A1])
 
 
 def test_api_custom_query(spark, tables):
