@@ -16,11 +16,14 @@ Catalyst's analyzed, optimized and physical plan and AQE's final plan
 with its materialized broadcast and shuffle stages, so a repeated RAW
 pull is one result-stage job. Any replaced table — through `register` or
 a direct `tables[...] =` write — drops every prepared pull at the next
-pull. The pass-through SQL is not prepared.
+pull. A pull that collects no rows is not kept, and a quarter outside
+1–4 is rejected before anything is prepared. The pass-through SQL is not
+prepared.
 """
 
 from __future__ import annotations
 
+import re
 import threading
 import time
 from dataclasses import dataclass, field
@@ -37,6 +40,14 @@ from dynaledger_spark.operators.backfill import RAW_COLUMNS, raw_statement_join
 RAW_STMT_TYPES = {"Income Statement": "IC", "Balance Sheet": "BS", "Cash Flow": "CF"}
 
 
+def _quarter_number(quarter: str) -> str:
+    """'Q3' or '3' -> '3'; any other quarter is an invalid pull."""
+    m = re.fullmatch(r"Q?([1-4])", quarter)
+    if m is None:
+        raise ValueError(f"Invalid quarter: {quarter}")
+    return m.group(1)
+
+
 @dataclass
 class SecEngine:
     """In-process replacement for the FastAPI → Snowflake stack.
@@ -51,8 +62,9 @@ class SecEngine:
     released when a table is replaced and the next pull rebuilds. The
     tables are read when a pull is prepared, so after appending to a
     table's files, re-register it. Prepared pulls are bounded by the
-    registered tables: at most 9 per quarter, and an invalid pull raises
-    before anything is kept.
+    registered data: a pull is kept only if it collected rows, so at most
+    9 per quarter that holds rows, and an invalid pull (source, data type
+    or a quarter outside 1–4) raises before anything is kept.
     """
 
     spark: SparkSession
@@ -77,14 +89,17 @@ class SecEngine:
         self, year: int, quarter: str, data_type: str, source: str
     ) -> dict:
         t0 = time.time()
-        df = self._prepared_pull(year, quarter.replace("Q", ""), data_type, source)
+        key = (year, _quarter_number(quarter), data_type, source)
+        df = self._prepared_pull(key)
         rows = [r.asDict() for r in df.collect()]
+        if not rows:
+            with self._lock:
+                self._prepared.pop(key, None)
         return {"data": rows, "execution_time": time.time() - t0}
 
-    def _prepared_pull(self, year: int, q: str, data_type: str, source: str) -> DataFrame:
+    def _prepared_pull(self, key: tuple) -> DataFrame:
         """The sanitized pull frame, built once per key while `tables`
         holds the same objects."""
-        key = (year, q, data_type, source)
         with self._lock:
             if self._prepared_over.keys() != self.tables.keys() or any(
                 self.tables[name] is not df for name, df in self._prepared_over.items()
@@ -93,16 +108,14 @@ class SecEngine:
                 self._prepared_over = dict(self.tables)
             df = self._prepared.get(key)
             if df is None:
-                df = self._prepared[key] = sanitize_floats(
-                    self.financial_data_frame(year, q, data_type, source)
-                )
+                df = self._prepared[key] = sanitize_floats(self.financial_data_frame(*key))
         return df
 
     def financial_data_frame(
         self, year: int, quarter: str, data_type: str, source: str
     ) -> DataFrame:
         """The plan behind /get-financial-data, as a DataFrame."""
-        q = quarter.replace("Q", "")
+        q = _quarter_number(quarter)
         tag = f"{year}Q{q}"
         if source == "RAW":
             stmt = RAW_STMT_TYPES.get(data_type)

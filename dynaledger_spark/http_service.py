@@ -92,6 +92,9 @@ def _make_handler(engine: SecEngine):
         def do_POST(self) -> None:  # noqa: N802
             try:
                 n = int(self.headers.get("Content-Length", 0))
+                if n < 0:
+                    # read(-1) would wait for the client to close
+                    raise ValueError(f"Invalid Content-Length: {n}")
                 body = json.loads(self.rfile.read(n) or b"{}")
                 self._reply(200, self._post(self._route(), self._params(), body))
             except _ApiError as e:

@@ -8,9 +8,6 @@ MATCH_RECOGNIZE, so the re-expression IS the portable form),
 item-item collaborative-filtering similarity, and semi-additive
 period-end balance rollups.
 
-Registered after the round-4 batches (registry.load_all), so these
-rank into the round-5 driver window as never-verified tier-1 entries.
-
 Scale posture: every query is equi-hash windows + hash joins + hash
 aggregates — no range joins, no unbounded-FOLLOWING frames (Spark
 recomputes those per row; the "next matching event" carry is computed

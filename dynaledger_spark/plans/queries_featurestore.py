@@ -18,9 +18,6 @@ raw event log, none previously covered:
 * median-absolute-deviation outlier days (the robust anomaly monitor
   for the daily revenue series).
 
-Registered after queries_lm (behind the full round-4 driver window;
-parity-proven locally at both SFs, driver-verified in round 5).
-
 Float discipline: everything stays in exact integers (cents, counts,
 n·x−S deviation numerators) until one final division rounded at 9;
 the only doubles that cross engines are those exact-integer ratios.

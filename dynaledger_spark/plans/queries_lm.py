@@ -5,10 +5,6 @@ queries_mlprep: unigram-LM quality scoring (the perplexity-filter
 proxy), a composed per-source corpus report card, and deterministic
 token-dropout augmentation.
 
-Registered after queries_mlprep (last in registry.load_all), so these
-rank behind the already-windowed round-4 tier-1 queries and enter the
-driver window in round 5; locally they are parity-proven at both SFs.
-
 Float discipline: ln()-derived terms round at 12 dp before the
 sorted-fold sum (lang_entropy precedent); count ratios are one
 int→double division rounded at 9; hashes are the portable md5-prefix

@@ -6,11 +6,6 @@ step), Zipf-law fit of the corpus vocabulary, linear multi-touch
 attribution, hashing-trick feature vectorization, and common-neighbor
 link prediction over the co-purchase graph.
 
-Registered AFTER every other module (last in registry.load_all) so they
-rank behind the already-windowed round-4 queries in the driver's 50-slot
-verify order — they are parity-proven locally at two SFs this round and
-enter the driver window in round 5.
-
 Float discipline: products of FLOAT-widened doubles are EXACT (24-bit
 mantissas → 48-bit product ≤ 52), sums of doubles use the sorted-fold
 chain (both engines run the identical IEEE addition sequence — the

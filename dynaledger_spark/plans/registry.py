@@ -18,11 +18,7 @@ Determinism contract for oracle-checked queries:
 from __future__ import annotations
 
 import functools
-import glob
-import json
-import os
-import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,7 +33,6 @@ class QuerySpec:
     oracle: str | None = None  # ANSI SQL for DuckDB; None → rows-only check
     headline: bool = False  # included in bench.py
     doc: str = ""
-    tags: tuple[str, ...] = field(default_factory=tuple)
 
 
 QUERY_REGISTRY: dict[str, QuerySpec] = {}
@@ -48,7 +43,6 @@ def register(
     oracle: str | None = None,
     headline: bool = False,
     doc: str = "",
-    tags: tuple[str, ...] = (),
 ):
     """Decorator: register a (spark, sf_dir) -> DataFrame query builder.
 
@@ -72,427 +66,18 @@ def register(
             return cache.attach_release(df, persisted)
 
         QUERY_REGISTRY[name] = QuerySpec(
-            name=name, build=build, oracle=oracle, headline=headline, doc=doc or fn.__doc__ or "", tags=tags
+            name=name, build=build, oracle=oracle, headline=headline, doc=doc or fn.__doc__ or ""
         )
         return fn
 
     return wrap
 
 
-# The driver verifies the FIRST 50 registry entries in insertion order
-# (VERDICT r1). Spend that budget where verification adds information.
-#
-# Window policy (VERDICT r8 item 2 — staleness as an SLA): priority is
-# COMPUTED from the committed CORRECTNESS_r*.json artifacts at the repo
-# root instead of hand-pinned per-round lists (rounds 1-8 used explicit
-# window tuples; git history has them). Tiers:
-#   0. pinned flagships — never age out (fact_build is entry()'s query;
-#      minhash_portable_pairs is the LLM-pipeline flagship — round 10
-#      cut the pin set to two, see the note at _PINNED);
-#   1. never-verified — no green or official rows-only driver record in
-#      any round (new queries, or queries whose last run FAILED);
-#      oracle-backed before rows-only (an oracle row is the stronger
-#      check, so it buys more signal per slot);
-#   2. previously verified, OLDEST last-green round first — every query
-#      cycles back through the 50-slot window with bounded staleness:
-#      ceil((N - |pinned|) / (50 - |pinned|)) rounds at registry size N
-#      (tests/test_plans.py::test_rotation_staleness_sla simulates the
-#      rotation forward and asserts the bound).
-# A failed driver row never counts as verified, so a regression marches
-# straight back into the next window.  Likewise a REWRITTEN query
-# (VERDICT r10 item 1): greens are keyed to a plan version via the
-# committed PLAN_HASHES.json ledger (tools/update_plan_hashes.py), so
-# a green recorded against an older builder/oracle stops counting and
-# the query re-enters tier 1 until the driver re-attests the new plan.
-# Tier-1 floods from mass edits transiently displace tier-2 rotation —
-# the SLA bound holds in steady state (no edits), which is what
-# test_rotation_staleness_sla simulates.
-#
-# Registry-size decision (VERDICT r10 item 6): at N=338 with 2 pins the
-# worst-case staleness is ceil(336/48) = 7 rounds — exactly at the SLA.
-# Round 11 therefore adds NO new registry entries and spends its budget
-# on rotation correctness + hardening; any future addition must either
-# raise _DRIVER_WINDOW (driver permitting) or re-document the SLA at 8.
-
-# Two pins, not three: every pinned slot permanently costs one rotation
-# slot, and at 333 registered queries a third pin pushes the worst-case
-# re-verification staleness past the 7-round SLA
-# (ceil((N-|pinned|)/(50-|pinned|)) — tests/test_plans.py::
-# test_rotation_staleness_sla). simhash_portable_fingerprints (pinned
-# rounds 8-10) now rotates like every other query; fact_build is
-# entry()'s flagship and minhash_portable_pairs is the LLM-pipeline
-# flagship.
-_PINNED = ("fact_build", "minhash_portable_pairs")
-
-_DRIVER_WINDOW = 50  # the driver truncates CORRECTNESS to this many entries
-
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-
-_PLAN_HASH_FILE = "PLAN_HASHES.json"
-
-
-_PKG_PREFIX = "dynaledger_spark"
-
-
-def _fn_source(fn) -> str:
-    import inspect
-
-    try:
-        return inspect.getsource(fn)
-    except (OSError, TypeError):  # frozen / interactively-defined builders
-        code = getattr(fn, "__code__", None)
-        return code.co_code.hex() if code is not None else repr(fn)
-
-
-def _stable_render(val, _depth: int = 0) -> str:
-    """Deterministic rendering of a module-level value for closure
-    hashing. Two hazards this exists to close (VERDICT r12 item 2 +
-    ADVICE r12): (1) a set nested inside a tuple/list/dict reprs in
-    hash-randomized order, so a naive repr would make plan_hash flap
-    across processes; (2) default object repr carries a memory address.
-    Rules: primitives repr as-is; containers recurse (dict in insertion
-    order — source-determined); sets at ANY depth render as their
-    elements SORTED in list syntax (byte-identical to the previous
-    top-level `repr(sorted(val, key=repr))` for primitive sets, so no
-    ledger churn); compiled regexes render their pattern; callables,
-    classes and modules render as a dotted-name REFERENCE (the referent
-    is hashed separately iff repo-local); anything whose repr still
-    carries an address renders as a loud __UNHASHED__ marker keyed by
-    type — stable, greppable, and it still moves the hash if the
-    value's TYPE moves."""
-    import types
-
-    if _depth > 8:
-        return "__DEPTH__"
-    if isinstance(val, (str, bytes, int, float, bool, complex, type(None))):
-        return repr(val)
-    if isinstance(val, (set, frozenset)):
-        return "[%s]" % ", ".join(
-            sorted(_stable_render(x, _depth + 1) for x in val)
-        )
-    if isinstance(val, tuple):
-        inner = [_stable_render(x, _depth + 1) for x in val]
-        return "(%s,)" % inner[0] if len(inner) == 1 else "(%s)" % ", ".join(inner)
-    if isinstance(val, list):
-        return "[%s]" % ", ".join(_stable_render(x, _depth + 1) for x in val)
-    if isinstance(val, dict):
-        return "{%s}" % ", ".join(
-            f"{_stable_render(k, _depth + 1)}: {_stable_render(v, _depth + 1)}"
-            for k, v in val.items()
-        )
-    if hasattr(val, "pattern") and hasattr(val, "fullmatch"):
-        return repr(val.pattern)
-    if isinstance(
-        val,
-        (types.FunctionType, types.BuiltinFunctionType, type, types.ModuleType),
-    ):
-        mod = getattr(val, "__module__", "") or getattr(val, "__name__", "")
-        qn = getattr(val, "__qualname__", getattr(val, "__name__", "?"))
-        return f"<{mod}.{qn}>"
-    r = repr(val)
-    if " at 0x" in r:
-        return f"__UNHASHED__:<{type(val).__module__}.{type(val).__qualname__}>"
-    return r
-
-
-def plan_closure_sources(spec: QuerySpec) -> dict[str, str]:
-    """The static closure of repo-local definitions a builder's result
-    depends on: the builder's own source plus — transitively — the
-    source of every `dynaledger_spark` function/class and the repr of
-    every module-level constant its code objects reference (walking
-    `co_names`/`co_consts`, resolving through `__globals__` AND through
-    any `dynaledger_spark.*` module named by a body-local import).
-
-    Returned as {stable-key: source-blob}, deterministic across
-    sessions (keys are module.qualname / module.NAME strings).  Used by
-    :func:`plan_hash` so an edit to a shared helper (`_dpp_parts`,
-    `_bm25_scores`, a `_GATES_SQL`-style constant, `read_table`, …)
-    re-tiers every caller — closing the round-11 blind spot where only
-    the registered function body was hashed (ADVICE r11 item 1: the
-    miss direction was NON-conservative, skipping re-verification).
-
-    Over-approximation is safe (extra re-tiering costs a window slot);
-    under-approximation is the bug this closes.  Walk is bounded and
-    cycle-safe; stdlib/pyspark/builtins are never followed."""
-    import sys
-    import types
-
-    fn = getattr(spec.build, "__wrapped__", spec.build)
-    out: dict[str, str] = {}
-    seen: set[int] = set()
-    work: list = [fn]
-    budget = 400  # runaway guard; real closures are tens of objects
-
-    def _key(obj) -> str:
-        mod = getattr(obj, "__module__", "") or ""
-        qn = getattr(obj, "__qualname__", getattr(obj, "__name__", repr(obj)))
-        return f"{mod}.{qn}"
-
-    def _names_and_codes(code) -> tuple[set[str], list]:
-        names, codes = set(code.co_names), []
-        for const in code.co_consts:
-            if isinstance(const, types.CodeType):
-                sub_n, sub_c = _names_and_codes(const)
-                names |= sub_n
-                codes.extend([const] + sub_c)
-        return names, codes
-
-    while work and budget > 0:
-        obj = work.pop()
-        if id(obj) in seen:
-            continue
-        seen.add(id(obj))
-        budget -= 1
-        obj = getattr(obj, "__wrapped__", obj)
-        if isinstance(obj, types.FunctionType):
-            if not (obj.__module__ or "").startswith(_PKG_PREFIX):
-                continue
-            out[_key(obj)] = _fn_source(obj)
-            # default-arg helpers and closure cells (factory-made
-            # builders) are references co_names cannot see
-            for d in (obj.__defaults__ or ()) + tuple(
-                (obj.__kwdefaults__ or {}).values()
-            ):
-                if callable(d) or isinstance(d, type):
-                    work.append(d)
-            for cell in obj.__closure__ or ():
-                try:
-                    v = cell.cell_contents
-                except ValueError:  # empty cell
-                    continue
-                if callable(v) or isinstance(v, type):
-                    work.append(v)
-            names, _ = _names_and_codes(obj.__code__)
-            # namespaces to resolve against: the function's globals plus
-            # every repo-local module named by a body-local import
-            # (`from dynaledger_spark.x import y` puts the dotted module
-            # path AND `y` into co_names).
-            spaces = [(obj.__module__, obj.__globals__)]
-            for n in sorted(names):
-                if n.startswith(_PKG_PREFIX):
-                    # body-local `from dynaledger_spark.x import y` puts
-                    # the dotted path in co_names but only imports it at
-                    # call time — import here so `y` resolves.
-                    if n not in sys.modules:
-                        import importlib
-
-                        try:
-                            importlib.import_module(n)
-                        except ImportError:
-                            continue
-                    spaces.append((n, vars(sys.modules[n])))
-            # module-valued globals (`from dynaledger_spark.plans import
-            # cache` then `cache.helper(...)`): the attribute name is in
-            # co_names but only resolves inside the module's namespace.
-            for n in sorted(names):
-                for _, ns in list(spaces):
-                    v = ns.get(n)
-                    if isinstance(v, types.ModuleType) and (
-                        v.__name__ or ""
-                    ).startswith(_PKG_PREFIX):
-                        spaces.append((v.__name__, vars(v)))
-            for n in sorted(names):
-                for mod_name, ns in spaces:
-                    if n not in ns:
-                        continue
-                    val = ns[n]
-                    vmod = getattr(val, "__module__", "") or ""
-                    if isinstance(val, types.FunctionType) and vmod.startswith(
-                        _PKG_PREFIX
-                    ):
-                        work.append(val)
-                    elif isinstance(val, type) and vmod.startswith(_PKG_PREFIX):
-                        work.append(val)
-                    elif isinstance(
-                        val,
-                        (
-                            types.FunctionType,
-                            types.BuiltinFunctionType,
-                            type,
-                            types.ModuleType,
-                        ),
-                    ):
-                        # external callable/class/module: a stable
-                        # REFERENCE to code we deliberately don't hash
-                        # (pyspark is pinned; repo modules were already
-                        # expanded into `spaces` above)
-                        pass
-                    else:
-                        # ANY other module-level value — primitive,
-                        # container, regex, or an arbitrary object (a
-                        # StructType schema constant, a Column expr):
-                        # hash a deterministic rendering rather than
-                        # silently omitting it. Under-approximation is
-                        # the bug this walker exists to close (VERDICT
-                        # r12 item 2); _stable_render is byte-identical
-                        # to the previous primitive/set/regex renderings
-                        # so recognized cases don't churn the ledger.
-                        out[f"{mod_name}.{n}"] = _stable_render(val)
-        elif isinstance(obj, type):
-            out[_key(obj)] = _fn_source(obj)
-            for attr in sorted(vars(obj)):
-                v = vars(obj)[attr]
-                if isinstance(v, (types.FunctionType, staticmethod, classmethod)):
-                    work.append(getattr(v, "__func__", v))
-    if work:
-        # Budget exhausted with objects unvisited = UNDER-hashing — the
-        # non-conservative miss direction this function exists to close.
-        # Record it in the blob (so the hash still moves as the tail
-        # moves) and let test_plan_closures_never_truncate fail loudly.
-        out["__TRUNCATED__"] = repr(sorted(_key(o) for o in work))
-    return out
-
-
-def plan_hash(spec: QuerySpec) -> str:
-    """Content hash of a query's plan version: the builder's source, the
-    oracle text, AND the transitive static closure of repo-local helpers
-    and module-level constants the builder references
-    (:func:`plan_closure_sources`).  An edit to a shared helper now
-    changes every caller's hash, so `driver_order` re-tiers them all —
-    stale greens can no longer attest code whose semantics moved under
-    them through a helper (ADVICE r11 item 1).  Comment-only edits DO
-    re-tier (costs one window slot, never hides a semantic change)."""
-    import hashlib
-
-    closure = plan_closure_sources(spec)
-    parts = [f"{k}\x01{closure[k]}" for k in sorted(closure)]
-    blob = "\x00".join(parts) + "\x00" + (spec.oracle or "")
-    return hashlib.sha256(blob.encode()).hexdigest()[:16]
-
-
-def legacy_plan_hash(spec: QuerySpec) -> str:
-    """The round-10/11 plan-hash algorithm (builder source + oracle
-    only) — kept so tools/update_plan_hashes.py can distinguish "hash
-    changed because the algorithm widened" (preserve `since`: the old
-    greens still attest an unchanged builder) from "hash changed because
-    the plan changed" (bump `since`) during the one-time ledger
-    migration to closure hashing."""
-    import hashlib
-
-    fn = getattr(spec.build, "__wrapped__", spec.build)
-    src = _fn_source(fn)
-    blob = src + "\x00" + (spec.oracle or "")
-    return hashlib.sha256(blob.encode()).hexdigest()[:16]
-
-
-def plan_state(root: str | None = None) -> dict[str, dict]:
-    """The committed plan-version ledger (PLAN_HASHES.json): for each
-    query, the hash of the plan version the CORRECTNESS greens attest
-    and `since`, the first round whose driver record can attest it.
-    Maintained by tools/update_plan_hashes.py; kept current by
-    tests/test_plans.py::test_plan_hashes_ledger_current."""
-    path = os.path.join(root or _REPO_ROOT, _PLAN_HASH_FILE)
-    try:
-        with open(path) as fh:
-            state = json.load(fh)
-    except (OSError, ValueError):
-        return {}
-    return state if isinstance(state, dict) else {}
-
-
-def correctness_history(root: str | None = None) -> dict[str, int]:
-    """Map query name -> latest round with a green (or, for rows-only
-    queries, an official rows-only) driver record, parsed from the
-    committed CORRECTNESS_r*.json files.
-
-    green   = rows/schema/hash all matched, no error;
-    rows-only = the driver executed the query and recorded a row count
-    (err == "no_oracle") — weaker than an oracle row but an official
-    record that the plan runs.  Failures never update the map — and if
-    a query's LATEST record is a failure, its history entry is dropped
-    entirely so `driver_order` puts it back in tier 1 (never-verified)
-    instead of letting an old green make a fresh regression look
-    recently verified (ADVICE r9 item 1).
-    """
-    hist: dict[str, int] = {}
-    latest_seen: dict[str, int] = {}  # latest round with ANY record
-    pattern = os.path.join(root or _REPO_ROOT, "CORRECTNESS_r*.json")
-    paths: list[tuple[int, str]] = []
-    for path in glob.glob(pattern):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if m:
-            paths.append((int(m.group(1)), path))
-    for rnd, path in sorted(paths):  # numeric order, not lexical
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            latest_seen[name] = max(latest_seen.get(name, -1), rnd)
-            green = (
-                row.get("err") is None
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            )
-            rows_only = (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-            )
-            if green or rows_only:
-                hist[name] = max(hist.get(name, -1), rnd)
-    # Regression rule: latest record is a failure -> treat as never
-    # verified (tier 1) so the regression re-enters the next window.
-    return {
-        name: rnd
-        for name, rnd in hist.items()
-        if latest_seen.get(name, rnd) <= rnd
-    }
-
-
-def driver_order(
-    registry: dict[str, QuerySpec],
-    history: dict[str, int] | None = None,
-    state: dict[str, dict] | None = None,
-) -> list[str]:
-    """Registry names in driver-window priority order (see the policy
-    comment above _PINNED).  `history` overrides the parsed
-    CORRECTNESS_r*.json history — used by the staleness-SLA test to
-    simulate the rotation forward.  `state` overrides the committed
-    PLAN_HASHES.json plan-version ledger.
-
-    Changed-plan rule (VERDICT r10 item 1): a green only counts if it
-    attests the CURRENT plan. A query re-enters tier 1 (never-verified)
-    when its ledger entry says the plan version is newer than its last
-    green (`since` > last-green round) or when the live source no
-    longer matches the ledger hash (edited without running
-    tools/update_plan_hashes.py) — exactly parallel to the
-    failed-latest-record rule in correctness_history. Names absent
-    from the ledger fall back to plain history (fresh clones with no
-    ledger behave as before)."""
-    hist = correctness_history() if history is None else history
-    ledger = plan_state() if state is None else state
-
-    def key(name: str):
-        spec = registry[name]
-        if name in _PINNED:
-            return (0, _PINNED.index(name), 0, "")
-        oracle_rank = 0 if spec.oracle is not None else 1
-        last = hist.get(name, -1)
-        entry = ledger.get(name)
-        if entry is not None and last >= 0:
-            changed = entry.get("hash") != plan_hash(spec)
-            if changed or last < entry.get("since", 0):
-                last = -1  # green attests an older plan → re-verify
-        if last < 0:  # never verified (or only ever failed)
-            return (1, oracle_rank, 0, name)
-        return (2, last, oracle_rank, name)
-
-    return sorted(registry, key=key)
-
 def load_all() -> dict[str, QuerySpec]:
-    """Import every query module so the registry is fully populated.
+    """Import every query module and return a copy of the registry.
 
-    Returned dict is in driver-priority order (see :func:`driver_order`):
-    the driver's CORRECTNESS check truncates to the first 50 entries.
-    """
+    Entries are in registration order: the order below, then the order
+    of the ``@register`` decorators within each module."""
     from dynaledger_spark.plans import (  # noqa: F401
         queries_approx,
         queries_core,
@@ -507,24 +92,18 @@ def load_all() -> dict[str, QuerySpec]:
         queries_text,
         queries_timeseries,
         queries_vector,
-        queries_mlprep,  # intentionally last: round-4 batch-2 additions
-        queries_lm,  # round-4 batch-3, same rationale
-        queries_featurestore,  # round-4 batch-5, same rationale
-        queries_eval,  # round-4 batch-6, same rationale
-        queries_behavior,  # round-5 batch-1: journey/recommender analytics
-        # rank behind the already-windowed tier-1 queries (driver window
-        # is full at 50; these are parity-proven locally and enter the
-        # window in round 5)
-        queries_finance,  # round-5 batch-2: technical indicators / concentration
-        queries_quality,  # round-5 batch-2: governance, privacy, charset, DP
-        queries_retrieval,  # round-5 batch-2: BM25 + RRF hybrid search
-        queries_incremental,  # round-5 batch-4: IVM refresh, CDC chunk dedup
-        # batch-2 additions rank behind batch-1 in tier 1: the round-5
-        # window is already full, so they enter the driver window in
-        # round 6; locally parity-proven at both SFs like every batch
-        queries_tpch,  # round-6 batch-1: TPC-H Q3/Q5/Q6/Q10/Q14
-        queries_sparse,  # round-8: FastSS edit join + sparse TF-IDF cosine
-        queries_experiment,  # round-10 batch 2: SRM, IPS/SNIPS, EB shrinkage, Huber, AR(1)
+        queries_mlprep,
+        queries_lm,
+        queries_featurestore,
+        queries_eval,
+        queries_behavior,
+        queries_finance,
+        queries_quality,
+        queries_retrieval,
+        queries_incremental,
+        queries_tpch,
+        queries_sparse,
+        queries_experiment,
     )
 
-    return {name: QUERY_REGISTRY[name] for name in driver_order(QUERY_REGISTRY)}
+    return dict(QUERY_REGISTRY)

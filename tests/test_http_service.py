@@ -5,6 +5,7 @@ an ephemeral port, asserting parity with direct engine calls."""
 from __future__ import annotations
 
 import json
+import socket
 import threading
 import urllib.error
 import urllib.parse
@@ -157,6 +158,23 @@ def test_invalid_source_is_400(service):
     with pytest.raises(urllib.error.HTTPError) as e:
         _get(svc, "/get-table-info?data_source=BOGUS&year=2023&quarter=Q1")
     assert e.value.code == 400
+
+
+def test_invalid_quarter_is_400(service):
+    svc, _ = service
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _get(svc, "/get-financial-data?year=2023&quarter=Q5&data_type=Cash%20Flow&source=RAW")
+    assert e.value.code == 400
+
+
+def test_negative_content_length_is_400(service):
+    """A negative Content-Length is answered at once, not read until the
+    client closes the connection."""
+    svc, _ = service
+    with socket.create_connection(("127.0.0.1", svc.port), timeout=3) as sock:
+        sock.sendall(b"POST /execute-custom-query HTTP/1.1\r\nContent-Length: -1\r\n\r\n")
+        head = sock.recv(64)
+    assert head.split()[1] == b"400"
 
 
 def test_unknown_route_is_404(service):

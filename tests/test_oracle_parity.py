@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from dynaledger_spark.plans.registry import load_all
+from dynaledger_spark.plans.registry import QUERY_REGISTRY, load_all
 from tests.oracle_compare import compare, duck_connection
 
 REGISTRY = load_all()
@@ -73,3 +73,6 @@ def test_entry_smoke(spark):
     df = e.entry(spark)
     assert df.count() > 0
     assert set(e.oracle_sql()) <= set(e.queries())
+    # every registered query is served, in a deterministic order
+    assert set(e.queries()) == set(QUERY_REGISTRY) == set(load_all())
+    assert list(load_all()) == list(load_all())

@@ -762,97 +762,6 @@ def test_dpp_reaches_fact_scan(spark, sf_dir):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_rotation_staleness_sla():
-    """VERDICT r8 item 2: the driver window rotation is an SLA, not a
-    hand-pinned list. Simulate the rotation forward from the committed
-    CORRECTNESS history: each simulated round verifies the first 50
-    driver_order entries; assert no query ever waits longer than
-    ceil((N - |pinned|) / (50 - |pinned|)) rounds between visits, and
-    that the pinned flagships are inside every window.
-
-    RE-TIER DEBT (round 13): with N=338 the steady-state bound has zero
-    slack (336/48 = exactly 7), so ANY tier-1 backlog at window start —
-    ledger entries whose `since` outruns their last green, i.e. plans
-    re-tiered by a helper edit or the r13 migration audit — displaces
-    rotation slots and stretches some gap past the bound while the debt
-    drains. That debt is the closure-hash mechanism WORKING (stale
-    greens must not attest edited plans), so the SLA degrades by
-    exactly the drain time: max gap <= bound + ceil(debt / slots).
-    Debt itself is capped at two windows — a bulk edit that re-tiers
-    more than 2x48 plans must be split across rounds (same spirit as
-    the registry-growth cap)."""
-    import math
-
-    from dynaledger_spark.plans import registry as R
-
-    reg = dict(REGISTRY)
-    hist = dict(R.correctness_history())
-    n_pinned = len(R._PINNED)
-    slots = R._DRIVER_WINDOW
-    bound = math.ceil((len(reg) - n_pinned) / (slots - n_pinned))
-    assert bound <= 7, (
-        f"registry grew past the 7-round staleness SLA: {len(reg)} queries "
-        f"/ {slots - n_pinned} rotation slots -> {bound} rounds; raise the "
-        "driver window or split the registry"
-    )
-    # tier-1 debt: entries whose committed greens no longer attest their
-    # current plan (since > last green, or live hash != ledger hash)
-    ledger = R.plan_state()
-    debt = sum(
-        1
-        for n in reg
-        if n not in R._PINNED
-        and (
-            hist.get(n, -1) < 0
-            or (
-                n in ledger
-                and (
-                    ledger[n].get("hash") != R.plan_hash(reg[n])
-                    or hist.get(n, -1) < ledger[n].get("since", 0)
-                )
-            )
-        )
-    )
-    rot_slots = slots - n_pinned
-    assert debt <= 2 * rot_slots, (
-        f"re-tier debt {debt} exceeds two driver windows ({2 * rot_slots}); "
-        "split the bulk edit across rounds so greens can keep pace"
-    )
-    debt_rounds = math.ceil(debt / rot_slots)
-    start = max(hist.values(), default=0) + 1
-    visits: dict[str, list[int]] = {n: [] for n in reg}
-    sim = dict(hist)
-    for rnd in range(start, start + 3 * bound):
-        window = R.driver_order(reg, history=sim)[:slots]
-        for p in R._PINNED:
-            assert p in window[:n_pinned]
-        for n in window:
-            sim[n] = rnd
-            visits[n].append(rnd)
-    # steady state: every query visited, max gap between consecutive
-    # visits within the bound + the debt drain time (ignore the
-    # pre-history warm-in gap)
-    # The debt slack applies ONLY to gaps that can still feel the drain:
-    # tier-1 re-verifies displace rotation slots for debt_rounds rounds,
-    # and that one-time phase shift ripples through the LRU queue for up
-    # to two further rotations (the bound has zero slack at N=338, so
-    # each displaced visit re-displaces its slot's next occupant;
-    # empirically the latest +1 gap starts debt_rounds + ~1.7·bound
-    # after the drain begins). Gaps starting later must meet the plain
-    # bound — a debt-carrying round cannot grant every plan PERMANENT
-    # extra staleness headroom (ADVICE r13 item 2).
-    ripple_end = start + debt_rounds + 2 * bound
-    for n, vs in visits.items():
-        assert vs, f"{n} never entered the window in {3 * bound} rounds"
-        for a, b in zip(vs, vs[1:]):
-            allowed = bound + (debt_rounds if a < ripple_end else 0)
-            assert b - a <= allowed, (
-                f"{n} staleness {b - a} rounds (visits {a}->{b}) exceeds "
-                f"SLA {bound}"
-                + (f" + debt drain {debt_rounds}" if a < ripple_end else "")
-            )
-
-
 def test_unpersist_discipline(spark, sf_dir):
     """VERDICT r9 item 3: an embedding application that calls registry
     builds directly (no harness clearCache) must not accumulate cached
@@ -927,311 +836,6 @@ def test_unpersist_discipline(spark, sf_dir):
         "after GC — localCheckpoint blocks are not being reclaimed "
         "(strongly referenced somewhere?)"
     )
-
-
-def test_regression_reenters_window():
-    """ADVICE r9 item 1: a query whose LATEST driver record is a failure
-    must sort as never-verified (tier 1) even if an older round was
-    green — otherwise a regression waits up to the full staleness bound
-    behind genuinely-stale greens.  Build a synthetic CORRECTNESS
-    history where `q_regressed` is green in r1 but fails in r2, and
-    assert correctness_history drops it and driver_order ranks it ahead
-    of a query last green in r1."""
-    import json
-    import shutil
-    import tempfile
-
-    from dynaledger_spark.plans import registry as R
-
-    root = tempfile.mkdtemp(prefix="dl_hist_")
-    try:
-        green = {
-            "rows_match": True,
-            "schema_match": True,
-            "hash_match": True,
-            "spark_rows": 1,
-            "oracle_rows": 1,
-            "err": None,
-        }
-        fail = dict(green, rows_match=False, hash_match=False)
-        with open(f"{root}/CORRECTNESS_r01.json", "w") as fh:
-            json.dump({"q_regressed": green, "q_stale": green}, fh)
-        with open(f"{root}/CORRECTNESS_r02.json", "w") as fh:
-            json.dump({"q_regressed": fail}, fh)
-        hist = R.correctness_history(root)
-        assert "q_regressed" not in hist, (
-            "latest-failed query must not keep its old green round"
-        )
-        assert hist == {"q_stale": 1}
-        # numeric (not lexical) round ordering: r10 green supersedes an
-        # r9 failure for a different query
-        with open(f"{root}/CORRECTNESS_r09.json", "w") as fh:
-            json.dump({"q_late": fail}, fh)
-        with open(f"{root}/CORRECTNESS_r10.json", "w") as fh:
-            json.dump({"q_late": green}, fh)
-        hist = R.correctness_history(root)
-        assert hist.get("q_late") == 10
-        # driver_order: the regressed query outranks the stale green
-        reg = {
-            n: REGISTRY["fact_build"] for n in ("q_regressed", "q_stale")
-        }
-        order = R.driver_order(reg, history=R.correctness_history(root))
-        assert order.index("q_regressed") < order.index("q_stale")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def test_changed_plan_reenters_window():
-    """VERDICT r10 item 1: a green only counts for rotation if it
-    attests the CURRENT plan.  Simulate 'edit a green query' two ways —
-    the ledger records a newer plan version (since > last green), and
-    the live source no longer matches the ledger hash (edited without
-    re-running tools/update_plan_hashes.py) — and assert the query
-    re-enters tier 1 ahead of every ordinary green."""
-    from dynaledger_spark.plans import registry as R
-
-    names = ("q_edited_since", "q_edited_hash", "q_green")
-    reg = {n: REGISTRY["fact_build"] for n in names}
-    h = R.plan_hash(REGISTRY["fact_build"])
-    hist = {n: 5 for n in names}  # all last green in round 5
-    state = {
-        "q_edited_since": {"hash": h, "since": 6},  # rewritten after green
-        "q_edited_hash": {"hash": "0" * 16, "since": 0},  # stale ledger
-        "q_green": {"hash": h, "since": 0},
-    }
-    order = R.driver_order(reg, history=hist, state=state)
-    assert order.index("q_edited_since") < order.index("q_green")
-    assert order.index("q_edited_hash") < order.index("q_green")
-    # and once the driver re-greens it (round >= since, ledger synced),
-    # it drops back to ordinary rotation
-    hist2 = dict(hist, q_edited_since=6)
-    state2 = dict(state, q_edited_hash={"hash": h, "since": 0})
-    order2 = R.driver_order(reg, history=hist2, state=state2)
-    assert order2[-1] == "q_edited_since"  # newest green → back of queue
-
-
-def test_plan_closure_includes_shared_helpers():
-    """ADVICE r11 item 1 (mechanism): plan_hash must cover the static
-    closure of repo-local helpers — same-module privates, cross-module
-    functions reached through body-local imports, and module-level
-    constants — not just the registered builder's body."""
-    from dynaledger_spark.plans import registry as R
-
-    cs = R.plan_closure_sources(REGISTRY["fact_build"])
-    # body-local `from dynaledger_spark.catalog import read_table`
-    # inside queries_core._t must be followed two hops deep
-    assert "dynaledger_spark.catalog.read_table" in cs
-    assert "dynaledger_spark.plans.queries_core._t" in cs
-    assert "dynaledger_spark.functions.agg.dsum" in cs
-    # constants referenced by followed helpers are captured too
-    cs2 = R.plan_closure_sources(REGISTRY["rag_pipeline_e2e"])
-    assert "dynaledger_spark.plans.queries_retrieval._RAG_CELL_CAP" in cs2
-
-
-def test_schema_constant_edit_moves_plan_hash():
-    """VERDICT r12 item 2 (done-criterion): a module-level value that is
-    neither function/class/primitive/set/regex — a StructType schema
-    constant is the canonical case — must be part of the closure, so
-    editing the schema re-tiers every builder that references it. The
-    old walker silently omitted such values (under-approximation, the
-    miss direction the closure exists to close)."""
-    import importlib
-    import linecache
-    import shutil
-    import sys
-    import tempfile
-    import textwrap
-
-    from dynaledger_spark.plans import registry as R
-
-    root = tempfile.mkdtemp(prefix="dl_schema_probe_")
-    mod_name = "dynaledger_spark_tmp_schema_probe"  # prefix-matched repo-local
-    path = f"{root}/{mod_name}.py"
-
-    def write_module(extra_field: str) -> None:
-        with open(path, "w") as fh:
-            fh.write(textwrap.dedent(f"""
-                from pyspark.sql import types as T
-
-                SCHEMA = T.StructType([
-                    T.StructField("a", T.LongType()),{extra_field}
-                ])
-
-                def builder(spark, sf_dir):
-                    return spark.createDataFrame([], SCHEMA)
-                """))
-        linecache.clearcache()
-
-    sys.path.insert(0, root)
-    try:
-        write_module("")
-        mod = importlib.import_module(mod_name)
-        spec = R.QuerySpec(name="q_schema", build=mod.builder, oracle="SELECT 1")
-        cs = R.plan_closure_sources(spec)
-        assert f"{mod_name}.SCHEMA" in cs, "StructType constant must be captured"
-        assert "StructField('a'" in cs[f"{mod_name}.SCHEMA"]
-        h_orig = R.plan_hash(spec)
-        builder_src = R._fn_source(mod.builder)
-
-        # schema edit — builder source byte-identical, hash must move
-        write_module(' T.StructField("b", T.StringType()),')
-        mod = importlib.reload(mod)
-        spec = R.QuerySpec(name="q_schema", build=mod.builder, oracle="SELECT 1")
-        assert R._fn_source(mod.builder) == builder_src
-        assert R.plan_hash(spec) != h_orig, "schema edit must change plan_hash"
-    finally:
-        sys.path.remove(root)
-        sys.modules.pop(mod_name, None)
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def test_stable_render_is_canonical():
-    """ADVICE r12: nested sets repr in hash-randomized order and objects
-    in containers repr with memory addresses — either would make
-    plan_hash flap across processes. _stable_render must sort sets at
-    any depth, render callables as dotted references, and replace
-    address-bearing reprs with a typed __UNHASHED__ marker."""
-    from dynaledger_spark.plans import registry as R
-
-    # set nested in a tuple: order-independent, sorted
-    assert R._stable_render(({3, 1, 2}, "x")) == R._stable_render(({2, 3, 1}, "x"))
-    assert R._stable_render({1, 2}) == repr(sorted({1, 2}, key=repr))  # no churn
-    # callables/classes/modules render as dotted references, not reprs
-    import math
-    assert "0x" not in R._stable_render((math.sqrt, int, math))
-    # default-repr object inside a dict: loud typed marker, no address
-    class _Opaque:  # noqa: N801
-        pass
-    rendered = R._stable_render({"k": _Opaque()})
-    assert "__UNHASHED__" in rendered and " at 0x" not in rendered
-    # pure-literal containers are byte-identical to repr (ledger no-churn)
-    for v in [(1, "a", 2.5), [1, [2, 3]], {"a": (1,)}, (7,), (), b"x", None]:
-        assert R._stable_render(v) == repr(v), v
-
-
-def test_plan_closures_never_truncate():
-    """The closure walker's runaway budget (400 objects) must never
-    engage on a real registry entry — truncation would under-hash the
-    plan, the exact miss direction the closure exists to close. The
-    walker records a __TRUNCATED__ marker when it happens; no entry may
-    carry one."""
-    from dynaledger_spark.plans import registry as R
-
-    truncated = sorted(
-        n for n, s in REGISTRY.items()
-        if "__TRUNCATED__" in R.plan_closure_sources(s)
-    )
-    assert not truncated, (
-        f"closure budget exhausted for {truncated[:5]} — raise the budget "
-        "in plan_closure_sources (their hashes are under-covering)"
-    )
-
-
-def test_helper_edit_retiers_callers():
-    """ADVICE r11 item 1 (end-to-end): editing a SHARED HELPER a builder
-    calls — or a module-level constant it reads — must change the
-    builder's plan_hash so driver_order sends the caller back to tier 1
-    even though the registered function body is byte-identical."""
-    import importlib
-    import linecache
-    import shutil
-    import sys
-    import tempfile
-    import textwrap
-
-    from dynaledger_spark.plans import registry as R
-
-    root = tempfile.mkdtemp(prefix="dl_closure_")
-    mod_name = "dynaledger_spark_tmp_closure_probe"  # prefix-matched as repo-local
-    path = f"{root}/{mod_name}.py"
-
-    def write_module(helper_body: str, const: int) -> None:
-        with open(path, "w") as fh:
-            fh.write(textwrap.dedent(f"""
-                _CUT = {const}
-
-                def _helper(x):
-                    return {helper_body}
-
-                def builder(spark, sf_dir):
-                    return _helper(_CUT)
-                """))
-        linecache.clearcache()
-
-    sys.path.insert(0, root)
-    try:
-        write_module("x + 1", 7)
-        mod = importlib.import_module(mod_name)
-        spec = R.QuerySpec(name="q_helper", build=mod.builder, oracle="SELECT 1")
-        h_orig = R.plan_hash(spec)
-        builder_src_orig = R._fn_source(mod.builder)
-
-        # 1) helper body edit — builder source identical, hash must move
-        write_module("x + 2", 7)
-        mod = importlib.reload(mod)
-        spec = R.QuerySpec(name="q_helper", build=mod.builder, oracle="SELECT 1")
-        assert R._fn_source(mod.builder) == builder_src_orig
-        h_helper_edit = R.plan_hash(spec)
-        assert h_helper_edit != h_orig, "helper edit must change plan_hash"
-
-        # 2) constant edit — also semantic, also must move
-        write_module("x + 2", 8)
-        mod = importlib.reload(mod)
-        spec = R.QuerySpec(name="q_helper", build=mod.builder, oracle="SELECT 1")
-        h_const_edit = R.plan_hash(spec)
-        assert h_const_edit != h_helper_edit, "constant edit must change plan_hash"
-
-        # 3) driver_order: the ledger still holds the pre-edit hash, so
-        # the caller re-enters tier 1 ahead of an ordinary green
-        green_hash = R.plan_hash(REGISTRY["fact_build"])
-        reg = {"q_helper": spec, "q_green": REGISTRY["fact_build"]}
-        hist = {"q_helper": 5, "q_green": 1}  # helper green is NEWER
-        state = {
-            "q_helper": {"hash": h_orig, "since": 0},
-            "q_green": {"hash": green_hash, "since": 0},
-        }
-        order = R.driver_order(reg, history=hist, state=state)
-        assert order.index("q_helper") < order.index("q_green"), (
-            "stale-helper green must re-tier ahead of ordinary rotation"
-        )
-    finally:
-        sys.path.remove(root)
-        sys.modules.pop(mod_name, None)
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def test_plan_hashes_ledger_current():
-    """The committed PLAN_HASHES.json must cover every registered query
-    with its CURRENT hash — an edited builder/oracle without a ledger
-    update would silently keep stale greens valid.  Fix with:
-    python tools/update_plan_hashes.py"""
-    from dynaledger_spark.plans import registry as R
-
-    state = R.plan_state()
-    assert state, "PLAN_HASHES.json missing or unreadable"
-    missing = sorted(n for n in REGISTRY if n not in state)
-    extra = sorted(n for n in state if n not in REGISTRY)
-    stale = sorted(
-        n for n in REGISTRY
-        if n in state and state[n].get("hash") != R.plan_hash(REGISTRY[n])
-    )
-    assert not (missing or extra or stale), (
-        f"PLAN_HASHES.json out of date (run tools/update_plan_hashes.py): "
-        f"missing={missing[:5]} extra={extra[:5]} stale={stale[:5]}"
-    )
-    # `since` must never exceed the next driver round — a future round
-    # would permanently pin the query into tier 1
-    import glob as _glob
-    import re as _re
-
-    rounds = [
-        int(m.group(1))
-        for p in _glob.glob(f"{R._REPO_ROOT}/CORRECTNESS_r*.json")
-        if (m := _re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-    ]
-    nxt = max(rounds, default=0) + 1
-    bad = sorted(n for n, e in state.items() if e.get("since", 0) > nxt)
-    assert not bad, f"since beyond next driver round {nxt}: {bad[:5]}"
 
 
 def test_round9_query_plan_shapes(plans):

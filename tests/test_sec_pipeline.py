@@ -326,6 +326,21 @@ def test_replaced_table_changes_next_pull(spark, tables):
     assert _multiset(pull()) == _multiset([r for r in shifted if r["adsh"] != A1])
 
 
+def test_absent_raw_pulls_are_not_kept(spark, tables):
+    """RAW pulls of quarters that hold no rows, or that do not exist,
+    prepare nothing that outlives the request, so a client looping over
+    years cannot grow the engine's prepared pulls."""
+    eng = _engine(spark, tables)
+    for year in range(1900, 1950):
+        if year % 5:
+            out = eng.get_financial_data(year, f"Q{year % 4 + 1}", "Balance Sheet", "RAW")
+            assert out["data"] == []
+        else:
+            with pytest.raises(ValueError, match="quarter"):
+                eng.get_financial_data(year, "Q5", "Balance Sheet", "RAW")
+    assert eng._prepared == {}
+
+
 def test_api_custom_query(spark, tables):
     eng = SecEngine(spark)
     eng.register("sec_sub", tables["sec_sub"].drop(ROW_ID))

@@ -4,12 +4,7 @@ timezone — the harness shape that produced the round-1 errors) and
 compare oracle-backed queries against DuckDB exactly, rows-only
 queries by execution. Usage:
 
-    python tools/driver_sim.py [sf_dir] [--window]
-
---window restricts to the first 50 driver_order entries (the slice the
-driver will actually verify this round) — used with sf0.1 to catch
-SF-dependent branch divergence (estimator cutoffs, bucket caps) that
-sf0.001/sf0.01 never engage (VERDICT r9 item 4).
+    python tools/driver_sim.py [sf_dir]
 
 Prints one OK/FAIL line per query and a final tally; exit 1 on any
 failure.
@@ -28,9 +23,8 @@ from tests.oracle_compare import compare, duck_connection  # noqa: E402
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    window_only = "--window" in sys.argv[1:]
     spark = (
         SparkSession.builder.master("local[16]")
         .appName("driver_sim")
@@ -41,11 +35,6 @@ def main() -> int:
         .getOrCreate()
     )
     reg = load_all()
-    if window_only:
-        from dynaledger_spark.plans.registry import _DRIVER_WINDOW
-
-        names = list(reg)[:_DRIVER_WINDOW]  # load_all is driver-ordered
-        reg = {n: reg[n] for n in names}
     duck = duck_connection(sf_dir)
     failed: list[str] = []
     for name, spec in reg.items():

@@ -3,12 +3,11 @@ foreign (non-UTC, default-conf) session, with a per-query wall budget so
 a quadratic DuckDB oracle cannot stall the sweep. Skips are REPORTED,
 never silent.
 
-Rationale (round 10): the driver verifies at sf0.01 and the window
-mirror covers 50 queries at sf0.1 — this sweep runs ALL oracles at
-sf0.1 and caught two real SF-dependent bugs the gates could not:
-theil_sen's lower-median rank filter used Spark's double `/` (0 rows
-whenever C(|days|,2) was even) and pareto's round(double, 12) hit a
-half-ulp boundary where DuckDB's multiply-based round and Spark's
+Rationale (round 10): the parity gates run at sf0.001 and sf0.01 — this
+sweep runs ALL oracles at sf0.1 and caught two real SF-dependent bugs
+the gates could not: theil_sen's lower-median rank filter used Spark's
+double `/` (0 rows whenever C(|days|,2) was even) and pareto's
+round(double, 12) hit a half-ulp boundary where DuckDB's multiply-based round and Spark's
 BigDecimal round disagree. Run once per round after registry changes:
 
     python tools/full_parity_sweep.py [sf_dir] [budget_s]
