@@ -8,13 +8,15 @@ instead of per-quarter table-name suffixes, and native joins/windows in
 place of the reference's row-at-a-time pandas loops.
 
 Capability map (see SURVEY.md §2 for the operator inventory):
-  sources/    — TSV/ZIP ingestion, Parquet/JSON IO, lookup dims
-  operators/  — fact builders, statement queries, document assembly,
-                dedup (exact / MinHash-LSH / SimHash), similarity search
-  functions/  — validation predicates, text analysis, vector math
-  plans/      — the query registry driving __spark_entry__ and bench.py
+  sources/    — TSV/ZIP ingestion, Parquet/JSON IO, lookup dims, scraping
+  operators/  — fact builders, the per-quarter backfill stores, document
+                assembly, dedup (exact / MinHash-LSH / SimHash), similarity
+                search, binary-column (image/audio) plumbing via mapInPandas
+  functions/  — validation checks, text analysis, float sanitizing,
+                exact-decimal sums
+  plans/      — the query registry behind __spark_entry__
   streaming/  — Structured Streaming ingest (Trigger.AvailableNow)
-  multimodal/ — binary-column (image/audio) plumbing via mapInPandas
+  api.py, http_service.py — SecEngine and its HTTP front end
 """
 
 from dynaledger_spark.session import get_spark

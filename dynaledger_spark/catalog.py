@@ -121,24 +121,3 @@ def sql(spark: SparkSession, query: str) -> DataFrame:
     parses/analyzes/optimizes it against the registered views.
     """
     return spark.sql(query)
-
-
-def describe_table(spark: SparkSession, name: str, sample_rows: int = 3) -> dict:
-    """Schema introspection + small sample (reference: backend/main.py:92-98)."""
-    df = spark.table(name)
-    return {
-        "columns": [
-            {"name": f.name, "type": f.dataType.simpleString(), "nullable": f.nullable}
-            for f in df.schema.fields
-        ],
-        "sample": [row.asDict() for row in df.limit(sample_rows).collect()],
-    }
-
-
-def table_exists(spark: SparkSession, name: str) -> bool:
-    """Partition/table existence probe (reference: s3_data_checker.py:7-14)."""
-    try:
-        spark.table(name)
-        return True
-    except Exception:
-        return False

@@ -137,11 +137,14 @@ def _make_handler(engine: SecEngine):
                     raise _ApiError(500, str(e))
             raise _ApiError(404, f"Not found: {route}")
 
-        def _post(self, route: str, p: dict[str, str], body: dict):
+        def _post(self, route: str, p: dict[str, str], body):
             if route == "/execute-custom-query":
-                if "query" not in body:
+                # any JSON value parses; only an object whose `query` is a
+                # non-empty string is a request
+                query = body.get("query") if isinstance(body, dict) else None
+                if not isinstance(query, str) or not query:
                     raise _ApiError(400, "body must contain 'query'")
-                return engine.execute_custom_query(body["query"])
+                return engine.execute_custom_query(query)
             raise _ApiError(404, f"Not found: {route}")
 
     return Handler

@@ -436,7 +436,7 @@ def simhash_near_duplicates(
     BEFORE the self-join — same guard as MinHash's LSH bucket cap, same
     count-window-then-filter shape (rows stay spillable). Without it a
     cluster of identical/boilerplate content explodes quadratically:
-    the round-4 skew probe (tools/scale_probe.py) measured 3,000
+    the round-4 skew probe measured 3,000
     duplicated docs turning a 6.5 s query into 55 s (every pair of the
     cluster survives the join in EVERY chunk). Identical-content pairs
     belong to exact dedup, which runs first in any real pipeline; the

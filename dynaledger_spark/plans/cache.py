@@ -4,11 +4,10 @@ Registered builders persist() intermediates their own plan reads more
 than once (a blocking table feeding three joins, an oriented edge list
 read by both wedge sides, ...).  The returned DataFrame is lazy, so the
 builder can never unpersist inside its own body — the cache would be
-gone before the first action.  The harnesses sweep with
-spark.catalog.clearCache() between queries (bench.py, tools/
-driver_sim.py), but an application that embeds this package and calls
-builders directly would accumulate cached blocks for the life of its
-SparkSession.
+gone before the first action.  tools/driver_sim.py sweeps with
+spark.catalog.clearCache() between queries, but an application that
+embeds this package and calls builders directly would accumulate
+cached blocks for the life of its SparkSession.
 
 The discipline:
 

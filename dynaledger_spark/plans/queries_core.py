@@ -213,7 +213,6 @@ def sales_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "asof_purchase_attribution",
-    headline=True,
     doc="as-of join: each click enriched with the user's latest prior purchase",
     oracle="""
         SELECT c.event_id, c.user_id, c.ts,
@@ -248,7 +247,6 @@ def asof_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "fact_build",
-    headline=True,
     doc="3-way star join + filter + dense_rank + group-sum (dbt fact model shape)",
     oracle=f"""
         WITH ranked AS (
@@ -630,7 +628,6 @@ def validation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "topk_customers",
-    headline=True,
     doc="group-sum + deterministic top-k (client-side pandas made engine-side)",
     oracle=f"""
         SELECT c.c_custkey, c.c_name,
@@ -943,7 +940,6 @@ def running_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sessionization",
-    headline=True,
     doc="gap-based sessionization via lag + cumulative session ids",
     oracle="""
         WITH flagged AS (

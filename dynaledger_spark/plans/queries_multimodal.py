@@ -73,7 +73,6 @@ def _media_decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "media_decode_meta",
-    headline=True,
     doc="binary media → typed metadata via Arrow-batched mapInPandas",
     oracle=f"""
         WITH {_DECODED_CTE}

@@ -40,7 +40,6 @@ class _stream_partitions:
 
 @register(
     "stream_windowed_counts",
-    headline=True,
     doc="Structured Streaming tumbling-window count+sum, AvailableNow drain",
     oracle="""
         SELECT date_trunc('minute', ts) AS window_start,

@@ -36,7 +36,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dedup_exact",
-    headline=True,
     doc="exact content dedup via md5 hash-groupBy (keep min doc_id)",
     oracle="""
         SELECT md5(text) AS content_hash,
@@ -76,7 +75,6 @@ _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
 
 @register(
     "text_quality",
-    headline=True,
     doc="token counts, punctuation/stopword ratios, quality score per doc",
     oracle=f"""
         SELECT doc_id, lang,
@@ -125,7 +123,6 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "minhash_lsh_pairs",
-    headline=True,
     doc="MinHash-LSH candidate pairs + exact-Jaccard confirmation",
     oracle=None,
 )

@@ -85,7 +85,6 @@ def _duck_dot(a: str, b: str) -> str:
 
 @register(
     "ann_cosine_topk",
-    headline=True,
     doc="brute-force cosine top-k vs the vec_id=0 query vector",
     oracle=f"""
         WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),

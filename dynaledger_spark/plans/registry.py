@@ -31,19 +31,13 @@ class QuerySpec:
     name: str
     build: Callable[[SparkSession, str], DataFrame]
     oracle: str | None = None  # ANSI SQL for DuckDB; None → rows-only check
-    headline: bool = False  # included in bench.py
     doc: str = ""
 
 
 QUERY_REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(
-    name: str,
-    oracle: str | None = None,
-    headline: bool = False,
-    doc: str = "",
-):
+def register(name: str, oracle: str | None = None, doc: str = ""):
     """Decorator: register a (spark, sf_dir) -> DataFrame query builder.
 
     The registered build is wrapped with the cache discipline from
@@ -66,7 +60,7 @@ def register(
             return cache.attach_release(df, persisted)
 
         QUERY_REGISTRY[name] = QuerySpec(
-            name=name, build=build, oracle=oracle, headline=headline, doc=doc or fn.__doc__ or ""
+            name=name, build=build, oracle=oracle, doc=doc or fn.__doc__ or ""
         )
         return fn
 

@@ -38,7 +38,7 @@ def _get(svc: SecHttpService, path: str):
         return r.status, json.loads(r.read())
 
 
-def _post(svc: SecHttpService, path: str, body: dict):
+def _post(svc: SecHttpService, path: str, body):
     req = urllib.request.Request(
         f"http://127.0.0.1:{svc.port}{path}",
         data=json.dumps(body).encode(),
@@ -112,6 +112,16 @@ def test_custom_query_bad_sql_is_500(service):
     with pytest.raises(urllib.error.HTTPError) as e:
         _post(svc, "/execute-custom-query?data_source=Raw", {"query": "SELEC nope"})
     assert e.value.code == 500
+
+
+@pytest.mark.parametrize("body", [5, None, "query", ["query"], {"query": 5}])
+def test_custom_query_malformed_body_is_400(service, body):
+    """A body that is not an object with a string `query` is the client's
+    error, answered 400 like a missing `query` — never a 500."""
+    svc, _ = service
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _post(svc, "/execute-custom-query?data_source=Raw", body)
+    assert e.value.code == 400
 
 
 def test_query_data_get_roundtrip(service):

@@ -18,7 +18,6 @@ store are all proven on SEC-shaped data, not just on TPC-H tables.
 
 from __future__ import annotations
 
-import importlib.util
 import os
 
 import duckdb
@@ -39,21 +38,10 @@ from dynaledger_spark.operators.backfill import (
 from dynaledger_spark.sources.parquet_io import write_partitioned
 from dynaledger_spark.sources.tsv import extract_zip, ingest_quarter
 from tests.oracle_compare import compare
+from tests.sec_fixtures import build_quarter_zip
 
 QUARTERS = ("2024Q1", "2024Q2", "2024Q3", "2024Q4")
 _BKT = "bktq"  # statement-store suffix for this module
-
-
-def _ingest_bench():
-    spec = importlib.util.spec_from_file_location(
-        "ingest_bench_bf",
-        os.path.join(
-            os.path.dirname(os.path.dirname(__file__)), "tools", "ingest_bench.py"
-        ),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 @pytest.fixture(scope="module")
@@ -61,14 +49,13 @@ def backfill(spark, tmp_path_factory):
     """Four quarters ingested and accreted into (a) the partitioned fact
     store and (b) the RAW statement store; typed parquet kept on
     disk for DuckDB parity."""
-    bench = _ingest_bench()
     root = tmp_path_factory.mktemp("sec_backfill")
     facts_root = str(root / "facts")
     typed_root = str(root / "typed")
     drop_bucketed(spark, suffix=_BKT)
     for q in QUARTERS:
         zp = str(root / f"{q}.zip")
-        bench.build_quarter_zip(zp, n_num=6_000, n_sub=100, n_tag=300, quarter=q)
+        build_quarter_zip(zp, n_num=6_000, n_sub=100, n_tag=300, quarter=q)
         typed = ingest_quarter(spark, extract_zip(zp, str(root / f"ext_{q}")), q)
         for table in ("sec_sub", "sec_pre", "sec_num"):
             write_partitioned(

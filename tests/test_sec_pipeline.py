@@ -22,7 +22,7 @@ from dynaledger_spark.operators.facts import build_fact_table
 from dynaledger_spark.sources.json_docs import read_documents, write_documents
 from dynaledger_spark.sources.lookup import load_ticker
 from dynaledger_spark.sources.tsv import ROW_ID, ingest_quarter, read_tsv
-from tests.sec_fixtures import Q, write_fixtures
+from tests.sec_fixtures import Q, build_quarter_zip, write_fixtures
 
 A1 = "0000000001-23-000001"
 A2 = "0000000002-23-000002"
@@ -383,25 +383,15 @@ def test_store_failures_materializes_audit_tables(spark, tables, tmp_path):
 
 
 def test_scaled_quarter_zip_ingest_e2e(spark, tmp_path):
-    """The ingest-bench path (tools/ingest_bench.py) at pytest scale:
+    """A seeded quarter ZIP at pytest scale:
     ZIP -> extract -> typed parquet -> 3 fact tables, asserting row
     conservation (PERMISSIVE + try_cast never drops rows; ~2% dirty
-    numeric cells coerce to NULL) and non-empty facts. The same code
-    measured at 8M num rows for BASELINE.md's ingest row."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "ingest_bench",
-        os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "ingest_bench.py"),
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-
+    numeric cells coerce to NULL) and non-empty facts."""
     from dynaledger_spark.operators.facts import build_all_facts
     from dynaledger_spark.sources.tsv import extract_zip, ingest_quarter
 
     zp = str(tmp_path / "2024Q1.zip")
-    counts = bench.build_quarter_zip(zp, n_num=20_000, n_sub=250, n_tag=500)
+    counts = build_quarter_zip(zp, n_num=20_000, n_sub=250, n_tag=500)
     members = extract_zip(zp, str(tmp_path / "ext"))
     assert set(members) == {"sec_sub", "sec_tag", "sec_num", "sec_pre"}
     typed = ingest_quarter(spark, members, "2024Q1")
@@ -430,20 +420,11 @@ def test_single_pass_facts_equal_per_statement(spark, tmp_path):
     """build_facts_single_pass must reproduce build_all_facts row for
     row (the DENSE_RANK elimination proof: rank over a partition that
     contains its own ORDER BY column is constant 1)."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "ingest_bench2",
-        os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "ingest_bench.py"),
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-
     from dynaledger_spark.operators.facts import build_all_facts, build_facts_single_pass
     from dynaledger_spark.sources.tsv import extract_zip, ingest_quarter
 
     zp = str(tmp_path / "q.zip")
-    bench.build_quarter_zip(zp, n_num=20_000, n_sub=250, n_tag=500)
+    build_quarter_zip(zp, n_num=20_000, n_sub=250, n_tag=500)
     typed = ingest_quarter(spark, extract_zip(zp, str(tmp_path / "e")), "2024Q1")
     num, sub, pre = typed["sec_num"], typed["sec_sub"], typed["sec_pre"]
 
