@@ -14,7 +14,8 @@ Capability map (see SURVEY.md §2 for the operator inventory):
                 search, binary-column (image/audio) plumbing via mapInPandas
   functions/  — validation checks, text analysis, float sanitizing,
                 exact-decimal sums
-  plans/      — the query registry behind __spark_entry__
+  plans/      — the query registry behind __spark_entry__: lazy
+                (spark, sf_dir) builders that persist nothing
   streaming/  — Structured Streaming ingest (Trigger.AvailableNow)
   api.py, http_service.py — SecEngine and its HTTP front end
 """

@@ -8,8 +8,6 @@ the serialization loop.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -30,11 +28,3 @@ def sanitize_floats(df: DataFrame) -> DataFrame:
             cols.append(F.col(field.name))
     return df.select(*cols)
 
-
-def sanitize_rows(rows: list[dict]) -> list[dict]:
-    """Driver-side fallback with the reference's exact row-walk shape."""
-    for item in rows:
-        for key, value in item.items():
-            if isinstance(value, float) and (math.isnan(value) or math.isinf(value)):
-                item[key] = None
-    return rows

@@ -66,11 +66,15 @@ def _make_handler(engine: SecEngine):
             # default=str covers datetime.date / Decimal from Spark rows —
             # same shapes FastAPI's jsonable_encoder stringifies.
             body = json.dumps(payload, default=str).encode()
-            self.send_response(status)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
+            try:
+                self.send_response(status)
+                self.send_header("Content-Type", "application/json")
+                self.send_header("Content-Length", str(len(body)))
+                self.end_headers()
+                self.wfile.write(body)
+            except (BrokenPipeError, ConnectionResetError):
+                # the client hung up before reading its reply
+                self.close_connection = True
 
         def _params(self) -> dict[str, str]:
             qs = parse_qs(urlparse(self.path).query)

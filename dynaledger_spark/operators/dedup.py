@@ -19,7 +19,6 @@ import random
 
 from pyspark.sql import Column, DataFrame
 
-from dynaledger_spark.plans.cache import tracked_persist
 from pyspark.sql import functions as F
 
 # Mersenne prime 2^31-1: keeps a*h+b within signed-64 under ANSI mode.
@@ -284,20 +283,16 @@ def near_duplicates(
     The signature table (which also carries each distinct text's member
     ids and clone weight) feeds five plan branches (banding+weights,
     both sides of the verification join, the expansion joins, the
-    within-group triangle) — without materialization the
-    128-permutation signature pass would recompute each time, so it
-    is persisted here. With ``materialize=True`` the (small) pair result
-    is computed eagerly and the signature cache released immediately —
-    ONLY use when the caller will fire several separate actions against
-    the result and can't persist it themselves: the eager localCheckpoint
-    pins the plan outside AQE and measured 3-4× the cost of one lazy
-    pass at sf0.1 (8-9 s vs 1.2-2.6 s), so for a single downstream
-    action the lazy default is strictly better. At 100 TB, write
+    within-group triangle). With ``materialize=True`` the (small) pair
+    result is computed eagerly — ONLY use when the caller will fire
+    several separate actions against the result and can't persist it
+    themselves: the eager localCheckpoint pins the plan outside AQE and
+    measured 3-4× the cost of one lazy pass at sf0.1 (8-9 s vs 1.2-2.6
+    s), so for a single downstream action the lazy default is strictly
+    better. At 100 TB, write
     signatures to parquet once instead (they're reusable across dedup
     runs; ~1 KB/doc).
     """
-    from pyspark import StorageLevel
-
     # ONE aggregation produces the representative rows directly: group by
     # md5(text), carry the (identical within the group) text with first()
     # and the min id as the representative — the r13 round-1 shape
@@ -315,15 +310,14 @@ def near_duplicates(
         )
         .drop("_h")
     )
-    # ONE persisted table carries signature + shingles + group members +
-    # clone weight per distinct text: the weight rides the banding
-    # projection (no join against a separate weights table) and the
-    # member arrays are read back by the expansion joins from cache.
+    # ONE table carries signature + shingles + group members + clone
+    # weight per distinct text: the weight rides the banding projection
+    # (no join against a separate weights table) and the member arrays
+    # are read back by the expansion joins.
     sigs = minhash_signatures(
         rep_docs, text_col, id_col, n_hashes=n_hashes, seed=seed,
         keep_cols=("_members", "_w"),
     )
-    sigs = tracked_persist(sigs, StorageLevel.MEMORY_AND_DISK)
     survivors = _surviving_bucket_rows(
         _lsh_banded(sigs, n_bands, keep_cols=("_w",)),
         max_bucket_size=max_bucket_size,
@@ -372,7 +366,6 @@ def near_duplicates(
     out = cross.unionByName(within) if threshold <= 1.0 else cross
     if materialize:
         out = out.localCheckpoint(eager=True)
-        sigs.unpersist()
     return out
 
 
@@ -493,8 +486,7 @@ def portable_minhash_signatures(
     """Engine-portable MinHash signatures: (id, shingles, sig) with the
     polynomial rolling base hash and (a*h+b) mod p permutations — the
     signature stage shared by portable_minhash_pairs and the
-    estimation-error calibration query. Persisted: callers fan the
-    table into banding AND verification branches.
+    estimation-error calibration query.
 
     `shingled` (optional, columns (id, shingles)) skips the
     tokenize/shingle pass — exact-dup-collapsed callers hand in the
@@ -593,7 +585,7 @@ def portable_minhash_signatures(
             F.sequence(F.lit(0), F.greatest(F.col("_n") - k, F.lit(0))),
             gram_hash,
         )
-        sigs = (
+        return (
             docs.select(
                 F.col(id_col).alias("id"),
                 _shingles(F.col(text_col)).alias("shingles"),
@@ -603,13 +595,9 @@ def portable_minhash_signatures(
             .withColumn("_base", base)
             .select("id", "shingles", sig.alias("sig"))
         )
-    else:
-        sigs = shingled.select("id", "shingles").withColumn(
-            "_base", F.transform(F.col("shingles"), rolling)
-        ).select("id", "shingles", sig.alias("sig"))
-    from pyspark import StorageLevel
-
-    return tracked_persist(sigs, StorageLevel.MEMORY_AND_DISK)
+    return shingled.select("id", "shingles").withColumn(
+        "_base", F.transform(F.col("shingles"), rolling)
+    ).select("id", "shingles", sig.alias("sig"))
 
 
 def portable_minhash_pairs(

@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dynaledger_spark.plans.registry import register
-from dynaledger_spark.plans.cache import tracked_persist
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -651,7 +650,6 @@ def kmv_theta_sketch_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("rn") <= _KMV_K)
         .select("event_type", "h")
-        .transform(tracked_persist)
     )
     types = ev.select("event_type").distinct()
     pairs = (
@@ -690,7 +688,7 @@ def kmv_theta_sketch_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.col("rn") <= _KMV_K) & (F.col("in_a") == 1) & (F.col("in_b") == 1)).cast("int")
         ).cast("bigint").alias("n_common_kept"),
     )
-    du = ev.select("event_type", "user_id").distinct().transform(tracked_persist)
+    du = ev.select("event_type", "user_id").distinct()
     ex = (
         du.alias("a")
         .join(

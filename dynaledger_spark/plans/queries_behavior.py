@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from dynaledger_spark.functions.agg import osum
 from dynaledger_spark.plans.registry import register
-from dynaledger_spark.plans.cache import tracked_persist
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -287,7 +286,7 @@ def item_cf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         distinct_lines.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= MAX_BASKET)
         .drop("rn")
-    ).transform(tracked_persist)
+    )
     deg = capped.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n"))
     a, b = capped.alias("a"), capped.alias("b")
     cooc = (
@@ -991,7 +990,7 @@ def sequential_pattern_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bounds = rnk.groupBy("user_id", "event_type").agg(
         F.min("rn").alias("mn"), F.max("rn").alias("mx")
-    ).transform(tracked_persist)  # read by p2 (twice) and p3 (twice)
+    )
     nu = ev.agg(F.count_distinct("user_id").cast("bigint").alias("n_users"))
     a, b = bounds.alias("a"), bounds.alias("b")
     p2 = (

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from dynaledger_spark.plans.registry import register
-from dynaledger_spark.plans.cache import tracked_persist
 from dynaledger_spark.plans.queries_mlprep import _FOLD, _fold
 from dynaledger_spark.plans.queries_vector import (
     _CENT_N,
@@ -82,27 +81,14 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     low-count PMI pathology (hapax pairs scoring highest).
 
     Plan: one explode → bigram stream → ONE heavy groupBy; the
-    positional margins and the total are rollups of the persisted
+    positional margins and the total are rollups of the
     joint table (identical counts by algebra), so the corpus stream is
     aggregated exactly once. Margins broadcast back; top-30 is
     TakeOrdered — no global sort materialization. At 100 TB the
     margins are vocabulary-sized — broadcastable exactly when the
     vocab is (frequency-floor them first, as with the unigram LM).
     """
-    import os
-
-    from dynaledger_spark.plans.spread import spread_if_serial
-
-    # single-file corpus → 1-task scan doing the WHOLE bigram explode and
-    # the partial aggregation single-threaded; spread rows first (the
-    # queries_text._docs precedent) — gated on the scan's actual
-    # parallelism, so a multi-file corpus keeps the raw scan
-    # (plans/spread.py)
-    docs = spread_if_serial(
-        spark,
-        _t(spark, sf_dir, "documents"),
-        os.path.join(sf_dir, "documents.parquet"),
-    )
+    docs = _t(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     grams = F.when(
         F.size(toks) >= 2,
@@ -117,7 +103,7 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     bi = docs.select(F.explode(grams).alias("g")).select("g.w1", "g.w2")
     # the corpus-sized bigram stream is aggregated ONCE; margins and the
     # total are rollups of the joint table (identical counts by algebra)
-    joint = bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n12")).transform(tracked_persist)
+    joint = bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n12"))
     firsts = joint.groupBy(F.col("w1").alias("w")).agg(F.sum("n12").alias("nf"))
     seconds = joint.groupBy(F.col("w2").alias("w")).agg(F.sum("n12").alias("ns"))
     tot = joint.agg(F.sum("n12").alias("t"))
@@ -438,7 +424,7 @@ def markov_sequence_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the per-user fold is bounded at 25 terms no matter how hot the
     key (the segmented-EWMA lesson applied at design time, not
     retrofitted). The pair stream pays its user_id window exchange
-    once and is persisted for its two aggregate consumers; the
+    once and feeds its two aggregate consumers; the
     transition matrix and margins come back as broadcasts, so the
     corpus-sized stream never joins by shuffle. A hot user costs one
     sorted run in the lag window — per-row state, no arrays anywhere.
@@ -451,7 +437,7 @@ def markov_sequence_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("prev").isNotNull())
         .groupBy("user_id", "prev", "cur")
         .agg(F.count(F.lit(1)).alias("n"))
-    ).transform(tracked_persist)  # two consumers (matrix via sum, scoring) — one window pass
+    )
     trans = pairs.groupBy("prev", "cur").agg(F.sum("n").alias("n_ab"))
     margins = trans.groupBy("prev").agg(F.sum("n_ab").alias("n_a"))
     scored = (

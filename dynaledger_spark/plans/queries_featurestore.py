@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from dynaledger_spark.plans.registry import register
-from dynaledger_spark.plans.cache import tracked_persist
 from dynaledger_spark.plans.queries_graph import MAX_BASKET, MIN_SUPPORT
 from dynaledger_spark.plans.queries_stats import _duck_hex_poly
 
@@ -199,7 +198,7 @@ def rolling_purchase_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tus",
         F.count(F.lit(1)).over(wcum).alias("cum_n"),
         F.sum("cents").over(wcum).alias("cum_c"),
-    ).transform(tracked_persist)  # feeds the data side, both query-point sides, and the final join
+    )
     cumv = F.struct(F.col("cum_n").alias("n"), F.col("cum_c").alias("c"))
     null_cumv = F.lit(None).cast("struct<n:bigint,c:bigint>")
     data = cum.select(
@@ -406,7 +405,7 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= MAX_BASKET)
         .drop("rn")
-    ).transform(tracked_persist)
+    )
     a, b = capped.alias("a"), capped.alias("b")
     supp = (
         a.join(
@@ -520,7 +519,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.explode(F.split("text", " ")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
-    ).transform(tracked_persist)
+    )
     seeds = spark.range(_CMS_D).select(F.col("id").cast("int").alias("seed"))
     bucket = F.when(F.col("seed") == 0, F.expr(_cms_spark_hash(0)))
     for i in range(1, _CMS_D):
@@ -790,7 +789,7 @@ def mad_outlier_days(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "purchase")
         .groupBy(F.to_date("ts").alias("day"))
         .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"))
-    ).transform(tracked_persist)
+    )
 
     def lower_median(df: DataFrame, col: str) -> DataFrame:
         return (

@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dynaledger_spark.plans.registry import register
-from dynaledger_spark.plans.cache import tracked_persist
 
 MIN_SUPPORT = 2
 # Hot-basket guard: pair generation is quadratic IN THE BASKET, so one
@@ -56,18 +55,11 @@ _EDGES_DUCK = f"""
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Support-thresholded co-purchase edges with canonical pa < pb.
-
-    persist()ed (lazy): the triangle query self-joins the edge set three
-    times and PageRank reads it every iteration — without the cache each
-    reference re-executes the lineitem self-join subtree. The cache is
-    |edges| rows of two longs, session-scoped, same pattern as the
-    minhash signature cache.
-    """
+    """Support-thresholded co-purchase edges with canonical pa < pb."""
     from dynaledger_spark.catalog import read_table
 
     li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    return edges_from_lineitem(li).transform(tracked_persist)
+    return edges_from_lineitem(li)
 
 
 def edges_from_lineitem(li: DataFrame) -> DataFrame:
@@ -174,7 +166,7 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(a_first, F.col("pa")).otherwise(F.col("pb")).alias("src"),
         F.when(a_first, F.col("pb")).otherwise(F.col("pa")).alias("dst"),
         F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dst_d"),
-    ).transform(tracked_persist)  # read three times (two wedge sides + closing edge)
+    )
     o1, o2, o3 = oriented.alias("o1"), oriented.alias("o2"), oriented.alias("o3")
     wedges = o1.join(
         o2,
@@ -222,9 +214,7 @@ def pagerank(edges: DataFrame, iters: int = 8, damping: float = 0.85) -> DataFra
     """PageRank on canonical (pa < pb) undirected edges; returns
     (v, rank) rounded to 9dp for output stability.
 
-    Loop-invariant arcs and degrees are persist()ed — without that,
-    every iteration re-derives the full edge pipeline (the lineitem
-    self-join) from scratch, measured 2× total wall at sf0.1. A LAZY
+    A LAZY
     localCheckpoint every 4 iterations truncates lineage so late
     iterations don't re-plan the whole prefix (lazy, so AQE keeps
     optimizing each executed segment — the eager form is the
@@ -232,9 +222,9 @@ def pagerank(edges: DataFrame, iters: int = 8, damping: float = 0.85) -> DataFra
     """
     arcs = edges.select(
         F.col("pa").alias("src"), F.col("pb").alias("dst")
-    ).unionAll(edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))).transform(tracked_persist)
-    deg = arcs.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).transform(tracked_persist)
-    n = deg.count()  # scalar: |V|, bounded driver value (also primes the caches)
+    ).unionAll(edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
+    deg = arcs.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    n = deg.count()  # scalar: |V|, bounded driver value
     if n == 0:  # empty graph: no vertices, no ranks (empty-corpus sweep)
         return deg.select(
             F.col("src").alias("v"), F.lit(0.0).alias("rank")
@@ -243,7 +233,7 @@ def pagerank(edges: DataFrame, iters: int = 8, damping: float = 0.85) -> DataFra
     # (ranks ⋈ (arcs⋈deg)_invariant) was tried both persisted and lazy
     # and measured SLOWER at sf0.1 (4.7 → 6.3 s min-of-8): the planner
     # handles this 3-way tiny-join loop by broadcasting the (ranks⋈deg)
-    # pair and streaming the cached arc table, which the pre-joined form
+    # pair and streaming the arc table, which the pre-joined form
     # defeats. Kept as-is deliberately.
     ranks = deg.select("src", F.lit(1.0 / n).alias("rank"))
     base = (1.0 - damping) / n
@@ -320,7 +310,6 @@ def bfs_levels(edges: DataFrame, max_depth: int) -> DataFrame:
     arcs = (
         edges.select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
         .unionAll(edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
-        .transform(tracked_persist)
     )
     seed = edges.agg(F.min("pa").cast("bigint").alias("v")).select(
         "v", F.lit(0).cast("bigint").alias("level")
@@ -523,16 +512,11 @@ def pagerank_portable_fixedpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     arcs = (
         edges.select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
         .unionAll(edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
-        .transform(tracked_persist)
     )
-    # persisted: every round re-reads deg for the left join — without the
-    # cache each of the 8 rounds re-runs the arcs groupBy (a shuffle) for
-    # the same loop-invariant table (guide §2.4; exact integer counts, so
-    # caching cannot change a bit)
     deg = arcs.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).alias("deg")
-    ).transform(tracked_persist)
-    n = deg.count()  # driver scalar: |V|, bounded, deterministic (primes the cache)
+    )
+    n = deg.count()  # driver scalar: |V|, bounded, deterministic
     if n == 0:  # empty graph (empty-corpus sweep): emit the empty schema
         return deg.select("v", F.col("deg").cast("bigint").alias("pr_fixed"))
     base = _PR_SCALE // n
@@ -633,7 +617,7 @@ def lpa_communities_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pa").alias("src"), F.col("pb").alias("dst")
     ).unionByName(
         edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    ).transform(tracked_persist)
+    )
     labels = bidir.select(F.col("src").alias("v")).distinct().select(
         "v", F.col("v").alias("lbl")
     )

@@ -193,19 +193,7 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (source, chunk-hash) aggregate; its shuffle carries one row per
     CHUNK (~len/32 of the char volume), not per window.
     """
-    import os
-
-    from dynaledger_spark.plans.spread import spread_if_serial
-
-    # single-file corpus → 1-task scan running the WHOLE cut-point scan,
-    # chunk extraction and chunk hashing single-threaded (~1.3 s of this
-    # query's map side at sf0.1); spread first, gated on the scan's
-    # actual parallelism (plans/spread.py)
-    d = spread_if_serial(
-        spark,
-        _t(spark, sf_dir, "documents"),
-        os.path.join(sf_dir, "documents.parquet"),
-    )
+    d = _t(spark, sf_dir, "documents")
     n = F.length("text")
     # Char codes as an array, BOUND AS A LAMBDA VARIABLE so it evaluates
     # once per row: a withColumn'd array gets inlined by Catalyst's

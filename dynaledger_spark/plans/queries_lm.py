@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from dynaledger_spark.plans.registry import register
-from dynaledger_spark.plans.cache import tracked_persist
 from dynaledger_spark.plans.queries_mlprep import _FOLD, _fold
 
 
@@ -356,9 +355,8 @@ def bigram_interpolated_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     dpc = (
         pairs.groupBy("doc_id", "prev", "cur")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .transform(tracked_persist)
     )
-    big = dpc.groupBy("prev", "cur").agg(F.sum("cnt").alias("c_big")).transform(tracked_persist)
+    big = dpc.groupBy("prev", "cur").agg(F.sum("cnt").alias("c_big"))
     prevc = big.groupBy("prev").agg(F.sum("c_big").alias("c_prev"))
     uni = toks.groupBy("word").agg(F.count(F.lit(1)).alias("c_uni"))
     ntok = uni.agg(F.sum("c_uni").cast("bigint").alias("n_tok"))

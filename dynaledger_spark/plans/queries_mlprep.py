@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from dynaledger_spark.plans.registry import register
-from dynaledger_spark.plans.cache import tracked_persist
 from dynaledger_spark.plans.queries_graph import _EDGES_DUCK, _edges
 from dynaledger_spark.plans.queries_stats import _duck_hex_poly
 
@@ -137,15 +136,7 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from dynaledger_spark.plans.spread import read_spread
-
-    # single-file corpus → 1-task scan, and THIS query's map side is the
-    # d²/2 outer-product explode (~2080 structs per row) plus the partial
-    # collect_list — spread rows across all cores first (the _emb
-    # precedent; the fold sorts per-cell values, so placement cannot
-    # change the result). Gated on the scan's actual parallelism: a
-    # multi-file corpus keeps the raw scan (plans/spread.py).
-    emb = read_spread(spark, os.path.join(sf_dir, "embeddings.parquet"))
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     # guard the degenerate empty vector: sequence(1, 0) is a DESCENDING
     # [1, 0] in Spark (not empty) and element_at(arr, 0) throws — the
     # oracle's range(1, 1) is empty, so filter to match it.
@@ -627,12 +618,9 @@ def jaccard_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep_docs = docs.join(groups.select("rep"), docs.doc_id == F.col("rep")).select(
         F.col("rep").alias("doc_id"), "text"
     )
-    # persisted: the shingle arrays feed the explode, BOTH verification
-    # sides, and the bench's second run — computing the regex split +
-    # 5-gram assembly once instead of four times is most of the wall
     shingled = rep_docs.select(
         "doc_id", _shingles(F.col("text"), 5).alias("sh")
-    ).transform(tracked_persist)
+    )
     ex = shingled.select(
         "doc_id", F.size("sh").alias("n"), F.explode("sh").alias("g")
     )
@@ -802,7 +790,7 @@ def triplet_sample_contrastive(spark: SparkSession, sf_dir: str) -> DataFrame:
     wlab = W.partitionBy("label").orderBy("vec_id")
     members = emb.select(
         "vec_id", "label", F.row_number().over(wlab).alias("rn")
-    ).transform(tracked_persist)
+    )
     lcnt = members.groupBy("label").agg(F.count(F.lit(1)).alias("cnt"))
     lrank = lcnt.select(
         "label",

@@ -38,36 +38,10 @@ _DECODED_CTE = """
 """
 
 
-# Per-task byte target for the mapInPandas decode spread: every task pays
-# a Python-worker round trip (Arrow batch setup + scheduling, ~10-20 ms),
-# so tiny inputs must not fan out to every core — the r13 32-way spread
-# made media_decode_meta FASTER at 8 cores than 32 (driver scaling ratio
-# 0.64; VERDICT r13 item 5/6). ~1 MB of text per decode task amortizes
-# the overhead at testdata scale (widths 1-8 measured 0.25-0.29 s at
-# sf0.1 vs 0.38 s for 32-way) while a bigger corpus still widens to every
-# core before the gate removes the spread entirely.
-_MEDIA_TASK_BYTES = 1 << 20
-
-
 def _media_decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dynaledger_spark.operators.multimodal import decode_media, synthesize_media
-    from dynaledger_spark.plans.spread import scan_stats
 
-    # small single-file corpus → spread so decode batches hit multiple
-    # cores, SIZED BY INPUT BYTES (not core count) and gated on the
-    # scan's actual parallelism (plans/spread.py)
-    path = os.path.join(sf_dir, "documents.parquet")
-    est, data_bytes = scan_stats(spark, path)
-    docs = spark.read.parquet(path)
-    width = min(
-        spark.sparkContext.defaultParallelism,
-        -(-data_bytes // _MEDIA_TASK_BYTES),
-    )
-    # spread only when it buys real parallelism: a sub-MB corpus decodes
-    # fastest in the scan task itself (no exchange at all), and a scan
-    # that already has file parallelism needs no help
-    if width > est and est < max(2, spark.sparkContext.defaultParallelism // 2):
-        docs = docs.repartition(width)
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     return decode_media(synthesize_media(docs))
 
 

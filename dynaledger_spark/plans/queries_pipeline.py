@@ -60,18 +60,9 @@ def _docs_by_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(doc_id), and Window.partitionBy(doc_id) all accept a
     hash(doc_id) distribution (subset rule), so the word-level and
     doc-level aggregations run exchange-free on top (measured: 3
-    exchanges → 1 for the quality pipeline). Same line count as the
-    round-robin spread in queries_text._docs, strictly more useful.
-    Gated on actual scan parallelism (plans/spread.py): on a multi-file
-    corpus the raw scan returns and Catalyst inserts the doc_id exchange
-    where the first clustering op needs it — AFTER per-branch projections
-    instead of under the full-width rows this up-front shuffle carries."""
-    from dynaledger_spark.plans.spread import read_spread
-
-    return read_spread(
-        spark,
-        os.path.join(sf_dir, "documents.parquet"),
-        key=F.col("doc_id"),
+    exchanges → 1 for the quality pipeline)."""
+    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).repartition(
+        F.col("doc_id")
     )
 
 
@@ -1339,14 +1330,7 @@ def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dynaledger_spark.operators.dedup import _shingles
     from dynaledger_spark.plans.queries_sampling import _H1, _M32, _mhash
 
-    # single-file corpus → 1-task scan feeding THREE heavy map-side
-    # branches (the 5-gram shingle explode, the word explode, the md5
-    # grouping) — spread rows once up front (the queries_text._docs
-    # precedent), gated on the scan's actual parallelism so a multi-file
-    # corpus keeps the raw scan (plans/spread.py)
-    from dynaledger_spark.plans.spread import read_spread
-
-    docs = read_spread(spark, os.path.join(sf_dir, "documents.parquet"))
+    docs = _docs(spark, sf_dir)
     keepers = (
         docs.groupBy(F.md5("text").alias("_h"))
         .agg(F.min("doc_id").alias("doc_id"))

@@ -777,21 +777,7 @@ def rag_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from dynaledger_spark.operators.dedup import _shingles
 
-    import os
-
-    from dynaledger_spark.plans.spread import spread_if_serial
-
-    # single-file corpus → 1-task scan; this builder's map side is the
-    # heaviest in the retrieval family (5-gram shingles AND the 32/24
-    # chunker AND 16 md5-polynomial feature hashes per chunk), so spread
-    # rows first (the queries_text._docs precedent) — gated on the scan's
-    # actual parallelism, so a multi-file corpus keeps the raw scan
-    # (plans/spread.py)
-    docs = spread_if_serial(
-        spark,
-        _t(spark, sf_dir, "documents"),
-        os.path.join(sf_dir, "documents.parquet"),
-    )
+    docs = _t(spark, sf_dir, "documents")
     is_bench = F.col("doc_id") % 97 == 0
 
     # decontamination grams (doc-level, the curation_pipeline convention)

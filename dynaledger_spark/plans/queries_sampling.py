@@ -14,16 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from dynaledger_spark.plans.queries_text import _docs
 from dynaledger_spark.plans.registry import register
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Raw scan, NOT queries_text._docs: these queries are scan-side
-    # projections/filters, so the compute-repartition the text/dedup
-    # queries need (single-file corpus quirk) would only add a shuffle.
-    import os
-
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
 
 # Knuth's multiplicative constants, reduced mod 2^32.
@@ -135,13 +127,7 @@ def shard_round_robin(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         "doc_id", h.alias("h"), (h / width).cast("int").alias("b")
     )
-    from dynaledger_spark.plans.cache import tracked_persist
-
-    # ≤ _RR_BUCKETS rows, read by both sides of the offset join — persist
-    # so the corpus is scanned once for the counts, not twice.
-    counts = base.groupBy("b").agg(F.count(F.lit(1)).alias("n")).transform(
-        tracked_persist
-    )
+    counts = base.groupBy("b").agg(F.count(F.lit(1)).alias("n"))
     lower = counts.select(
         F.col("b").alias("lb"), F.col("n").alias("ln")
     )
@@ -474,23 +460,10 @@ def bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scan + B·|partitions| partial rows — the reason this beats
     classic resampling by construction.
     """
-    import os
-
-    from dynaledger_spark.plans.spread import spread_if_serial
-
     ev = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    # single-file corpus → 1-task scan; the ×B explode and the Poisson
-    # CASE chain are the heavy map-side work, so spread the (skinny)
-    # pre-explode rows across all cores first (guide §2.5 input skew) —
-    # gated on the scan's actual parallelism, so a multi-file events
-    # table keeps the raw scan (plans/spread.py)
-    s = spread_if_serial(
-        spark,
-        ev.select(
-            "event_id",
-            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-        ),
-        os.path.join(sf_dir, "events.parquet"),
+    s = ev.select(
+        "event_id",
+        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
     )
     # (e·H1 + r·H2) mod 2³² ≡ ((e·H1 mod 2³²) + (r·H2 mod 2³²)) mod 2³²:
     # the e-term is one DECIMAL op per EVENT (hoisted above the explode —

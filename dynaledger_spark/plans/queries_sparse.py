@@ -15,20 +15,11 @@ one divide on identical integers — IEEE-identical in both engines.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from dynaledger_spark.plans.queries_text import _docs
 from dynaledger_spark.plans.registry import register
-from dynaledger_spark.plans.cache import tracked_persist
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread gated on actual scan parallelism (plans/spread.py)
-    from dynaledger_spark.plans.spread import read_spread
-
-    return read_spread(spark, os.path.join(sf_dir, "documents.parquet"))
 
 
 # vocabulary contract shared by both queries: lowercase ascii words,
@@ -136,7 +127,6 @@ def fastss_edit1_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("w").alias("word"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .transform(tracked_persist)  # feeds the variant explode and both frequency joins
     )
     variants = F.array_distinct(
         F.concat(
@@ -303,7 +293,6 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("bigint")
             ).alias("w"),
         )
-        .transform(tracked_persist)  # norms, blocking, and the dot join all read it
     )
     norms = post.groupBy("doc_id").agg(
         F.sum(F.col("w") * F.col("w")).cast("bigint").alias("nrm")

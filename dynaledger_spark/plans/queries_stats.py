@@ -919,9 +919,9 @@ def zorder_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans ≤ 1/16 of BOTH key ranges simultaneously (x_max−x_min and
     y_max−y_min ≤ 15, asserted in tests), which is what makes Z-order
     sorted files prunable on either predicate. Pure integer bit
-    expressions in both engines; one hash aggregate. The range-sorted
-    sibling (operators/layout.py compact) optimizes one dimension; this
-    is the layout you switch to when two filter columns matter.
+    expressions in both engines; one hash aggregate. A range-sorted
+    rewrite optimizes one dimension; this is the layout you switch to
+    when two filter columns matter.
     """
     li = _t(spark, sf_dir, "lineitem")
     keyed = li.select(

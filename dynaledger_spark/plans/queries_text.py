@@ -15,20 +15,10 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from dynaledger_spark.plans.registry import register
-from dynaledger_spark.plans.cache import tracked_persist
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The testdata corpus is one small single-row-group file → a 1-task
-    # scan, while every text operator does heavy per-row expression work
-    # (regex, shingling, hash folds). Spread rows across all cores first;
-    # the 0.6 MB shuffle is noise next to the compute it parallelizes.
-    # read_spread gates the repartition on the scan's ACTUAL parallelism,
-    # so a multi-file corpus (100 TB posture) keeps the raw scan and the
-    # full-text round-robin shuffle never happens (plans/spread.py).
-    from dynaledger_spark.plans.spread import read_spread
-
-    return read_spread(spark, os.path.join(sf_dir, "documents.parquet"))
+    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
 
 # ---------------------------------------------------------------------------
@@ -50,13 +40,8 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB this is the cheap first pass before near-dup detection: one
     shuffle on a 16-byte key with map-side partial aggregation.
-
-    Reads the RAW scan, not _docs: the only pre-shuffle work is one md5
-    per doc, so the round-robin spread would shuffle the full text bytes
-    to parallelize almost nothing — the groupBy exchange (16-byte keys +
-    partial counts) is the query's one real data movement.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = _docs(spark, sf_dir)
     return (
         docs.select(F.md5("text").alias("content_hash"), "doc_id")
         .groupBy("content_hash")
@@ -134,21 +119,11 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returned LAZY (materialize=False): eager materialization pins the
     plan outside AQE and measured 3-4× slower than letting the caller's
     single action run the same pipeline (8-9 s vs 1.2-2.6 s at sf0.1,
-    round-4 root-cause of the flat r3 driver bench). The signature cache
-    this leaves behind is a few MB and session-scoped.
-
-    Reads the RAW scan (not _docs): near_duplicates opens with the
-    exact-dup groupBy, whose exchange already spreads the corpus across
-    all cores — a round-robin repartition in front would shuffle the
-    full text bytes twice for no added parallelism (the pre-exchange
-    work is one md5 per doc).
+    round-4 root-cause of the flat r3 driver bench).
     """
-    import os as _os
-
     from dynaledger_spark.operators.dedup import near_duplicates
 
-    raw = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet"))
-    return near_duplicates(raw, threshold=0.5)
+    return near_duplicates(_docs(spark, sf_dir), threshold=0.5)
 
 
 @register(
@@ -467,8 +442,7 @@ def minhash_portable_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     version. The bucket join's probe side shrinks to the batch's
     banded rows, so the incremental cost scales with |batch|·bucket
     width, not |corpus|²; signatures for the old corpus would be read
-    from the persisted signature table at scale (the
-    minhash_lsh_pairs persistence note) rather than recomputed.
+    from a stored signature table at scale rather than recomputed.
     Portable hashes, so DuckDB re-derives the whole incremental run
     bit-for-bit.
     """
@@ -1794,7 +1768,7 @@ def lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (identical text ⇒ identical signature), so banding semantics
     (bucket caps count per-doc rows) are unchanged while the
     16-permutation fold and a second shingle pass disappear; hits are
-    two broadcast-sized rep lookups + a semi join against the persisted
+    two broadcast-sized rep lookups + a semi join against the
     truth; the 1-row metric combines broadcast. At 100 TB the gate runs
     on a deterministic hash-sample of docs — same contract, bounded
     cost. reference: SURVEY §2.11 (dedup/eval tier).
@@ -1806,16 +1780,16 @@ def lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _docs(spark, sf_dir)
-    h_docs = docs.select("doc_id", "text", F.md5("text").alias("h")).transform(tracked_persist)
+    h_docs = docs.select("doc_id", "text", F.md5("text").alias("h"))
     groups = h_docs.groupBy("h").agg(
         F.min("doc_id").alias("rep"), F.count(F.lit(1)).cast("bigint").alias("m")
-    ).transform(tracked_persist)
+    )
     rep_docs = h_docs.join(
         groups.select("rep", "m"), h_docs.doc_id == F.col("rep")
     ).select(F.col("rep").alias("doc_id"), "m", "text")
     shingled = rep_docs.select(
         "doc_id", "m", _shingles(F.col("text")).alias("sh")
-    ).transform(tracked_persist)
+    )
     ex = shingled.select(
         "doc_id", F.size("sh").alias("n"), F.explode("sh").alias("g")
     )
@@ -1888,7 +1862,6 @@ def lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("m_a") * F.col("m_b")).alias("w"),
             (inter.cast("double") / union).alias("j"),
         )
-        .transform(tracked_persist)  # consumed twice: theory fold + the hit semi join
     )
     jj = (F.col("j") * F.col("j")) * (F.col("j") * F.col("j"))
     q = 1.0 - jj
@@ -2081,7 +2054,7 @@ def minhash_estimation_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     /16; errors round at 12 dp, means at 9.
 
     Plan: signatures come from the shared portable signature pass
-    (persisted once, feeding banding, verification AND this estimate);
+    (one table feeding banding, verification AND this estimate);
     the rollup is one 1-row aggregate over the verified-pair table.
     reference: SURVEY §2.11 (dedup/eval tier).
     """
@@ -2093,10 +2066,8 @@ def minhash_estimation_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     # ONE signature table feeds the pair pipeline AND the estimate: the
     # previous form called portable_minhash_signatures twice (once
-    # directly, once inside portable_minhash_pairs), persisting two
-    # copies of the same table and running the per-character rolling-
-    # hash fold over the corpus twice (guide §1.2 — don't compute
-    # things you throw away). Same signatures, same output.
+    # directly, once inside portable_minhash_pairs). Same signatures,
+    # same output.
     sigs_full = portable_minhash_signatures(docs)
     found = portable_minhash_pairs(docs, sigs=sigs_full)
     sigs = sigs_full.select("id", "sig")
@@ -2225,7 +2196,6 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     arcs = (
         cooc.unionByName(cooc.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        .transform(tracked_persist)
     )
     deg = arcs.groupBy(F.col("src").alias("w")).agg(F.count(F.lit(1)).alias("deg"))
     n = deg.count()  # |vocab|: bounded, deterministic driver scalar

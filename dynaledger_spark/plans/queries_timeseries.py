@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from dynaledger_spark.plans.queries_core import _t
 from dynaledger_spark.plans.registry import register
-from dynaledger_spark.plans.cache import tracked_persist
 
 
 @register(
@@ -478,7 +477,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (incremental) prefix-sum window and two 1-row broadcast joins on the
     calendar-bounded series.
     """
-    daily = _daily(spark, sf_dir).transform(tracked_persist)
+    daily = _daily(spark, sf_dir)
     tot = daily.agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
         F.sum("cents").cast("decimal(38,0)").alias("tot_cents"),
@@ -562,7 +561,7 @@ def theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join is a deliberate broadcast nested loop over that tiny
     table (whitelisted with the other calendar-bounded plans).
     """
-    daily = _daily(spark, sf_dir).transform(tracked_persist)
+    daily = _daily(spark, sf_dir)
     mn = daily.agg(F.min("day").alias("d0"))
     pts = daily.crossJoin(F.broadcast(mn)).select(
         F.datediff("day", "d0").alias("t"), "cents"
@@ -674,7 +673,6 @@ def anomaly_dow_hour_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.hour("ts").cast("int").alias("hr"),
         )
         .agg(F.count(F.lit(1)).alias("n_ev"))
-        .transform(tracked_persist)
     )
     base = hb.groupBy(
         F.weekday("day").alias("dow"), F.col("hr")

@@ -17,29 +17,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dynaledger_spark.plans.registry import register
-from dynaledger_spark.plans.cache import tracked_persist
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Single small file → 1-task scan; the 64-dim fold per row is the
-    # cost, so parallelize it (see _docs in queries_text). Gated on the
-    # scan's actual parallelism — a multi-file corpus keeps the raw scan
-    # (plans/spread.py).
-    from dynaledger_spark.plans.spread import read_spread
-
-    return read_spread(spark, os.path.join(sf_dir, "embeddings.parquet"))
+    return spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
 
 
 def _qvec0(spark: SparkSession, sf_dir: str) -> list[float] | None:
     """The vec_id=0 probe embedding, or None on an empty corpus (the
-    documented K-row driver fetch; empty-corpus contract, round 11).
-
-    Reads the RAW scan, not _emb: the probe filter then pushes down to
-    the parquet scan (PushedFilters: EqualTo(vec_id,0)) instead of
-    running scan → round-robin exchange → filter — the repartition only
-    helps the per-row fold passes, and this job folds nothing."""
+    documented K-row driver fetch; empty-corpus contract, round 11)."""
     row = (
-        spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+        _emb(spark, sf_dir)
         .filter(F.col("vec_id") == 0)
         .select("embedding")
         .head()
@@ -634,7 +622,6 @@ def quantized_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket",
             "aggregate(q, 0L, (a, v) -> a + CAST(v AS BIGINT) * v) AS q2",
         )
-        .transform(tracked_persist)
     )
     ok = (
         vecs.groupBy("bucket")
@@ -1082,7 +1069,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.transform("v", lambda x: x * x), F.lit(0.0), lambda a, x: a + x
             )
         ).alias("nrm"),
-    ).transform(tracked_persist)  # rep pair join reads it twice; the rollup once
+    )
     a, b = norms.alias("a"), norms.alias("b")
     dot = F.aggregate(
         F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
@@ -1556,13 +1543,9 @@ def kcenter_coreset_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape. reference: SURVEY §2.11 (similarity/curation tier).
     """
     emb = _emb(spark, sf_dir)
-    # the ~|emb|/7-row pool is re-scanned by every greedy round (k-1
-    # rounds + the seed fetch + the final labeling pass) — persist it
-    # once (r14; raw columns, so caching cannot change a bit; the
-    # loop-invariant-table rule from pagerank_portable_fixedpoint)
     pool = emb.filter(F.col("vec_id") % _KC_MOD == 0).select(
         "vec_id", "embedding"
-    ).transform(tracked_persist)
+    )
     seed = pool.filter(F.col("vec_id") == 0).head()
     if seed is None:  # empty pool: no coreset (oracle CTE chain is empty too)
         from pyspark.sql import types as T
@@ -1929,7 +1912,7 @@ def kmeans_portable_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice(F.col("embedding"), 1, _KM_D),
         lambda e: F.floor(e.cast("double") * _KM_SCALE).cast("bigint"),
     )
-    x = emb.select("vec_id", xv.alias("xv")).transform(tracked_persist)
+    x = emb.select("vec_id", xv.alias("xv"))
 
     def _dists(cents: list[list[int]]):
         return [

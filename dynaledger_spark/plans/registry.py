@@ -3,7 +3,8 @@
 Every operator from SURVEY.md §2 (plus the training-data-pipeline
 extensions) registers one QuerySpec: a Spark builder (spark, sf_dir) ->
 DataFrame and, where the semantics are ANSI-SQL-expressible, an oracle SQL
-string for the driver's DuckDB comparison.
+string for the driver's DuckDB comparison. A builder returns a lazy plan
+and persists nothing, so the caller owns whatever it caches.
 
 Determinism contract for oracle-checked queries:
   * every computed column is aliased identically in Spark and SQL;
@@ -17,13 +18,10 @@ Determinism contract for oracle-checked queries:
 
 from __future__ import annotations
 
-import functools
 from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-
-from dynaledger_spark.plans import cache
 
 
 @dataclass
@@ -40,27 +38,12 @@ QUERY_REGISTRY: dict[str, QuerySpec] = {}
 def register(name: str, oracle: str | None = None, doc: str = ""):
     """Decorator: register a (spark, sf_dir) -> DataFrame query builder.
 
-    The registered build is wrapped with the cache discipline from
-    :mod:`dynaledger_spark.plans.cache`: intermediates the builder
-    persists (via tracked_persist) are unpersisted when the returned
-    DataFrame is garbage-collected, so embedding applications that call
-    builds directly don't accumulate cached blocks for the session's
-    lifetime (VERDICT r9 item 3).  The raw function is returned
-    unwrapped so builders composing other builders contribute their
-    persists to the OUTERMOST result's release set."""
+    The decorated function itself becomes ``QuerySpec.build`` and is
+    returned unchanged, so builders may compose other builders."""
 
     def wrap(fn: Callable[[SparkSession, str], DataFrame]):
-        @functools.wraps(fn)
-        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-            outermost = cache.begin_build()
-            try:
-                df = fn(spark, sf_dir)
-            finally:
-                persisted = cache.end_build(outermost)
-            return cache.attach_release(df, persisted)
-
         QUERY_REGISTRY[name] = QuerySpec(
-            name=name, build=build, oracle=oracle, doc=doc or fn.__doc__ or ""
+            name=name, build=fn, oracle=oracle, doc=doc or fn.__doc__ or ""
         )
         return fn
 

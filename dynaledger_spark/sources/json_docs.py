@@ -10,7 +10,6 @@ Reference: one `.json` file per filing uploaded with ujson
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from dynaledger_spark.schemas import DOC_SCHEMA
 
@@ -29,11 +28,3 @@ def read_documents(spark: SparkSession, path: str) -> DataFrame:
     """
     return spark.read.json(path, schema=DOC_SCHEMA, mode="PERMISSIVE")
 
-
-def docs_as_json_strings(docs: DataFrame) -> DataFrame:
-    """Serialize each document to its JSON text (the per-filing file body)."""
-    doc_cols = [f.name for f in DOC_SCHEMA.fields]
-    return docs.select(
-        F.col("symbol"),
-        F.to_json(F.struct(*doc_cols)).alias("json_str"),
-    )

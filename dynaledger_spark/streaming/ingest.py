@@ -253,16 +253,12 @@ def replay_as_batches(
                     (F.floor(frac * n_batches) + 1).cast("int"),
                 ),
             ),
-        )
-        bucketed.persist()
+        ).localCheckpoint()
         written = 0
-        try:
-            for i in range(1, n_batches + 1):
-                part = bucketed.filter(F.col("_b") == i).drop("_b")
-                written += part.count()
-                part.write.mode("append").parquet(landing_dir)
-        finally:
-            bucketed.unpersist()
+        for i in range(1, n_batches + 1):
+            part = bucketed.filter(F.col("_b") == i).drop("_b")
+            written += part.count()
+            part.write.mode("append").parquet(landing_dir)
         assert written == n_rows, (
             f"time-range bucketing dropped rows: wrote {written} of "
             f"{n_rows} — bucket expression out of [1, {n_batches}]"
@@ -274,19 +270,19 @@ def replay_as_batches(
         # harness but pure waste when there is nothing to split).
         df.coalesce(1).write.mode("append").parquet(landing_dir)
         return landing_dir
-    bucketed = df.withColumn("_b", F.ntile(n_batches).over(Window.orderBy(ts_col)))
-    bucketed.persist()
-    try:
-        for i in range(1, n_batches + 1):
-            (
-                bucketed.filter(F.col("_b") == i)
-                .drop("_b")
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(landing_dir)
-            )
-    finally:
-        bucketed.unpersist()
+    # checkpointed once, so every batch filter sees the same ntile
+    # assignment (a recompute could break ts ties differently)
+    bucketed = df.withColumn(
+        "_b", F.ntile(n_batches).over(Window.orderBy(ts_col))
+    ).localCheckpoint()
+    for i in range(1, n_batches + 1):
+        (
+            bucketed.filter(F.col("_b") == i)
+            .drop("_b")
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(landing_dir)
+        )
     return landing_dir
 
 

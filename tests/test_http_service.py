@@ -6,7 +6,9 @@ from __future__ import annotations
 
 import json
 import socket
+import struct
 import threading
+import time
 import urllib.error
 import urllib.parse
 import urllib.request
@@ -185,6 +187,30 @@ def test_negative_content_length_is_400(service):
         sock.sendall(b"POST /execute-custom-query HTTP/1.1\r\nContent-Length: -1\r\n\r\n")
         head = sock.recv(64)
     assert head.split()[1] == b"400"
+
+
+def test_client_disconnect_is_quiet(service, capfd):
+    """A client that resets the connection before its reply is written
+    costs the server nothing: no traceback on stderr, and the next
+    request is served."""
+    svc, _ = service
+    capfd.readouterr()
+    sock = socket.create_connection(("127.0.0.1", svc.port), timeout=3)
+    sock.sendall(
+        b"GET /check-availability?source=RAW&year=2023&quarter=Q1 HTTP/1.1\r\n"
+        b"Host: localhost\r\n\r\n"
+    )
+    # linger 0: close() sends RST, so the server's reply write fails
+    sock.setsockopt(socket.SOL_SOCKET, socket.SO_LINGER, struct.pack("ii", 1, 0))
+    sock.close()
+    deadline = time.time() + 30
+    while time.time() < deadline and any(
+        t.name.endswith("(process_request_thread)") for t in threading.enumerate()
+    ):
+        time.sleep(0.05)
+    status, out = _get(svc, "/check-availability?source=RAW&year=2023&quarter=Q1")
+    assert (status, out) == (200, {"available": True})
+    assert capfd.readouterr().err == ""
 
 
 def test_unknown_route_is_404(service):

@@ -18,6 +18,16 @@ from dynaledger_spark.operators.multimodal import (
     synthesize_media,
 )
 
+SF = "/root/testdata/sf0.001"
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().explainString(
+        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+
 
 @pytest.fixture(scope="module")
 def media(spark):
@@ -177,3 +187,13 @@ def test_small_arrow_batches_same_result(spark):
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert small == baseline
+
+
+def test_media_width_sized_by_bytes_not_cores(spark):
+    """A sub-MB corpus must decode in the scan task itself: no exchange
+    at all, regardless of core count (the r13 32-way spread made the
+    headline media query slower at 32 cores than 8)."""
+    from dynaledger_spark.plans.queries_multimodal import _media_decoded
+
+    plan = _plan(_media_decoded(spark, SF))
+    assert "Exchange" not in plan

@@ -26,7 +26,7 @@ def main() -> int:
     args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     spark = (
-        SparkSession.builder.master("local[16]")
+        SparkSession.builder.master("local[*]")
         .appName("driver_sim")
         # deliberately foreign: non-UTC tz, default shuffle partitions,
         # none of the library's session conveniences
@@ -48,14 +48,6 @@ def main() -> int:
         except Exception as exc:
             failed.append(name)
             print(f"FAIL  {name}: {str(exc)[:300]}", flush=True)
-        finally:
-            # builders persist() intra-plan intermediates and stay lazy;
-            # drop the blocks between queries so ~320 back-to-back runs
-            # don't accumulate cache for the session lifetime (ADVICE r8)
-            try:
-                spark.catalog.clearCache()
-            except Exception:
-                pass
     print(f"\n{len(reg) - len(failed)}/{len(reg)} green", flush=True)
     if failed:
         print("failed:", ", ".join(failed), flush=True)
