@@ -41,7 +41,7 @@ RAW_STMT_TYPES = {"Income Statement": "IC", "Balance Sheet": "BS", "Cash Flow": 
 
 
 def _quarter_number(quarter: str) -> str:
-    """'Q3' or '3' -> '3'; any other quarter is an invalid pull."""
+    """'Q3' or '3' -> '3'; any other quarter is invalid on every route."""
     m = re.fullmatch(r"Q?([1-4])", quarter)
     if m is None:
         raise ValueError(f"Invalid quarter: {quarter}")
@@ -80,7 +80,7 @@ class SecEngine:
 
     # -- GET /check-availability (backend/main.py:43-60, A1 + P6)
     def check_availability(self, year: int, quarter: str) -> dict:
-        tag = f"{year}Q{quarter.replace('Q', '')}"
+        tag = f"{year}Q{_quarter_number(quarter)}"
         quarter_tags = self.tables["sec_tag"].filter(F.col("source_file") == tag)
         return {"available": not quarter_tags.isEmpty()}
 

@@ -28,7 +28,7 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from dynaledger_spark.api import SecEngine
+from dynaledger_spark.api import SecEngine, _quarter_number
 
 # data_source → raw-table-name templates for /get-table-info
 # (main.py:80-88). The reference suffixes physical table names per
@@ -39,7 +39,7 @@ _FACT_TABLES = ("BALANCE_SHEET", "INCOME_STATEMENT", "CASH_FLOW")
 
 
 def _table_names(data_source: str, year: int, quarter: str) -> list[str]:
-    tag = f"{year}Q{quarter.replace('Q', '')}"
+    tag = f"{year}Q{_quarter_number(quarter)}"
     if data_source in ("RAW", "Raw"):
         return list(_RAW_TABLES)
     if data_source == "JSON":

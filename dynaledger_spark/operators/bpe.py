@@ -10,8 +10,7 @@ describe it, structured for a cluster:
 * each merge round is ONE distributed job: explode adjacent symbol
   pairs weighted by word count, hash-aggregate pair counts, take the
   argmax (deterministic tiebreak: highest count, then lexicographic
-  pair) — a bounded 1-row collect, the same driver-scale contract as
-  the IVF k-means fit (operators/similarity.py);
+  pair) — a bounded 1-row collect;
 * the chosen pair is merged into every word's symbol sequence map-side
   (an array fold — no shuffle), and the loop repeats.
 

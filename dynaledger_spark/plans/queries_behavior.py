@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from dynaledger_spark.functions.agg import osum
+from dynaledger_spark.plans.queries_mlprep import _FOLD, _fold
 from dynaledger_spark.plans.registry import register
 
 
@@ -1055,3 +1056,91 @@ def sequential_pattern_support(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 sequential_pattern_support.__doc__ = sequential_pattern_support.__doc__.format(k=_SEQ_MIN_SUPPORT)
+
+
+# ---------------------------------------------------------------------------
+# Markov behavioral anomaly score: per-user mean transition log-likelihood
+# ---------------------------------------------------------------------------
+@register(
+    "markov_sequence_score",
+    doc="per-user mean log-likelihood of the event-type sequence under the corpus transition MLE",
+    oracle=f"""
+        WITH seq AS (
+            SELECT user_id, event_type AS cur,
+                   lag(event_type) OVER (PARTITION BY user_id
+                                         ORDER BY ts, event_id) AS prev
+            FROM events
+        ),
+        pairs AS (
+            SELECT user_id, prev, cur, COUNT(*) AS n
+            FROM seq WHERE prev IS NOT NULL GROUP BY 1, 2, 3
+        ),
+        trans AS (
+            SELECT prev, cur, SUM(n) AS n_ab FROM pairs GROUP BY 1, 2
+        ),
+        margins AS (
+            SELECT prev, SUM(n_ab) AS n_a FROM trans GROUP BY 1
+        ),
+        scored AS (
+            SELECT p.user_id, p.n,
+                   p.n * round(ln(CAST(t.n_ab AS DOUBLE) / m.n_a), 12) AS term
+            FROM pairs p
+            JOIN trans t ON t.prev = p.prev AND t.cur = p.cur
+            JOIN margins m ON m.prev = p.prev
+        )
+        SELECT user_id,
+               CAST(SUM(n) AS BIGINT) AS n_transitions,
+               round({_FOLD.format(x='term')}
+                     / SUM(n), 9) AS avg_loglik
+        FROM scored GROUP BY user_id
+    """,
+)
+def markov_sequence_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Behavioral anomaly scoring: each user's event-type sequence is
+    scored by the corpus first-order Markov MLE — mean ln P(cur|prev)
+    over their transitions. Users whose flows are improbable under the
+    crowd's transition matrix (bots, broken clients) score low; the
+    complement of event_transition_matrix, which reports the matrix
+    itself. ln() takes an exact integer ratio (n_ab/n_a) rounded at
+    12; each per-user term is count × pinned-double (exact); per-user
+    folds are sorted; the final mean rounds at 9.
+
+    Plan: the per-(user, prev, cur) COUNT collapses the corpus before
+    any scoring — a user contributes at most |types|² rows downstream,
+    so the per-user fold is bounded at 25 terms no matter how hot the
+    key (the segmented-EWMA lesson applied at design time, not
+    retrofitted). The pair stream pays its user_id window exchange
+    once and feeds its two aggregate consumers; the
+    transition matrix and margins come back as broadcasts, so the
+    corpus-sized stream never joins by shuffle. A hot user costs one
+    sorted run in the lag window — per-row state, no arrays anywhere.
+    """
+    ev = _t(spark, sf_dir, "events")
+    w = F.lag("cur").over(W.partitionBy("user_id").orderBy("ts", "event_id"))
+    pairs = (
+        ev.select("user_id", "ts", "event_id", F.col("event_type").alias("cur"))
+        .withColumn("prev", w)
+        .filter(F.col("prev").isNotNull())
+        .groupBy("user_id", "prev", "cur")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    trans = pairs.groupBy("prev", "cur").agg(F.sum("n").alias("n_ab"))
+    margins = trans.groupBy("prev").agg(F.sum("n_ab").alias("n_a"))
+    scored = (
+        pairs.join(F.broadcast(trans), ["prev", "cur"])
+        .join(F.broadcast(margins), "prev")
+        .select(
+            "user_id",
+            "n",
+            (
+                F.col("n")
+                * F.round(
+                    F.log(F.col("n_ab").cast("double") / F.col("n_a")), 12
+                )
+            ).alias("term"),
+        )
+    )
+    return scored.groupBy("user_id").agg(
+        F.sum("n").cast("bigint").alias("n_transitions"),
+        F.round(_fold("term") / F.sum("n"), 9).alias("avg_loglik"),
+    )

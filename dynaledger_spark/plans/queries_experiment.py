@@ -25,7 +25,9 @@ ops an experimentation/recommendation team runs on the events table:
                               series + one-step forecast and in-sample
                               RMSE;
   * forecast_backtest_mase  — rolling-origin backtest of three baseline
-                              forecasters scored by MAE and MASE.
+                              forecasters scored by MAE and MASE;
+  * conformal_calibration   — split-conformal prediction intervals and
+                              their empirical coverage per event type.
 
 Float discipline (the registry contract): every aggregate over doubles
 is a DECIMAL accumulation of per-row values that are themselves single
@@ -1273,4 +1275,168 @@ def forecast_backtest_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("mae_cents") / F.col("naive_mae"), 9).alias("mase"),
         )
         .orderBy("method")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Split-conformal prediction calibration (round 8)
+# ---------------------------------------------------------------------------
+# alpha = 0.1; splits by event_id hash (train <50 / cal <75 / test).
+_CONF_H = 2654435761
+
+
+@register(
+    "conformal_calibration",
+    doc="split-conformal prediction: q_hat from the calibration quantile, empirical test coverage per event_type",
+    oracle=f"""
+        WITH split AS (
+            SELECT event_type, value,
+                   CASE WHEN (event_id * {_CONF_H}) % {_M32} % 100 < 50 THEN 'train'
+                        WHEN (event_id * {_CONF_H}) % {_M32} % 100 < 75 THEN 'cal'
+                        ELSE 'test' END AS part
+            FROM events WHERE value IS NOT NULL
+        ),
+        model AS (
+            SELECT event_type,
+                   CAST(COUNT(*) AS BIGINT) AS n_train,
+                   CAST(SUM(CAST(value AS DECIMAL(27,6))) AS DOUBLE)
+                       / COUNT(*) AS mu
+            FROM split WHERE part = 'train' GROUP BY event_type
+        ),
+        cal AS (
+            SELECT s.event_type, abs(s.value - m.mu) AS score
+            FROM split s JOIN model m ON m.event_type = s.event_type
+            WHERE s.part = 'cal'
+        ),
+        ranked AS (
+            SELECT event_type, score,
+                   row_number() OVER (PARTITION BY event_type
+                                      ORDER BY score) AS rn,
+                   COUNT(*) OVER (PARTITION BY event_type) AS n_cal
+            FROM cal
+        ),
+        qhat AS (
+            SELECT event_type, CAST(MIN(n_cal) AS BIGINT) AS n_cal,
+                   MIN(CASE WHEN CAST(rn AS DOUBLE)
+                                 >= ceil((n_cal + 1) * 0.9)
+                            THEN score END) AS q_hat
+            FROM ranked GROUP BY event_type
+        ),
+        test AS (
+            SELECT s.event_type,
+                   CAST(COUNT(*) AS BIGINT) AS n_test,
+                   CAST(SUM(CASE WHEN q.q_hat IS NULL
+                                      OR abs(s.value - m.mu) <= q.q_hat
+                                 THEN 1 ELSE 0 END) AS BIGINT) AS n_covered
+            FROM split s
+            JOIN model m ON m.event_type = s.event_type
+            JOIN qhat q ON q.event_type = s.event_type
+            WHERE s.part = 'test'
+            GROUP BY s.event_type
+        )
+        SELECT m.event_type, m.n_train, q.n_cal, t.n_test,
+               q.q_hat,
+               round(CAST(t.n_covered AS DOUBLE) / t.n_test, 9) AS coverage,
+               0.9 AS target_coverage
+        FROM model m
+        JOIN qhat q ON q.event_type = m.event_type
+        JOIN test t ON t.event_type = m.event_type
+    """,
+)
+def conformal_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Split-conformal prediction (Vovk et al.; Lei et al. 2018 JASA;
+    the Angelopoulos-Bates 2021 recipe): fit on the train split (here
+    the exact per-type mean — any point predictor works), take
+    nonconformity scores |y - mu| on a DISJOINT calibration split,
+    q_hat = the ceil((n_cal+1)(1-alpha))-th smallest calibration score,
+    and the interval mu +/- q_hat then covers a fresh point with
+    probability >= 1-alpha BY CONSTRUCTION, no distributional
+    assumptions — the eval-tier primitive for honest model intervals
+    over pipeline scores. Empirical coverage on the held-out test
+    split is reported beside the 0.9 target (the finite-sample
+    guarantee is checked as a property in tests/test_round8_ops.py).
+
+    Exactness: hash splits are the repo's deterministic integer
+    buckets; mu is the decimal-exact mean; scores are one IEEE
+    subtraction on identical doubles; q_hat is an order statistic
+    (value passthrough); coverage is an integer ratio.
+
+    Scale: one train aggregate (map-side), one per-type rank window
+    over the calibration shard, one test scan against the broadcast
+    (event_type, mu, q_hat) table — no pairs, no corpus joins.
+    """
+    ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    bucket = (
+        (F.col("event_id").cast("decimal(38,0)") * _CONF_H) % _M32
+    ).cast("bigint") % 100
+    split = ev.select(
+        "event_type",
+        "value",
+        F.when(bucket < 50, "train").when(bucket < 75, "cal").otherwise("test").alias("part"),
+    )
+    model = (
+        split.filter(F.col("part") == "train")
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_train"),
+            (
+                F.sum(F.col("value").cast("decimal(27,6)")).cast("double")
+                / F.count(F.lit(1))
+            ).alias("mu"),
+        )
+    )
+    cal = (
+        split.filter(F.col("part") == "cal")
+        .join(F.broadcast(model.select("event_type", "mu")), "event_type")
+        .select("event_type", F.abs(F.col("value") - F.col("mu")).alias("score"))
+    )
+    wp = W.partitionBy("event_type")
+    ranked = cal.select(
+        "event_type",
+        "score",
+        F.row_number().over(wp.orderBy("score")).alias("rn"),
+        F.count(F.lit(1)).over(wp).alias("n_cal"),
+    )
+    qhat = ranked.groupBy("event_type").agg(
+        F.min("n_cal").cast("bigint").alias("n_cal"),
+        F.min(
+            F.when(
+                F.col("rn").cast("double")
+                >= F.ceil((F.col("n_cal") + 1) * 0.9),
+                F.col("score"),
+            )
+        ).alias("q_hat"),
+    )
+    test = (
+        split.filter(F.col("part") == "test")
+        .join(F.broadcast(model.select("event_type", "mu")), "event_type")
+        .join(F.broadcast(qhat.select("event_type", "q_hat")), "event_type")
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_test"),
+            F.sum(
+                F.when(
+                    F.col("q_hat").isNull()
+                    | (F.abs(F.col("value") - F.col("mu")) <= F.col("q_hat")),
+                    1,
+                ).otherwise(0)
+            )
+            .cast("bigint")
+            .alias("n_covered"),
+        )
+    )
+    return (
+        model.join(qhat, "event_type")
+        .join(test, "event_type")
+        .select(
+            "event_type",
+            "n_train",
+            "n_cal",
+            "n_test",
+            "q_hat",
+            F.round(F.col("n_covered").cast("double") / F.col("n_test"), 9).alias(
+                "coverage"
+            ),
+            F.lit(0.9).alias("target_coverage"),
+        )
     )

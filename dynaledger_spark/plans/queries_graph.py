@@ -598,8 +598,8 @@ def lpa_communities_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors, ties broken by the SMALLEST label (the async/random
     variants of LPA are irreproducible by design — the fixed-round
     synchronous form with a total tie order is the one an engine can
-    contract about, the same determinism move as kmeans_portable_lloyd
-    and pagerank_portable_fixedpoint). {rounds} rounds over the
+    contract about, the same determinism move as
+    pagerank_portable_fixedpoint). {rounds} rounds over the
     co-purchase graph, then per-community size / min-member /
     member-sum checksums. Labels are vertex ids — exact integers the
     whole way, so the DuckDB unrolled-CTE oracle matches bitwise.

@@ -1246,3 +1246,220 @@ def ngram_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("distinct_novelty_rate"),
     )
+
+
+# ---------------------------------------------------------------------------
+# PMI collocations
+# ---------------------------------------------------------------------------
+@register(
+    "pmi_collocations",
+    doc="top-30 word pairs by pointwise mutual information (positional unigram margins)",
+    oracle="""
+        WITH toks AS (
+            SELECT doc_id, string_split(text, ' ') AS t FROM documents
+        ),
+        bi AS (
+            SELECT t[i] AS w1, t[i + 1] AS w2
+            FROM toks, unnest(range(1, len(t))) AS u(i)
+        ),
+        joint AS (
+            SELECT w1, w2, COUNT(*) AS n12 FROM bi GROUP BY 1, 2
+        ),
+        firsts AS (SELECT w1 AS w, SUM(n12) AS nf FROM joint GROUP BY 1),
+        seconds AS (SELECT w2 AS w, SUM(n12) AS ns FROM joint GROUP BY 1),
+        tot AS (SELECT SUM(n12) AS t FROM joint)
+        SELECT w1, w2, CAST(n12 AS BIGINT) AS n12,
+               round(ln(CAST(n12 * t AS DOUBLE) / (CAST(nf AS DOUBLE) * ns)),
+                     12) AS pmi
+        FROM joint
+        JOIN firsts f ON f.w = joint.w1
+        JOIN seconds s ON s.w = joint.w2
+        CROSS JOIN tot
+        WHERE n12 >= 5
+        ORDER BY pmi DESC, w1 ASC, w2 ASC LIMIT 30
+    """,
+)
+def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Collocation mining: PMI = ln(p(w1,w2)/(p1(w1)·p2(w2))) with
+    POSITIONAL margins (count as first word / count as second word over
+    the same bigram total), so every probability shares one denominator
+    and the ratio reduces to exact integers — n12·T / (nf·ns) — before
+    the single ln, rounded at 12. Support floor n12 ≥ 5 cuts the
+    low-count PMI pathology (hapax pairs scoring highest).
+
+    Plan: one explode → bigram stream → ONE heavy groupBy; the
+    positional margins and the total are rollups of the
+    joint table (identical counts by algebra), so the corpus stream is
+    aggregated exactly once. Margins broadcast back; top-30 is
+    TakeOrdered — no global sort materialization. At 100 TB the
+    margins are vocabulary-sized — broadcastable exactly when the
+    vocab is (frequency-floor them first, as with the unigram LM).
+    """
+    docs = _t(spark, sf_dir, "documents")
+    toks = F.split(F.col("text"), " ")
+    grams = F.when(
+        F.size(toks) >= 2,
+        F.transform(
+            F.sequence(F.lit(0), F.size(toks) - 2),
+            lambda i: F.struct(
+                F.element_at(toks, i + 1).alias("w1"),
+                F.element_at(toks, i + 2).alias("w2"),
+            ),
+        ),
+    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+    bi = docs.select(F.explode(grams).alias("g")).select("g.w1", "g.w2")
+    # the corpus-sized bigram stream is aggregated ONCE; margins and the
+    # total are rollups of the joint table (identical counts by algebra)
+    joint = bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n12"))
+    firsts = joint.groupBy(F.col("w1").alias("w")).agg(F.sum("n12").alias("nf"))
+    seconds = joint.groupBy(F.col("w2").alias("w")).agg(F.sum("n12").alias("ns"))
+    tot = joint.agg(F.sum("n12").alias("t"))
+    return (
+        joint.filter(F.col("n12") >= 5)
+        .join(F.broadcast(firsts), joint["w1"] == firsts["w"])
+        .drop("w")
+        .join(F.broadcast(seconds), joint["w2"] == seconds["w"])
+        .drop("w")
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "w1",
+            "w2",
+            F.col("n12").cast("bigint").alias("n12"),
+            F.round(
+                F.log(
+                    (F.col("n12") * F.col("t")).cast("double")
+                    / (F.col("nf").cast("double") * F.col("ns"))
+                ),
+                12,
+            ).alias("pmi"),
+        )
+        .orderBy(F.col("pmi").desc(), F.col("w1").asc(), F.col("w2").asc())
+        .limit(30)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Spearman rank agreement between quality scores (round 7)
+# ---------------------------------------------------------------------------
+@register(
+    "spearman_quality_scores",
+    doc="per-source Spearman rho between unigram-LM quality and type-token ratio",
+    oracle=f"""
+        WITH words AS (
+            SELECT doc_id, u.w AS word
+            FROM documents, unnest(string_split(text, ' ')) AS u(w)
+        ),
+        tf AS (
+            SELECT doc_id, word, COUNT(*) AS cnt FROM words
+            GROUP BY doc_id, word
+        ),
+        vocab AS (SELECT word, COUNT(*) AS n FROM words GROUP BY word),
+        total AS (SELECT COUNT(*) AS t FROM words),
+        terms AS (
+            SELECT tf.doc_id,
+                   tf.cnt,
+                   tf.cnt * round(ln(CAST(v.n AS DOUBLE) / t.t), 12) AS term
+            FROM tf JOIN vocab v USING (word) CROSS JOIN total t
+        ),
+        lp AS (
+            SELECT doc_id,
+                   round({{fold}} / SUM(cnt), 9) AS avg_logprob
+            FROM terms GROUP BY doc_id
+        ),
+        ttr AS (
+            SELECT doc_id,
+                   CAST(COUNT(DISTINCT word) AS DOUBLE) / COUNT(*) AS ttr
+            FROM words GROUP BY doc_id
+        ),
+        scored AS (
+            SELECT d.source, d.doc_id, lp.avg_logprob, ttr.ttr
+            FROM documents d JOIN lp USING (doc_id) JOIN ttr USING (doc_id)
+        ),
+        ranked AS (
+            SELECT source,
+                   CAST(row_number() OVER (PARTITION BY source
+                        ORDER BY avg_logprob, doc_id) AS BIGINT) AS ra,
+                   CAST(row_number() OVER (PARTITION BY source
+                        ORDER BY ttr, doc_id) AS BIGINT) AS rb
+            FROM scored
+        ),
+        sums AS (
+            SELECT source,
+                   CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(SUM(ra) AS BIGINT) AS sa,
+                   CAST(SUM(rb) AS BIGINT) AS sb,
+                   CAST(SUM(ra * ra) AS BIGINT) AS saa,
+                   CAST(SUM(rb * rb) AS BIGINT) AS sbb,
+                   CAST(SUM(ra * rb) AS BIGINT) AS sab
+            FROM ranked GROUP BY source
+        )
+        SELECT source, n AS n_docs,
+               round(CAST(n * sab - sa * sb AS DOUBLE)
+                     / sqrt(CAST(n * saa - sa * sa AS DOUBLE)
+                            * CAST(n * sbb - sb * sb AS DOUBLE)), 9)
+                   AS spearman_rho
+        FROM sums
+        ORDER BY source
+    """.replace("{fold}", _FOLD.format(x="term")),
+)
+def spearman_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rank agreement (Spearman 1904) between two quality scores — the
+    rank-level complement to filter_agreement_kappa's binary agreement:
+    before ensembling quality filters, curation pipelines check whether
+    they ORDER documents the same way. Score A is the oracle-exact
+    unigram-LM quality (unigram_logprob_quality, reused verbatim);
+    score B is per-doc type-token ratio (lexical diversity, one exact
+    int division). Ranks are row_number over (score, doc_id) — unique
+    integer ranks, identical in both engines because the score bits
+    are — so every Spearman sum is an exact BIGINT and the rho is one
+    closed-form double expression rounded at 9.
+
+    Plan: the scoring pass is unigram_logprob_quality's plan plus one
+    (doc, word) distinct count riding the same exchange; ranking is two
+    row_number windows per SOURCE (shard-bounded, never global); the
+    sums collapse map-side to 20 rows. reference: SURVEY §2.11
+    (quality/eval tier).
+    """
+    from dynaledger_spark.plans.queries_pipeline import _docs_by_id
+
+    docs = _docs_by_id(spark, sf_dir)
+    lp = unigram_logprob_quality(spark, sf_dir).select("doc_id", "avg_logprob")
+    words = docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
+    ttr = words.groupBy("doc_id").agg(
+        (
+            F.count_distinct("word").cast("double") / F.count(F.lit(1))
+        ).alias("ttr")
+    )
+    scored = (
+        docs.select("doc_id", "source")
+        .join(lp, "doc_id")
+        .join(ttr, "doc_id")
+    )
+    ra = F.row_number().over(
+        W.partitionBy("source").orderBy("avg_logprob", "doc_id")
+    ).cast("bigint")
+    rb = F.row_number().over(
+        W.partitionBy("source").orderBy("ttr", "doc_id")
+    ).cast("bigint")
+    ranked = scored.select("source", ra.alias("ra"), rb.alias("rb"))
+    sums = ranked.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("ra").cast("bigint").alias("sa"),
+        F.sum("rb").cast("bigint").alias("sb"),
+        F.sum(F.col("ra") * F.col("ra")).cast("bigint").alias("saa"),
+        F.sum(F.col("rb") * F.col("rb")).cast("bigint").alias("sbb"),
+        F.sum(F.col("ra") * F.col("rb")).cast("bigint").alias("sab"),
+    )
+    n, sa, sb = F.col("n"), F.col("sa"), F.col("sb")
+    return sums.select(
+        "source",
+        n.alias("n_docs"),
+        F.round(
+            (n * F.col("sab") - sa * sb).cast("double")
+            / F.sqrt(
+                (n * F.col("saa") - sa * sa).cast("double")
+                * (n * F.col("sbb") - sb * sb).cast("double")
+            ),
+            9,
+        ).alias("spearman_rho"),
+    ).orderBy("source")

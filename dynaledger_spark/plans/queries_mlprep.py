@@ -17,6 +17,8 @@ counts, weights) is exact everywhere.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -784,9 +786,10 @@ def triplet_sample_contrastive(spark: SparkSession, sf_dir: str) -> DataFrame:
     (label, rank). No shuffle touches the corpus more than once.
     """
     from dynaledger_spark.plans.queries_sampling import _H1, _H2, _M32, _mhash
-    from dynaledger_spark.plans.queries_vector import _emb
 
-    emb = _emb(spark, sf_dir).select("vec_id", "label")
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).select(
+        "vec_id", "label"
+    )
     wlab = W.partitionBy("label").orderBy("vec_id")
     members = emb.select(
         "vec_id", "label", F.row_number().over(wlab).alias("rn")

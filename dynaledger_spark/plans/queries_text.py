@@ -1736,8 +1736,7 @@ def _lsh_recall_oracle() -> str:
     oracle=None,  # attached below (composes the portable-minhash oracle)
 )
 def lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dedup rollout gate as a query (the ann_recall_eval pattern
-    applied to near-dup detection): the portable MinHash-LSH pipeline's
+    """The dedup rollout gate as a query: the portable MinHash-LSH pipeline's
     RECALL against an exact, complete ground truth — every doc pair
     with 3-gram-shingle Jaccard >= 0.5 — reported beside the banding
     S-curve's prediction E[recall | j] = 1 - (1 - j^4)^4.

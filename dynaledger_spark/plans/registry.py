@@ -68,11 +68,9 @@ def load_all() -> dict[str, QuerySpec]:
         queries_streaming,
         queries_text,
         queries_timeseries,
-        queries_vector,
         queries_mlprep,
         queries_lm,
         queries_featurestore,
-        queries_eval,
         queries_behavior,
         queries_finance,
         queries_quality,

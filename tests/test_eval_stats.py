@@ -1,14 +1,14 @@
-"""Eval-stats family (queries_eval): python mirrors for PMI, the
-clustering-agreement combinatorics, and per-dimension MI. The mirrors
-reproduce the repo's float discipline (sequential folds, round-at-12
-ln terms), so comparisons are exact, not approximate."""
+"""Python mirrors for the corpus- and sequence-statistics queries
+(PMI collocations, Markov sequence scoring) and the incremental-MinHash
+subset property. The mirrors reproduce the repo's float discipline
+(sequential folds, round-at-12 ln terms), so comparisons are exact, not
+approximate."""
 
 from __future__ import annotations
 
 import math
 from collections import Counter, defaultdict
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -67,92 +67,6 @@ def test_pmi_matches_bruteforce(spark, tmp_path_factory, docs):
     ]
     want.sort(key=lambda r: (-r[3], r[0], r[1]))
     assert got == want[:30]
-
-
-# ---------------------------------------------------------------------------
-# Clustering eval ≡ python mirror on the real embeddings
-# ---------------------------------------------------------------------------
-def test_clustering_eval_matches_python(spark, sf_dir):
-    from dynaledger_spark.plans.queries_vector import _centroids, _emb
-
-    row = REGISTRY["clustering_eval_ari"].build(spark, sf_dir).collect()[0]
-
-    cents = _centroids()
-    cont: dict[tuple[int, int], int] = defaultdict(int)
-    for r in _emb(spark, sf_dir).select("embedding", "label").collect():
-        vec = r["embedding"]
-        dists = []
-        for c in cents:
-            acc = 0.0  # same sequential IEEE fold as F.aggregate
-            for x, y in zip(vec, c):
-                xd = float(x)
-                acc += (xd - y) * (xd - y)
-            dists.append(acc)
-        m = min(dists)
-        cell = dists.index(m)  # first index attaining the min
-        cont[(cell, r["label"])] += 1
-
-    n = sum(cont.values())
-    comb2 = lambda v: v * (v - 1) // 2  # noqa: E731
-    cells = defaultdict(int)
-    labels = defaultdict(int)
-    maj = defaultdict(int)
-    for (c, l), v in cont.items():
-        cells[c] += v
-        labels[l] += v
-        maj[c] = max(maj[c], v)
-    sum_comb = sum(comb2(v) for v in cont.values())
-    sum_a = sum(comb2(v) for v in cells.values())
-    sum_b = sum(comb2(v) for v in labels.values())
-    comb_n = comb2(n)
-    assert row["n_vectors"] == n
-    assert row["n_cells"] == len(cells)
-    assert row["purity"] == round(sum(maj.values()) / n, 9)
-    assert row["rand_index"] == round(
-        (comb_n + 2 * sum_comb - sum_a - sum_b) / comb_n, 9
-    )
-    assert row["ari"] == round(
-        2 * (comb_n * sum_comb - sum_a * sum_b)
-        / (comb_n * (sum_a + sum_b) - 2 * sum_a * sum_b),
-        9,
-    )
-    # sanity: the metrics mean something on this data
-    assert 0.0 < row["purity"] <= 1.0
-    assert -1.0 <= row["ari"] <= 1.0
-
-
-# ---------------------------------------------------------------------------
-# Per-dimension MI ≡ python mirror; MI is non-negative up to term rounding
-# ---------------------------------------------------------------------------
-def test_feature_mi_matches_python(spark, sf_dir):
-    from dynaledger_spark.plans.queries_vector import _emb
-
-    got = {
-        r["dim"]: r["mi"]
-        for r in REGISTRY["feature_mi_by_dim"].build(spark, sf_dir).collect()
-    }
-    assert sorted(got) == list(range(64))
-
-    rows = _emb(spark, sf_dir).select("embedding", "label").collect()
-    n = len(rows)
-    labels = Counter(r["label"] for r in rows)
-    for dim in (0, 7, 33, 63):  # spot-check four dimensions exactly
-        joint = Counter()
-        margin_s = Counter()
-        for r in rows:
-            pos = float(r["embedding"][dim]) >= 0
-            joint[(pos, r["label"])] += 1
-            margin_s[pos] += 1
-        terms = [
-            n_sl * round(math.log(n_sl * n / (margin_s[s] * labels[l])), 12)
-            for (s, l), n_sl in joint.items()
-        ]
-        acc = 0.0
-        for t in sorted(terms):  # the repo's sorted fold
-            acc += t
-        assert got[dim] == round(acc / n, 9), dim
-    # MI >= 0 mathematically; rounding at 12 can only wiggle ~1e-9
-    assert all(v >= -1e-8 for v in got.values())
 
 
 # ---------------------------------------------------------------------------

@@ -41,7 +41,6 @@ from dynaledger_spark.plans import (
     queries_sparse,
     queries_stats,
     queries_text,
-    queries_vector,
 )
 from dynaledger_spark.plans.registry import load_all
 
@@ -76,7 +75,6 @@ def _assert_gate_fires(spark_df, duck, oracle, what: str) -> None:
 PLAN_MUTATIONS = [
     ("kmv_theta_sketch_pairs", queries_approx, "_KMV_K", 32),
     ("gk_portable_quantiles", queries_approx, "_GK_EPS_DEN", 16),
-    ("semdedup_prune", queries_vector, "_SEMDEDUP_TAU", 0.9),
     ("lpa_communities_fixed", queries_graph, "_LPA_ROUNDS", 1),
     ("fellegi_sunter_linkage", queries_stats, "_FS_LINK_T", 0.0),
     ("token_dropout_augment", queries_lm, "_DROP_MOD", 3),
@@ -91,8 +89,6 @@ PLAN_MUTATIONS = [
     # round-10 batch 3: a dropped iteration and a wrong stratum count
     ("textrank_keywords", queries_text, "_TR_ROUNDS", 2),
     ("psm_stratified_att", queries_experiment, "_PSM_STRATA", 2),
-    # round-11: an over-tight IVF cell cap silently truncating retrieval
-    ("rag_pipeline_e2e", queries_retrieval, "_RAG_CELL_CAP", 2),
 ]
 
 
@@ -249,8 +245,6 @@ RESULT_MUTATIONS = [
     ("unique_key_check", _inject_violation_row),
     ("anti_join_fk", _inject_violation_row),
     ("validation_summary", _int_off_by_one),
-    # round-10: the RAG composition — a lost retrieval row must fire
-    ("rag_pipeline_e2e", _drop_one_row),
     # round-10 batch 2
     ("ips_offline_eval", _ulp_drift),
     ("rendezvous_hash_shard", _int_off_by_one),

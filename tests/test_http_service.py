@@ -174,9 +174,14 @@ def test_invalid_source_is_400(service):
 
 def test_invalid_quarter_is_400(service):
     svc, _ = service
-    with pytest.raises(urllib.error.HTTPError) as e:
-        _get(svc, "/get-financial-data?year=2023&quarter=Q5&data_type=Cash%20Flow&source=RAW")
-    assert e.value.code == 400
+    for path in (
+        "/get-financial-data?year=2023&quarter=Q5&data_type=Cash%20Flow&source=RAW",
+        "/check-availability?source=RAW&year=2023&quarter=Q9",
+        "/get-table-info?data_source=JSON&year=2023&quarter=Q9",
+    ):
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _get(svc, path)
+        assert e.value.code == 400, path
 
 
 def test_negative_content_length_is_400(service):

@@ -348,114 +348,6 @@ def test_session_windows_do_not_overlap(spark, sf):
             assert r["session_start"] <= r["session_last_event"]
 
 
-# ---------------------------------------------------------------------------
-# IVF recall vs the exact cosine baseline (round-3 verdict item 3)
-# ---------------------------------------------------------------------------
-def test_ivf_recall_at_10_vs_exact():
-    """recall@10 of both IVF registry paths vs brute-force cosine at
-    sf0.1 (registry probe settings, 6/16 cells): turns 'it runs' into
-    'it searches'. Threshold 0.8 per the round-3 verdict. The testdata
-    embeddings are ISOTROPIC (unit-norm near-random; top-10 sims
-    0.31-0.41), the hardest regime for a coarse quantizer — recall is
-    bounded by scan fraction there, hence 6 probes; clustered data is
-    covered by test_ivf_recall_clustered at 4/16."""
-    import os
-
-    import pytest as _pytest
-
-    sf01 = "/root/testdata/sf0.1"
-    if not os.path.exists(os.path.join(sf01, "embeddings.parquet")):
-        _pytest.skip("sf0.1 testdata not present")
-    from dynaledger_spark.plans.registry import load_all
-    from dynaledger_spark.session import get_spark
-
-    spark = get_spark("ivf_recall_test")
-    reg = load_all()
-    exact = [r["vec_id"] for r in reg["ann_cosine_topk"].build(spark, sf01).collect()]
-    assert len(exact) == 10
-    for name in ("ann_ivf_topk", "ann_ivf_persisted_topk"):
-        approx = [r["vec_id"] for r in reg[name].build(spark, sf01).collect()]
-        recall = len(set(exact) & set(approx)) / len(exact)
-        assert recall >= 0.8, f"{name} recall@10 = {recall} (exact={exact}, got={approx})"
-
-
-def test_ivf_recall_clustered(spark):
-    """IVF's actual contract: on clusterable embeddings (16 directional
-    clusters), a 4/16-cell probe must reach recall@10 >= 0.9 — the
-    spherical quantizer captures direction, so neighbors co-locate."""
-    import numpy as np
-
-    from dynaledger_spark.operators.similarity import cosine_topk, ivf_topk
-
-    rng = np.random.default_rng(0)
-    centers = rng.normal(size=(16, 64))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    pts = centers[rng.integers(0, 16, 2000)] + 0.25 * rng.normal(size=(2000, 64))
-    pts /= np.linalg.norm(pts, axis=1, keepdims=True)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in pts[i]]) for i in range(2000)],
-        "vec_id long, embedding array<double>",
-    )
-    q = [float(x) for x in pts[0]]
-    corpus = df.filter("vec_id != 0")
-    exact = [r["vec_id"] for r in cosine_topk(corpus, q, k=10).collect()]
-    approx = [
-        r["vec_id"]
-        for r in ivf_topk(corpus, q, k=10, n_centroids=16, n_probes=4).collect()
-    ]
-    recall = len(set(exact) & set(approx)) / 10
-    assert recall >= 0.9, f"clustered recall@10 = {recall}"
-
-
-def test_knn_join_two_stage_equals_single_window(spark):
-    """The salted two-stage top-k must equal a brute-force python top-k
-    on a corpus crafted with exact cosine TIES (duplicate vectors), so
-    the (cos DESC, id ASC) tie-break is exercised across stage
-    boundaries."""
-    import math
-    import struct
-
-    from dynaledger_spark.operators.similarity import knn_join
-
-    dim = 4
-    # corpus: 30 vectors in 6 duplicate groups of 5 → guaranteed ties
-    base = [[1.0, 0.0, 0.0, 0.0], [0.9, 0.1, 0.0, 0.0], [0.5, 0.5, 0.0, 0.0],
-            [0.0, 1.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0], [0.3, 0.3, 0.3, 0.1]]
-    corpus_rows = [(100 + i, base[i % 6]) for i in range(30)]
-    query_rows = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
-    corpus = spark.createDataFrame(corpus_rows, "vec_id long, embedding array<float>")
-    queries = spark.createDataFrame(query_rows, "query_id long, query_vec array<float>")
-    k = 7
-    got = {
-        (r.query_id, r.rank): (r.vec_id, r.cos_sim)
-        for r in knn_join(corpus, queries, k=k, n_salt=4).collect()
-    }
-
-    def cos(a, b):
-        # same sequential fold order as the engine
-        dot = 0.0
-        for x, y in zip(a, b):
-            dot += float(x) * float(y)
-        na = nb = 0.0
-        for x in a:
-            na += float(x) * float(x)
-        for y in b:
-            nb += float(y) * float(y)
-        return dot / (math.sqrt(na) * math.sqrt(nb))
-
-    def f32(x):
-        return struct.unpack("f", struct.pack("f", x))[0]
-
-    for qid, qv in query_rows:
-        # float32 storage: recompute from the round-tripped float values
-        scored = sorted(
-            ((cos([f32(x) for x in v], qv), vid) for vid, v in corpus_rows),
-            key=lambda t: (-t[0], t[1]),
-        )
-        for rank, (sim, vid) in enumerate(scored[:k], start=1):
-            assert got[(qid, rank)][0] == vid, (qid, rank, got[(qid, rank)], vid)
-
-
 def test_zorder_buckets_are_local_in_both_dims(spark, sf):
     """Every Z-order bucket must span at most 1/16 of BOTH key ranges —
     the locality property that makes the layout prunable on either

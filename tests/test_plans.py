@@ -57,11 +57,9 @@ def test_no_cartesian_products(plans):
     for name, plan in plans.items():
         assert "CartesianProduct" not in plan, f"{name} cross-joins"
         assert "BroadcastNestedLoopJoin" not in plan or name in (
-            "ann_cosine_topk",  # 1-row literal lookup is fine if it appears
             "tfidf_top_terms",  # 1-row broadcast of the corpus count
             "mixture_rebalance_sample",  # 1-row broadcast of corpus totals
             "copurchase_triangles",  # 1-row × 1-row scalar-metric combine
-            "knn_join_topk",  # deliberate broadcast fan-out of the query batch
             "target_encode_priority",  # 1-row broadcast of the global prior
             "quantile_binning_migration",  # 1-row broadcast of decile bounds
             "sliding_7d_active_users",  # 1-row broadcast of the date bounds
@@ -72,8 +70,6 @@ def test_no_cartesian_products(plans):
             "cms_heavy_hitters",  # 4-row broadcast of the sketch seeds
             "mad_outlier_days",  # 1-row broadcasts of median and MAD
             "pmi_collocations",  # 1-row broadcast of the bigram total
-            "clustering_eval_ari",  # 1-row scalar-metric combines
-            "feature_mi_by_dim",  # 1-row broadcast of the vector total
             "minhash_portable_incremental",  # 1-row broadcast of the id cutoff
             "km_churn_curve",  # 1-row broadcast of the censoring horizon
             "hll_portable_estimate",  # 1-row broadcast of the exact count
@@ -106,26 +102,18 @@ def test_no_cartesian_products(plans):
             "freshness_lag_by_type",  # 1-row broadcast of the corpus watermark
             "fk_orphan_scorecard",  # six 1-row × 1-row edge-metric combines
             "bm25_topk_docs",  # 1-row broadcasts of df counts and avgdl
-            "rrf_hybrid_topk",  # same BM25 scalar broadcasts feed the fusion
             "psi_feature_drift",  # 10-row bin-grid broadcast fan-out
             "join_key_skew_report",  # 1-row top-key/stats scalar combines
-            "grid_density_clusters",  # 1-row density-threshold broadcast
             "t_closeness_audit",  # 1-row global-total broadcast
             "ks_two_sample_values",  # 1-row sample-size broadcasts
-            "ndcg_lexical_vs_dense",  # BM25 scalar broadcasts feed the DCG
-            "ann_recall_eval",  # two 10-row TakeOrdereds joined
             "ab_conversion_ztest",  # 1-row × 1-row arm-stats combine
             "ar_aging_buckets",  # 1-row broadcast of the as-of ledger date
             "tpch_q15_top_supplier",  # 1-row broadcast of the max revenue
             "tpch_q22_global_sales_opportunity",  # 1-row broadcast of the avg balance
             "tpch_q11_important_stock",  # 1-row broadcast of the global total
-            "semdedup_prune",  # 10-row centroid-table broadcast fan-out
-            "margin_knn_scores",  # 20-row query-batch broadcast fan-out
             "dsir_importance_weights",  # 1-row broadcast of the corpus totals
             "unimax_allocation",  # 1-row broadcasts of budget and waterline
             "fisher_lda_quality",  # 1-row broadcasts of the fitted model
-            "hard_negative_mining",  # 20-row query-batch broadcast fan-out
-            "decontam_embedding_sim",  # corpus/50 benchmark-batch broadcast fan-out
             "spearman_quality_scores",  # unigram scorer's 1-row token-total broadcast
             "hill_tail_index",  # 1-row broadcast of the tail threshold over k+1 rows
             "bits_per_byte_by_source",  # 1-row broadcast of the corpus token total
@@ -184,7 +172,6 @@ def test_column_pruning_reaches_scan(spark, sf_dir):
 def test_topk_uses_take_ordered(plans):
     # ORDER BY + LIMIT must compile to TakeOrderedAndProject, not a global sort
     assert "TakeOrderedAndProject" in plans["topk_customers"]
-    assert "TakeOrderedAndProject" in plans["ann_cosine_topk"]
 
 
 def test_partition_pruning_on_partitioned_write(spark, sf_dir, tmp_path):
@@ -311,40 +298,6 @@ def test_union_distinct_dedups_with_hash_agg(plans):
     assert _nodes(plan, "HashAggregate") >= 2  # partial + final dedup
 
 
-def test_ivf_persisted_partition_pruning(spark, sf_dir, tmp_path):
-    """IVF cell store: a probe's `centroid IN (...)` must prune to the
-    probed partitions — PartitionFilters on centroid, no centroid in the
-    read schema, and the persisted probe agrees with the in-memory path."""
-    from dynaledger_spark.catalog import read_table
-    from dynaledger_spark.operators.similarity import (
-        ivf_index,
-        ivf_topk,
-        ivf_topk_persisted,
-        ivf_write_cells,
-    )
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    qvec = list(emb.filter("vec_id = 0").head()["embedding"])
-    corpus = emb.filter("vec_id != 0")
-    assigned, centroids = ivf_index(corpus, n_centroids=8)
-    path = str(tmp_path / "ivf_cells")
-    ivf_write_cells(assigned, path)
-
-    probe = ivf_topk_persisted(spark, path, centroids, qvec, k=10, n_probes=3)
-    plan = plan_of(probe)
-    assert "PartitionFilters" in plan and "centroid" in plan.split("PartitionFilters", 1)[1].split("]", 1)[0]
-    scan = plan[plan.index("Scan parquet") :]
-    read_schema = scan[scan.index("ReadSchema") : scan.index("\n", scan.index("ReadSchema"))]
-    assert "centroid" not in read_schema
-
-    got = [r.vec_id for r in probe.collect()]
-    want = [
-        r.vec_id
-        for r in ivf_topk(corpus, qvec, k=10, n_centroids=8, n_probes=3).collect()
-    ]
-    assert got == want
-
-
 def test_ohlc_single_exchange(plans):
     """time_bucket_ohlc: both row_number windows and the final aggregate
     hash on (event_type, bucket_ts) — Catalyst must plan exactly ONE hash
@@ -440,7 +393,7 @@ def test_ewma_single_exchange(plans):
 # ---------------------------------------------------------------------------
 def test_stats_moments_single_exchange(plans):
     """The exact-moment aggregates (corr, skew/kurt, weighted mean,
-    checksum, bitmask, VWAP, centroid assignment) are each ONE hash
+    checksum, bitmask, VWAP) are each ONE hash
     aggregate: exactly one shuffle Exchange, partial aggregation
     map-side."""
     for name in (
@@ -450,20 +403,10 @@ def test_stats_moments_single_exchange(plans):
         "table_checksum_orders",
         "event_type_bitmask",
         "vwap_weekly_priceband",
-        "centroid_assign_fixed",
     ):
         plan = plans[name]
         assert _nodes(plan, "Exchange") == 1, name
         assert "partial" in plan.lower() or "HashAggregate" in plan, name
-
-
-def test_knn_join_broadcasts_queries(plans):
-    """knn_join_topk: the query batch must broadcast (map-side fan-out);
-    the corpus must NOT shuffle for scoring — the only hash exchanges
-    are the two top-k windows."""
-    plan = plans["knn_join_topk"]
-    assert "BroadcastExchange" in plan
-    assert _nodes(plan, "Exchange hashpartitioning") <= 2
 
 
 def test_type_token_ratio_single_exchange(plans):
@@ -582,8 +525,7 @@ GLOBAL_WINDOW_WHITELIST = {
     # bounded: post-aggregation grids (deciles, per-group stats, ranks
     # over an already-reduced result)
     "bootstrap_mean_ci", "woe_iv_acctbal_urgent", "lift_gains_deciles",
-    "isotonic_calibration_deciles", "rrf_hybrid_topk",
-    "ndcg_lexical_vs_dense", "zipf_fit_vocab", "vocab_build_topn",
+    "isotonic_calibration_deciles", "zipf_fit_vocab", "vocab_build_topn",
     "tokenize_to_ids", "chi_square_segment_priority",
     "revenue_share_by_nation", "pareto_abc_parts",
     "triplet_sample_contrastive",
@@ -791,9 +733,8 @@ def test_unpersist_discipline(spark, sf_dir):
         "cms_heavy_hitters", "cusum_changepoint", "item_cf_cosine",
         "jaccard_prefix_filter_join", "mad_outlier_days",
         "markov_sequence_score", "pmi_collocations",
-        "quantized_cosine_pairs", "rolling_purchase_features",
-        "theil_sen_daily_trend", "triplet_sample_contrastive",
-        "pagerank_portable_fixedpoint", "semdedup_prune",
+        "rolling_purchase_features", "theil_sen_daily_trend",
+        "triplet_sample_contrastive", "pagerank_portable_fixedpoint",
         "fastss_edit1_pairs", "kmv_theta_sketch_pairs",
         "lpa_communities_fixed", "tfidf_cosine_pairs",
         "sequential_pattern_support",

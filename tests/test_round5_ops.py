@@ -4,8 +4,7 @@ Each new family gets a check that does NOT go through the DuckDB oracle:
 a brute-force Python recomputation (funnel chains, debounce bursts,
 Theil-Sen), an algebraic invariant the implementation does not state
 directly (decomposition identity, CUSUM endpoint, share normalization),
-or an accuracy bound against the exact quantity (HLL error, int8
-quantization error, JL distance preservation).
+or an accuracy bound against the exact quantity (HLL error).
 """
 
 from __future__ import annotations
@@ -115,67 +114,6 @@ def test_hll_error_within_theory(spark, sf_dir):
     assert r.rel_err <= 3 * 1.04 / math.sqrt(512), r
 
 
-def test_jl_projection_preserves_distance_order(spark, sf_dir):
-    """8-dim ±1 projection: the JL unbiasedness identity must hold in
-    aggregate over pairs, and distances must correlate positively
-    (deterministic data, so these are fixed regression bounds)."""
-    from dynaledger_spark.plans.queries_vector import _emb
-
-    emb = {
-        r.vec_id: [float(x) for x in r.embedding]
-        for r in _emb(spark, sf_dir).select("vec_id", "embedding").collect()
-    }
-    proj = {
-        r.vec_id: [r[f"y{j}"] for j in range(8)]
-        for r in rows(spark, sf_dir, "random_projection_jl")
-    }
-    ids = sorted(emb)[:40]
-    d_orig, d_proj = [], []
-    for i in range(len(ids)):
-        for j in range(i + 1, len(ids)):
-            a, b = ids[i], ids[j]
-            d_orig.append(
-                sum((x - y) ** 2 for x, y in zip(emb[a], emb[b]))
-            )
-            d_proj.append(
-                sum((x - y) ** 2 for x, y in zip(proj[a], proj[b]))
-            )
-    # unbiasedness: E[||y_a-y_b||^2] = ||x_a-x_b||^2, so the aggregate
-    # ratio concentrates near 1 even though k=8 makes per-pair noise huge
-    ratio = sum(d_proj) / sum(d_orig)
-    assert 0.9 <= ratio <= 1.1, ratio
-    n = len(d_orig)
-    mo, mp = sum(d_orig) / n, sum(d_proj) / n
-    cov = sum((o - mo) * (p - mp) for o, p in zip(d_orig, d_proj))
-    vo = sum((o - mo) ** 2 for o in d_orig)
-    vp = sum((p - mp) ** 2 for p in d_proj)
-    corr = cov / math.sqrt(vo * vp)
-    assert corr > 0.1, corr
-
-
-def test_quantized_cosine_error_bound(spark, sf_dir):
-    """int8 max-abs quantization: reported cos_q within 0.03 of the
-    float64 cosine for every returned pair."""
-    from dynaledger_spark.plans.queries_vector import _emb
-
-    emb = {
-        r.vec_id: [float(x) for x in r.embedding]
-        for r in _emb(spark, sf_dir).select("vec_id", "embedding").collect()
-    }
-
-    def cos(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dot / (na * nb)
-
-    got = rows(spark, sf_dir, "quantized_cosine_pairs")
-    assert got, "expected at least one near-dup pair"
-    for r in got:
-        exact = cos(emb[r.va], emb[r.vb])
-        assert abs(r.cos_q - exact) <= 0.03, (r, exact)
-
-
 def test_theil_sen_vs_brute_force(spark, sf_dir):
     from dynaledger_spark.plans.queries_timeseries import _daily
 
@@ -247,11 +185,13 @@ def test_decay_engagement_bounds(spark, sf_dir, events_py):
 
 
 def test_triplet_invariants(spark, sf_dir):
-    from dynaledger_spark.plans.queries_vector import _emb
+    from dynaledger_spark.catalog import read_table
 
     labels = {
         r.vec_id: r.label
-        for r in _emb(spark, sf_dir).select("vec_id", "label").collect()
+        for r in read_table(spark, sf_dir, "embeddings")
+        .select("vec_id", "label")
+        .collect()
     }
     out = rows(spark, sf_dir, "triplet_sample_contrastive")
     assert out, "expected triplets"
@@ -275,13 +215,6 @@ def test_temperature_resampling_flattens_mixture(spark, sf_dir):
     old_ratio = max(old_shares.values()) / min(old_shares.values())
     new_ratio = max(new_shares.values()) / min(new_shares.values())
     assert new_ratio <= old_ratio + 1e-9
-
-
-def test_silhouette_range(spark, sf_dir):
-    out = rows(spark, sf_dir, "silhouette_fixed_centroids")
-    assert out
-    for r in out:
-        assert -1.0 <= r.mean_silhouette <= 1.0
 
 
 def test_bigram_logprob_negative_and_covers_docs(spark, sf_dir):

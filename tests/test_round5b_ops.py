@@ -194,28 +194,6 @@ def test_bm25_vs_brute_force(spark, sf_dir):
         assert g == pytest.approx(e, abs=1e-8)
 
 
-def test_rrf_recomputes_from_ranks(spark, sf_dir):
-    got = rows(spark, sf_dir, "rrf_hybrid_topk")
-    assert got
-    for r in got:
-        expect = 0.0
-        if r.r_lex is not None:
-            expect += 1.0 / (60.0 + r.r_lex)
-        if r.r_dense is not None:
-            expect += 1.0 / (60.0 + r.r_dense)
-        assert r.rrf == pytest.approx(expect, abs=1e-9)
-        assert r.r_lex is not None or r.r_dense is not None
-    # the fused list must contain any doc ranked #1 by either retriever:
-    # 1/61 alone beats the best possible double-miss score of docs outside
-    # both top-100 lists (0), and beats two mid-list memberships only when
-    # 1/(60+a)+1/(60+b) < 1/61 is false — so just assert membership
-    tops = [r.doc_id for r in got]
-    lex_first = next(r.doc_id for r in got if r.r_lex == 1) if any(
-        r.r_lex == 1 for r in got
-    ) else None
-    assert lex_first is None or lex_first in tops
-
-
 def test_mlm_mask_rate_and_checksum(spark, sf_dir):
     from dynaledger_spark.catalog import read_table
 
@@ -283,24 +261,6 @@ def test_join_key_skew_vs_brute_force(spark, sf_dir):
     assert row.skew_ratio >= 1.0  # max >= avg by definition
 
 
-def test_cluster_prf_accounting(spark, sf_dir):
-    from dynaledger_spark.catalog import read_table
-
-    got = rows(spark, sf_dir, "cluster_majority_prf")
-    n = read_table(spark, sf_dir, "embeddings").count()
-    assert sum(r.n_actual for r in got) == n
-    assert sum(r.n_predicted for r in got) == n  # every vector predicted once
-    assert sum(r.tp for r in got) <= n
-    for r in got:
-        assert r.tp <= r.n_actual and r.tp <= r.n_predicted
-        assert 0.0 <= r.recall <= 1.0
-        if r.prec is not None:
-            assert 0.0 <= r.prec <= 1.0
-        assert 0.0 <= r.f1 <= 1.0
-    # 8 cells cannot predict all 10 labels
-    assert any(r.n_predicted == 0 for r in got)
-
-
 def test_kwic_context_matches_text(spark, sf_dir):
     from dynaledger_spark.catalog import read_table
 
@@ -315,30 +275,6 @@ def test_kwic_context_matches_text(spark, sf_dir):
         assert toks[r.pos] == "join"
         lo, hi = max(0, r.pos - 3), min(len(toks) - 1, r.pos + 3)
         assert r.context == " ".join(toks[lo : hi + 1])
-
-
-def test_power_iteration_is_an_eigenpair(spark, sf_dir):
-    a = rows(spark, sf_dir, "power_iteration_top_pc")
-    b = rows(spark, sf_dir, "power_iteration_top_pc")
-    assert a == b  # deterministic
-    v = [r.loading for r in sorted(a, key=lambda r: r.dim)]
-    lam = a[0].eigenvalue
-    assert sum(x * x for x in v) == pytest.approx(1.0, abs=1e-6)
-    # rebuild the covariance and check the Rayleigh residual
-    cov = rows(spark, sf_dir, "embedding_covariance")
-    d = len(v)
-    A = [[0.0] * d for _ in range(d)]
-    for r in cov:
-        A[r.dim_i - 1][r.dim_j - 1] = r.cov
-        A[r.dim_j - 1][r.dim_i - 1] = r.cov
-    Av = [sum(A[i][k] * v[k] for k in range(d)) for i in range(d)]
-    resid = math.sqrt(sum((Av[i] - lam * v[i]) ** 2 for i in range(d)))
-    assert lam > 0
-    assert resid / lam < 1e-4, (resid, lam)
-    # lambda_max of a symmetric matrix dominates every diagonal entry
-    assert lam >= max(A[i][i] for i in range(d)) - 1e-9
-    # sign canonicalization: the largest-|loading| dim is positive
-    assert max(v, key=abs) > 0
 
 
 def test_ivm_merge_equals_recompute(spark, sf_dir):
@@ -420,27 +356,6 @@ def test_cdc_cut_points_shift_with_content():
     ):
         suffix += 1
     assert suffix >= len(c1) - 3, (suffix, len(c1))
-
-
-def test_grid_clusters_cover_all_dense_cells(spark, sf_dir):
-    from dynaledger_spark.catalog import read_table
-
-    got = rows(spark, sf_dir, "grid_density_clusters")
-    assert got, "the density threshold must keep some cells"
-    cells = defaultdict(int)
-    for r in read_table(spark, sf_dir, "embeddings").select("embedding").collect():
-        cx = math.floor(float(r.embedding[0]) / 0.1) + 50
-        cy = math.floor(float(r.embedding[1]) / 0.1) + 50
-        cells[cx * 1000 + cy] += 1
-    n = sum(cells.values())
-    minpts = max(3, n // 100)
-    dense = {c: k for c, k in cells.items() if k >= minpts}
-    assert sum(r.n_cells for r in got) == len(dense)
-    assert sum(r.n_points for r in got) == sum(dense.values())
-    # every cluster id is a dense cell and the min of its component
-    ids = [r.cluster_id for r in got]
-    assert all(c in dense for c in ids)
-    assert len(set(ids)) == len(ids)
 
 
 def test_holt_forecast_vs_brute_force(spark, sf_dir, daily_cents):
@@ -736,75 +651,6 @@ def test_ks_two_sample_vs_brute_force(spark, sf_dir):
     assert r.ks_d == pytest.approx(d, abs=1e-8)
     assert 0.0 <= r.ks_d <= 1.0
     assert r.crit_05 > 0
-
-
-def test_ann_recall_eval_consistency(spark, sf_dir):
-    [r] = rows(spark, sf_dir, "ann_recall_eval")
-    assert r.k == 10
-    assert 0 <= r.n_common <= 10
-    assert r.recall_at_10 == pytest.approx(r.n_common / 10.0, abs=1e-9)
-    # must agree with intersecting the two registry rankings directly
-    exact = {x.vec_id for x in rows(spark, sf_dir, "ann_cosine_topk")}
-    lsh = {x.vec_id for x in rows(spark, sf_dir, "ann_lsh_bucketed")}
-    assert r.n_common == len(exact & lsh)
-    # no quality gate here: 8-plane Hamming-1 probing scans ~9/256 of
-    # bucket space, so low recall on ISOTROPIC vectors is the expected
-    # physics (the quality-gated index is IVF — test_ivf_recall_at_10).
-    # This query's job is to MEASURE it; the eval must be self-consistent
-    # (n_common can legitimately be 0 at SFs where the probe set misses
-    # the whole exact top-10 — measured 0/10 at sf0.01, 2/10 at sf0.001).
-
-
-def test_ndcg_vs_brute_force(spark, sf_dir):
-    [r] = rows(spark, sf_dir, "ndcg_lexical_vs_dense")
-    lex = [x.doc_id for x in rows(spark, sf_dir, "bm25_topk_docs")][:10]
-    gold = {x.vec_id for x in rows(spark, sf_dir, "ann_cosine_topk")}  # top-10
-    # gold for the query is dense top-20; recompute from cosine ranking
-    from dynaledger_spark.catalog import read_table
-    from dynaledger_spark.operators.similarity import cosine_topk
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    qv = emb.filter("vec_id = 0").select("embedding").head()[0]
-    gold20 = {
-        x.vec_id
-        for x in cosine_topk(
-            emb.filter("vec_id <> 0"), list(qv), k=20
-        ).collect()
-    }
-    dcg = sum(
-        (1.0 / math.log2(i + 2)) if d in gold20 else 0.0
-        for i, d in enumerate(lex)
-    )
-    idcg = sum(1.0 / math.log2(i + 2) for i in range(len(lex)))
-    assert r.k == len(lex)
-    assert r.n_relevant_in_k == sum(1 for d in lex if d in gold20)
-    assert r.ndcg_at_10 == pytest.approx(dcg / idcg, abs=1e-6)
-    assert 0.0 <= r.ndcg_at_10 <= 1.0
-
-
-def test_embedding_drift_vs_brute_force(spark, sf_dir):
-    from dynaledger_spark.catalog import read_table
-
-    got = rows(spark, sf_dir, "embedding_drift_report")
-    assert len(got) == 10
-    halves = defaultdict(lambda: defaultdict(list))
-    for r in read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").collect():
-        for d, x in enumerate(r.embedding, start=1):
-            halves[r.vec_id % 2][d].append(float(x))
-    for r in got:
-        xs0, xs1 = halves[0][r.dim], halves[1][r.dim]
-        # replicate the sorted-fold sums exactly
-        s10 = 0.0
-        for v in sorted(xs0):
-            s10 += v
-        s11 = 0.0
-        for v in sorted(xs1):
-            s11 += v
-        assert r.mean_ref == pytest.approx(round(s10 / len(xs0), 9), abs=1e-9)
-        assert r.mean_cur == pytest.approx(round(s11 / len(xs1), 9), abs=1e-9)
-        assert r.std_shift >= 0
-    shifts = [r.std_shift for r in got]
-    assert shifts == sorted(shifts, reverse=True)
 
 
 def test_stream_anomaly_zscore_flags_3sigma(spark, sf_dir):

@@ -1,5 +1,5 @@
 """Independent-evidence tests for the round-7 curation batch
-(SemDeDup, DSIR importance weights, margin-kNN scoring).
+(DSIR importance weights and the curation filters after it).
 
 Same doctrine as test_round5_ops: every check is evidence the DuckDB
 oracle cannot manufacture — a brute-force numpy/python recomputation
@@ -22,86 +22,6 @@ REGISTRY = load_all()
 
 def rows(spark, sf_dir, name):
     return REGISTRY[name].build(spark, sf_dir).collect()
-
-
-def _embeddings(sf_dir):
-    t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
-    d = t.to_pydict()
-    order = np.argsort(d["vec_id"])
-    ids = np.asarray(d["vec_id"])[order]
-    V = np.asarray([np.asarray(v, dtype=np.float64) for v in d["embedding"]])[order]
-    labels = np.asarray(d["label"])[order]
-    return ids, V, labels
-
-
-def test_semdedup_vs_numpy(spark, sf_dir):
-    """The per-cluster prune stats must equal a dense numpy
-    recomputation: label-mean centroids, argmin assignment (ties by
-    label — checked absent), within-cluster keep-first prune at the
-    operator's threshold."""
-    from dynaledger_spark.plans.queries_vector import _SEMDEDUP_TAU
-
-    ids, V, labels = _embeddings(sf_dir)
-    cents = np.stack([V[labels == l].mean(axis=0) for l in sorted(set(labels))])
-    d2 = ((V[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-    assign = d2.argmin(axis=1)
-    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-    expect = {}
-    for c in sorted(set(assign)):
-        idx = np.where(assign == c)[0]
-        S = Vn[idx] @ Vn[idx].T
-        pruned = set()
-        for bi in range(len(idx)):
-            for ai in range(bi):
-                if S[ai, bi] > _SEMDEDUP_TAU:
-                    pruned.add(int(ids[idx[bi]]))
-                    break
-        expect[int(c)] = (len(idx), len(pruned), sum(pruned))
-    got = {
-        r.cluster: (r.n_vectors, r.n_pruned, r.pruned_id_sum)
-        for r in rows(spark, sf_dir, "semdedup_prune")
-    }
-    assert got == expect
-
-
-def test_semdedup_prune_is_within_cluster_only(spark, sf_dir):
-    """Invariant: pruned counts can never exceed cluster size minus one
-    (the keep-first survivor)."""
-    for r in rows(spark, sf_dir, "semdedup_prune"):
-        assert 0 <= r.n_pruned <= max(r.n_vectors - 1, 0)
-
-
-def test_margin_knn_vs_numpy(spark, sf_dir):
-    """Top-20 margins must match a dense numpy recomputation of the
-    ratio-margin criterion (forward/backward top-k averages with the
-    operator's tie-breaking)."""
-    from dynaledger_spark.plans.queries_vector import _MARGIN_K, _MARGIN_NQ
-
-    ids, V, _ = _embeddings(sf_dir)
-    qm = ids < _MARGIN_NQ
-    Q, C = V[qm], V[~qm]
-    qid, cid = ids[qm], ids[~qm]
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-    S = Qn @ Cn.T  # queries × corpus
-    def avg_topk(sims, tie_ids):
-        # rank by cos desc then id asc; average the top k
-        order = np.lexsort((tie_ids, -sims))
-        return float(np.mean(sims[order[:_MARGIN_K]]))
-    fwd = {int(qid[i]): avg_topk(S[i, :], cid) for i in range(len(qid))}
-    bwd = {int(cid[j]): avg_topk(S[:, j], qid) for j in range(len(cid))}
-    scored = []
-    for i in range(len(qid)):
-        for j in range(len(cid)):
-            m = S[i, j] / ((fwd[int(qid[i])] + bwd[int(cid[j])]) / 2.0)
-            scored.append((m, int(qid[i]), int(cid[j]), S[i, j]))
-    scored.sort(key=lambda t: (-t[0], t[1], t[2]))
-    expect = [(t[1], t[2]) for t in scored[:20]]
-    got = rows(spark, sf_dir, "margin_knn_scores")
-    assert [(r.qid, r.cid) for r in got] == expect
-    for r, t in zip(got, scored[:20]):
-        assert abs(r.margin - t[0]) < 1e-6
-        assert abs(r.cos_sim - t[3]) < 1e-6
 
 
 def test_dsir_weights_vs_python(spark, sf_dir):
@@ -169,37 +89,8 @@ def test_dsir_target_docs_score_higher(spark, sf_dir):
     assert all(r.lang != "en" for r in got)
 
 
-def test_power_iteration_portable_aligns_with_float_pc(spark, sf_dir):
-    """The fixed-point direction must align (|cosine| > 0.99) with the
-    true top eigenvector of the same 8-dim integer Gram matrix computed
-    densely in numpy — evidence the integer loop converges to the right
-    subspace, which the oracle (same arithmetic) cannot certify."""
-    from dynaledger_spark.plans.queries_vector import _PI_DIMS, _PI_SCALE
-
-    ids, V, _ = _embeddings(sf_dir)
-    X = np.floor(V[:, :_PI_DIMS] * _PI_SCALE)
-    G = X.T @ X
-    evals, evecs = np.linalg.eigh(G)
-    top = evecs[:, np.argmax(evals)]
-    got = rows(spark, sf_dir, "power_iteration_portable")
-    v = np.array([r.pc_fixed for r in sorted(got, key=lambda r: r.dim)], dtype=float)
-    cos = abs(v @ top) / (np.linalg.norm(v) * np.linalg.norm(top))
-    assert cos > 0.99, cos
-
-
-def test_power_iteration_portable_scale_bound(spark, sf_dir):
-    """Renormalization contract: every output component is bounded by
-    ~the working scale (|v| <= SCALE * DIMS), so intermediates can
-    never overflow BIGINT at any corpus size."""
-    from dynaledger_spark.plans.queries_vector import _PI_DIMS, _PI_SCALE
-
-    got = rows(spark, sf_dir, "power_iteration_portable")
-    assert len(got) == _PI_DIMS
-    assert all(abs(r.pc_fixed) <= _PI_SCALE * _PI_DIMS for r in got)
-
-
 # ---------------------------------------------------------------------------
-# Round-7 batch 2: UniMax, Fisher LDA, PQ encode, k-center greedy
+# Round-7 batch 2: UniMax, Fisher LDA
 # ---------------------------------------------------------------------------
 def _documents(sf_dir):
     t = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
@@ -260,93 +151,9 @@ def test_fisher_lda_vs_numpy(spark, sf_dir):
     assert r.tp + r.fp + r.fn + r.tn == r.n_docs == len(x1)
 
 
-def test_pq_encode_vs_numpy(spark, sf_dir):
-    """Subspace codes must equal a dense numpy argmin against the same
-    fixed codebooks; reconstruction error matches the sum of mins."""
-    from dynaledger_spark.plans.queries_vector import (
-        _PQ_K, _PQ_M, _PQ_SUB, _pq_cent,
-    )
-
-    ids, V, _ = _embeddings(sf_dir)
-    books = np.asarray(
-        [
-            [[_pq_cent(sp, kc, j) for j in range(_PQ_SUB)] for kc in range(_PQ_K)]
-            for sp in range(_PQ_M)
-        ]
-    )
-    got = {r.vec_id: r for r in rows(spark, sf_dir, "pq_encode_fixed")}
-    assert set(got) == set(int(i) for i in ids)
-    for i, vid in enumerate(ids):
-        recon = 0.0
-        for sp in range(_PQ_M):
-            seg = V[i, sp * _PQ_SUB:(sp + 1) * _PQ_SUB]
-            d2 = ((seg[None, :] - books[sp]) ** 2).sum(axis=1)
-            code = int(d2.argmin())
-            assert got[int(vid)][f"code_{sp}"] == code, (vid, sp)
-            recon += float(d2.min())
-        assert math.isclose(got[int(vid)].recon_err, recon, rel_tol=1e-9)
-
-
-def test_kcenter_vs_numpy_and_radius_monotone(spark, sf_dir):
-    """Selection order must equal a numpy farthest-first replay over
-    the same pool; coverage radii are non-increasing by construction
-    (adding a center can only shrink every min-distance)."""
-    from dynaledger_spark.plans.queries_vector import _KC_K, _KC_MOD
-
-    ids, V, _ = _embeddings(sf_dir)
-    mask = ids % _KC_MOD == 0
-    pids, P = ids[mask], V[mask]
-    sel = [int(np.where(pids == 0)[0][0])]
-    radii = [None]
-    for _ in range(1, _KC_K):
-        d2 = ((P[:, None, :] - P[sel][None, :, :]) ** 2).sum(axis=2).min(axis=1)
-        # argmax with ties to the smaller vec_id (pids is sorted asc)
-        best = int(np.lexsort((pids, -d2))[0])
-        sel.append(best)
-        radii.append(float(d2[best]))
-    got = sorted(rows(spark, sf_dir, "kcenter_coreset_greedy"),
-                 key=lambda r: r.order_idx)
-    assert [r.vec_id for r in got] == [int(pids[i]) for i in sel]
-    assert got[0].radius is None
-    for a, b in zip(got[1:], got[2:]):
-        assert a.radius >= b.radius
-    for r, want in zip(got[1:], radii[1:]):
-        assert math.isclose(r.radius, want, rel_tol=1e-9)
-
-
 # ---------------------------------------------------------------------------
-# Round-7 batch 3: MMR rerank, char entropy, tokenizer fertility
+# Round-7 batch 3: char entropy, tokenizer fertility
 # ---------------------------------------------------------------------------
-def test_mmr_vs_numpy(spark, sf_dir):
-    """The MMR pick sequence must equal a numpy replay: cosine top-20
-    pool for the vec_id=0 query, then greedy argmax of
-    lambda*rel - (1-lambda)*max-sim-to-selected, ties to smaller id."""
-    from dynaledger_spark.plans.queries_retrieval import (
-        _MMR_K, _MMR_LAMBDA, _MMR_POOL,
-    )
-
-    ids, V, _ = _embeddings(sf_dir)
-    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-    qi = int(np.where(ids == 0)[0][0])
-    rel = Vn @ Vn[qi]
-    cand = [i for i in np.lexsort((ids, -rel)) if ids[i] != 0][:_MMR_POOL]
-    sel = [max(cand, key=lambda i: (rel[i], -ids[i]))]
-    for _ in range(1, _MMR_K):
-        rest = [i for i in cand if i not in sel]
-        scores = {
-            i: _MMR_LAMBDA * rel[i]
-            - (1 - _MMR_LAMBDA) * max(float(Vn[i] @ Vn[s]) for s in sel)
-            for i in rest
-        }
-        sel.append(max(rest, key=lambda i: (scores[i], -ids[i])))
-    got = sorted(rows(spark, sf_dir, "mmr_rerank"), key=lambda r: r.mmr_rank)
-    assert [r.vec_id for r in got] == [int(ids[i]) for i in sel]
-    for r, i in zip(got, sel):
-        assert math.isclose(r.relevance, rel[i], rel_tol=1e-9)
-    # rank 0 is the pure-relevance argmax of the pool
-    assert got[0].vec_id == int(ids[max(cand, key=lambda i: (rel[i], -ids[i]))])
-
-
 def test_char_entropy_vs_python(spark, sf_dir):
     """Entropy must match a Counter-based python recomputation; keep
     flag mirrors the threshold; docs with empty text are absent."""
@@ -492,7 +299,7 @@ def test_winnowing_vs_python(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-7 batch 6: CCNet buckets, hard negatives, length-grouped batching
+# Round-7 batch 6: CCNet buckets, length-grouped batching
 # ---------------------------------------------------------------------------
 def test_ccnet_buckets_vs_python(spark, sf_dir):
     """Bucket rollups must equal a python replay: unigram-LM doc scores
@@ -550,30 +357,6 @@ def test_ccnet_buckets_vs_python(spark, sf_dir):
         assert got[(lg, "middle")][3] >= got[(lg, "tail")][2]
 
 
-def test_hard_negatives_vs_numpy(spark, sf_dir):
-    """Every mined negative must equal the numpy exhaustive answer:
-    top-5 cosine among OTHER-label corpus vectors, ties by neg_id —
-    and no returned negative may share the query's label."""
-    from dynaledger_spark.plans.queries_vector import _HNM_NQ, _HNM_K
-
-    ids, V, labels = _embeddings(sf_dir)
-    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-    qm = ids < _HNM_NQ
-    got = defaultdict(list)
-    for r in rows(spark, sf_dir, "hard_negative_mining"):
-        assert r.q_label != r.neg_label
-        got[r.qid].append((r.rank, r.neg_id, r.cos_sim))
-    assert set(got) == set(ids[qm].tolist())
-    for qi in np.where(qm)[0]:
-        cm = (ids >= _HNM_NQ) & (labels != labels[qi])
-        sims = Vn[cm] @ Vn[qi]
-        cand = sorted(zip(-sims, ids[cm].tolist()))[:_HNM_K]
-        mine = sorted(got[ids[qi]])
-        assert [m[1] for m in mine] == [c[1] for c in cand]
-        for m, c in zip(mine, cand):
-            assert math.isclose(m[2], -c[0], abs_tol=1e-8)
-
-
 def test_length_grouped_batching_vs_python(spark, sf_dir):
     """Per-shard padded-token bills must equal a python replay of both
     batching orders, and length-grouping must never pad MORE than
@@ -602,7 +385,7 @@ def test_length_grouped_batching_vs_python(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-7 batch 7: winnowing pairs, semantic decontam, filter kappa
+# Round-7 batch 7: winnowing pairs, filter kappa
 # ---------------------------------------------------------------------------
 def _winnow_py(sf_dir):
     from dynaledger_spark.plans.queries_text import _WIN_GRAM, _WIN_W
@@ -664,25 +447,6 @@ def test_winnowing_pairs_vs_python(spark, sf_dir):
         )
         assert r.containment <= 1.0
     assert got == expect
-
-
-def test_decontam_embedding_vs_numpy(spark, sf_dir):
-    """Every corpus vector's nearest benchmark neighbor and flag must
-    equal the numpy exhaustive answer at the operator's threshold."""
-    from dynaledger_spark.plans.queries_vector import _DECON_TAU
-
-    ids, V, _ = _embeddings(sf_dir)
-    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-    bm = ids % 50 == 0
-    got = {r.vec_id: r for r in rows(spark, sf_dir, "decontam_embedding_sim")}
-    assert set(got) == set(ids[~bm].tolist())
-    for ci in np.where(~bm)[0]:
-        sims = Vn[bm] @ Vn[ci]
-        best = min(zip(-sims, ids[bm].tolist()))
-        r = got[ids[ci]]
-        assert r.nearest_bench_id == best[1]
-        assert math.isclose(r.max_cos, -best[0], abs_tol=1e-8)
-        assert r.contaminated == (-best[0] > _DECON_TAU)
 
 
 def test_filter_kappa_vs_python(spark, sf_dir):

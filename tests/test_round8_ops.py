@@ -1,6 +1,5 @@
 """Independent-evidence tests for the round-8 additions (GK portable
-quantiles, portable Lloyd k-means, FastSS edit-1 join, sparse TF-IDF
-cosine pairs).
+quantiles, FastSS edit-1 join, sparse TF-IDF cosine pairs).
 
 Same doctrine as test_round5/7_ops: every check is evidence the DuckDB
 oracle cannot manufacture — a brute-force python recomputation from the
@@ -65,53 +64,6 @@ def test_gk_portable_rank_error_within_eps(spark):
             assert target <= true_rank + vals.count(sk) - 1  # reaches target
             assert true_rank < target + k
             assert sk >= exact  # stride query only overshoots
-
-
-def test_kmeans_lloyd_matches_python_replay(spark):
-    """Exact integer replay of the full algorithm (quantize, 3 rounds of
-    assign/update with trunc-div and empty-cluster carry, final stats)
-    must agree row-for-row — integer arithmetic leaves no tolerance."""
-    t = pq.read_table(os.path.join(SF, "embeddings.parquet"), columns=["embedding"])
-    X = [
-        [int(math.floor(float(e) * 1000)) for e in emb[:8]]
-        for emb in t.to_pydict()["embedding"]
-    ]
-    K, D, T = 8, 8, 3
-    cents = [[(((kc * 3 + j * 5) % 8) - 4) * 100 for j in range(D)] for kc in range(K)]
-
-    def assign(x):
-        ds = [sum((x[j] - c[j]) ** 2 for j in range(D)) for c in cents]
-        m = min(ds)
-        return ds.index(m), m
-
-    def tdiv(a, b):
-        q = abs(a) // b
-        return q if a >= 0 else -q
-
-    for _ in range(T):
-        sums = defaultdict(lambda: [0] * (D + 1))
-        for x in X:
-            cl, _ = assign(x)
-            sums[cl][D] += 1
-            for j in range(D):
-                sums[cl][j] += x[j]
-        cents = [
-            [tdiv(sums[kc][j], sums[kc][D]) for j in range(D)]
-            if kc in sums
-            else cents[kc]
-            for kc in range(K)
-        ]
-    stats = defaultdict(lambda: [0, 0])
-    for x in X:
-        cl, d = assign(x)
-        stats[cl][0] += 1
-        stats[cl][1] += d
-    got = {
-        r["centroid_id"]: (r["n_vectors"], r["inertia"], r["centroid_sum"])
-        for r in rows(spark, "kmeans_portable_lloyd")
-    }
-    want = {cl: (n, inert, sum(cents[cl])) for cl, (n, inert) in stats.items()}
-    assert got == want
 
 
 _WORD = re.compile(r"^[a-z]+$")

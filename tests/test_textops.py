@@ -1,5 +1,5 @@
 """Unit tests for the training-data operators: MinHash-LSH, SimHash,
-similarity search, language-ID, quality features, fingerprints —
+language-ID, quality features, fingerprints —
 on crafted corpora where ground truth is known."""
 
 from __future__ import annotations
@@ -15,13 +15,6 @@ from dynaledger_spark.operators.dedup import (
     near_duplicates,
     simhash_fingerprints,
     simhash_near_duplicates,
-)
-from dynaledger_spark.operators.similarity import (
-    bucketize,
-    cosine_topk,
-    lsh_topk,
-    norm_stats,
-    random_hyperplanes,
 )
 
 BASE = (
@@ -115,73 +108,6 @@ def test_near_dup_collapse_output_identical(spark):
     assert not any(a < 50 and b < 50 for a, b, _ in capped)  # group dropped
     uncapped = canon(near_duplicates(docs, threshold=0.5, max_bucket_size=1000))
     assert sum(1 for a, b, j in uncapped if a < 50 and b < 50 and j == 1.0) == 1225
-
-
-def test_cosine_topk_exact(spark):
-    rows = [
-        (0, [1.0, 0.0, 0.0]),
-        (1, [0.9, 0.1, 0.0]),   # closest to query
-        (2, [0.0, 1.0, 0.0]),   # orthogonal
-        (3, [-1.0, 0.0, 0.0]),  # opposite
-        (4, [0.5, 0.5, 0.0]),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = cosine_topk(emb.filter("vec_id != 0"), [1.0, 0.0, 0.0], k=3).collect()
-    assert [r.vec_id for r in got] == [1, 4, 2]
-    assert got[0].cos_sim == pytest.approx(0.9938, abs=1e-3)
-
-
-def test_lsh_topk_recall(spark, sf_dir):
-    from dynaledger_spark.catalog import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    qvec = list(emb.filter("vec_id = 0").head()["embedding"])
-    corpus_wo_q = emb.filter("vec_id != 0")
-    exact = [r.vec_id for r in cosine_topk(corpus_wo_q, qvec, k=10).collect()]
-    approx = [
-        r.vec_id
-        for r in lsh_topk(corpus_wo_q, qvec, k=10, n_planes=6, probe_depth=2).collect()
-    ]
-    # multiprobe sign-LSH, 6 planes, Hamming-2 probes (~1/3 of buckets):
-    # expect meaningful overlap with the exact top-10
-    assert len(set(exact) & set(approx)) >= 3
-
-
-def test_ivf_topk_recall(spark, sf_dir):
-    from dynaledger_spark.catalog import read_table
-    from dynaledger_spark.operators.similarity import ivf_topk
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    qvec = list(emb.filter("vec_id = 0").head()["embedding"])
-    corpus = emb.filter("vec_id != 0")
-    exact = [r.vec_id for r in cosine_topk(corpus, qvec, k=10).collect()]
-    # probing 8 of 16 cells must recall at least half the true top-10
-    approx = [
-        r.vec_id
-        for r in ivf_topk(corpus, qvec, k=10, n_centroids=16, n_probes=8).collect()
-    ]
-    assert len(set(exact) & set(approx)) >= 5
-
-
-def test_bucketize_is_deterministic(spark):
-    emb = spark.createDataFrame(
-        [(0, [1.0, 2.0, 3.0]), (1, [1.0, 2.0, 3.0]), (2, [-1.0, -2.0, -3.0])],
-        "vec_id long, embedding array<float>",
-    )
-    planes = random_hyperplanes(3, 4, seed=7)
-    got = {r.vec_id: r.bucket for r in bucketize(emb, planes).collect()}
-    assert got[0] == got[1]
-    assert got[0] != got[2]
-    assert 0 <= got[0] < 16
-
-
-def test_norm_stats(spark):
-    emb = spark.createDataFrame(
-        [(0, [3.0, 4.0]), (1, [0.0, 0.0])], "vec_id long, embedding array<float>"
-    )
-    got = {r.vec_id: r for r in norm_stats(emb).collect()}
-    assert got[0].l2_norm == 5.0 and got[0].dim == 2
-    assert got[1].l2_norm == 0.0
 
 
 def test_predict_lang(spark):
