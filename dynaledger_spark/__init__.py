@@ -10,8 +10,7 @@ place of the reference's row-at-a-time pandas loops.
 Capability map (see SURVEY.md §2 for the operator inventory):
   sources/    — TSV/ZIP ingestion, Parquet/JSON IO, lookup dims, scraping
   operators/  — fact builders, the per-quarter backfill stores, document
-                assembly, dedup (exact / MinHash-LSH / SimHash),
-                binary-column (image/audio) plumbing via mapInPandas
+                assembly, dedup (exact / MinHash-LSH / SimHash)
   functions/  — validation checks, text analysis, float sanitizing,
                 exact-decimal sums
   plans/      — the query registry behind __spark_entry__: lazy

@@ -158,17 +158,15 @@ class SecEngine:
 
     # -- GET table info (backend/main.py:85-101, S12)
     def table_info(self, names: list[str]) -> list[dict]:
-        out = []
-        for name in names:
-            df = self.tables[name]
-            out.append(
-                {
-                    "name": name,
-                    "columns": [
-                        {"name": f.name, "type": f.dataType.simpleString()}
-                        for f in df.schema.fields
-                    ],
-                    "sample_data": [r.asDict() for r in df.limit(3).collect()],
-                }
-            )
-        return out
+        return [describe_table(name, self.tables[name]) for name in names]
+
+
+def describe_table(name: str, df: DataFrame) -> dict:
+    """A table's name, column types and up to 3 sample rows."""
+    return {
+        "name": name,
+        "columns": [
+            {"name": f.name, "type": f.dataType.simpleString()} for f in df.schema.fields
+        ],
+        "sample_data": [r.asDict() for r in df.limit(3).collect()],
+    }

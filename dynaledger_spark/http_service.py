@@ -28,7 +28,9 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from dynaledger_spark.api import SecEngine, _quarter_number
+from pyspark.sql import functions as F
+
+from dynaledger_spark.api import SecEngine, _quarter_number, describe_table
 
 # data_source → raw-table-name templates for /get-table-info
 # (main.py:80-88). The reference suffixes physical table names per
@@ -36,11 +38,11 @@ from dynaledger_spark.api import SecEngine, _quarter_number
 # names are unsuffixed while fact/JSON tables keep the reference naming.
 _RAW_TABLES = ("sec_num", "sec_pre", "sec_sub", "sec_tag")
 _FACT_TABLES = ("BALANCE_SHEET", "INCOME_STATEMENT", "CASH_FLOW")
+_RAW_SOURCES = ("RAW", "Raw")
 
 
-def _table_names(data_source: str, year: int, quarter: str) -> list[str]:
-    tag = f"{year}Q{_quarter_number(quarter)}"
-    if data_source in ("RAW", "Raw"):
+def _table_names(data_source: str, tag: str) -> list[str]:
+    if data_source in _RAW_SOURCES:
         return list(_RAW_TABLES)
     if data_source == "JSON":
         return [f"sec_data_{tag}"]
@@ -54,6 +56,28 @@ class _ApiError(Exception):
         super().__init__(detail)
         self.status = status
         self.detail = detail
+
+
+def _table_info(engine: SecEngine, data_source: str, year: int, quarter: str) -> list[dict]:
+    """/get-table-info: each table of the quarter, or a 500 if it has none.
+
+    The RAW tables hold every quarter, so their sample rows come from
+    the asked quarter's source_file, which must hold rows."""
+    tag = f"{year}Q{_quarter_number(quarter)}"
+    names = _table_names(data_source, tag)
+    missing = [n for n in names if n not in engine.tables]
+    if missing:
+        raise _ApiError(500, f"Failed to fetch table info: {missing}")
+    if data_source not in _RAW_SOURCES:
+        return engine.table_info(names)
+    info = [
+        describe_table(n, engine.tables[n].filter(F.col("source_file") == tag))
+        for n in names
+    ]
+    empty = [t["name"] for t in info if not t["sample_data"]]
+    if empty:
+        raise _ApiError(500, f"Failed to fetch table info: {empty}")
+    return info
 
 
 def _make_handler(engine: SecEngine):
@@ -114,13 +138,7 @@ def _make_handler(engine: SecEngine):
             if route == "/check-availability":
                 return engine.check_availability(int(p["year"]), p["quarter"])
             if route == "/get-table-info":
-                names = _table_names(
-                    p["data_source"], int(p["year"]), p["quarter"]
-                )
-                missing = [n for n in names if n not in engine.tables]
-                if missing:
-                    raise _ApiError(500, f"Failed to fetch table info: {missing}")
-                return engine.table_info(names)
+                return _table_info(engine, p["data_source"], int(p["year"]), p["quarter"])
             if route == "/get-financial-data":
                 return engine.get_financial_data(
                     int(p["year"]), p["quarter"], p["data_type"], p["source"]

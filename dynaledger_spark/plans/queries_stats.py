@@ -3221,8 +3221,8 @@ def fellegi_sunter_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fellegi-Sunter probabilistic record linkage (Fellegi & Sunter
     1969 JASA; the Splink/record-linkage standard): A = customers, B =
     a deterministically dirtied copy (every 3rd name typo'd, every 5th
-    nation shifted, every 7th balance bucket bumped — the corruption
-    both engines replay, as in fastss_edit1_pairs); candidate pairs
+    nation shifted, every 7th balance bucket bumped — a corruption
+    both engines replay); candidate pairs
     come from BLOCKING on (mktsegment, balance bucket); each pair's
     agreement vector on (name, nation, balance-bucket) is scored with
     fixed (m, u) log-weights ln(m/u) / ln((1-m)/(1-u)) embedded as

@@ -750,11 +750,11 @@ def compression_ratio_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     repetitive/templated text compresses far below natural prose, so
     compressed_len/raw_len separates boilerplate from content. zlib runs
     in Python — the legitimate non-JVM case — as an Arrow-batched
-    mapInPandas with an explicit schema (the multimodal decode pattern,
-    operators/multimodal.py): per-batch pandas work, no row-at-a-time
-    pickling, cost linear in corpus bytes and embarrassingly parallel.
-    Level is pinned (6) so results are reproducible across runs and
-    platforms (zlib output is deterministic for a given level/strategy).
+    mapInPandas with an explicit schema: per-batch pandas work, no
+    row-at-a-time pickling, cost linear in corpus bytes and
+    embarrassingly parallel. Level is pinned (6) so results are
+    reproducible across runs and platforms (zlib output is
+    deterministic for a given level/strategy).
     """
     import pandas as pd
 

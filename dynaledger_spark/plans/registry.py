@@ -60,7 +60,6 @@ def load_all() -> dict[str, QuerySpec]:
         queries_core,
         queries_feature,
         queries_graph,
-        queries_multimodal,
         queries_pipeline,
         queries_sampling,
         queries_sql_ext,
@@ -69,7 +68,6 @@ def load_all() -> dict[str, QuerySpec]:
         queries_text,
         queries_timeseries,
         queries_mlprep,
-        queries_lm,
         queries_featurestore,
         queries_behavior,
         queries_finance,
@@ -77,7 +75,6 @@ def load_all() -> dict[str, QuerySpec]:
         queries_retrieval,
         queries_incremental,
         queries_tpch,
-        queries_sparse,
         queries_experiment,
     )
 

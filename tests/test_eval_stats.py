@@ -1,72 +1,16 @@
-"""Python mirrors for the corpus- and sequence-statistics queries
-(PMI collocations, Markov sequence scoring) and the incremental-MinHash
-subset property. The mirrors reproduce the repo's float discipline
-(sequential folds, round-at-12 ln terms), so comparisons are exact, not
-approximate."""
+"""Python mirrors for the sequence-statistics query (Markov sequence
+scoring) and the incremental-MinHash subset property. The mirrors
+reproduce the repo's float discipline (sequential folds, round-at-12 ln
+terms), so comparisons are exact, not approximate."""
 
 from __future__ import annotations
 
 import math
 from collections import Counter, defaultdict
 
-from hypothesis import HealthCheck, given, settings
-from hypothesis import strategies as st
-
-from pyspark.sql import Row
-
 from dynaledger_spark.plans.registry import load_all
 
 REGISTRY = load_all()
-
-PROP = settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-
-
-# ---------------------------------------------------------------------------
-# PMI ≡ python brute force
-# ---------------------------------------------------------------------------
-@PROP
-@given(
-    docs=st.lists(
-        st.lists(
-            st.sampled_from([f"w{i}" for i in range(6)]), min_size=1, max_size=30
-        ).map(" ".join),
-        min_size=1,
-        max_size=10,
-    )
-)
-def test_pmi_matches_bruteforce(spark, tmp_path_factory, docs):
-    d = tmp_path_factory.mktemp("pmi_docs")
-    spark.createDataFrame(
-        [
-            Row(doc_id=i, text=t, lang="en", source="src0", n_chars=len(t))
-            for i, t in enumerate(docs)
-        ]
-    ).write.mode("overwrite").parquet(str(d / "documents.parquet"))
-
-    got = [
-        (r["w1"], r["w2"], r["n12"], r["pmi"])
-        for r in REGISTRY["pmi_collocations"].build(spark, str(d)).collect()
-    ]
-
-    bi = []
-    for t in docs:
-        toks = t.split(" ")
-        bi += list(zip(toks, toks[1:]))
-    joint = Counter(bi)
-    firsts = Counter(w1 for w1, _ in bi)
-    seconds = Counter(w2 for _, w2 in bi)
-    T = len(bi)
-    want = [
-        (w1, w2, n, round(math.log(n * T / (firsts[w1] * seconds[w2])), 12))
-        for (w1, w2), n in joint.items()
-        if n >= 5
-    ]
-    want.sort(key=lambda r: (-r[3], r[0], r[1]))
-    assert got == want[:30]
 
 
 # ---------------------------------------------------------------------------

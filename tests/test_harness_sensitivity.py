@@ -9,8 +9,8 @@ every family, with two mutation classes:
 * PLAN mutations — monkeypatch a module constant the Spark builder reads
   at call time while the oracle SQL (baked at import with the original
   value) stays fixed. This is a REAL semantic perturbation of the plan:
-  an off-by-factor sketch size, a moved similarity threshold, a dropped
-  propagation round, a different dropout modulus. The gate must fail.
+  an off-by-factor sketch size, a moved linkage threshold, a dropped
+  propagation round, a smaller feedback set. The gate must fail.
 * RESULT mutations — perturb the built DataFrame in ways that mimic
   classic plan bugs: a lost boundary row (dropped/flipped filter), a
   duplicated row (broken dedup), a single-ulp float drift (wrong
@@ -34,11 +34,9 @@ from dynaledger_spark.plans import (
     queries_approx,
     queries_experiment,
     queries_graph,
-    queries_lm,
     queries_mlprep,
     queries_quality,
     queries_retrieval,
-    queries_sparse,
     queries_stats,
     queries_text,
 )
@@ -77,8 +75,6 @@ PLAN_MUTATIONS = [
     ("gk_portable_quantiles", queries_approx, "_GK_EPS_DEN", 16),
     ("lpa_communities_fixed", queries_graph, "_LPA_ROUNDS", 1),
     ("fellegi_sunter_linkage", queries_stats, "_FS_LINK_T", 0.0),
-    ("token_dropout_augment", queries_lm, "_DROP_MOD", 3),
-    ("tfidf_cosine_pairs", queries_sparse, "_TFIDF_MIN_COS", 0.6),
     ("link_prediction_common_neighbors", queries_mlprep, "_LP_DEG_CAP", 2),
     ("char_entropy_quality", queries_text, "_ENTROPY_KEEP", 2.0),
     ("quality_ensemble_gate", queries_quality, "_ENSEMBLE_MIN_VOTES", 2),

@@ -163,6 +163,13 @@ def test_table_info_raw(service):
     sub = next(t for t in out if t["name"] == "sec_sub")
     assert {"name", "type"} <= set(sub["columns"][0])
     assert len(sub["sample_data"]) == 3
+    # RAW tables hold every quarter: the samples come from the asked one,
+    # and a quarter without rows fails like an absent fact/JSON table
+    assert {r["source_file"] for t in out for r in t["sample_data"]} == {Q}
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _get(svc, "/get-table-info?data_source=RAW&year=2024&quarter=Q4")
+    assert e.value.code == 500
+    assert json.loads(e.value.read())["detail"].startswith("Failed to fetch table info")
 
 
 def test_invalid_source_is_400(service):

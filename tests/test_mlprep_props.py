@@ -392,34 +392,6 @@ def test_rfm_partitions_all_customers(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# token dropout ≡ python md5-nibble mirror (reproducibility contract)
-# ---------------------------------------------------------------------------
-def test_token_dropout_matches_python(spark, tmp_path_factory):
-    texts = ["the quick brown fox jumps over the lazy dog", "a b", ""]
-    d = _write_docs(
-        spark, tmp_path_factory, [_doc(i, t) for i, t in enumerate(texts)]
-    )
-    got = {
-        r["doc_id"]: (r["n_orig"], r["n_kept"], r["aug_md5"])
-        for r in REGISTRY["token_dropout_augment"].build(spark, d).collect()
-    }
-    for i, t in enumerate(texts):
-        toks = t.split(" ")
-        kept = [
-            tok
-            for pos, tok in enumerate(toks, start=1)
-            if int(hashlib.md5(f"{i}:{pos}:{tok}".encode()).hexdigest()[0], 16)
-            % 10
-            != 0
-        ]
-        assert got[i] == (
-            len(toks),
-            len(kept),
-            hashlib.md5(" ".join(kept).encode()).hexdigest(),
-        ), (i, t)
-
-
-# ---------------------------------------------------------------------------
 # prefix-filter join ≡ brute-force Jaccard (full-recall theorem check)
 # ---------------------------------------------------------------------------
 @PROP

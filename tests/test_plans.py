@@ -54,75 +54,75 @@ def test_no_row_at_a_time_python_anywhere(plans):
 
 
 def test_no_cartesian_products(plans):
+    allowed = (
+        "tfidf_top_terms",  # 1-row broadcast of the corpus count
+        "mixture_rebalance_sample",  # 1-row broadcast of corpus totals
+        "copurchase_triangles",  # 1-row × 1-row scalar-metric combine
+        "target_encode_priority",  # 1-row broadcast of the global prior
+        "quantile_binning_migration",  # 1-row broadcast of decile bounds
+        "sliding_7d_active_users",  # 1-row broadcast of the date bounds
+        "rfm_segmentation",  # 1-row broadcast of the recency anchor date
+        "acf_daily_revenue",  # 1-row stats/denominator + 7-row lag broadcast
+        "basket_association_rules",  # 1-row broadcast of the basket total
+        "cms_heavy_hitters",  # 4-row broadcast of the sketch seeds
+        "mad_outlier_days",  # 1-row broadcasts of median and MAD
+        "minhash_portable_incremental",  # 1-row broadcast of the id cutoff
+        "km_churn_curve",  # 1-row broadcast of the censoring horizon
+        "hll_portable_estimate",  # 1-row broadcast of the exact count
+        "priority_sample_subset_sum",  # 1-row broadcast of tau (the k+1-th priority)
+        "shapley_channel_attribution",  # lattice-sized (16-row) containment joins + 1-row n broadcast
+        "sequential_pattern_support",  # 1-row broadcast of the user total
+        "cusum_changepoint",  # 1-row broadcasts of totals and the peak
+        "benford_first_digit",  # 1-row broadcast of the grand total
+        "temperature_resample_sources",  # 1-row broadcasts of corpus totals
+        "decay_weighted_engagement",  # 1-row broadcast of the time anchor
+        "mann_whitney_u_test",  # 1-row broadcast of the group sizes
+        "cuped_adjusted_ab",  # 1-row broadcast of the pooled moments
+        "bootstrap_mean_ci",  # 1-row broadcasts of the CI order statistics
+        "isotonic_calibration_deciles",  # 10-row minimax non-equi joins
+        "ab_power_analysis",  # 1-row × 1-row arm combine
+        "tpch_q1_pricing_summary",  # 1-row broadcast of the shipdate anchor
+        "ab_srm_check",  # 2-row broadcast of the split configs
+        "beta_binomial_shrinkage",  # 1-row broadcast of the MoM prior
+        "ar1_forecast",  # 1-row broadcasts of stats/denominator/last-day scalars
+        "rendezvous_hash_shard",  # 9-row broadcast of the shard ring
+        "shard_round_robin",  # ≤1024-row bucket-offset inequality self-join (grid-sized)
+        "rm3_query_expansion",  # 1-row corpus-stats + expansion-weight-sum broadcasts
+        "sequential_test_readout",  # 1-row min-date broadcast onto the days-sized rollup
+        "psm_stratified_att",  # 1-row boundary + 1-row ATT broadcasts
+        "ucb1_allocation",  # 1-row total-plays + 1-row best-arm broadcasts
+        "forecast_backtest_mase",  # 1-row naive-MAE scale broadcast onto 3 method rows
+        "theil_sen_daily_trend",  # calendar-bounded |days|x|days| pair loop
+        "schema_drift_report",  # 1-row × 1-row half-stats combine
+        "freshness_lag_by_type",  # 1-row broadcast of the corpus watermark
+        "fk_orphan_scorecard",  # six 1-row × 1-row edge-metric combines
+        "bm25_topk_docs",  # 1-row broadcasts of df counts and avgdl
+        "psi_feature_drift",  # 10-row bin-grid broadcast fan-out
+        "join_key_skew_report",  # 1-row top-key/stats scalar combines
+        "t_closeness_audit",  # 1-row global-total broadcast
+        "ks_two_sample_values",  # 1-row sample-size broadcasts
+        "ab_conversion_ztest",  # 1-row × 1-row arm-stats combine
+        "ar_aging_buckets",  # 1-row broadcast of the as-of ledger date
+        "tpch_q22_global_sales_opportunity",  # 1-row broadcast of the avg balance
+        "tpch_q11_important_stock",  # 1-row broadcast of the global total
+        "dsir_importance_weights",  # 1-row broadcast of the corpus totals
+        "unimax_allocation",  # 1-row broadcasts of budget and waterline
+        "fisher_lda_quality",  # 1-row broadcasts of the fitted model
+        "hill_tail_index",  # 1-row broadcast of the tail threshold over k+1 rows
+        "lsh_recall_eval",  # 1-row truth/found/hit metric combines
+        "kmv_theta_sketch_pairs",  # |types|^2-row pair table fanned over k-row sketches
+    )
     for name, plan in plans.items():
         assert "CartesianProduct" not in plan, f"{name} cross-joins"
-        assert "BroadcastNestedLoopJoin" not in plan or name in (
-            "tfidf_top_terms",  # 1-row broadcast of the corpus count
-            "mixture_rebalance_sample",  # 1-row broadcast of corpus totals
-            "copurchase_triangles",  # 1-row × 1-row scalar-metric combine
-            "target_encode_priority",  # 1-row broadcast of the global prior
-            "quantile_binning_migration",  # 1-row broadcast of decile bounds
-            "sliding_7d_active_users",  # 1-row broadcast of the date bounds
-            "rfm_segmentation",  # 1-row broadcast of the recency anchor date
-            "unigram_logprob_quality",  # 1-row broadcast of the corpus token total
-            "acf_daily_revenue",  # 1-row stats/denominator + 7-row lag broadcast
-            "basket_association_rules",  # 1-row broadcast of the basket total
-            "cms_heavy_hitters",  # 4-row broadcast of the sketch seeds
-            "mad_outlier_days",  # 1-row broadcasts of median and MAD
-            "pmi_collocations",  # 1-row broadcast of the bigram total
-            "minhash_portable_incremental",  # 1-row broadcast of the id cutoff
-            "km_churn_curve",  # 1-row broadcast of the censoring horizon
-            "hll_portable_estimate",  # 1-row broadcast of the exact count
-            "priority_sample_subset_sum",  # 1-row broadcast of tau (the k+1-th priority)
-            "shapley_channel_attribution",  # lattice-sized (16-row) containment joins + 1-row n broadcast
-            "sequential_pattern_support",  # 1-row broadcast of the user total
-            "cusum_changepoint",  # 1-row broadcasts of totals and the peak
-            "benford_first_digit",  # 1-row broadcast of the grand total
-            "temperature_resample_sources",  # 1-row broadcasts of corpus totals
-            "decay_weighted_engagement",  # 1-row broadcast of the time anchor
-            "mann_whitney_u_test",  # 1-row broadcast of the group sizes
-            "cuped_adjusted_ab",  # 1-row broadcast of the pooled moments
-            "bootstrap_mean_ci",  # 1-row broadcasts of the CI order statistics
-            "isotonic_calibration_deciles",  # 10-row minimax non-equi joins
-            "ab_power_analysis",  # 1-row × 1-row arm combine
-            "bigram_interpolated_logprob",  # 1-row broadcast of the token total
-            "tpch_q1_pricing_summary",  # 1-row broadcast of the shipdate anchor
-            "ab_srm_check",  # 2-row broadcast of the split configs
-            "beta_binomial_shrinkage",  # 1-row broadcast of the MoM prior
-            "ar1_forecast",  # 1-row broadcasts of stats/denominator/last-day scalars
-            "rendezvous_hash_shard",  # 9-row broadcast of the shard ring
-            "shard_round_robin",  # ≤1024-row bucket-offset inequality self-join (grid-sized)
-            "rm3_query_expansion",  # 1-row corpus-stats + expansion-weight-sum broadcasts
-            "sequential_test_readout",  # 1-row min-date broadcast onto the days-sized rollup
-            "psm_stratified_att",  # 1-row boundary + 1-row ATT broadcasts
-            "ucb1_allocation",  # 1-row total-plays + 1-row best-arm broadcasts
-            "forecast_backtest_mase",  # 1-row naive-MAE scale broadcast onto 3 method rows
-            "theil_sen_daily_trend",  # calendar-bounded |days|x|days| pair loop
-            "schema_drift_report",  # 1-row × 1-row half-stats combine
-            "freshness_lag_by_type",  # 1-row broadcast of the corpus watermark
-            "fk_orphan_scorecard",  # six 1-row × 1-row edge-metric combines
-            "bm25_topk_docs",  # 1-row broadcasts of df counts and avgdl
-            "psi_feature_drift",  # 10-row bin-grid broadcast fan-out
-            "join_key_skew_report",  # 1-row top-key/stats scalar combines
-            "t_closeness_audit",  # 1-row global-total broadcast
-            "ks_two_sample_values",  # 1-row sample-size broadcasts
-            "ab_conversion_ztest",  # 1-row × 1-row arm-stats combine
-            "ar_aging_buckets",  # 1-row broadcast of the as-of ledger date
-            "tpch_q15_top_supplier",  # 1-row broadcast of the max revenue
-            "tpch_q22_global_sales_opportunity",  # 1-row broadcast of the avg balance
-            "tpch_q11_important_stock",  # 1-row broadcast of the global total
-            "dsir_importance_weights",  # 1-row broadcast of the corpus totals
-            "unimax_allocation",  # 1-row broadcasts of budget and waterline
-            "fisher_lda_quality",  # 1-row broadcasts of the fitted model
-            "spearman_quality_scores",  # unigram scorer's 1-row token-total broadcast
-            "hill_tail_index",  # 1-row broadcast of the tail threshold over k+1 rows
-            "bits_per_byte_by_source",  # 1-row broadcast of the corpus token total
-            "lsh_recall_eval",  # 1-row truth/found/hit metric combines
-            "doremi_domain_weights",  # 1-row broadcasts of corpus loss/normalizer
-            "ccnet_perplexity_buckets",  # unigram scorer's 1-row token-total broadcast
-            "tfidf_cosine_pairs",  # 1-row broadcast of the corpus doc count N
-            "kmv_theta_sketch_pairs",  # |types|^2-row pair table fanned over k-row sketches
-        ), f"{name} nested-loop joins"
+        assert "BroadcastNestedLoopJoin" not in plan or name in allowed, (
+            f"{name} nested-loop joins"
+        )
+    # A stale allowlist entry would quietly widen the lint's blind spot.
+    stale = [
+        n for n in allowed
+        if n not in plans or "BroadcastNestedLoopJoin" not in plans[n]
+    ]
+    assert not stale, f"allowlisted names with no nested-loop join: {stale}"
 
 
 def test_fact_build_plan_shape(plans):
@@ -494,19 +494,6 @@ def test_embedding_covariance_broadcasts_means(plans):
     assert plans["embedding_covariance"].count("BroadcastExchange") >= 2
 
 
-def test_token_dropout_shuffle_free(plans):
-    """token_dropout_augment is pure per-row array work — zero exchanges,
-    scales with corpus bytes like the chunking operators."""
-    assert "Exchange" not in plans["token_dropout_augment"]
-
-
-def test_unigram_logprob_broadcasts_vocab(plans):
-    """The vocabulary (and its 1-row total) must broadcast onto the
-    doc_id-clustered corpus — the corpus never re-shuffles for the LM
-    lookup."""
-    assert plans["unigram_logprob_quality"].count("BroadcastExchange") >= 2
-
-
 # Queries allowed an UNPARTITIONED window (single-partition global sort
 # in WindowExec). Two legitimate classes only:
 #   bounded  — the window input is a post-aggregation series bounded by
@@ -705,7 +692,7 @@ def test_dpp_reaches_fact_scan(spark, sf_dir):
 def test_unpersist_discipline(spark, sf_dir):
     """VERDICT r9 item 3: an embedding application that calls registry
     builds directly (no harness clearCache) must not accumulate cached
-    blocks for the life of its session.  Build + fully materialize 20+
+    blocks for the life of its session.  Build + fully materialize the
     formerly persisting queries, drop the results, and assert the
     SparkContext holds zero persistent RDDs — builders do not persist,
     and their localCheckpoint blocks drain once the results are
@@ -729,15 +716,13 @@ def test_unpersist_discipline(spark, sf_dir):
     base_ids = persistent_ids()
     persisters = [
         "copurchase_triangles", "anomaly_dow_hour_baseline",
-        "basket_association_rules", "bigram_interpolated_logprob",
-        "cms_heavy_hitters", "cusum_changepoint", "item_cf_cosine",
+        "basket_association_rules", "cms_heavy_hitters",
+        "cusum_changepoint", "item_cf_cosine",
         "jaccard_prefix_filter_join", "mad_outlier_days",
-        "markov_sequence_score", "pmi_collocations",
-        "rolling_purchase_features", "theil_sen_daily_trend",
-        "triplet_sample_contrastive", "pagerank_portable_fixedpoint",
-        "fastss_edit1_pairs", "kmv_theta_sketch_pairs",
-        "lpa_communities_fixed", "tfidf_cosine_pairs",
-        "sequential_pattern_support",
+        "markov_sequence_score", "rolling_purchase_features",
+        "theil_sen_daily_trend", "triplet_sample_contrastive",
+        "pagerank_portable_fixedpoint", "kmv_theta_sketch_pairs",
+        "lpa_communities_fixed", "sequential_pattern_support",
     ]
     for name in persisters:
         df = REGISTRY[name].build(spark, sf_dir)
@@ -750,8 +735,8 @@ def test_unpersist_discipline(spark, sf_dir):
     cm = spark._jsparkSession.sharedState().cacheManager()
     assert cm.isEmpty(), (
         "CacheManager still holds cached plans after dropping the "
-        "results of 22 builds — a builder persists and never "
-        "releases it"
+        f"results of {len(persisters)} builds — a builder persists "
+        "and never releases it"
     )
     # localCheckpoint residue (pagerank/LPA/k-core iteration rounds) is
     # ContextCleaner-owned: persistentRdds holds them WEAKLY, so once

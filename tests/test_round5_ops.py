@@ -215,17 +215,3 @@ def test_temperature_resampling_flattens_mixture(spark, sf_dir):
     old_ratio = max(old_shares.values()) / min(old_shares.values())
     new_ratio = max(new_shares.values()) / min(new_shares.values())
     assert new_ratio <= old_ratio + 1e-9
-
-
-def test_bigram_logprob_negative_and_covers_docs(spark, sf_dir):
-    from dynaledger_spark.plans.queries_pipeline import _docs_by_id
-
-    n_multi = (
-        _docs_by_id(spark, sf_dir)
-        .filter("size(split(text, ' ')) >= 2")
-        .count()
-    )
-    out = rows(spark, sf_dir, "bigram_interpolated_logprob")
-    assert len(out) == n_multi
-    for r in out:
-        assert r.avg_logprob < 0

@@ -205,62 +205,6 @@ def test_fertility_vs_python(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-7 batch 4: DoReMi domain weights, distinct-n diversity
-# ---------------------------------------------------------------------------
-def test_doremi_vs_python(spark, sf_dir):
-    """Per-source proxy loss, excess, and softmax weight must match a
-    python recomputation of the unigram-LM surprisal pipeline."""
-    from dynaledger_spark.plans.queries_lm import _DOREMI_ETA
-
-    d = _documents(sf_dir)
-    vocab, per_src = Counter(), defaultdict(Counter)
-    for s, text in zip(d["source"], d["text"]):
-        ws = text.split(" ")
-        vocab.update(ws)
-        per_src[s].update(ws)
-    t = sum(vocab.values())
-    loss = {
-        s: -sum(c[w] * math.log(vocab[w] / t) for w in c) / sum(c.values())
-        for s, c in per_src.items()
-    }
-    ref = -sum(n * math.log(n / t) for n in vocab.values()) / t
-    es = {s: math.exp(_DOREMI_ETA * max(loss[s] - ref, 0.0)) for s in loss}
-    tot = sum(es.values())
-    got = {r.source: r for r in rows(spark, sf_dir, "doremi_domain_weights")}
-    assert set(got) == set(loss)
-    for s in loss:
-        assert got[s].n_tokens == sum(per_src[s].values())
-        assert math.isclose(got[s].proxy_loss, loss[s], rel_tol=1e-9)
-        assert math.isclose(got[s].excess, max(loss[s] - ref, 0.0), abs_tol=1e-9)
-        assert math.isclose(got[s].weight, es[s] / tot, rel_tol=1e-7)
-    # weights are a distribution and upweight only above-reference sources
-    assert math.isclose(sum(r.weight for r in got.values()), 1.0, rel_tol=1e-9)
-    base = min(r.weight for r in got.values())
-    for s in loss:
-        assert (got[s].excess > 0) == (got[s].weight > base + 1e-15)
-
-
-def test_distinct_ngram_vs_python(spark, sf_dir):
-    """distinct-1/2 counts must match python set/list recomputation."""
-    d = _documents(sf_dir)
-    uni, big = defaultdict(list), defaultdict(list)
-    for s, text in zip(d["source"], d["text"]):
-        ws = text.split(" ")
-        uni[s].extend(ws)
-        big[s].extend(f"{a} {b}" for a, b in zip(ws, ws[1:]))
-    got = {r.source: r for r in rows(spark, sf_dir, "distinct_ngram_diversity")}
-    assert set(got) == set(uni)
-    for s in uni:
-        r = got[s]
-        assert (r.n_unigrams, r.d_unigrams) == (len(uni[s]), len(set(uni[s])))
-        assert (r.n_bigrams, r.d_bigrams) == (len(big[s]), len(set(big[s])))
-        assert math.isclose(r.distinct_1, len(set(uni[s])) / len(uni[s]), rel_tol=1e-12)
-        assert math.isclose(r.distinct_2, len(set(big[s])) / len(big[s]), rel_tol=1e-12)
-        # bigrams are strictly more diverse than unigrams on natural-ish text
-        assert r.distinct_2 > r.distinct_1
-
-
-# ---------------------------------------------------------------------------
 # Round-7 batch 5: winnowing fingerprints
 # ---------------------------------------------------------------------------
 def test_winnowing_vs_python(spark, sf_dir):
@@ -299,64 +243,8 @@ def test_winnowing_vs_python(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-7 batch 6: CCNet buckets, length-grouped batching
+# Round-7 batch 6: length-grouped batching
 # ---------------------------------------------------------------------------
-def test_ccnet_buckets_vs_python(spark, sf_dir):
-    """Bucket rollups must equal a python replay: unigram-LM doc scores
-    (ln at 12dp, sorted-fold, /tokens at 9dp) ntile'd into per-lang
-    tertiles ordered by (score desc, doc_id). Also checks the CCNet
-    invariants: 3 buckets per lang, head's worst >= middle's best."""
-    d = _documents(sf_dir)
-    words_total = 0
-    vocab = Counter()
-    doc_words = {}
-    for doc_id, text in zip(d["doc_id"], d["text"]):
-        ws = text.split(" ")
-        doc_words[doc_id] = ws
-        vocab.update(ws)
-        words_total += len(ws)
-    lang = dict(zip(d["doc_id"], d["lang"]))
-    scores = {}
-    for doc_id, ws in doc_words.items():
-        tf = Counter(ws)
-        terms = sorted(
-            cnt * round(math.log(vocab[w] / words_total), 12)
-            for w, cnt in tf.items()
-        )
-        s = 0.0
-        for t in terms:
-            s += t
-        scores[doc_id] = (round(s / len(ws), 9), len(ws))
-    per_lang = defaultdict(list)
-    for doc_id, (s, n) in scores.items():
-        per_lang[lang[doc_id]].append((-s, doc_id, n))
-    expect = {}
-    for lg, docs in per_lang.items():
-        docs.sort()
-        n = len(docs)
-        base, extra = divmod(n, 3)
-        sizes = [base + (1 if i < extra else 0) for i in range(3)]
-        pos = 0
-        for t, name in zip(range(3), ("head", "middle", "tail")):
-            chunk = docs[pos:pos + sizes[t]]
-            pos += sizes[t]
-            expect[(lg, name)] = (
-                len(chunk),
-                sum(c[2] for c in chunk),
-                -chunk[0][0],
-                -chunk[-1][0],
-            )
-    got = {
-        (r.lang, r.bucket): (r.n_docs, r.sum_tokens, r.best_logprob,
-                             r.worst_logprob)
-        for r in rows(spark, sf_dir, "ccnet_perplexity_buckets")
-    }
-    assert got == expect
-    for lg in per_lang:
-        assert got[(lg, "head")][3] >= got[(lg, "middle")][2]
-        assert got[(lg, "middle")][3] >= got[(lg, "tail")][2]
-
-
 def test_length_grouped_batching_vs_python(spark, sf_dir):
     """Per-shard padded-token bills must equal a python replay of both
     batching orders, and length-grouping must never pad MORE than
@@ -485,50 +373,8 @@ def test_filter_kappa_vs_python(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-7 batch 8: Spearman, Hill tail index, stratified k-fold
+# Round-7 batch 8: Hill tail index, stratified k-fold
 # ---------------------------------------------------------------------------
-def test_spearman_vs_scipy_style_python(spark, sf_dir):
-    """Per-source rho must equal a python replay (unigram-LM score +
-    TTR, unique ranks by (score, doc_id), closed-form Pearson over
-    ranks) and must live in [-1, 1]."""
-    d = _documents(sf_dir)
-    vocab = Counter()
-    total = 0
-    for text in d["text"]:
-        ws = text.split(" ")
-        vocab.update(ws)
-        total += len(ws)
-    per_source = defaultdict(list)
-    for doc_id, text, source in zip(d["doc_id"], d["text"], d["source"]):
-        ws = text.split(" ")
-        tf = Counter(ws)
-        terms = sorted(c * round(math.log(vocab[w] / total), 12)
-                       for w, c in tf.items())
-        s = 0.0
-        for t in terms:
-            s += t
-        lp = round(s / len(ws), 9)
-        ttr = len(set(ws)) / len(ws)
-        per_source[source].append((doc_id, lp, ttr))
-    got = {r.source: (r.n_docs, r.spearman_rho)
-           for r in rows(spark, sf_dir, "spearman_quality_scores")}
-    for source, docs in per_source.items():
-        n = len(docs)
-        ra = {doc: i + 1 for i, (doc, _, _) in enumerate(
-            sorted(docs, key=lambda x: (x[1], x[0])))}
-        rb = {doc: i + 1 for i, (doc, _, _) in enumerate(
-            sorted(docs, key=lambda x: (x[2], x[0])))}
-        sa = sum(ra.values()); sb = sum(rb.values())
-        saa = sum(v * v for v in ra.values())
-        sbb = sum(v * v for v in rb.values())
-        sab = sum(ra[doc] * rb[doc] for doc, _, _ in docs)
-        rho = round((n * sab - sa * sb)
-                    / math.sqrt((n * saa - sa * sa) * (n * sbb - sb * sb)), 9)
-        assert got[source][0] == n
-        assert math.isclose(got[source][1], rho, rel_tol=1e-12)
-        assert -1.0 <= got[source][1] <= 1.0
-
-
 def test_hill_vs_python(spark, sf_dir):
     """gamma/alpha must equal a python replay of the Hill estimator
     over the top-(k+1) doc-length order statistics."""
@@ -602,37 +448,6 @@ def test_ensemble_gate_vs_python(spark, sf_dir):
         assert (r.n_docs, r.n_pass, r.tokens_in, r.tokens_kept) == (n, np_, ti, tk)
         assert math.isclose(r.pass_rate, round(np_ / n, 9), rel_tol=1e-12)
         assert math.isclose(r.token_yield, round(tk / ti, 9), rel_tol=1e-12)
-
-
-def test_bits_per_byte_vs_python(spark, sf_dir):
-    """Per-source BPB must equal a python replay (nats from the unigram
-    LM with 12dp ln terms and sorted folds, divided by pinned-ln2 *
-    UTF-8 bytes), and must be positive."""
-    d = _documents(sf_dir)
-    vocab = Counter()
-    total = 0
-    for text in d["text"]:
-        ws = text.split(" ")
-        vocab.update(ws)
-        total += len(ws)
-    per_source = defaultdict(lambda: [Counter(), 0])
-    for text, source in zip(d["text"], d["source"]):
-        per_source[source][0].update(text.split(" "))
-        per_source[source][1] += len(text.encode("utf-8"))
-    LN2 = 0.6931471805599453
-    for r in rows(spark, sf_dir, "bits_per_byte_by_source"):
-        cnts, n_bytes = per_source[r.source]
-        terms = sorted(c * round(math.log(vocab[w] / total), 12)
-                       for w, c in cnts.items())
-        s = 0.0
-        for t in terms:
-            s += t
-        nats = round(-s, 9)
-        assert r.n_tokens == sum(cnts.values())
-        assert r.n_bytes == n_bytes
-        assert math.isclose(r.bits_per_byte, round(nats / (LN2 * n_bytes), 9),
-                            rel_tol=1e-12)
-        assert r.bits_per_byte > 0
 
 
 # ---------------------------------------------------------------------------
@@ -842,32 +657,3 @@ def test_near_dup_split_leakage_vs_python(spark, sf_dir):
         got[(r.split_lo, r.split_hi)] = r.n_pairs
         assert r.is_leak == (0 if r.split_lo == r.split_hi else 1)
     assert got == dict(expect)
-
-
-def test_ngram_novelty_vs_python(spark, sf_dir):
-    """Instance and distinct novelty must equal a python replay of the
-    3-gram screen over the hash splits; novelty must be a proper
-    fraction and distinct rate >= instance rate is NOT implied, but
-    both must be in [0, 1]."""
-    d = _documents(sf_dir)
-    train, val = set(), []
-    for doc_id, text in zip(d["doc_id"], d["text"]):
-        ws = text.split(" ")
-        gs = [" ".join(ws[i:i + 3]) for i in range(max(len(ws) - 3, 0) + 1)] \
-            if len(ws) >= 3 else []
-        sp = _split_py(doc_id)
-        if sp == "train":
-            train.update(gs)
-        elif sp == "val":
-            val.extend(gs)
-    n_novel = sum(1 for g in val if g not in train)
-    vd = set(val)
-    nd = {g for g in vd if g not in train}
-    (r,) = rows(spark, sf_dir, "ngram_novelty_rate")
-    assert (r.n_val_grams, r.n_novel) == (len(val), n_novel)
-    assert (r.n_val_distinct, r.n_novel_distinct) == (len(vd), len(nd))
-    assert math.isclose(r.novelty_rate, round(n_novel / len(val), 9),
-                        rel_tol=1e-12)
-    assert math.isclose(r.distinct_novelty_rate, round(len(nd) / len(vd), 9),
-                        rel_tol=1e-12)
-    assert 0.0 <= r.novelty_rate <= 1.0 and 0.0 <= r.distinct_novelty_rate <= 1.0

@@ -28,8 +28,6 @@ print(json.dumps(sorted(k for k in sys.modules if k.startswith("dynaledger_spark
 
 _REGISTRY_ONLY = {
     "dynaledger_spark.operators.dedup",
-    "dynaledger_spark.operators.bpe",
-    "dynaledger_spark.operators.multimodal",
     "dynaledger_spark.operators.graph",
     "dynaledger_spark.operators.temporal",
     "dynaledger_spark.operators.scale",
