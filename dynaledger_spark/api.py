@@ -6,19 +6,22 @@ the pass-through) executed by Catalyst in-process. Per-quarter table-name
 suffixes (`sec_sub_{Y}Q{q}`) become a `source_file` filter on partitioned
 tables — same pruning, no name templating (SURVEY §4).
 
-Statement pulls are prepared once. The reference's dashboard re-sends
-the same statement SQL, which Snowflake answers from its result cache;
-here `get_financial_data` keeps the sanitized DataFrame of each
-`(year, quarter, data_type, source)` it has served and re-collects it
-while every entry of `SecEngine.tables` is still the identical object it
-was when the pull was prepared. Re-running one DataFrame reuses
-Catalyst's analyzed, optimized and physical plan and AQE's final plan
-with its materialized broadcast and shuffle stages, so a repeated RAW
-pull is one result-stage job. Any replaced table — through `register` or
-a direct `tables[...] =` write — drops every prepared pull at the next
-pull. A pull that collects no rows is not kept, and a quarter outside
-1–4 is rejected before anything is prepared. The pass-through SQL is not
-prepared.
+Statement pulls are answered from cached rows. The reference's dashboard
+re-sends the same statement SQL, which Snowflake answers from its result
+cache without running the query again. Here `get_financial_data` keeps
+the collected, sanitized rows of each `(year, quarter, data_type,
+source)` it has served, with the table objects its plan read:
+`sec_sub`, `sec_pre` and `sec_num` for RAW, `<NAME>_<year>Q<q>` for
+fact tables, `view_<stem>_<year>_Q<q>` for JSON. A repeat returns fresh
+shallow copies of those rows, with no Spark job and no py4j call, while
+each of those names still holds the identical object in
+`SecEngine.tables`. Replacing one of them, through `register` or a
+direct `tables[...] =` write, drops only the replies that read it, at
+their next pull; registering another quarter's fact or document tables
+keeps every other reply. A reply is not kept when it holds no rows, or
+when a table it read was replaced while it was collected. An invalid
+quarter, source or data type raises before anything is stored. The
+pass-through SQL is not cached.
 """
 
 from __future__ import annotations
@@ -38,6 +41,17 @@ from dynaledger_spark.operators.backfill import RAW_COLUMNS, raw_statement_join
 # Note the reference maps Income Statement to 'IC' here while the dbt fact
 # model uses 'IS' — an inconsistency kept faithfully.
 RAW_STMT_TYPES = {"Income Statement": "IC", "Balance Sheet": "BS", "Cash Flow": "CF"}
+# data_type → the name stem of the fact tables and of the JSON flatten views
+_FACT_NAMES = {
+    "Balance Sheet": "BALANCE_SHEET",
+    "Income Statement": "INCOME_STATEMENT",
+    "Cash Flow": "CASH_FLOW",
+}
+_JSON_STEMS = {
+    "Balance Sheet": "balance_sheet",
+    "Income Statement": "income_statement",
+    "Cash Flow": "cash_flow",
+}
 
 
 def _quarter_number(quarter: str) -> str:
@@ -48,6 +62,22 @@ def _quarter_number(quarter: str) -> str:
     return m.group(1)
 
 
+def _pull_tables(year: int, q: str, data_type: str, source: str) -> tuple[str, ...]:
+    """The names of the tables a statement pull reads, for a quarter
+    number `q`; an invalid source or data type raises ValueError."""
+    stems = {"RAW": RAW_STMT_TYPES, "FACT TABLES": _FACT_NAMES, "JSON": _JSON_STEMS}.get(source)
+    if stems is None:
+        raise ValueError(f"Invalid source: {source}")
+    stem = stems.get(data_type)
+    if stem is None:
+        raise ValueError(f"Invalid data type: {data_type}")
+    if source == "RAW":
+        return ("sec_sub", "sec_pre", "sec_num")
+    if source == "FACT TABLES":
+        return (f"{stem}_{year}Q{q}",)
+    return (f"view_{stem}_{year}_Q{q}",)
+
+
 @dataclass
 class SecEngine:
     """In-process replacement for the FastAPI → Snowflake stack.
@@ -56,22 +86,26 @@ class SecEngine:
     source_file partition column; facts: BALANCE_SHEET/…; json: the
     documents table + flatten views); queries are Catalyst plans.
 
-    A statement pull is prepared once and re-collected while `tables`
-    holds the same objects (see the module docstring). A prepared pull
-    keeps its broadcast relations and shuffle files alive; they are
-    released when a table is replaced and the next pull rebuilds. The
-    tables are read when a pull is prepared, so after appending to a
-    table's files, re-register it. Prepared pulls are bounded by the
-    registered data: a pull is kept only if it collected rows, so at most
-    9 per quarter that holds rows, and an invalid pull (source, data type
-    or a quarter outside 1–4) raises before anything is kept.
+    A statement pull's rows are cached and returned again while the
+    tables its plan read are the same objects (see the module
+    docstring). The cache holds Python rows, not plans, so it pins no
+    broadcast relation or shuffle file; its memory is at most nine
+    replies (three sources × three statements) per quarter that holds
+    rows, each the size of the reply. A reply whose tables were replaced
+    is dropped at its key's next pull. The tables are read when a pull
+    first collects, so after appending to a table's files, re-register
+    it. The lock guards only the cache dict: no plan is built and no
+    Spark job runs under it, so a repeat is never held up by another
+    key's first pull. Two racing first pulls of one key both collect,
+    and one of their replies is kept.
     """
 
     spark: SparkSession
     tables: dict[str, DataFrame] = field(default_factory=dict)
-    # the tables the prepared pulls were built over, and the pulls
-    _prepared_over: dict[str, DataFrame] = field(default_factory=dict, init=False, repr=False)
-    _prepared: dict[tuple, DataFrame] = field(default_factory=dict, init=False, repr=False)
+    # pull key → (the table objects its plan read, by name; its rows)
+    _replies: dict[tuple, tuple[dict[str, DataFrame], list[dict]]] = field(
+        default_factory=dict, init=False, repr=False
+    )
     _lock: threading.Lock = field(default_factory=threading.Lock, init=False, repr=False)
 
     def register(self, name: str, df: DataFrame) -> None:
@@ -88,67 +122,41 @@ class SecEngine:
     def get_financial_data(
         self, year: int, quarter: str, data_type: str, source: str
     ) -> dict:
-        t0 = time.time()
+        t0 = time.perf_counter()
         key = (year, _quarter_number(quarter), data_type, source)
-        df = self._prepared_pull(key)
-        rows = [r.asDict() for r in df.collect()]
-        if not rows:
-            with self._lock:
-                self._prepared.pop(key, None)
-        return {"data": rows, "execution_time": time.time() - t0}
-
-    def _prepared_pull(self, key: tuple) -> DataFrame:
-        """The sanitized pull frame, built once per key while `tables`
-        holds the same objects."""
+        # taken before the plan is built, so a table replaced from here on
+        # keeps this pull's reply out of the cache
+        read = {name: self.tables[name] for name in _pull_tables(*key)}
         with self._lock:
-            if self._prepared_over.keys() != self.tables.keys() or any(
-                self.tables[name] is not df for name, df in self._prepared_over.items()
-            ):
-                self._prepared = {}
-                self._prepared_over = dict(self.tables)
-            df = self._prepared.get(key)
-            if df is None:
-                df = self._prepared[key] = sanitize_floats(self.financial_data_frame(*key))
-        return df
+            cached = self._replies.get(key)
+            if cached is not None and any(read[n] is not df for n, df in cached[0].items()):
+                del self._replies[key]
+                cached = None
+        if cached is not None:
+            rows = cached[1]
+        else:
+            rows = [r.asDict() for r in sanitize_floats(self.financial_data_frame(*key)).collect()]
+            with self._lock:
+                if rows and all(self.tables.get(n) is df for n, df in read.items()):
+                    self._replies[key] = (read, rows)
+        return {"data": [dict(r) for r in rows], "execution_time": time.perf_counter() - t0}
 
     def financial_data_frame(
         self, year: int, quarter: str, data_type: str, source: str
     ) -> DataFrame:
         """The plan behind /get-financial-data, as a DataFrame."""
         q = _quarter_number(quarter)
+        names = _pull_tables(year, q, data_type, source)
+        if source != "RAW":
+            return self.tables[names[0]]
         tag = f"{year}Q{q}"
-        if source == "RAW":
-            stmt = RAW_STMT_TYPES.get(data_type)
-            if stmt is None:
-                raise ValueError(f"Invalid data type: {data_type}")
-            sub = self.tables["sec_sub"].filter(F.col("source_file") == tag)
-            pre = self.tables["sec_pre"].filter(F.col("source_file") == tag)
-            num = self.tables["sec_num"].filter(F.col("source_file") == tag)
-            return (
-                raw_statement_join(sub, pre, num)
-                .filter(F.col("p.stmt") == stmt)
-                .select(*RAW_COLUMNS)
-                .orderBy("adsh", "line")
-            )
-        if source == "FACT TABLES":
-            name = {
-                "Balance Sheet": "BALANCE_SHEET",
-                "Income Statement": "INCOME_STATEMENT",
-                "Cash Flow": "CASH_FLOW",
-            }.get(data_type)
-            if name is None:
-                raise ValueError(f"Invalid data type: {data_type}")
-            return self.tables[f"{name}_{tag}"]
-        if source == "JSON":
-            name = {
-                "Balance Sheet": "balance_sheet",
-                "Income Statement": "income_statement",
-                "Cash Flow": "cash_flow",
-            }.get(data_type)
-            if name is None:
-                raise ValueError(f"Invalid data type: {data_type}")
-            return self.tables[f"view_{name}_{year}_Q{q}"]
-        raise ValueError(f"Invalid source: {source}")
+        sub, pre, num = (self.tables[n].filter(F.col("source_file") == tag) for n in names)
+        return (
+            raw_statement_join(sub, pre, num)
+            .filter(F.col("p.stmt") == RAW_STMT_TYPES[data_type])
+            .select(*RAW_COLUMNS)
+            .orderBy("adsh", "line")
+        )
 
     # -- POST /execute-custom-query (backend/main.py:109-134, §3.2)
     def execute_custom_query(self, query: str) -> dict:

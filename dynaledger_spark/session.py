@@ -1,9 +1,9 @@
 """SparkSession factory.
 
-One place to configure the engine. Defaults are tuned for the driver's
-local[32] test box but every knob is chosen to also make sense on a large
-cluster (AQE on, broadcast threshold explicit, UTC timezone pinned so
-results are reproducible against any oracle).
+One place to configure the engine. It runs `local[N]` with one task
+thread per CPU this process may use, and every knob is chosen to also
+make sense on a large cluster (AQE on, broadcast threshold explicit,
+UTC timezone pinned so results are reproducible against any oracle).
 """
 
 from __future__ import annotations
@@ -21,6 +21,12 @@ def _default_driver_mem() -> str:
     return f"{max(1, min(48, gb // 2))}g"
 
 
+def local_cpus() -> int:
+    """Task threads for `local[N]`: `SPARK_GRAFT_CPUS` if set, else the
+    CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "dynaledger_spark",
     shuffle_partitions: int | None = None,
@@ -33,9 +39,9 @@ def get_spark(
     burden; on a 1000-executor cluster raise it (or rely on
     `spark.sql.adaptive.coalescePartitions.initialPartitionNum`).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus)
+        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

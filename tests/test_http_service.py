@@ -76,8 +76,8 @@ def test_get_financial_data_matches_engine(service):
 
 
 def test_concurrent_identical_pulls_match(service):
-    """8 identical pulls at once, racing to prepare the pull and then
-    re-collecting it, all return the engine's rows."""
+    """8 identical pulls at once, racing to collect the first reply, and
+    a later pull answered from the cached rows, all return the same rows."""
     svc, eng = service
     path = "/get-financial-data?year=2023&quarter=Q1&data_type=Cash%20Flow&source=RAW"
     start = threading.Barrier(8)

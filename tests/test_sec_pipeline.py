@@ -5,11 +5,14 @@ the dbt SQL) → JSON documents → flatten views → validation suite → API."
 from __future__ import annotations
 
 import os
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from dynaledger_spark import api
 from dynaledger_spark.api import SecEngine
 from dynaledger_spark.functions.validation import run_checks, sec_checks
 from dynaledger_spark.operators.documents import (
@@ -287,22 +290,114 @@ def test_api_raw_financial_data(spark, tables):
     assert [r["adsh"] for r in rows] == sorted(r["adsh"] for r in rows)
 
 
-def test_repeated_raw_pull_runs_one_job(spark, tables):
-    """A repeated pull re-collects the prepared plan: AQE's broadcast and
-    shuffle stages are already materialized, so only the result stage
-    runs (a fresh RAW pull runs 5 jobs)."""
+def _statement_engine(spark, tables, docs) -> SecEngine:
+    """An engine with Q1's RAW tables, balance-sheet fact table and
+    balance-sheet flatten view."""
     eng = _engine(spark, tables)
-    first = eng.get_financial_data(2023, "Q1", "Balance Sheet", "RAW")["data"]
+    eng.register(
+        f"BALANCE_SHEET_{Q}",
+        build_fact_table(tables["sec_num"], tables["sec_sub"], tables["sec_pre"], "BS"),
+    )
+    eng.register("view_balance_sheet_2023_Q1", flatten_statement_view(documents_table(docs), "bs"))
+    return eng
+
+
+def _jobs_run(spark, group: str, fn):
+    """fn's result and the number of Spark jobs it ran."""
     sc = spark.sparkContext
-    group = "test_repeated_raw_pull_runs_one_job"
-    sc.setJobGroup(group, "repeated pull")
+    sc.setJobGroup(group, group)
     try:
-        second = eng.get_financial_data(2023, "Q1", "Balance Sheet", "RAW")["data"]
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert first and second == first
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "source", ["RAW", "FACT TABLES", "JSON"], ids=["raw", "fact", "json"]
+)
+def test_repeated_pull_runs_no_job(spark, tables, docs, source):
+    """A repeated pull is answered from the cached rows of the first: no
+    Spark job, and a caller mutating its reply does not change the next."""
+    eng = _statement_engine(spark, tables, docs)
+
+    def pull():
+        return eng.get_financial_data(2023, "Q1", "Balance Sheet", source)
+
+    first = pull()["data"]
+    assert first
+    second, jobs = _jobs_run(spark, f"repeated_pull_{source}", pull)
+    assert second["data"] == first and second["execution_time"] > 0
+    assert jobs == 0
+    row = second["data"][0]
+    row[next(iter(row))] = "mutated"
+    second["data"].clear()
+    assert pull()["data"] == first
+
+
+def test_other_quarter_registration_keeps_reply(spark, tables, docs):
+    """Registering another quarter's fact table keeps Q1's cached reply."""
+    eng = _statement_engine(spark, tables, docs)
+
+    def pull():
+        return eng.get_financial_data(2023, "Q1", "Balance Sheet", "FACT TABLES")["data"]
+
+    first = pull()
+    eng.register("BALANCE_SHEET_2099Q1", eng.tables[f"BALANCE_SHEET_{Q}"].limit(1))
+    again, jobs = _jobs_run(spark, "other_quarter_registration", pull)
+    assert again == first and jobs == 0
+
+
+def test_table_replaced_during_collect_is_not_kept(spark, tables, monkeypatch):
+    """A reply collected while a table it read is replaced is returned but
+    not kept, so the next pull reads the new table."""
+    eng = _engine(spark, tables)
+    shifted = eng.tables["sec_num"].withColumn("value", F.col("value") + 1)
+    sanitize = api.sanitize_floats
+
+    class ReplacedOnCollect:
+        def __init__(self, df):
+            self.df = df
+
+        def collect(self):
+            eng.register("sec_num", shifted)
+            return self.df.collect()
+
+    monkeypatch.setattr(api, "sanitize_floats", lambda df: ReplacedOnCollect(sanitize(df)))
+    before = eng.get_financial_data(2023, "Q1", "Balance Sheet", "RAW")["data"]
+    monkeypatch.setattr(api, "sanitize_floats", sanitize)
+    assert before and eng._replies == {}
+    after = eng.get_financial_data(2023, "Q1", "Balance Sheet", "RAW")["data"]
+    assert _multiset(after) == _multiset(
+        [{**r, "value": None if r["value"] is None else r["value"] + 1} for r in before]
+    )
+
+
+def test_cached_pull_not_held_by_first_pull_of_other_key(spark, tables, monkeypatch):
+    """A cached pull returns while another key's first pull is still
+    building its plan: the engine lock is not held over planning."""
+    eng = _engine(spark, tables)
+    cached = eng.get_financial_data(2023, "Q1", "Balance Sheet", "RAW")["data"]
+    planning, release = threading.Event(), threading.Event()
+    plan = eng.financial_data_frame
+
+    def blocked_plan(*key):
+        planning.set()
+        release.wait(60)
+        return plan(*key)
+
+    monkeypatch.setattr(eng, "financial_data_frame", blocked_plan)
+    with ThreadPoolExecutor(2) as pool:
+        first = pool.submit(eng.get_financial_data, 2023, "Q1", "Cash Flow", "RAW")
+        try:
+            assert planning.wait(30)
+            repeat = pool.submit(eng.get_financial_data, 2023, "Q1", "Balance Sheet", "RAW")
+            assert repeat.result(timeout=30)["data"] == cached
+            assert not first.done()
+        finally:
+            release.set()
+        assert first.result(timeout=120)["data"]
 
 
 def test_replaced_table_changes_next_pull(spark, tables):
@@ -328,8 +423,8 @@ def test_replaced_table_changes_next_pull(spark, tables):
 
 def test_absent_raw_pulls_are_not_kept(spark, tables):
     """RAW pulls of quarters that hold no rows, or that do not exist,
-    prepare nothing that outlives the request, so a client looping over
-    years cannot grow the engine's prepared pulls."""
+    cache nothing that outlives the request, so a client looping over
+    years cannot grow the engine's cached replies."""
     eng = _engine(spark, tables)
     for year in range(1900, 1950):
         if year % 5:
@@ -338,7 +433,7 @@ def test_absent_raw_pulls_are_not_kept(spark, tables):
         else:
             with pytest.raises(ValueError, match="quarter"):
                 eng.get_financial_data(year, "Q5", "Balance Sheet", "RAW")
-    assert eng._prepared == {}
+    assert eng._replies == {}
 
 
 def test_api_custom_query(spark, tables):
