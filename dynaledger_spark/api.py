@@ -8,28 +8,40 @@ tables — same pruning, no name templating (SURVEY §4).
 
 Statement pulls are answered from cached rows. The reference's dashboard
 re-sends the same statement SQL, which Snowflake answers from its result
-cache without running the query again. Here `get_financial_data` keeps
-the collected, sanitized rows of each `(year, quarter, data_type,
-source)` it has served, with the table objects its plan read:
-`sec_sub`, `sec_pre` and `sec_num` for RAW, `<NAME>_<year>Q<q>` for
-fact tables, `view_<stem>_<year>_Q<q>` for JSON. A repeat returns fresh
-shallow copies of those rows, with no Spark job and no py4j call, while
-each of those names still holds the identical object in
+cache without running the query again. Here the engine keeps the
+collected, sanitized rows of each `(year, quarter, data_type, source)` it
+has served, with the table objects its plan read: `sec_sub`, `sec_pre`
+and `sec_num` for RAW, `<NAME>_<year>Q<q>` for fact tables,
+`view_<stem>_<year>_Q<q>` for JSON. The entry also holds the rows
+encoded as a JSON array, built on the key's first HTTP pull
+(`financial_data_json`) and sent again by every later one: about 0.5 MB
+per reply at the benchmark's sizes. A repeat runs no Spark job and no
+py4j call; `get_financial_data` returns fresh shallow copies of the rows,
+`financial_data_json` the stored bytes in a new envelope. An entry is
+used while each of the names it read still holds the identical object in
 `SecEngine.tables`. Replacing one of them, through `register` or a
-direct `tables[...] =` write, drops only the replies that read it, at
-their next pull; registering another quarter's fact or document tables
-keeps every other reply. A reply is not kept when it holds no rows, or
+direct `tables[...] =` write, drops only the entries that read it, at
+their next use; registering another quarter's fact or document tables
+keeps every other entry. A reply is not kept when it holds no rows, or
 when a table it read was replaced while it was collected. An invalid
 quarter, source or data type raises before anything is stored. The
 pass-through SQL is not cached.
+
+The metadata routes keep their answers under the same rule:
+`check_availability` the set of quarters `sec_tag` holds, `table_info`
+each table's description per asked `source_file`.
 """
 
 from __future__ import annotations
 
+import copy
+import json
 import re
 import threading
 import time
+from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -79,6 +91,16 @@ def _pull_tables(year: int, q: str, data_type: str, source: str) -> tuple[str, .
 
 
 @dataclass
+class _Entry:
+    """A cached answer and the table objects, by name, it was computed over."""
+
+    read: dict[str, DataFrame]
+    value: object
+    # a pull's rows as a JSON array, set by its first HTTP pull
+    data_json: bytes | None = None
+
+
+@dataclass
 class SecEngine:
     """In-process replacement for the FastAPI → Snowflake stack.
 
@@ -88,58 +110,99 @@ class SecEngine:
 
     A statement pull's rows are cached and returned again while the
     tables its plan read are the same objects (see the module
-    docstring). The cache holds Python rows, not plans, so it pins no
-    broadcast relation or shuffle file; its memory is at most nine
-    replies (three sources × three statements) per quarter that holds
-    rows, each the size of the reply. A reply whose tables were replaced
-    is dropped at its key's next pull. The tables are read when a pull
-    first collects, so after appending to a table's files, re-register
-    it. The lock guards only the cache dict: no plan is built and no
-    Spark job runs under it, so a repeat is never held up by another
-    key's first pull. Two racing first pulls of one key both collect,
-    and one of their replies is kept.
+    docstring). The cache holds Python rows and their encoded bytes, not
+    plans, so it pins no broadcast relation or shuffle file; its memory
+    is at most nine replies (three sources × three statements) per
+    quarter that holds rows, each its rows plus, once HTTP has pulled
+    it, their JSON bytes (~0.5 MB at the benchmark's sizes). A reply
+    whose tables were replaced is dropped at its key's next pull. The
+    tables are read when a pull first collects, so after appending to a
+    table's files, re-register it. The lock guards only the cache dict:
+    no plan is built, no Spark job runs and nothing is encoded under it,
+    so a repeat is never held up by another key's first pull. Two racing
+    first pulls of one key both collect, and one of their replies is
+    kept; two racing first HTTP pulls of a kept reply may both encode it.
     """
 
     spark: SparkSession
     tables: dict[str, DataFrame] = field(default_factory=dict)
-    # pull key → (the table objects its plan read, by name; its rows)
-    _replies: dict[tuple, tuple[dict[str, DataFrame], list[dict]]] = field(
-        default_factory=dict, init=False, repr=False
-    )
+    # ("pull", year, q, data_type, source) / ("available",) /
+    # ("table_info", name, source_file) → its entry
+    _replies: dict[tuple, _Entry] = field(default_factory=dict, init=False, repr=False)
     _lock: threading.Lock = field(default_factory=threading.Lock, init=False, repr=False)
 
     def register(self, name: str, df: DataFrame) -> None:
         self.tables[name] = df
         df.createOrReplaceTempView(name)
 
+    def _cached(
+        self,
+        key: tuple,
+        names: tuple[str, ...],
+        compute: Callable[[], object],
+        keep: Callable[[object], bool] = bool,
+    ) -> _Entry:
+        """The entry kept for `key` while each of the tables `names` is the
+        object it was computed over; else a new one from `compute()`,
+        kept if `keep` accepts its value and no table was replaced while
+        it was computed."""
+        # taken before compute() builds a plan, so a table replaced from
+        # here on keeps this entry out of the cache
+        read = {name: self.tables[name] for name in names}
+        with self._lock:
+            entry = self._replies.get(key)
+            if entry is not None and any(read[n] is not df for n, df in entry.read.items()):
+                del self._replies[key]
+                entry = None
+        if entry is None:
+            entry = _Entry(read, compute())
+            with self._lock:
+                if keep(entry.value) and all(self.tables.get(n) is df for n, df in read.items()):
+                    self._replies[key] = entry
+        return entry
+
     # -- GET /check-availability (backend/main.py:43-60, A1 + P6)
     def check_availability(self, year: int, quarter: str) -> dict:
         tag = f"{year}Q{_quarter_number(quarter)}"
-        quarter_tags = self.tables["sec_tag"].filter(F.col("source_file") == tag)
-        return {"available": not quarter_tags.isEmpty()}
+
+        # every quarter's answer from one job, in one entry that no
+        # client can grow by asking for other years
+        def quarters() -> frozenset:
+            rows = self.tables["sec_tag"].select("source_file").distinct().collect()
+            return frozenset(r[0] for r in rows)
+
+        return {"available": tag in self._cached(("available",), ("sec_tag",), quarters).value}
 
     # -- GET /get-financial-data (backend/main.py:137-221)
+    def _pull(self, year: int, quarter: str, data_type: str, source: str) -> _Entry:
+        key = (year, _quarter_number(quarter), data_type, source)
+        return self._cached(
+            ("pull", *key),
+            _pull_tables(*key),
+            lambda: [r.asDict() for r in sanitize_floats(self.financial_data_frame(*key)).collect()],
+        )
+
     def get_financial_data(
         self, year: int, quarter: str, data_type: str, source: str
     ) -> dict:
         t0 = time.perf_counter()
-        key = (year, _quarter_number(quarter), data_type, source)
-        # taken before the plan is built, so a table replaced from here on
-        # keeps this pull's reply out of the cache
-        read = {name: self.tables[name] for name in _pull_tables(*key)}
-        with self._lock:
-            cached = self._replies.get(key)
-            if cached is not None and any(read[n] is not df for n, df in cached[0].items()):
-                del self._replies[key]
-                cached = None
-        if cached is not None:
-            rows = cached[1]
-        else:
-            rows = [r.asDict() for r in sanitize_floats(self.financial_data_frame(*key)).collect()]
-            with self._lock:
-                if rows and all(self.tables.get(n) is df for n, df in read.items()):
-                    self._replies[key] = (read, rows)
+        rows = self._pull(year, quarter, data_type, source).value
         return {"data": [dict(r) for r in rows], "execution_time": time.perf_counter() - t0}
+
+    def financial_data_json(
+        self, year: int, quarter: str, data_type: str, source: str
+    ) -> bytes:
+        """`get_financial_data`'s reply as the UTF-8 JSON body
+        `json.dumps(reply, default=str)` gives, from the entry's stored
+        `data` bytes: a repeat copies and encodes no row."""
+        t0 = time.perf_counter()
+        entry = self._pull(year, quarter, data_type, source)
+        if entry.data_json is None:
+            # default=str covers datetime.date / Decimal from Spark rows —
+            # same shapes FastAPI's jsonable_encoder stringifies.
+            entry.data_json = json.dumps(entry.value, default=str).encode()
+        elapsed = json.dumps(time.perf_counter() - t0).encode()
+        return b'{"data": ' + entry.data_json + b', "execution_time": ' + elapsed + b"}"
 
     def financial_data_frame(
         self, year: int, quarter: str, data_type: str, source: str
@@ -165,8 +228,29 @@ class SecEngine:
         return {"data": rows}
 
     # -- GET table info (backend/main.py:85-101, S12)
-    def table_info(self, names: list[str]) -> list[dict]:
-        return [describe_table(name, self.tables[name]) for name in names]
+    def table_info(self, names: list[str], source_file: str | None = None) -> list[dict]:
+        """Each table's description; with `source_file`, its sample rows
+        come from that quarter's rows only (the RAW tables hold every
+        quarter). A description is kept while its table is the same
+        object, unless it has no sample rows."""
+
+        def describe(name: str) -> dict:
+            df = self.tables[name]
+            if source_file is not None:
+                df = df.filter(F.col("source_file") == source_file)
+            return describe_table(name, df)
+
+        return [
+            copy.deepcopy(
+                self._cached(
+                    ("table_info", name, source_file),
+                    (name,),
+                    partial(describe, name),
+                    keep=lambda info: bool(info["sample_data"]),
+                ).value
+            )
+            for name in names
+        ]
 
 
 def describe_table(name: str, df: DataFrame) -> dict:

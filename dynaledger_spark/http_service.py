@@ -13,7 +13,9 @@ The reference's handlers template Snowflake SQL per request; here each
 route delegates to the in-process :class:`~dynaledger_spark.api.SecEngine`
 plan (Catalyst executes). Stdlib ``http.server`` keeps the wrapper
 dependency-free — FastAPI isn't available in this environment, and the
-HTTP layer is deliberately thin: parse params → engine call → JSON.
+HTTP layer is deliberately thin: parse params → engine call → JSON. A
+statement pull's body comes from the engine already encoded, so a
+repeated pull sends the stored bytes of its first.
 
 Threading: handlers run on ThreadingHTTPServer worker threads; py4j calls
 into the shared SparkSession are thread-safe, and each collect is a
@@ -28,16 +30,13 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from pyspark.sql import functions as F
-
-from dynaledger_spark.api import SecEngine, _quarter_number, describe_table
+from dynaledger_spark.api import _FACT_NAMES, SecEngine, _quarter_number
 
 # data_source → raw-table-name templates for /get-table-info
 # (main.py:80-88). The reference suffixes physical table names per
 # quarter; the engine models quarters as a source_file partition, so RAW
 # names are unsuffixed while fact/JSON tables keep the reference naming.
 _RAW_TABLES = ("sec_num", "sec_pre", "sec_sub", "sec_tag")
-_FACT_TABLES = ("BALANCE_SHEET", "INCOME_STATEMENT", "CASH_FLOW")
 _RAW_SOURCES = ("RAW", "Raw")
 
 
@@ -47,7 +46,7 @@ def _table_names(data_source: str, tag: str) -> list[str]:
     if data_source == "JSON":
         return [f"sec_data_{tag}"]
     if data_source in ("Fact Tables", "FACT TABLES"):
-        return [f"{name}_{tag}" for name in _FACT_TABLES]
+        return [f"{name}_{tag}" for name in _FACT_NAMES.values()]
     raise ValueError(f"Invalid data source: {data_source}")
 
 
@@ -70,10 +69,7 @@ def _table_info(engine: SecEngine, data_source: str, year: int, quarter: str) ->
         raise _ApiError(500, f"Failed to fetch table info: {missing}")
     if data_source not in _RAW_SOURCES:
         return engine.table_info(names)
-    info = [
-        describe_table(n, engine.tables[n].filter(F.col("source_file") == tag))
-        for n in names
-    ]
+    info = engine.table_info(names, source_file=tag)
     empty = [t["name"] for t in info if not t["sample_data"]]
     if empty:
         raise _ApiError(500, f"Failed to fetch table info: {empty}")
@@ -87,9 +83,13 @@ def _make_handler(engine: SecEngine):
             pass
 
         def _reply(self, status: int, payload) -> None:
-            # default=str covers datetime.date / Decimal from Spark rows —
-            # same shapes FastAPI's jsonable_encoder stringifies.
-            body = json.dumps(payload, default=str).encode()
+            """Send `payload`: bytes as they are, else encoded as JSON."""
+            if isinstance(payload, bytes):
+                body = payload
+            else:
+                # default=str covers datetime.date / Decimal from Spark rows —
+                # same shapes FastAPI's jsonable_encoder stringifies.
+                body = json.dumps(payload, default=str).encode()
             try:
                 self.send_response(status)
                 self.send_header("Content-Type", "application/json")
@@ -140,7 +140,7 @@ def _make_handler(engine: SecEngine):
             if route == "/get-table-info":
                 return _table_info(engine, p["data_source"], int(p["year"]), p["quarter"])
             if route == "/get-financial-data":
-                return engine.get_financial_data(
+                return engine.financial_data_json(
                     int(p["year"]), p["quarter"], p["data_type"], p["source"]
                 )
             if route == "/query-data":

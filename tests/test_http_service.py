@@ -4,6 +4,8 @@ an ephemeral port, asserting parity with direct engine calls."""
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import json
 import socket
 import struct
@@ -14,15 +16,32 @@ import urllib.parse
 import urllib.request
 
 import pytest
+from pyspark.sql import functions as F
 
+from dynaledger_spark import api
 from dynaledger_spark.api import SecEngine
 from dynaledger_spark.http_service import SecHttpService
+from dynaledger_spark.operators.documents import (
+    assemble_documents,
+    documents_table,
+    flatten_statement_view,
+)
+from dynaledger_spark.operators.facts import build_fact_table
+from dynaledger_spark.sources.lookup import load_ticker
 from dynaledger_spark.sources.tsv import ROW_ID, ingest_quarter
 from tests.sec_fixtures import Q, write_fixtures
+
+FACT_TABLE = f"BALANCE_SHEET_{Q}"
+JSON_VIEW = "view_balance_sheet_2023_Q1"
 
 
 @pytest.fixture(scope="module")
 def service(spark, tmp_path_factory):
+    """The service over Q1's RAW tables, its balance-sheet fact table and
+    its balance-sheet flatten view. The fact table's filing date is a
+    date and its value a Decimal, and every flatten-view value is NaN,
+    so that replies carry what JSON encodes only through `default=str`
+    or sanitizing."""
     paths = write_fixtures(str(tmp_path_factory.mktemp("http_tsv")))
     tables = ingest_quarter(
         spark, {k: v for k, v in paths.items() if k != "ticker"}, Q
@@ -30,14 +49,45 @@ def service(spark, tmp_path_factory):
     eng = SecEngine(spark)
     for name, df in tables.items():
         eng.register(name, df.drop(ROW_ID))
+    facts = build_fact_table(tables["sec_num"], tables["sec_sub"], tables["sec_pre"], "BS")
+    eng.register(
+        FACT_TABLE,
+        facts.withColumn(
+            "filing_date", F.to_date(F.col("filing_date").cast("string"), "yyyyMMdd")
+        ).withColumn("total_value", F.col("total_value").cast("decimal(27,6)")),
+    )
+    docs = assemble_documents(
+        tables["sec_sub"], tables["sec_num"], tables["sec_tag"], tables["sec_pre"],
+        load_ticker(spark, paths["ticker"]),
+    )
+    view = flatten_statement_view(documents_table(docs), "bs")
+    eng.register(JSON_VIEW, view.withColumn("value", F.lit(float("nan"))))
     svc = SecHttpService(eng).start()
     yield svc, eng
     svc.stop()
 
 
+def _get_body(svc: SecHttpService, path: str) -> bytes:
+    with urllib.request.urlopen(f"http://127.0.0.1:{svc.port}{path}") as r:
+        assert r.status == 200
+        return r.read()
+
+
 def _get(svc: SecHttpService, path: str):
     with urllib.request.urlopen(f"http://127.0.0.1:{svc.port}{path}") as r:
         return r.status, json.loads(r.read())
+
+
+def _pull_path(source: str) -> str:
+    return "/get-financial-data?" + urllib.parse.urlencode(
+        {"year": 2023, "quarter": "Q1", "data_type": "Balance Sheet", "source": source}
+    )
+
+
+def _dumps_reply(data: list[dict], body: bytes) -> bytes:
+    """json.dumps of a reply of `data`, at the execution_time `body` reports."""
+    t = json.loads(body)["execution_time"]
+    return json.dumps({"data": data, "execution_time": t}, default=str).encode()
 
 
 def _post(svc: SecHttpService, path: str, body):
@@ -97,6 +147,80 @@ def test_concurrent_identical_pulls_match(service):
     assert want
     assert [status for status, _ in replies] == [200] * 8
     assert all(out["data"] == want for _, out in replies)
+
+
+@pytest.mark.parametrize(
+    "source, kinds",
+    [
+        ("RAW", {"value": float}),
+        ("FACT TABLES", {"filing_date": datetime.date, "total_value": decimal.Decimal}),
+        ("JSON", {"value": type(None)}),
+    ],
+    ids=["raw", "fact", "json"],
+)
+def test_reply_body_is_dumps_of_engine_rows(service, source, kinds):
+    """Every pull's body, first and repeated, is byte for byte the
+    json.dumps(default=str) of the engine's reply at the body's own
+    execution_time: dates and Decimals as strings, a NaN as null."""
+    svc, eng = service
+    first = _get_body(svc, _pull_path(source))
+    again = _get_body(svc, _pull_path(source))
+    data = eng.get_financial_data(2023, "Q1", "Balance Sheet", source)["data"]
+    assert all(any(isinstance(r[c], k) for r in data) for c, k in kinds.items())
+    assert first == _dumps_reply(data, first)
+    assert again == _dumps_reply(data, again)
+
+
+def test_repeated_pull_sends_stored_bytes(service, monkeypatch):
+    """A repeated pull sends the bytes its key's first HTTP pull encoded,
+    and encodes no row again."""
+    svc, eng = service
+    path = _pull_path("FACT TABLES")
+    _get_body(svc, path)
+    stored = eng._replies[("pull", 2023, "1", "Balance Sheet", "FACT TABLES")].data_json
+    dumps, encoded = api.json.dumps, []
+
+    def counting_dumps(obj, **kw):
+        encoded.append(type(obj))
+        return dumps(obj, **kw)
+
+    monkeypatch.setattr(api.json, "dumps", counting_dumps)
+    body = _get_body(svc, path)
+    monkeypatch.setattr(api.json, "dumps", dumps)
+    assert eng._replies[("pull", 2023, "1", "Balance Sheet", "FACT TABLES")].data_json is stored
+    assert body.startswith(b'{"data": ' + stored + b', "execution_time": ')
+    assert encoded == [float]
+
+
+def test_replaced_table_changes_next_body(service):
+    """Replacing a table a reply read, through `register`, changes the
+    next body to the new table's rows."""
+    svc, eng = service
+    path = _pull_path("FACT TABLES")
+    facts = eng.tables[FACT_TABLE]
+    before = json.loads(_get_body(svc, path))["data"]
+    try:
+        eng.register(FACT_TABLE, facts.limit(1))
+        after = _get_body(svc, path)
+        want = eng.get_financial_data(2023, "Q1", "Balance Sheet", "FACT TABLES")["data"]
+    finally:
+        eng.register(FACT_TABLE, facts)
+    assert len(before) > 1 and len(want) == 1
+    assert after == _dumps_reply(want, after)
+
+
+def test_mutated_engine_reply_keeps_next_body(service):
+    """A caller mutating the rows `get_financial_data` returned does not
+    change the next body."""
+    svc, eng = service
+    path = _pull_path("RAW")
+    eng._replies.pop(("pull", 2023, "1", "Balance Sheet", "RAW"), None)
+    for _ in range(2):  # before and after the key's first HTTP pull
+        rows = eng.get_financial_data(2023, "Q1", "Balance Sheet", "RAW")["data"]
+        want = json.loads(json.dumps(rows, default=str))
+        rows[0]["value"] = "mutated"
+        rows.pop()
+        assert json.loads(_get_body(svc, path))["data"] == want
 
 
 def test_custom_query_roundtrip(service):
