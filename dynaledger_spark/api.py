@@ -26,22 +26,15 @@ keeps every other entry. A reply is not kept when it holds no rows, or
 when a table it read was replaced while it was collected. An invalid
 quarter, source or data type raises before anything is stored. The
 pass-through SQL is not cached.
-
-The metadata routes keep their answers under the same rule:
-`check_availability` the set of quarters `sec_tag` holds, `table_info`
-each table's description per asked `source_file`.
 """
 
 from __future__ import annotations
 
-import copy
 import json
 import re
 import threading
 import time
-from collections.abc import Callable
 from dataclasses import dataclass, field
-from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -92,11 +85,11 @@ def _pull_tables(year: int, q: str, data_type: str, source: str) -> tuple[str, .
 
 @dataclass
 class _Entry:
-    """A cached answer and the table objects, by name, it was computed over."""
+    """A pull's cached rows and the table objects, by name, its plan read."""
 
     read: dict[str, DataFrame]
-    value: object
-    # a pull's rows as a JSON array, set by its first HTTP pull
+    rows: list[dict]
+    # the rows as a JSON array, set by the key's first HTTP pull
     data_json: bytes | None = None
 
 
@@ -126,8 +119,7 @@ class SecEngine:
 
     spark: SparkSession
     tables: dict[str, DataFrame] = field(default_factory=dict)
-    # ("pull", year, q, data_type, source) / ("available",) /
-    # ("table_info", name, source_file) → its entry
+    # pull key (year, q, data_type, source) → its entry
     _replies: dict[tuple, _Entry] = field(default_factory=dict, init=False, repr=False)
     _lock: threading.Lock = field(default_factory=threading.Lock, init=False, repr=False)
 
@@ -135,58 +127,39 @@ class SecEngine:
         self.tables[name] = df
         df.createOrReplaceTempView(name)
 
-    def _cached(
-        self,
-        key: tuple,
-        names: tuple[str, ...],
-        compute: Callable[[], object],
-        keep: Callable[[object], bool] = bool,
-    ) -> _Entry:
-        """The entry kept for `key` while each of the tables `names` is the
-        object it was computed over; else a new one from `compute()`,
-        kept if `keep` accepts its value and no table was replaced while
-        it was computed."""
-        # taken before compute() builds a plan, so a table replaced from
-        # here on keeps this entry out of the cache
-        read = {name: self.tables[name] for name in names}
+    # -- GET /check-availability (backend/main.py:43-60, A1 + P6)
+    def check_availability(self, year: int, quarter: str) -> dict:
+        tag = f"{year}Q{_quarter_number(quarter)}"
+        quarter_tags = self.tables["sec_tag"].filter(F.col("source_file") == tag)
+        return {"available": not quarter_tags.isEmpty()}
+
+    # -- GET /get-financial-data (backend/main.py:137-221)
+    def _pull(self, year: int, quarter: str, data_type: str, source: str) -> _Entry:
+        """The entry kept for this pull while each table its plan read is
+        the same object; else a new one, kept if it has rows and no table
+        was replaced while it was collected."""
+        key = (year, _quarter_number(quarter), data_type, source)
+        # taken before the plan is built, so a table replaced from here on
+        # keeps this pull's entry out of the cache
+        read = {name: self.tables[name] for name in _pull_tables(*key)}
         with self._lock:
             entry = self._replies.get(key)
             if entry is not None and any(read[n] is not df for n, df in entry.read.items()):
                 del self._replies[key]
                 entry = None
         if entry is None:
-            entry = _Entry(read, compute())
+            rows = [r.asDict() for r in sanitize_floats(self.financial_data_frame(*key)).collect()]
+            entry = _Entry(read, rows)
             with self._lock:
-                if keep(entry.value) and all(self.tables.get(n) is df for n, df in read.items()):
+                if rows and all(self.tables.get(n) is df for n, df in read.items()):
                     self._replies[key] = entry
         return entry
-
-    # -- GET /check-availability (backend/main.py:43-60, A1 + P6)
-    def check_availability(self, year: int, quarter: str) -> dict:
-        tag = f"{year}Q{_quarter_number(quarter)}"
-
-        # every quarter's answer from one job, in one entry that no
-        # client can grow by asking for other years
-        def quarters() -> frozenset:
-            rows = self.tables["sec_tag"].select("source_file").distinct().collect()
-            return frozenset(r[0] for r in rows)
-
-        return {"available": tag in self._cached(("available",), ("sec_tag",), quarters).value}
-
-    # -- GET /get-financial-data (backend/main.py:137-221)
-    def _pull(self, year: int, quarter: str, data_type: str, source: str) -> _Entry:
-        key = (year, _quarter_number(quarter), data_type, source)
-        return self._cached(
-            ("pull", *key),
-            _pull_tables(*key),
-            lambda: [r.asDict() for r in sanitize_floats(self.financial_data_frame(*key)).collect()],
-        )
 
     def get_financial_data(
         self, year: int, quarter: str, data_type: str, source: str
     ) -> dict:
         t0 = time.perf_counter()
-        rows = self._pull(year, quarter, data_type, source).value
+        rows = self._pull(year, quarter, data_type, source).rows
         return {"data": [dict(r) for r in rows], "execution_time": time.perf_counter() - t0}
 
     def financial_data_json(
@@ -200,7 +173,7 @@ class SecEngine:
         if entry.data_json is None:
             # default=str covers datetime.date / Decimal from Spark rows —
             # same shapes FastAPI's jsonable_encoder stringifies.
-            entry.data_json = json.dumps(entry.value, default=str).encode()
+            entry.data_json = json.dumps(entry.rows, default=str).encode()
         elapsed = json.dumps(time.perf_counter() - t0).encode()
         return b'{"data": ' + entry.data_json + b', "execution_time": ' + elapsed + b"}"
 
@@ -228,29 +201,8 @@ class SecEngine:
         return {"data": rows}
 
     # -- GET table info (backend/main.py:85-101, S12)
-    def table_info(self, names: list[str], source_file: str | None = None) -> list[dict]:
-        """Each table's description; with `source_file`, its sample rows
-        come from that quarter's rows only (the RAW tables hold every
-        quarter). A description is kept while its table is the same
-        object, unless it has no sample rows."""
-
-        def describe(name: str) -> dict:
-            df = self.tables[name]
-            if source_file is not None:
-                df = df.filter(F.col("source_file") == source_file)
-            return describe_table(name, df)
-
-        return [
-            copy.deepcopy(
-                self._cached(
-                    ("table_info", name, source_file),
-                    (name,),
-                    partial(describe, name),
-                    keep=lambda info: bool(info["sample_data"]),
-                ).value
-            )
-            for name in names
-        ]
+    def table_info(self, names: list[str]) -> list[dict]:
+        return [describe_table(name, self.tables[name]) for name in names]
 
 
 def describe_table(name: str, df: DataFrame) -> dict:

@@ -30,7 +30,9 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from dynaledger_spark.api import _FACT_NAMES, SecEngine, _quarter_number
+from pyspark.sql import functions as F
+
+from dynaledger_spark.api import _FACT_NAMES, SecEngine, _quarter_number, describe_table
 
 # data_source → raw-table-name templates for /get-table-info
 # (main.py:80-88). The reference suffixes physical table names per
@@ -69,7 +71,10 @@ def _table_info(engine: SecEngine, data_source: str, year: int, quarter: str) ->
         raise _ApiError(500, f"Failed to fetch table info: {missing}")
     if data_source not in _RAW_SOURCES:
         return engine.table_info(names)
-    info = engine.table_info(names, source_file=tag)
+    info = [
+        describe_table(n, engine.tables[n].filter(F.col("source_file") == tag))
+        for n in names
+    ]
     empty = [t["name"] for t in info if not t["sample_data"]]
     if empty:
         raise _ApiError(500, f"Failed to fetch table info: {empty}")

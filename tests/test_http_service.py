@@ -177,7 +177,7 @@ def test_repeated_pull_sends_stored_bytes(service, monkeypatch):
     svc, eng = service
     path = _pull_path("FACT TABLES")
     _get_body(svc, path)
-    stored = eng._replies[("pull", 2023, "1", "Balance Sheet", "FACT TABLES")].data_json
+    stored = eng._replies[(2023, "1", "Balance Sheet", "FACT TABLES")].data_json
     dumps, encoded = api.json.dumps, []
 
     def counting_dumps(obj, **kw):
@@ -187,7 +187,7 @@ def test_repeated_pull_sends_stored_bytes(service, monkeypatch):
     monkeypatch.setattr(api.json, "dumps", counting_dumps)
     body = _get_body(svc, path)
     monkeypatch.setattr(api.json, "dumps", dumps)
-    assert eng._replies[("pull", 2023, "1", "Balance Sheet", "FACT TABLES")].data_json is stored
+    assert eng._replies[(2023, "1", "Balance Sheet", "FACT TABLES")].data_json is stored
     assert body.startswith(b'{"data": ' + stored + b', "execution_time": ')
     assert encoded == [float]
 
@@ -214,7 +214,7 @@ def test_mutated_engine_reply_keeps_next_body(service):
     change the next body."""
     svc, eng = service
     path = _pull_path("RAW")
-    eng._replies.pop(("pull", 2023, "1", "Balance Sheet", "RAW"), None)
+    eng._replies.pop((2023, "1", "Balance Sheet", "RAW"), None)
     for _ in range(2):  # before and after the key's first HTTP pull
         rows = eng.get_financial_data(2023, "Q1", "Balance Sheet", "RAW")["data"]
         want = json.loads(json.dumps(rows, default=str))

@@ -448,41 +448,11 @@ def test_repeated_reply_json_runs_no_job(spark, tables, docs, source):
         return eng.financial_data_json(2023, "Q1", "Balance Sheet", source)
 
     first = body()
-    stored = eng._replies[("pull", 2023, "1", "Balance Sheet", source)].data_json
+    stored = eng._replies[(2023, "1", "Balance Sheet", source)].data_json
     again, jobs = _jobs_run(spark, f"repeated_reply_json_{source}", body)
     assert jobs == 0
-    assert eng._replies[("pull", 2023, "1", "Balance Sheet", source)].data_json is stored
+    assert eng._replies[(2023, "1", "Balance Sheet", source)].data_json is stored
     assert first.startswith(b'{"data": ' + stored) and again.startswith(b'{"data": ' + stored)
-
-
-def test_metadata_repeat_runs_no_job(spark, tables):
-    """check_availability and table_info answer a repeat without a Spark
-    job while the table they read is the same object, and read it again
-    once `register` replaces it."""
-    eng = _engine(spark, tables)
-    calls = {
-        "availability": lambda: [
-            eng.check_availability(2023, "Q1"), eng.check_availability(2024, "Q4")
-        ],
-        "table_info": lambda: eng.table_info(["sec_sub"], source_file=Q),
-    }
-    first = {}
-    for name, call in calls.items():
-        first[name], jobs = _jobs_run(spark, f"metadata_first_{name}", call)
-        assert jobs > 0
-        again, jobs = _jobs_run(spark, f"metadata_again_{name}", call)
-        assert again == first[name] and jobs == 0
-    assert first["availability"] == [{"available": True}, {"available": False}]
-    assert len(first["table_info"][0]["sample_data"]) == 3
-    first["table_info"][0]["sample_data"].clear()
-    assert len(eng.table_info(["sec_sub"], source_file=Q)[0]["sample_data"]) == 3
-
-    eng.register("sec_tag", eng.tables["sec_tag"].withColumn("source_file", F.lit("2024Q4")))
-    eng.register("sec_sub", eng.tables["sec_sub"].limit(1))
-    out, jobs = _jobs_run(spark, "metadata_replaced_availability", calls["availability"])
-    assert out == [{"available": False}, {"available": True}] and jobs > 0
-    out, jobs = _jobs_run(spark, "metadata_replaced_table_info", calls["table_info"])
-    assert len(out[0]["sample_data"]) == 1 and jobs > 0
 
 
 def test_api_custom_query(spark, tables):
