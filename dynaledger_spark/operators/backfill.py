@@ -10,10 +10,13 @@ recurring (quarter, statement) read:
 
 * **Partitioned facts** — `build_facts_single_pass` output written
   under `partitionBy(source_file, statement_type)`. A statement query
-  for one (quarter, stmt) prunes to a single leaf directory: at 100 TB
-  (~40 quarters x 3 statements) the recurring dashboard read touches
-  <1% of the store, and the pruning is directory-level (no data files
-  opened), plan-visible as PartitionFilters.
+  for one (quarter, stmt) opens that one leaf directory, read with the
+  declared `schemas.FACT_SCHEMA` and the store root as `basePath`: no
+  Spark job infers the schema from a parquet footer, and no other
+  quarter's directory is listed, so the read's cost stays flat as
+  history grows (at 100 TB, ~40 quarters x 3 statements, it touches
+  <1% of the store). Both predicates stay in the plan as
+  PartitionFilters.
 * **RAW statement store** — the RAW statement query
   (backend/main.py:163-177: sub ⋈_adsh pre ⋈_(adsh,tag,version) num)
   is run once per quarter at append time and its rows are written into
@@ -37,7 +40,8 @@ touches the session's conf, so no other query's writes change behaviour.
 
 Latest-quarter discovery reads the fact store's `source_file=`
 directory names through the root's Hadoop FileSystem: no Spark job and
-no data file opened, on local disk, HDFS and S3 alike.
+no data file opened, on local disk, HDFS and S3 alike. The statement
+read checks that its leaf exists through the same FileSystem call.
 """
 
 from __future__ import annotations
@@ -46,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dynaledger_spark.operators.facts import build_facts_single_pass
+from dynaledger_spark.schemas import FACT_SCHEMA
 
 # SecEngine's RAW projection (backend/main.py:163-177), over the
 # aliases of `raw_statement_join`
@@ -82,7 +87,15 @@ def append_quarter_facts(
 
 
 def read_facts(spark: SparkSession, root: str) -> DataFrame:
-    return spark.read.parquet(root)
+    return spark.read.schema(FACT_SCHEMA).parquet(root)
+
+
+def _existing_path(spark: SparkSession, path: str) -> tuple | None:
+    """`path` as a Hadoop Path with its FileSystem, or None when it does
+    not exist. A driver-side metadata call: no Spark job."""
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    return (fs, jpath) if fs.exists(jpath) else None
 
 
 def latest_fact_quarter(spark: SparkSession, root: str) -> str | None:
@@ -90,10 +103,10 @@ def latest_fact_quarter(spark: SparkSession, root: str) -> str | None:
     the max over the `source_file=` directory names under `root`, listed
     through the path's Hadoop FileSystem. Runs no Spark job and opens no
     fact file; None for a missing or empty root."""
-    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(root)
-    fs = path.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
-    if not fs.exists(path):
+    found = _existing_path(spark, root)
+    if found is None:
         return None
+    fs, path = found
     prefix = "source_file="
     names = (status.getPath().getName() for status in fs.listStatus(path) if status.isDirectory())
     return max((n[len(prefix):] for n in names if n.startswith(prefix)), default=None)
@@ -102,11 +115,24 @@ def latest_fact_quarter(spark: SparkSession, root: str) -> str | None:
 def statement_facts(
     spark: SparkSession, root: str, quarter: str, stmt: str
 ) -> DataFrame:
-    """The recurring dashboard read: one quarter, one statement. Both
-    predicates are partition filters — the scan prunes to one leaf
-    directory (asserted in tests/test_sec_backfill.py)."""
-    return read_facts(spark, root).where(
-        (F.col("source_file") == quarter) & (F.col("statement_type") == stmt)
+    """The recurring dashboard read: one quarter, one statement.
+
+    Only the `source_file=<quarter>/statement_type=<stmt>` leaf is
+    opened, with the declared FACT_SCHEMA and `root` as basePath, so
+    building the frame runs no schema-inference job and lists no other
+    partition: its cost stays flat as history grows. The where keeps
+    both predicates in the plan as PartitionFilters (asserted in
+    tests/test_sec_backfill.py). A leaf that does not exist (a quarter
+    never appended, a statement without rows) gives an empty frame with
+    the same columns."""
+    leaf = f"{root}/source_file={quarter}/statement_type={stmt}"
+    if _existing_path(spark, leaf) is None:
+        return spark.createDataFrame([], FACT_SCHEMA)
+    return (
+        spark.read.schema(FACT_SCHEMA)
+        .option("basePath", root)
+        .parquet(leaf)
+        .where((F.col("source_file") == quarter) & (F.col("statement_type") == stmt))
     )
 
 

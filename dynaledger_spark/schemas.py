@@ -98,12 +98,19 @@ DOC_SCHEMA = T.StructType(
     ]
 )
 
-# Fact-table schema (streamlit_app.py:142-156; models/fact_data_load/*.sql).
-FACT_COLUMNS = [
-    "adsh", "cik", "company_name", "filing_date", "fiscal_year", "fiscal_period",
-    "tag", "unit_of_measure", "report_date", "qtrs", "statement_type", "plabel",
-    "total_value",
-]
+# Fact store row (streamlit_app.py:142-156; models/fact_data_load/*.sql): the
+# 12 group columns and `total_value` of operators/facts.build_facts_single_pass,
+# with the partition columns `source_file` and `statement_type` last: the
+# order and types a parquet read of the store infers
+# (tests/test_sec_backfill.py pins the equality).
+FACT_SCHEMA = _struct(
+    [
+        ("adsh", S), ("cik", L), ("company_name", S), ("filing_date", L),
+        ("fiscal_year", L), ("fiscal_period", S), ("tag", S), ("unit_of_measure", S),
+        ("report_date", I), ("qtrs", L), ("plabel", S), ("total_value", D),
+        ("source_file", S), ("statement_type", S),
+    ]
+)
 
 SEC_SCHEMAS = {
     "sec_sub": SUB_SCHEMA,

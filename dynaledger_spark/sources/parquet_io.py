@@ -25,14 +25,17 @@ def write_partitioned(
 
     At 100 TB: one directory per quarter, scans with a `source_file`
     predicate read only that quarter's files (partition pruning).
-    `mode="append"` is the quarterly-accretion path (each quarter adds
-    its own partition directory; earlier quarters are never rewritten).
+    `mode="append"` is the quarterly-accretion path: a dynamic partition
+    overwrite, set as a write option, so each quarter replaces only its
+    own partition directory. Appending a quarter again replaces its rows
+    instead of adding a second copy, and other quarters are never
+    rewritten. The session's conf is not touched.
     """
-    (
-        df.write.mode(mode)
-        .partitionBy(partition_col)
-        .parquet(path, compression="snappy")
-    )
+    writer = df.write.partitionBy(partition_col)
+    if mode == "append":
+        writer = writer.option("partitionOverwriteMode", "dynamic")
+        mode = "overwrite"
+    writer.mode(mode).parquet(path, compression="snappy")
 
 
 def load_matched(

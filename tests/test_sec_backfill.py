@@ -11,6 +11,7 @@ module drives FOUR synthetic quarters through the full engine path —
     and the (source_file, stmt)-partitioned RAW statement store
         -> pruned single-scan statement read   (plan-pinned)
         -> DuckDB row parity, SecEngine RAW parity, safe re-runs
+    and a re-run of a quarter's typed append, which replaces its rows
 
 — so the partition layout, the accretion semantics, and the statement
 store are all proven on SEC-shaped data, not just on TPC-H tables.
@@ -35,6 +36,7 @@ from dynaledger_spark.operators.backfill import (
     statement_facts,
     statement_table,
 )
+from dynaledger_spark.schemas import FACT_SCHEMA
 from dynaledger_spark.sources.parquet_io import write_partitioned
 from dynaledger_spark.sources.tsv import extract_zip, ingest_quarter
 from tests.oracle_compare import compare
@@ -65,7 +67,7 @@ def backfill(spark, tmp_path_factory):
             typed["sec_num"], typed["sec_sub"], typed["sec_pre"], q, facts_root
         )
         append_quarter_bucketed(typed, suffix=_BKT)
-    yield {"facts": facts_root, "typed": typed_root}
+    yield {"facts": facts_root, "typed": typed_root, "root": root}
     drop_bucketed(spark, suffix=_BKT)
 
 
@@ -129,6 +131,39 @@ def test_latest_quarter_runs_no_spark_job(spark, backfill):
     )
     assert latest == "2024Q4"
     assert len(jobs) == 0
+
+
+def test_statement_facts_builds_without_a_job(spark, backfill):
+    """Building the fact read runs no Spark job: the schema is declared,
+    not inferred from a parquet footer, and only the one leaf is
+    listed, on the driver."""
+    df, jobs = _in_job_group(
+        spark, "test_statement_facts_builds_without_a_job",
+        lambda: statement_facts(spark, backfill["facts"], "2024Q2", "IS"),
+    )
+    assert df.columns == FACT_SCHEMA.fieldNames()
+    assert len(jobs) == 0
+
+
+def test_fact_schema_matches_written_store(spark, backfill):
+    """FACT_SCHEMA is what Spark infers from a store that
+    append_quarter_facts wrote, names and types in order: a change to
+    build_facts_single_pass fails here instead of being mis-read."""
+    inferred = spark.read.parquet(backfill["facts"]).schema
+    assert [(f.name, f.dataType) for f in inferred] == [
+        (f.name, f.dataType) for f in FACT_SCHEMA
+    ]
+
+
+@pytest.mark.parametrize(
+    "quarter, stmt", [("2023Q4", "BS"), ("2024Q2", "EQ")], ids=["quarter", "statement"]
+)
+def test_statement_facts_missing_leaf_is_empty(spark, backfill, quarter, stmt):
+    """A quarter never appended, or a statement without rows, has no
+    leaf directory: the read is an empty frame with the fact columns."""
+    df = statement_facts(spark, backfill["facts"], quarter, stmt)
+    assert df.schema == FACT_SCHEMA
+    assert df.count() == 0
 
 
 def test_statement_read_prunes_partitions(spark, backfill):
@@ -215,7 +250,8 @@ def test_statement_store_read_plan(spark, backfill):
 
 def test_refresh_spark_jobs(spark, backfill):
     """One dashboard refresh — latest quarter, the pruned fact read and
-    the RAW statement read — launches at most 5 Spark jobs."""
+    the RAW statement read — launches at most 4 Spark jobs: the fact read
+    infers no schema."""
 
     def refresh():
         latest = latest_fact_quarter(spark, backfill["facts"])
@@ -225,7 +261,7 @@ def test_refresh_spark_jobs(spark, backfill):
 
     (facts, raw), jobs = _in_job_group(spark, "test_refresh_spark_jobs", refresh)
     assert facts > 0 and raw > 0
-    assert 0 < len(jobs) <= 5, len(jobs)
+    assert 0 < len(jobs) <= 4, len(jobs)
 
 
 def _store_counts(spark):
@@ -331,3 +367,34 @@ def test_bucketed_statement_join_parity(spark, backfill, duck_typed):
         WHERE pre.stmt = 'IS' AND sub.source_file = '2024Q2'
     """
     compare(got, duck_typed, twin)
+
+
+def _typed_counts(spark, backfill):
+    return {
+        (t, r["source_file"]): r["count"]
+        for t, df in _typed(spark, backfill).items()
+        for r in df.groupBy("source_file").count().collect()
+    }
+
+
+def test_typed_rerun_append_replaces_only_its_quarter(spark, backfill):
+    """Ingesting a quarter's ZIP again and appending its typed tables a
+    second time replaces that quarter's partitions: every (table,
+    quarter) count is unchanged, the other quarters' files are not
+    rewritten, and the session's conf is left as it was."""
+    def other_quarters_files():
+        files = [f for df in _typed(spark, backfill).values() for f in df.inputFiles()]
+        return sorted(f for f in files if "source_file=2024Q2" not in f)
+
+    root = backfill["root"]
+    conf = _conf(spark)
+    before, others = _typed_counts(spark, backfill), other_quarters_files()
+    typed = ingest_quarter(
+        spark, extract_zip(str(root / "2024Q2.zip"), str(root / "rerun_ext_2024Q2")), "2024Q2"
+    )
+    for table in ("sec_sub", "sec_pre", "sec_num"):
+        write_partitioned(typed[table], os.path.join(backfill["typed"], table), mode="append")
+    assert {q for _, q in before} == set(QUARTERS)
+    assert _typed_counts(spark, backfill) == before
+    assert other_quarters_files() == others
+    assert _conf(spark) == conf
