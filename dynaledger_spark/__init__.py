@@ -15,7 +15,6 @@ Capability map (see SURVEY.md §2 for the operator inventory):
                 exact-decimal sums
   plans/      — the query registry behind __spark_entry__: lazy
                 (spark, sf_dir) builders that persist nothing
-  streaming/  — Structured Streaming ingest (Trigger.AvailableNow)
   api.py, http_service.py — SecEngine and its HTTP front end
 """
 

@@ -1,4 +1,4 @@
-"""Aggregation helpers shared by batch and streaming plans.
+"""Aggregation helpers shared by the query plans.
 
 The one that matters: exact, order-independent SUM over doubles so Spark's
 partial/final aggregation order can never change a result the DuckDB

@@ -89,10 +89,10 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     and Monetary (exact DECIMAL revenue sum), then report population and
     value per 3-digit RFM code.
 
-    Scoring is boundary-based, NOT a global NTILE (VERDICT r11 item 3,
-    the psm_stratified_att pattern): the interior quartile boundaries
-    of each dimension are computed once as a 1-row aggregate, rounded
-    to 4dp so both engines cut identically, broadcast back, and each
+    Scoring is boundary-based, NOT a global NTILE (VERDICT r11 item 3):
+    the interior quartile boundaries of each dimension are computed
+    once as a 1-row aggregate, rounded to 4dp so both engines cut
+    identically, broadcast back, and each
     customer is scored by counting boundaries below (recency ascending:
     best = most recent = 1) or above (frequency/monetary descending:
     best = highest = 1) their value — a scan-side expression with no

@@ -1,7 +1,7 @@
 """Training-data-pipeline queries, round 3: corpus curation operators.
 
-Beyond the round-1/2 surface (dedup families, text stats, sampling,
-streaming) these add the remaining steps of a production
+Beyond the round-1/2 surface (dedup families, text stats, sampling)
+these add the remaining steps of a production
 pretraining-data pipeline:
 
   * corpus scoring & filtering — TF-IDF top terms, Gopher-style

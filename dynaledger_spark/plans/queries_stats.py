@@ -525,8 +525,6 @@ def islands_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduced day-level rows on user_id and the final groupBy reuses that
     clustering. Pre-partitioning the raw events by user would make it
     one exchange but ship the full event stream — strictly worse.
-    Streaming twin: session_window with a 1-day gap
-    (stream_session_windows).
     """
     ev = _t(spark, sf_dir, "events")
     days = ev.select("user_id", F.to_date("ts").alias("d")).distinct()

@@ -64,7 +64,6 @@ def load_all() -> dict[str, QuerySpec]:
         queries_sampling,
         queries_sql_ext,
         queries_stats,
-        queries_streaming,
         queries_text,
         queries_timeseries,
         queries_mlprep,
@@ -75,7 +74,6 @@ def load_all() -> dict[str, QuerySpec]:
         queries_retrieval,
         queries_incremental,
         queries_tpch,
-        queries_experiment,
     )
 
     return dict(QUERY_REGISTRY)

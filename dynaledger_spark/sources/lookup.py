@@ -14,13 +14,13 @@ from pyspark.sql import functions as F
 from dynaledger_spark.schemas import TICKER_SCHEMA
 
 
-def load_ticker(spark: SparkSession, path: str, dedup: bool = True) -> DataFrame:
+def load_ticker(spark: SparkSession, path: str) -> DataFrame:
     """Headerless `symbol\\tcik` TSV → (symbol, cik) broadcast dimension."""
-    df = (
+    w = W.partitionBy("cik").orderBy("_row_id")
+    return (
         spark.read.csv(path, sep="\t", header=False, schema=TICKER_SCHEMA)
         .withColumn("_row_id", F.monotonically_increasing_id())
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select("symbol", "cik")
     )
-    if dedup:
-        w = W.partitionBy("cik").orderBy("_row_id")
-        df = df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
-    return df.select("symbol", "cik")

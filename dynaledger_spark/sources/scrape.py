@@ -159,7 +159,10 @@ def scrape_and_ingest(
 
     Composition of the acquisition utility above with the distributed
     ingest path (sources/tsv.py) — the full reference raw_data_flow_dag
-    shape minus the orchestrator.
+    shape minus the orchestrator. Rows are tagged `{year}Q{n}`, the
+    `source_file` every query and store filters on; `select_quarters`
+    keeps only links whose token is `Q{quarter}`, so that is the
+    selected link's quarter.
     """
     from dynaledger_spark.sources.tsv import extract_zip, ingest_quarter
 
@@ -168,6 +171,5 @@ def scrape_and_ingest(
     )
     if not zips:
         return {}
-    source_file = os.path.basename(zips[0])
     members = extract_zip(zips[0], os.path.join(work_dir, "extracted"))
-    return ingest_quarter(spark, members, source_file=source_file)
+    return ingest_quarter(spark, members, source_file=f"{year}Q{quarter}")

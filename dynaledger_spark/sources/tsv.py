@@ -56,7 +56,6 @@ def read_tsv(
     path: str,
     table: str,
     source_file: str,
-    with_row_id: bool = True,
 ) -> DataFrame:
     """Read one SEC TSV into its declared schema with coerce-to-null casts.
 
@@ -81,13 +80,10 @@ def read_tsv(
         return c.try_cast(f.dataType).alias(f.name)
 
     projected = [coerce(f) for f in data_cols] + [F.lit(source_file).alias("source_file")]
-    out = df.select(*projected)
-    if with_row_id:
-        # Ordinal within the scan: preserves "first row in file order"
-        # semantics for dedup/lookup joins. Monotonic per partition,
-        # globally ordered because partition ids are the high bits.
-        out = out.withColumn(ROW_ID, F.monotonically_increasing_id())
-    return out
+    # Ordinal within the scan: preserves "first row in file order"
+    # semantics for dedup/lookup joins. Monotonic per partition,
+    # globally ordered because partition ids are the high bits.
+    return df.select(*projected).withColumn(ROW_ID, F.monotonically_increasing_id())
 
 
 def ingest_quarter(

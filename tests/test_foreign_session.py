@@ -3,9 +3,9 @@
 The driver's harness (round-1 CORRECTNESS) constructs its own SparkSession
 without `spark.sql.legacy.parquet.nanosAsLong`, which made every query
 touching events.parquet (TIMESTAMP NANOS) die with PARQUET_TYPE_ILLEGAL.
-`catalog.read_table` / `streaming.events_stream` now set the conf
-defensively at call time. These tests simulate the foreign session by
-unsetting the conf on the live session before calling in.
+`catalog.read_table` now sets the conf defensively at call time. These
+tests simulate the foreign session by unsetting the conf on the live
+session before calling in.
 """
 
 from __future__ import annotations
@@ -37,14 +37,6 @@ def test_events_registry_query_under_foreign_session(bare_conf_spark, sf_dir):
     # dup_detection was one of the 14 round-1 driver errors.
     spec = load_all()["dup_detection"]
     spec.build(bare_conf_spark, sf_dir).collect()
-
-
-def test_events_stream_self_sufficient(bare_conf_spark, sf_dir):
-    from dynaledger_spark.streaming import events_stream
-
-    stream = events_stream(bare_conf_spark, sf_dir, glob="events.parquet")
-    assert stream.isStreaming
-    assert isinstance(stream.schema["ts"].dataType, T.TimestampType)
 
 
 def test_ntz_timestamp_queries_under_foreign_session(bare_conf_spark, sf_dir):
@@ -80,14 +72,3 @@ def test_non_utc_foreign_session_timezone_is_corrected(bare_conf_spark, sf_dir):
             assert got.replace(tzinfo=None) == want
     finally:
         bare_conf_spark.conf.set(tz_conf, old)
-
-
-def test_round10_timestamp_queries_under_foreign_session(bare_conf_spark, sf_dir):
-    """The round-10 forecasting/readout family derives calendar days
-    from the NTZ event timestamps (to_date over the normalized ts);
-    the same normalization guarantee must hold for them in a session
-    the library didn't build."""
-    reg = load_all()
-    for name in ("ar1_forecast", "forecast_backtest_mase", "sequential_test_readout"):
-        rows = reg[name].build(bare_conf_spark, sf_dir).collect()
-        assert rows, name

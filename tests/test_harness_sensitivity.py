@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 
 from dynaledger_spark.plans import (
     queries_approx,
-    queries_experiment,
     queries_graph,
     queries_mlprep,
     queries_quality,
@@ -78,13 +77,10 @@ PLAN_MUTATIONS = [
     ("link_prediction_common_neighbors", queries_mlprep, "_LP_DEG_CAP", 2),
     ("char_entropy_quality", queries_text, "_ENTROPY_KEEP", 2.0),
     ("quality_ensemble_gate", queries_quality, "_ENSEMBLE_MIN_VOTES", 2),
-    # round-10 batch 2: a moved Huber threshold and a shrunken feedback
-    # set are the classic silent-misconfig bugs for these two families
-    ("huber_mean_irls", queries_experiment, "_HUBER_C", 50.0),
+    # round-10: a shrunken feedback set and a dropped iteration are the
+    # classic silent-misconfig bugs for these two families
     ("rm3_query_expansion", queries_retrieval, "_RM3_FB_DOCS", 3),
-    # round-10 batch 3: a dropped iteration and a wrong stratum count
     ("textrank_keywords", queries_text, "_TR_ROUNDS", 2),
-    ("psm_stratified_att", queries_experiment, "_PSM_STRATA", 2),
 ]
 
 
@@ -241,15 +237,9 @@ RESULT_MUTATIONS = [
     ("unique_key_check", _inject_violation_row),
     ("anti_join_fk", _inject_violation_row),
     ("validation_summary", _int_off_by_one),
-    # round-10 batch 2
-    ("ips_offline_eval", _ulp_drift),
+    # round-10
     ("rendezvous_hash_shard", _int_off_by_one),
     ("rm3_query_expansion", _cross_row_value_swap),
-    ("ar1_forecast", _ulp_drift),
-    # round-10 batch 3
-    ("sequential_test_readout", _int_off_by_one),
-    ("forecast_backtest_mase", _ulp_drift),
-    ("ucb1_allocation", _rename_column),
     # round-12: the decimal-text money emit (both queries), the
     # boundary-scored RFM rewrite, the distributed round-robin rank,
     # and the collapsed prefix-filter oracle must all still be

@@ -325,29 +325,6 @@ def test_lttb_one_point_per_interior_bucket(spark, sf):
         assert (r["event_type"], r["bucket"] + 1) in buckets
 
 
-def test_session_windows_do_not_overlap(spark, sf):
-    """Per user, native session windows are disjoint and consecutive
-    sessions are separated by at least the 30-minute gap; event counts
-    reconcile with the table."""
-    from collections import defaultdict
-    import datetime as dt
-
-    rows = REGISTRY["stream_session_windows"].build(spark, sf).collect()
-    from dynaledger_spark.catalog import read_table
-
-    total = read_table(spark, sf, "events").count()
-    assert sum(r["n_events"] for r in rows) == total
-    by_user = defaultdict(list)
-    for r in rows:
-        by_user[r["user_id"]].append(r)
-    for user, sess in by_user.items():
-        sess.sort(key=lambda r: r["session_start"])
-        for a, b in zip(sess, sess[1:]):
-            assert b["session_start"] - a["session_last_event"] >= dt.timedelta(minutes=30)
-        for r in sess:
-            assert r["session_start"] <= r["session_last_event"]
-
-
 def test_zorder_buckets_are_local_in_both_dims(spark, sf):
     """Every Z-order bucket must span at most 1/16 of BOTH key ranges —
     the locality property that makes the layout prunable on either

@@ -28,21 +28,15 @@ def plan_of(df, mode: str = "formatted") -> str:
 
 @pytest.fixture(scope="module")
 def built(spark, sf_dir):
-    """Built (unexecuted) DataFrames of every registered batch query
-    (streaming queries execute eagerly; their plan is asserted
-    separately). Built ONCE per module — both the plan-text assertions
-    and the logical-plan lints read from here."""
-    out = {}
-    for name, spec in REGISTRY.items():
-        if name.startswith("stream_"):
-            continue
-        out[name] = spec.build(spark, sf_dir)
-    return out
+    """Built (unexecuted) DataFrames of every registered query. Built
+    ONCE per module — both the plan-text assertions and the
+    logical-plan lints read from here."""
+    return {name: spec.build(spark, sf_dir) for name, spec in REGISTRY.items()}
 
 
 @pytest.fixture(scope="module")
 def plans(built):
-    """Physical plan text of every registered batch query."""
+    """Physical plan text of every registered query."""
     return {name: plan_of(df) for name, df in built.items()}
 
 
@@ -82,16 +76,9 @@ def test_no_cartesian_products(plans):
         "isotonic_calibration_deciles",  # 10-row minimax non-equi joins
         "ab_power_analysis",  # 1-row × 1-row arm combine
         "tpch_q1_pricing_summary",  # 1-row broadcast of the shipdate anchor
-        "ab_srm_check",  # 2-row broadcast of the split configs
-        "beta_binomial_shrinkage",  # 1-row broadcast of the MoM prior
-        "ar1_forecast",  # 1-row broadcasts of stats/denominator/last-day scalars
         "rendezvous_hash_shard",  # 9-row broadcast of the shard ring
         "shard_round_robin",  # ≤1024-row bucket-offset inequality self-join (grid-sized)
         "rm3_query_expansion",  # 1-row corpus-stats + expansion-weight-sum broadcasts
-        "sequential_test_readout",  # 1-row min-date broadcast onto the days-sized rollup
-        "psm_stratified_att",  # 1-row boundary + 1-row ATT broadcasts
-        "ucb1_allocation",  # 1-row total-plays + 1-row best-arm broadcasts
-        "forecast_backtest_mase",  # 1-row naive-MAE scale broadcast onto 3 method rows
         "theil_sen_daily_trend",  # calendar-bounded |days|x|days| pair loop
         "schema_drift_report",  # 1-row × 1-row half-stats combine
         "freshness_lag_by_type",  # 1-row broadcast of the corpus watermark
@@ -531,8 +518,6 @@ GLOBAL_WINDOW_WHITELIST = {
     "ntile_acctbal_quartiles",
     # bounded: the rank window runs AFTER the top-10 limit (10 rows)
     "rm3_query_expansion",
-    # bounded: lag/prefix windows over the |days|-row daily revenue series
-    "forecast_backtest_mase",
 }
 
 

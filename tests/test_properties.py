@@ -1,8 +1,7 @@
 """Property-based tests (hypothesis): random-input invariants for the
 operators whose correctness rests on arithmetic we wrote ourselves rather
-than on Catalyst — custom stateful streaming, deterministic hash
-splitting, distributed quantile index math, and the engine-portable
-rolling fingerprint.
+than on Catalyst — deterministic hash splitting, distributed quantile
+index math, and the engine-portable rolling fingerprint.
 
 Each property runs a bounded number of examples against the shared Spark
 session (Spark round-trips dominate, so examples are few but adversarial:
@@ -141,96 +140,6 @@ def test_discrete_median_matches_numpy(spark, groups):
     for g, vals in groups.items():
         arr = np.sort(np.asarray(vals, dtype="float64"), kind="stable")
         assert got[g] == arr[(len(arr) - 1) // 2], (g, vals)
-
-
-# ---------------------------------------------------------------------------
-# streaming sessionization ≡ pure-python reference on random event sets
-# ---------------------------------------------------------------------------
-@settings(max_examples=4, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    events=st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=3),  # user_id
-            st.integers(min_value=0, max_value=6_000),  # seconds offset
-            st.integers(min_value=0, max_value=100),  # value
-        ),
-        min_size=1,
-        max_size=40,
-    )
-)
-def test_stream_sessionization_matches_reference(spark, tmp_path_factory, events):
-    """Drain a one-file stream through the applyInPandasWithState
-    sessionizer and compare against a transparent python sessionizer:
-    sessions close when gap > 10 min AND the end-of-drain watermark
-    (max event time) has passed session_end + gap; later sessions stay
-    open in state, exactly like a live stream."""
-    import datetime as dt
-    import shutil
-    import uuid
-
-    from dynaledger_spark.streaming import (
-        events_stream,
-        run_available_now,
-        sessionize_stream,
-    )
-    from pyspark.sql import types as T
-
-    gap_s = 600
-    base_us = 1_700_000_000_000_000  # fixed epoch anchor, micros
-    epoch = dt.datetime(1970, 1, 1)
-
-    def as_dt(us: int) -> dt.datetime:
-        return epoch + dt.timedelta(microseconds=us)
-
-    rows = [
-        (i, as_dt(base_us + sec * 1_000_000), uid, "e", float(val), "{}")
-        for i, (uid, sec, val) in enumerate(events)
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    landing = str(tmp_path_factory.mktemp("sess_prop"))
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
-        landing
-    )
-    stream = events_stream(spark, landing, schema=schema)
-    sessions = sessionize_stream(stream, gap="10 minutes")
-    got = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"], r["sum_value"])
-        for r in run_available_now(
-            sessions, f"p_{uuid.uuid4().hex[:8]}", output_mode="append"
-        ).collect()
-    }
-    shutil.rmtree(landing, ignore_errors=True)
-
-    # reference: per-user gap split; a session is emitted iff closed by
-    # the final watermark (= max event time over the whole drain)
-    max_us = max(base_us + sec * 1_000_000 for _, sec, _ in events)
-    want = set()
-    by_user: dict[int, list[tuple[int, float]]] = {}
-    for uid, sec, val in events:
-        by_user.setdefault(uid, []).append((base_us + sec * 1_000_000, float(val)))
-    for uid, evs in by_user.items():
-        evs.sort()
-        runs: list[list[tuple[int, float]]] = [[evs[0]]]
-        for ts, val in evs[1:]:
-            if ts - runs[-1][-1][0] > gap_s * 1_000_000:
-                runs.append([])
-            runs[-1].append((ts, val))
-        for run in runs:
-            start, end = run[0][0], run[-1][0]
-            if end + gap_s * 1_000_000 < max_us:  # closed by final watermark
-                want.add(
-                    (uid, as_dt(start), as_dt(end), len(run), sum(v for _, v in run))
-                )
-    assert got == want, (sorted(got), sorted(want))
 
 
 # ---------------------------------------------------------------------------
@@ -609,9 +518,7 @@ def _sessions_reference(offsets, gap_s=1800):
 )
 def test_session_window_gap_boundary(spark, offsets):
     """F.session_window merges at exactly the gap and splits only past
-    it — including duplicate timestamps, which must never split. Locks
-    the boundary semantics the stream_session_windows oracle encodes
-    with `>`."""
+    it — including duplicate timestamps, which must never split."""
     import datetime
 
     from pyspark.sql import functions as F

@@ -1,11 +1,10 @@
-"""Round-10 batch-2 operator tests: experimentation / decision-science
-ops (SRM, IPS/SNIPS, EB shrinkage, Huber IRLS, AR(1)), rendezvous
-sharding, and RM3 query expansion.
+"""Round-10 operator tests: rendezvous sharding, RM3 query expansion
+and TextRank keywords.
 
 Each operator gets a transparent python replay of the algorithm over
 the raw parquet (independent of the Spark plan AND the DuckDB oracle)
-plus the invariants the oracle cannot state directly (monotonicity,
-minimal movement, flag sensitivity). Non-vacuity is asserted inline and
+plus the invariants the oracle cannot state directly (minimal
+movement, exact integer iteration). Non-vacuity is asserted inline and
 globally by test_oracle_parity::test_no_vacuous_oracle_greens.
 """
 
@@ -21,184 +20,6 @@ import pytest
 from dynaledger_spark.plans.registry import load_all
 
 REGISTRY = load_all()
-
-_HA = 2654435761
-_M32 = 4294967296
-
-
-def _events(sf_dir: str) -> pd.DataFrame:
-    return pd.read_parquet(os.path.join(sf_dir, "events.parquet"))
-
-
-# ---------------------------------------------------------------------------
-# IPS / SNIPS
-# ---------------------------------------------------------------------------
-def test_ips_snips_replay(spark, sf_dir):
-    ev = _events(sf_dir)
-    n_ua = Counter(zip(ev.user_id, ev.event_type))
-    n_u = Counter(ev.user_id)
-    # group (user, action) counts per user in ONE pass — a per-user scan
-    # of all pairs is O(|users| x |pairs|) and quadratic at higher SFs
-    per_user_acts: defaultdict[object, list] = defaultdict(list)
-    for (uu, a), c in n_ua.items():
-        per_user_acts[uu].append((a, c))
-    modal = {}
-    for u, acts in per_user_acts.items():
-        acts.sort(key=lambda t: (-t[1], t[0]))
-        modal[u] = acts[0][0]
-
-    n_matched = 0
-    wr_sum = 0.0
-    w_sum = 0.0
-    for r in ev.itertuples(index=False):
-        target = (
-            modal[r.user_id]
-            if (r.event_id * _HA) % _M32 % 10 < 8
-            else "view"
-        )
-        if r.event_type != target:
-            continue
-        n_matched += 1
-        w = n_u[r.user_id] / n_ua[(r.user_id, r.event_type)]
-        rc = float(round(r.value * 100)) if r.event_type == "purchase" else 0.0
-        wr_sum += w * rc
-        w_sum += w
-
-    out = REGISTRY["ips_offline_eval"].build(spark, sf_dir).collect()
-    assert len(out) == 1
-    row = out[0]
-    n = len(ev)
-    assert row["n_events"] == n
-    assert row["n_matched"] == n_matched
-    assert row["match_rate"] == pytest.approx(n_matched / n, rel=1e-9)
-    assert row["ips_value"] == pytest.approx(wr_sum / n / 100.0, rel=1e-6)
-    assert row["snips_value"] == pytest.approx(wr_sum / w_sum / 100.0, rel=1e-6)
-    # the epsilon arm must actually engage, else SNIPS == IPS by the
-    # deterministic-policy identity and the second estimator is vacuous
-    assert row["ips_value"] != row["snips_value"]
-
-
-# ---------------------------------------------------------------------------
-# Huber IRLS
-# ---------------------------------------------------------------------------
-def test_huber_irls_replay_and_outlier_effect(spark, sf_dir):
-    from dynaledger_spark.plans.queries_experiment import _HUBER_C as C
-
-    ev = _events(sf_dir)
-    groups = defaultdict(list)
-    for r in ev.itertuples(index=False):
-        groups[r.event_type].append(round(r.value * 100) / 100.0)
-
-    got = {
-        r["event_type"]: r
-        for r in REGISTRY["huber_mean_irls"].build(spark, sf_dir).collect()
-    }
-    assert set(got) == set(groups)
-
-    any_downweighted = False
-    for et, xs in groups.items():
-        m = sum(xs) / len(xs)
-        m_plain = m
-        for _ in range(3):
-            ws = [1.0 if abs(x - m) <= C else C / abs(x - m) for x in xs]
-            m = sum(w * x for w, x in zip(ws, xs)) / sum(ws)
-        n_down = sum(1 for x in xs if abs(x - m) > C)
-        r = got[et]
-        assert r["n"] == len(xs)
-        assert r["mean_plain"] == pytest.approx(m_plain, rel=1e-8)
-        assert r["huber_mean"] == pytest.approx(m, rel=1e-8)
-        assert r["n_downweighted"] == n_down
-        if n_down > 0:
-            any_downweighted = True
-            # the robust center must actually move off the plain mean
-            assert r["huber_mean"] != r["mean_plain"]
-        else:
-            # no outliers -> IRLS is a fixed point at the mean
-            assert r["huber_mean"] == pytest.approx(r["mean_plain"], abs=1e-9)
-    assert any_downweighted, (
-        f"tune _HUBER_C={C}: no segment has outliers at this SF — the "
-        "robustness claim is vacuous"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Beta-binomial empirical-Bayes shrinkage
-# ---------------------------------------------------------------------------
-def test_beta_binomial_replay_and_shrinkage_direction(spark, sf_dir):
-    ev = _events(sf_dir)
-    per_user = ev.groupby("user_id").agg(
-        trials=("event_id", "size"),
-        conversions=("event_type", lambda s: int((s == "purchase").sum())),
-    )
-    rates = per_user.conversions / per_user.trials
-    m1 = rates.mean()
-    m2 = (rates * rates).mean()
-    v = m2 - m1 * m1
-    assert v > 0, "degenerate prior at this SF — shrinkage untestable"
-    common = m1 * (1 - m1) / v - 1
-    alpha, beta = m1 * common, (1 - m1) * common
-    assert alpha > 0 and beta > 0
-    prior_mean = alpha / (alpha + beta)
-
-    out = REGISTRY["beta_binomial_shrinkage"].build(spark, sf_dir).collect()
-    assert len(out) == len(per_user)
-    for r in out:
-        t, c = per_user.loc[r["user_id"], ["trials", "conversions"]]
-        want = (c + alpha) / (t + alpha + beta)
-        assert r["trials"] == t and r["conversions"] == c
-        assert r["shrunk_rate"] == pytest.approx(want, rel=1e-6)
-        # shrinkage moves every estimate TOWARD the prior mean, never past it
-        raw = c / t
-        lo, hi = sorted((raw, prior_mean))
-        assert lo - 1e-9 <= r["shrunk_rate"] <= hi + 1e-9
-        # and never degenerates to the prior (evidence must count)
-        if abs(raw - prior_mean) > 1e-6:
-            assert abs(r["shrunk_rate"] - prior_mean) > 0
-
-
-# ---------------------------------------------------------------------------
-# AR(1) Yule-Walker
-# ---------------------------------------------------------------------------
-def test_ar1_forecast_replay(spark, sf_dir):
-    ev = _events(sf_dir)
-    p = ev[ev.event_type == "purchase"].copy()
-    p["day"] = p.ts.dt.date
-    p["cents"] = (p.value * 100).round().astype("int64")
-    daily = p.groupby("day").cents.sum().sort_index()
-    n, s = len(daily), int(daily.sum())
-    dn = {d: n * int(c) - s for d, c in daily.items()}
-    d2 = sum(v * v for v in dn.values())
-    pairs = [
-        (d, prev)
-        for d, prev in (
-            (d, d - pd.Timedelta(days=1).to_pytimedelta()) for d in dn
-        )
-        if prev in dn
-    ]
-    d1 = sum(dn[d] * dn[prev] for d, prev in pairs)
-    phi = d1 / d2
-    mu = s / n
-    sse = sum(
-        ((daily[d] - mu) - phi * (daily[prev] - mu)) ** 2 for d, prev in pairs
-    )
-    last = daily.iloc[-1]
-
-    out = REGISTRY["ar1_forecast"].build(spark, sf_dir).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r["n_days"] == n
-    assert r["n_pairs"] == len(pairs)
-    assert len(pairs) > 5, "too few consecutive-day pairs for a meaningful fit"
-    assert r["phi"] == pytest.approx(phi, rel=1e-6)
-    assert abs(r["phi"]) < 1.0, "AR(1) fit must be stationary on this data"
-    assert r["mu_value"] == pytest.approx(mu / 100, rel=1e-9)
-    assert r["last_value"] == pytest.approx(last / 100, rel=1e-9)
-    assert r["forecast_value"] == pytest.approx(
-        (mu + phi * (last - mu)) / 100, rel=1e-6
-    )
-    assert r["rmse_value"] == pytest.approx(
-        (sse / len(pairs)) ** 0.5 / 100, rel=1e-6
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -236,36 +57,6 @@ def test_rendezvous_replay_and_minimal_movement(spark, sf_dir):
     # ~1/9 of docs move; allow wide slack at tiny SFs but pin the order
     # of magnitude (mod-sharding would move ~8/9)
     assert 0 < moved / total < 3 / 9
-
-
-# ---------------------------------------------------------------------------
-# SRM
-# ---------------------------------------------------------------------------
-def test_srm_replay_and_sensitivity(spark, sf_dir):
-    ev = _events(sf_dir)
-    users = sorted(set(int(u) for u in ev.user_id))
-
-    def chi2(n_a: int, n: int, pct_a: int) -> float:
-        ea, eb = n * pct_a / 100, n * (100 - pct_a) / 100
-        nb = n - n_a
-        return (n_a - ea) ** 2 / ea + (nb - eb) ** 2 / eb
-
-    got = {r["split_name"]: r for r in REGISTRY["ab_srm_check"].build(spark, sf_dir).collect()}
-    assert set(got) == {"50_50", "90_10"}
-    for name, pct in (("50_50", 50), ("90_10", 90)):
-        n_a = sum(1 for u in users if (u * _HA) % _M32 % 100 < pct)
-        r = got[name]
-        assert r["n_units"] == len(users)
-        assert r["n_a"] == n_a
-        want = chi2(n_a, len(users), pct)
-        assert r["chi2"] == pytest.approx(want, abs=1e-8)  # output rounds at 9
-        assert r["srm_flag"] == (want > 3.841)
-
-    # sensitivity: scoring the 90/10 assignment against a mis-configured
-    # 50/50 expectation must trip the flag — the exact bug SRM exists to
-    # catch (config says 50/50, randomizer does 90/10)
-    n_a_biased = sum(1 for u in users if (u * _HA) % _M32 % 100 < 90)
-    assert chi2(n_a_biased, len(users), 50) > 3.841
 
 
 # ---------------------------------------------------------------------------
@@ -349,169 +140,8 @@ def test_rm3_full_replay(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Batch 3: sequential readout / stratified ATT / UCB1 / forecast / TextRank
+# TextRank
 # ---------------------------------------------------------------------------
-def test_sequential_readout_replay(spark, sf_dir):
-    from dynaledger_spark.plans.queries_experiment import _OF_BOUNDS, _OF_CUTS
-
-    ev = _events(sf_dir)
-    d0 = ev.ts.dt.date.min()
-    rows = [
-        (
-            (r.ts.date() - d0).days,
-            1 if (r.user_id * _HA) % _M32 % 100 < 50 else 0,
-            1 if r.event_type == "purchase" else 0,
-        )
-        for r in ev.itertuples(index=False)
-    ]
-    got = {r["look"]: r for r in REGISTRY["sequential_test_readout"].build(spark, sf_dir).collect()}
-    assert set(got) == {1, 2, 3, 4}
-    prev_n = 0
-    for k, (cut, bound) in enumerate(zip(_OF_CUTS, _OF_BOUNDS), start=1):
-        sel = [(a, c) for d, a, c in rows if d < cut]
-        na = sum(1 for a, _ in sel if a == 1)
-        nb = len(sel) - na
-        xa = sum(c for a, c in sel if a == 1)
-        xb = sum(c for a, c in sel if a == 0)
-        p = (xa + xb) / (na + nb)
-        z = (xa / na - xb / nb) / (p * (1 - p) * (1 / na + 1 / nb)) ** 0.5
-        r = got[k]
-        assert (r["n_a"], r["n_b"], r["conv_a"], r["conv_b"]) == (na, nb, xa, xb)
-        assert r["z"] == pytest.approx(z, abs=1e-8)
-        assert r["of_bound"] == bound
-        assert r["crossed"] == (abs(z) > bound)
-        # looks are cumulative
-        assert na + nb >= prev_n
-        prev_n = na + nb
-    # look 4 covers the whole log
-    assert got[4]["n_a"] + got[4]["n_b"] == len(rows)
-    # OF bounds tighten monotonically (early stopping is expensive)
-    assert list(_OF_BOUNDS) == sorted(_OF_BOUNDS, reverse=True)
-
-
-def _quantile_cont(xs, p):
-    """SQL quantile_cont / Spark percentile: linear interpolation at
-    rank p*(n-1) over the sorted values."""
-    idx = p * (len(xs) - 1)
-    lo = int(idx)
-    frac = idx - lo
-    hi = min(lo + 1, len(xs) - 1)
-    return xs[lo] + frac * (xs[hi] - xs[lo])
-
-
-def test_psm_stratified_att_replay(spark, sf_dir):
-    from dynaledger_spark.plans.queries_experiment import (
-        _PSM_STRATA,
-        _psm_cut_fracs,
-    )
-
-    ev = _events(sf_dir)
-    per = {}
-    for r in ev.itertuples(index=False):
-        t, c = per.get(r.user_id, (0, 0))
-        per[r.user_id] = (t + 1, c + round(r.value * 100))
-    # boundary-based stratification (no global NTILE): interior quantile
-    # boundaries of trials, rounded 4dp, strict-less assignment
-    xs = sorted(t for t, _ in per.values())
-    bs = [round(_quantile_cont(xs, f), 4) for f in _psm_cut_fracs(_PSM_STRATA)]
-    stratum = {u: 1 + sum(1 for b in bs if b < t) for u, (t, _) in per.items()}
-    treated = {u: 1 if (u * _HA) % _M32 % 100 < 50 else 0 for u in per}
-    cells = defaultdict(lambda: [[], []])  # stratum -> [control ys, treated ys]
-    for u, (t, c) in per.items():
-        cells[stratum[u]][treated[u]].append(c / t / 100.0)
-
-    got = {r["stratum"]: r for r in REGISTRY["psm_stratified_att"].build(spark, sf_dir).collect()}
-    assert set(got) == set(cells), "strata present must match the replay"
-    # assignment is monotone in trials: a lighter user never lands in a
-    # heavier stratum
-    assert all(
-        stratum[u] <= stratum[v]
-        for u, v in zip(sorted(per, key=lambda u: per[u][0])[:-1],
-                        sorted(per, key=lambda u: per[u][0])[1:])
-    )
-    diffs, weights = [], []
-    for s, (ctrl, trt) in sorted(cells.items()):
-        r = got[s]
-        assert r["n_treated"] == len(trt) and r["n_control"] == len(ctrl)
-        if trt and ctrl:
-            d = sum(trt) / len(trt) - sum(ctrl) / len(ctrl)
-            assert r["diff"] == pytest.approx(d, abs=1e-7)
-            diffs.append(d * len(trt))
-            weights.append(len(trt))
-        else:
-            assert r["diff"] is None
-    assert weights, "no stratum has both arms — ATT untestable at this SF"
-    att = sum(diffs) / sum(weights)
-    for r in got.values():
-        assert r["att"] == pytest.approx(att, abs=1e-7)
-    # multiple strata must actually engage, else the adjustment is vacuous
-    assert len(got) >= 2
-
-
-def test_ucb1_replay_and_exploration_property(spark, sf_dir):
-    import math
-
-    from dynaledger_spark.plans.queries_experiment import _UCB_REWARD_SCALE
-
-    ev = _events(sf_dir)
-    arms = defaultdict(lambda: [0, 0])
-    for r in ev.itertuples(index=False):
-        arms[r.event_type][0] += 1
-        arms[r.event_type][1] += round(r.value * 100)
-    n_total = sum(v[0] for v in arms.values())
-    ucb = {
-        a: c / n / _UCB_REWARD_SCALE + math.sqrt(2 * math.log(n_total) / n)
-        for a, (n, c) in arms.items()
-    }
-    # unique argmax with the plan's tie-break: (ucb desc, event_type asc)
-    best = min(ucb, key=lambda a: (-ucb[a], a))
-
-    got = {r["event_type"]: r for r in REGISTRY["ucb1_allocation"].build(spark, sf_dir).collect()}
-    assert set(got) == set(arms)
-    pulls = [a for a, r in got.items() if r["next_pull"]]
-    assert pulls == [best]
-    for a, r in got.items():
-        n, c = arms[a]
-        assert r["n_plays"] == n
-        assert r["mean_reward"] == pytest.approx(c / n / 100.0, abs=1e-8)
-        assert r["ucb_score"] == pytest.approx(ucb[a], abs=1e-8)
-        # the exploration bonus is strictly positive: UCB > empirical mean
-        assert r["ucb_score"] > c / n / _UCB_REWARD_SCALE
-
-
-def test_forecast_backtest_replay(spark, sf_dir):
-    ev = _events(sf_dir)
-    p = ev[ev.event_type == "purchase"].copy()
-    p["day"] = p.ts.dt.date
-    daily = (
-        p.assign(cents=(p.value * 100).round().astype("int64"))
-        .groupby("day")
-        .cents.sum()
-        .sort_index()
-    )
-    y = list(daily)
-    n = len(y)
-    assert n > 10
-    idx = range(7, n)
-    mae_naive = sum(abs(y[i] - y[i - 1]) for i in idx) / len(idx)
-    mae_snaive = sum(abs(y[i] - y[i - 7]) for i in idx) / len(idx)
-    mae_exp = sum(abs(y[i] - sum(y[:i]) / i) for i in idx) / len(idx)
-
-    got = {r["method"]: r for r in REGISTRY["forecast_backtest_mase"].build(spark, sf_dir).collect()}
-    assert set(got) == {"naive", "seasonal_naive_7", "expanding_mean"}
-    for m, mae in (
-        ("naive", mae_naive),
-        ("seasonal_naive_7", mae_snaive),
-        ("expanding_mean", mae_exp),
-    ):
-        r = got[m]
-        assert r["n_eval"] == len(idx)
-        assert r["mae_value"] == pytest.approx(mae / 100.0, rel=1e-6)
-        assert r["mase"] == pytest.approx(mae / mae_naive, rel=1e-6)
-    # MASE of naive against itself is 1 by definition — the scale sanity
-    assert got["naive"]["mase"] == pytest.approx(1.0, abs=1e-9)
-
-
 def test_textrank_exact_integer_replay(spark, sf_dir):
     """The fixed-point iteration is EXACT integer arithmetic — the
     python replay must match tr_fixed to the last digit, top-20 order

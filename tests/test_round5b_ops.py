@@ -516,13 +516,6 @@ def test_ks_two_sample_vs_brute_force(spark, sf_dir):
     assert r.crit_05 > 0
 
 
-def test_stream_anomaly_zscore_flags_3sigma(spark, sf_dir):
-    got = rows(spark, sf_dir, "stream_anomaly_zscore")
-    assert got, "3-sigma outliers exist in the synthetic value mix"
-    for r in got:
-        assert abs(r.z) > 3.0
-
-
 def test_ab_ztest_vs_brute_force(spark, sf_dir):
     from dynaledger_spark.catalog import read_table
 

@@ -13,6 +13,7 @@ import zipfile
 
 import pytest
 
+from dynaledger_spark.api import SecEngine
 from dynaledger_spark.sources.scrape import (
     ZipLink,
     download_quarterly_data,
@@ -125,5 +126,11 @@ def test_scrape_to_typed_tables_end_to_end(spark, tmp_path):
     sub = tables["sec_sub"]
     assert dict(sub.dtypes)["cik"] == "bigint"
     assert sub.count() == 5
-    # source_file tag carries the landed archive name
-    assert sub.select("source_file").distinct().collect()[0][0] == "2023_Q1.zip"
+    # every row carries the warehouse's quarter tag, so the scraped
+    # quarter answers the engine's queries
+    assert sub.select("source_file").distinct().collect()[0][0] == "2023Q1"
+    eng = SecEngine(spark)
+    for name, df in tables.items():
+        eng.register(name, df)
+    assert eng.check_availability(2023, "Q1") == {"available": True}
+    assert eng.get_financial_data(2023, "Q1", "Balance Sheet", "RAW")["data"]

@@ -18,8 +18,7 @@ import importlib, json, pkgutil, sys
 import dynaledger_spark.sources as sources
 mods = [
     "api", "http_service", "operators.backfill", "operators.documents",
-    "operators.facts", "functions.validation", "streaming.sec_ingest",
-    "catalog",
+    "operators.facts", "functions.validation", "catalog",
 ] + ["sources." + m.name for m in pkgutil.iter_modules(sources.__path__)]
 for m in mods:
     importlib.import_module("dynaledger_spark." + m)
