@@ -39,7 +39,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dynaledger_spark.functions.sanitize import sanitize_floats
+from dynaledger_spark.functions.sanitize import sanitize_floats, sanitize_value
 from dynaledger_spark.operators.backfill import RAW_COLUMNS, raw_statement_join
 
 # data_type → pre.stmt code for RAW queries (backend/main.py:156-160).
@@ -206,11 +206,15 @@ class SecEngine:
 
 
 def describe_table(name: str, df: DataFrame) -> dict:
-    """A table's name, column types and up to 3 sample rows."""
+    """A table's name, column types and up to 3 sample rows. Nested rows
+    become objects with their field names, and NaN/±Inf at any depth
+    become null, so the reply is strict JSON."""
     return {
         "name": name,
         "columns": [
             {"name": f.name, "type": f.dataType.simpleString()} for f in df.schema.fields
         ],
-        "sample_data": [r.asDict() for r in df.limit(3).collect()],
+        "sample_data": [
+            sanitize_value(r.asDict(recursive=True)) for r in df.limit(3).collect()
+        ],
     }

@@ -8,6 +8,8 @@ the serialization loop.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -28,3 +30,15 @@ def sanitize_floats(df: DataFrame) -> DataFrame:
             cols.append(F.col(field.name))
     return df.select(*cols)
 
+
+def sanitize_value(value):
+    """A collected value with NaN/±Inf floats → None at any depth of
+    dicts and lists (nested rows read with `asDict(recursive=True)`),
+    for the few rows that are not worth a plan-level projection."""
+    if isinstance(value, float):
+        return value if math.isfinite(value) else None
+    if isinstance(value, dict):
+        return {k: sanitize_value(v) for k, v in value.items()}
+    if isinstance(value, list):
+        return [sanitize_value(v) for v in value]
+    return value

@@ -20,8 +20,12 @@ from dataclasses import dataclass
 from functools import reduce
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from dynaledger_spark.schemas import empty_frame
+from dynaledger_spark.sources.parquet_io import PARQUET_CODEC
 
 
 @dataclass
@@ -163,45 +167,75 @@ def sec_checks() -> list[Check]:
     return c
 
 
+_SUMMARY_SCHEMA = T.StructType(
+    [
+        T.StructField("rule", T.StringType()),
+        T.StructField("table", T.StringType()),
+        T.StructField("n_violations", T.LongType()),
+        T.StructField("severity", T.StringType()),
+    ]
+)
+
+
+def _summary_row(i: int, check: Check, n_violations: Column, *extra: Column) -> Column:
+    """One summary row as a struct, `i` (its place in the suite) first."""
+    return F.struct(
+        F.lit(i).alias("i"),
+        F.lit(check.name).alias("rule"),
+        F.lit(check.table).alias("table"),
+        n_violations.alias("n_violations"),
+        F.lit(check.severity).alias("severity"),
+        *extra,
+    )
+
+
+def _summary(
+    spark: SparkSession,
+    parts: list[tuple[DataFrame, list[Column]]],
+    schema: T.StructType,
+) -> DataFrame:
+    """The summary rows that the parts' aggregates give, in `i` order, as
+    one plan: each part aggregates its frame to one array of
+    `_summary_row` structs, and the arrays are unioned and inlined.
+    Nothing is collected here and no Python row reaches Spark, so the
+    caller's one collect runs the suite and starts no Python worker."""
+    if not parts:
+        return empty_frame(spark, schema)
+    arrays = [frame.agg(F.array(*rows).alias("rows")) for frame, rows in parts]
+    return (
+        reduce(DataFrame.union, arrays)
+        .select(F.inline("rows"))
+        .coalesce(1)
+        .sortWithinPartitions("i")
+        .drop("i")
+    )
+
+
 def run_checks(tables: dict[str, DataFrame], checks: list[Check]) -> DataFrame:
     """Evaluate checks → one summary DataFrame (rule, table, n_violations,
     severity), one row per check in `checks` order. Warn-severity: callers
     report, never raise.
 
-    The suite runs as a single Spark action. The row checks of one table
-    become ``count_if(bad)`` columns of one aggregate over that table (one
-    scan, however many rules); each other check (unique key, foreign key)
-    counts its violations frame to one row. The parts are unioned and
-    collected once, and the summary is built from the collected counts.
-    ``count_if`` counts 0 over an empty table, where ``SUM(CASE …)`` gives
-    NULL.
+    The suite runs as a single Spark action, when the summary is
+    collected. The row checks of one table become ``count_if(bad)``
+    fields of one aggregate over that table (one scan, however many
+    rules); each other check (unique key, foreign key) counts its
+    violations frame to one row. The parts are unioned into the summary
+    inside the plan (`_summary`). ``count_if`` counts 0 over an empty
+    table, where ``SUM(CASE …)`` gives NULL.
     """
     spark = next(iter(tables.values())).sparkSession
-    # (indexes into `checks`, frame, one count column per index)
-    parts: list[tuple[list[int], DataFrame, list[Column]]] = []
+    parts: list[tuple[DataFrame, list[Column]]] = []
     row_checks: dict[str, list[int]] = {}
     for i, check in enumerate(checks):
         if check.bad is None:
-            parts.append(([i], check.build(tables), [F.count(F.lit(1))]))
+            parts.append((check.build(tables), [_summary_row(i, check, F.count(F.lit(1)))]))
         else:
             row_checks.setdefault(check.table, []).append(i)
     for table, idx in row_checks.items():
-        parts.append((idx, tables[table], [F.count_if(checks[i].bad) for i in idx]))
-
-    n_violations: dict[int, int] = {}
-    if parts:
-        counted = [
-            frame.agg(F.lit(p).alias("part"), F.array(*counts).alias("n"))
-            for p, (_, frame, counts) in enumerate(parts)
-        ]
-        for row in reduce(DataFrame.union, counted).collect():
-            n_violations.update(zip(parts[row.part][0], row.n))
-    rows = [
-        (c.name, c.table, n_violations[i], c.severity) for i, c in enumerate(checks)
-    ]
-    return spark.createDataFrame(
-        rows, "rule string, table string, n_violations long, severity string"
-    )
+        rows = [_summary_row(i, checks[i], F.count_if(checks[i].bad)) for i in idx]
+        parts.append((tables[table], rows))
+    return _summary(spark, parts, _SUMMARY_SCHEMA)
 
 
 def store_failures(
@@ -220,21 +254,18 @@ def store_failures(
     ``failures_path`` column pointing at each audit table.
 
     Scale note: one write job per check, each a single scan + filter (or
-    agg for unique/FK), plus a count of what it wrote. Use it for an audit
-    pass; `run_checks` gives the same counts in one action.
+    agg for unique/FK); collecting the summary counts what they wrote in
+    one action. Use it for an audit pass; `run_checks` gives the same
+    counts in one action without writing.
     """
     import os
 
     spark = next(iter(tables.values())).sparkSession
-    rows = []
-    for check in checks:
+    parts: list[tuple[DataFrame, list[Column]]] = []
+    for i, check in enumerate(checks):
         path = os.path.join(out_dir, check.name.replace(".", "__"))
-        violations = check.build(tables)
-        violations.write.mode("overwrite").parquet(path)
-        n = spark.read.parquet(path).count()
-        rows.append((check.name, check.table, n, check.severity, path))
-    return spark.createDataFrame(
-        rows,
-        "rule string, table string, n_violations long, severity string, "
-        "failures_path string",
-    )
+        check.build(tables).write.mode("overwrite").parquet(path, compression=PARQUET_CODEC)
+        row = _summary_row(i, check, F.count(F.lit(1)), F.lit(path).alias("failures_path"))
+        parts.append((spark.read.parquet(path), [row]))
+    schema = T.StructType([*_SUMMARY_SCHEMA, T.StructField("failures_path", T.StringType())])
+    return _summary(spark, parts, schema)

@@ -29,6 +29,11 @@ recurring (quarter, statement) read:
   read filters. The table keeps SecEngine's 16-column RAW projection
   plus `stmt`, and both build the join through `raw_statement_join`.
 
+Both stores are zstd parquet (`parquet_io.PARQUET_CODEC`). Each names
+the codec itself — the fact write as a write option, the statement
+table as a table option — so a session whose default codec differs
+still writes the same files.
+
 Re-running a quarter is safe in both stores: each write is a dynamic
 partition overwrite, so a re-run replaces only the partitions it writes
 and leaves every other quarter untouched. The fact write passes
@@ -50,7 +55,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dynaledger_spark.operators.facts import build_facts_single_pass
-from dynaledger_spark.schemas import FACT_SCHEMA
+from dynaledger_spark.schemas import FACT_SCHEMA, empty_frame
+from dynaledger_spark.sources.parquet_io import PARQUET_CODEC
 
 # SecEngine's RAW projection (backend/main.py:163-177), over the
 # aliases of `raw_statement_join`
@@ -82,7 +88,7 @@ def append_quarter_facts(
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("source_file", "statement_type")
-        .parquet(root, compression="snappy")
+        .parquet(root, compression=PARQUET_CODEC)
     )
 
 
@@ -127,7 +133,7 @@ def statement_facts(
     the same columns."""
     leaf = f"{root}/source_file={quarter}/statement_type={stmt}"
     if _existing_path(spark, leaf) is None:
-        return spark.createDataFrame([], FACT_SCHEMA)
+        return empty_frame(spark, FACT_SCHEMA)
     return (
         spark.read.schema(FACT_SCHEMA)
         .option("basePath", root)
@@ -164,7 +170,8 @@ def append_quarter_bucketed(typed: dict[str, DataFrame], suffix: str = "bkt") ->
     its `source_file` column. The join runs once here; its rows land in
     `(source_file, stmt)` partitions of `statement_table(suffix)`,
     replacing only those partitions if the quarter was appended before
-    (dynamic partition overwrite, set as a table option)."""
+    (dynamic partition overwrite, set as a table option, as is the
+    codec)."""
     rows = raw_statement_join(typed["sec_sub"], typed["sec_pre"], typed["sec_num"]).select(
         *RAW_COLUMNS, "s.source_file", "p.stmt"
     )
@@ -173,7 +180,7 @@ def append_quarter_bucketed(typed: dict[str, DataFrame], suffix: str = "bkt") ->
     rows.sparkSession.sql(
         f"CREATE TABLE IF NOT EXISTS {name} ({columns}) USING parquet "
         "PARTITIONED BY (source_file, stmt) "
-        "OPTIONS ('partitionOverwriteMode' = 'dynamic')"
+        f"OPTIONS ('partitionOverwriteMode' = 'dynamic', 'compression' = '{PARQUET_CODEC}')"
     )
     rows.write.insertInto(name, overwrite=True)
 

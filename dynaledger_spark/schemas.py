@@ -10,7 +10,18 @@ actually loads), boolean-ish flags as IntegerType 0/1.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """An empty frame of `schema` (every field nullable), planned as an
+    empty range: no Python rows reach Spark, so collecting it starts no
+    Python worker, unlike `spark.createDataFrame([], schema)`."""
+    return spark.range(0).select(
+        *(F.lit(None).cast(f.dataType).alias(f.name) for f in schema)
+    )
 
 
 def _struct(cols: list[tuple[str, T.DataType]], nullable: bool = True) -> T.StructType:

@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from dynaledger_spark.sources.parquet_io import PARQUET_CODEC
+
 
 def _default_driver_mem() -> str:
     """Half of physical memory, between 1g and 48g. The JVM grows its heap
@@ -53,7 +55,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "snappy")
+        .config("spark.sql.parquet.compression.codec", PARQUET_CODEC)
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),

@@ -4,7 +4,8 @@ Reference behavior being re-expressed:
   * zip_ext_and_parq_store.py:161-217 — extract {sub,pre,tag,num}.txt from a
     quarterly ZIP, read tab-separated with pandas, coerce every column
     through a type map with errors='coerce' (bad cell → null), add a
-    `source_file` tag, write snappy parquet.
+    `source_file` tag, write snappy parquet (here: zstd,
+    `parquet_io.PARQUET_CODEC`).
   * Chunked reads (CHUNK_SIZE=1e6, ext_zip_convert_into_json_store.py:19)
     exist only to bound pandas memory — Spark's partitioned scan makes
     them unnecessary.

@@ -2,15 +2,18 @@
 orphan FKs, duplicate keys, bad dates, NaN values, missing ticker ciks —
 the violations the reference's dbt tests exist to catch — plus
 ``build_quarter_zip``, a seeded generator of whole quarter ZIPs at any
-size for the ingest and backfill tests."""
+size for the ingest and backfill tests, and ``parquet_codecs``, which
+reads the codecs a written store's files declare."""
 
 from __future__ import annotations
 
 import os
 import zipfile
+from urllib.parse import urlparse
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 
 from dynaledger_spark.schemas import SEC_SCHEMAS
 
@@ -145,6 +148,26 @@ def write_fixtures(out_dir: str) -> dict[str, str]:
     pd.DataFrame(ticker_rows()).to_csv(tick, sep="\t", index=False, header=False)
     paths["ticker"] = tick
     return paths
+
+
+def parquet_codecs(files) -> set[str]:
+    """Every codec the column chunks of the parquet `files` (paths or
+    `file:` URIs) declare in their footers."""
+    codecs = set()
+    for f in files:
+        meta = pq.ParquetFile(urlparse(f).path).metadata
+        for g in range(meta.num_row_groups):
+            group = meta.row_group(g)
+            codecs.update(group.column(c).compression for c in range(group.num_columns))
+    return codecs
+
+
+def parquet_files(root: str) -> list[str]:
+    """The parquet data files under `root`, at any depth."""
+    return [
+        os.path.join(d, f) for d, _, names in os.walk(root) for f in names
+        if f.endswith(".parquet")
+    ]
 
 
 # ---------------------------------------------------------------------------

@@ -33,15 +33,17 @@ from tests.sec_fixtures import Q, write_fixtures
 
 FACT_TABLE = f"BALANCE_SHEET_{Q}"
 JSON_VIEW = "view_balance_sheet_2023_Q1"
+DOC_TABLE = f"sec_data_{Q}"
 
 
 @pytest.fixture(scope="module")
 def service(spark, tmp_path_factory):
-    """The service over Q1's RAW tables, its balance-sheet fact table and
-    its balance-sheet flatten view. The fact table's filing date is a
-    date and its value a Decimal, and every flatten-view value is NaN,
-    so that replies carry what JSON encodes only through `default=str`
-    or sanitizing."""
+    """The service over Q1's RAW tables, its balance-sheet fact table,
+    its document table and its balance-sheet flatten view. The fact
+    table's filing date is a date and its value a Decimal, and every
+    flatten-view value and every nested balance-sheet value of the
+    document table is NaN, so that replies carry what JSON encodes only
+    through `default=str` or sanitizing."""
     paths = write_fixtures(str(tmp_path_factory.mktemp("http_tsv")))
     tables = ingest_quarter(
         spark, {k: v for k, v in paths.items() if k != "ticker"}, Q
@@ -59,6 +61,15 @@ def service(spark, tmp_path_factory):
     docs = assemble_documents(
         tables["sec_sub"], tables["sec_num"], tables["sec_tag"], tables["sec_pre"],
         load_ticker(spark, paths["ticker"]),
+    )
+    nan_bs = F.transform(
+        "raw_json.data.bs", lambda e: e.withField("value", F.lit(float("nan")))
+    )
+    eng.register(
+        DOC_TABLE,
+        documents_table(docs).withColumn(
+            "raw_json", F.col("raw_json").withField("data.bs", nan_bs)
+        ),
     )
     view = flatten_statement_view(documents_table(docs), "bs")
     eng.register(JSON_VIEW, view.withColumn("value", F.lit(float("nan"))))
@@ -294,6 +305,28 @@ def test_table_info_raw(service):
         _get(svc, "/get-table-info?data_source=RAW&year=2024&quarter=Q4")
     assert e.value.code == 500
     assert json.loads(e.value.read())["detail"].startswith("Failed to fetch table info")
+
+
+def _reject_constant(name):
+    raise ValueError(f"not strict JSON: {name}")
+
+
+def test_table_info_json_is_strict_nested_json(service):
+    """The document table's samples keep their nested field names, and
+    the NaN inside them is sent as null: the body is strict JSON."""
+    svc, _ = service
+    body = _get_body(svc, "/get-table-info?data_source=JSON&year=2023&quarter=Q1")
+    (info,) = json.loads(body, parse_constant=_reject_constant)
+    assert info["name"] == DOC_TABLE
+    assert len(info["sample_data"]) == 3
+    for row in info["sample_data"]:
+        doc = row["raw_json"]
+        assert {"quarter", "symbol", "data"} <= set(doc)
+        assert set(doc["data"]) == {"bs", "cf", "ic"}
+        assert all(set(e) == {"label", "concept", "info", "unit", "value"}
+                   for e in doc["data"]["bs"])
+        assert all(e["value"] is None for e in doc["data"]["bs"])
+    assert any(row["raw_json"]["data"]["bs"] for row in info["sample_data"])
 
 
 def test_invalid_source_is_400(service):

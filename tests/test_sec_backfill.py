@@ -12,6 +12,7 @@ module drives FOUR synthetic quarters through the full engine path —
         -> pruned single-scan statement read   (plan-pinned)
         -> DuckDB row parity, SecEngine RAW parity, safe re-runs
     and a re-run of a quarter's typed append, which replaces its rows
+    and the codec of every store, zstd even under a snappy session default
 
 — so the partition layout, the accretion semantics, and the statement
 store are all proven on SEC-shaped data, not just on TPC-H tables.
@@ -20,6 +21,7 @@ store are all proven on SEC-shaped data, not just on TPC-H tables.
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 import duckdb
 import pytest
@@ -37,10 +39,10 @@ from dynaledger_spark.operators.backfill import (
     statement_table,
 )
 from dynaledger_spark.schemas import FACT_SCHEMA
-from dynaledger_spark.sources.parquet_io import write_partitioned
+from dynaledger_spark.sources.parquet_io import PARQUET_CODEC, write_partitioned
 from dynaledger_spark.sources.tsv import extract_zip, ingest_quarter
 from tests.oracle_compare import compare
-from tests.sec_fixtures import build_quarter_zip
+from tests.sec_fixtures import build_quarter_zip, parquet_codecs, parquet_files
 
 QUARTERS = ("2024Q1", "2024Q2", "2024Q3", "2024Q4")
 _BKT = "bktq"  # statement-store suffix for this module
@@ -160,10 +162,12 @@ def test_fact_schema_matches_written_store(spark, backfill):
 )
 def test_statement_facts_missing_leaf_is_empty(spark, backfill, quarter, stmt):
     """A quarter never appended, or a statement without rows, has no
-    leaf directory: the read is an empty frame with the fact columns."""
+    leaf directory: the read is an empty frame with the fact columns,
+    planned without Python rows (no ExistingRDD scan)."""
     df = statement_facts(spark, backfill["facts"], quarter, stmt)
     assert df.schema == FACT_SCHEMA
     assert df.count() == 0
+    assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_statement_read_prunes_partitions(spark, backfill):
@@ -398,3 +402,70 @@ def test_typed_rerun_append_replaces_only_its_quarter(spark, backfill):
     assert _typed_counts(spark, backfill) == before
     assert other_quarters_files() == others
     assert _conf(spark) == conf
+
+
+def test_stores_are_zstd(spark, backfill):
+    """Every parquet file of the typed, fact and statement stores
+    declares zstd in its footer."""
+    stores = {
+        "typed": parquet_files(backfill["typed"]),
+        "facts": parquet_files(backfill["facts"]),
+        "statement": spark.table(statement_table(_BKT)).inputFiles(),
+    }
+    assert PARQUET_CODEC == "zstd"
+    for name, files in stores.items():
+        assert files, name
+        assert parquet_codecs(files) == {"ZSTD"}, name
+
+
+def test_stores_are_zstd_under_a_snappy_session_default(spark, backfill, tmp_path):
+    """A session whose default codec is snappy (one configured elsewhere)
+    still gets zstd stores: each sink names the codec itself. A plain
+    write in that session is snappy, which shows the default took; the
+    conf is restored afterwards."""
+    key, suffix = "spark.sql.parquet.compression.codec", "bktsnappy"
+    quarter = {
+        t: df.where(F.col("source_file") == "2024Q1")
+        for t, df in _typed(spark, backfill).items()
+    }
+    before = spark.conf.get(key)
+    drop_bucketed(spark, suffix=suffix)
+    spark.conf.set(key, "snappy")
+    try:
+        write_partitioned(quarter["sec_num"], str(tmp_path / "typed"), mode="append")
+        append_quarter_facts(
+            quarter["sec_num"], quarter["sec_sub"], quarter["sec_pre"], "2024Q1",
+            str(tmp_path / "facts"),
+        )
+        append_quarter_bucketed(quarter, suffix=suffix)
+        spark.range(3).write.parquet(str(tmp_path / "default"))
+        statement_files = spark.table(statement_table(suffix)).inputFiles()
+        statement_codecs = parquet_codecs(statement_files)
+    finally:
+        spark.conf.set(key, before)
+        drop_bucketed(spark, suffix=suffix)
+    assert parquet_codecs(parquet_files(str(tmp_path / "default"))) == {"SNAPPY"}
+    for store in ("typed", "facts"):
+        files = parquet_files(str(tmp_path / store))
+        assert files and parquet_codecs(files) == {"ZSTD"}, store
+    assert statement_files and statement_codecs == {"ZSTD"}
+
+
+def test_duckdb_reads_zstd_stores(spark, backfill):
+    """DuckDB's read_parquet, the benchmark oracle's path, reads the
+    zstd fact and statement stores to Spark's row counts."""
+    con = duckdb.connect()
+    try:
+        facts = con.execute(
+            f"SELECT count(*) FROM read_parquet('{backfill['facts']}/*/*/*.parquet')"
+        ).fetchone()[0]
+        statement_files = [
+            urlparse(f).path for f in spark.table(statement_table(_BKT)).inputFiles()
+        ]
+        statement = con.execute(
+            "SELECT count(*) FROM read_parquet(?)", [statement_files]
+        ).fetchone()[0]
+    finally:
+        con.close()
+    assert facts == spark.read.parquet(backfill["facts"]).count() > 0
+    assert statement == spark.table(statement_table(_BKT)).count() > 0

@@ -4,6 +4,8 @@ the dbt SQL) → JSON documents → flatten views → validation suite → API."
 
 from __future__ import annotations
 
+import gzip
+import json
 import os
 import threading
 from concurrent.futures import ThreadPoolExecutor
@@ -25,7 +27,13 @@ from dynaledger_spark.operators.facts import build_fact_table
 from dynaledger_spark.sources.json_docs import read_documents, write_documents
 from dynaledger_spark.sources.lookup import load_ticker
 from dynaledger_spark.sources.tsv import ROW_ID, ingest_quarter, read_tsv
-from tests.sec_fixtures import Q, build_quarter_zip, write_fixtures
+from tests.sec_fixtures import (
+    Q,
+    build_quarter_zip,
+    parquet_codecs,
+    parquet_files,
+    write_fixtures,
+)
 
 A1 = "0000000001-23-000001"
 A2 = "0000000002-23-000002"
@@ -184,6 +192,30 @@ def test_documents_json_roundtrip(spark, docs, tmp_path):
     assert str(d1.startDate) == "2023-03-31"
 
 
+def test_documents_sink_is_gzip_json_lines(docs, tmp_path):
+    """The S9 sink's data files are all gzip JSON lines, one document
+    per line."""
+    path = f"{tmp_path}/docs_json"
+    write_documents(docs, path)
+    data = [f for f in os.listdir(path) if not f.startswith(("_", "."))]
+    assert data and all(f.endswith(".json.gz") for f in data), data
+    lines = []
+    for f in data:
+        with gzip.open(os.path.join(path, f), "rt") as fh:
+            lines += [json.loads(line) for line in fh]
+    assert len(lines) == docs.count()
+    assert {"symbol", "quarter", "data"} <= set(lines[0])
+
+
+def test_doc_table_written_with_session_default_is_zstd(spark, docs, tmp_path):
+    """A table a caller writes with the session's default codec, such as
+    the document table, is zstd."""
+    path = str(tmp_path / "doc_table")
+    merge_dedup_by_symbol(documents_table(docs)).write.parquet(path)
+    files = parquet_files(path)
+    assert files and parquet_codecs(files) == {"ZSTD"}
+
+
 def test_flatten_view(docs):
     table = documents_table(docs)
     flat = flatten_statement_view(table, "bs")
@@ -258,6 +290,30 @@ def test_run_checks_is_one_action(spark, tables):
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= 20
+
+
+def _scans_python_rows(df) -> bool:
+    """Whether the plan scans rows that Python handed to Spark."""
+    return "ExistingRDD" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_check_summaries_are_built_in_the_plan(tables, tmp_path):
+    """The summaries of run_checks (a whole suite or none) and of
+    store_failures scan no Python rows, so collecting them starts no
+    Python worker, and they keep the suite's order."""
+    from dynaledger_spark.functions.validation import store_failures
+
+    clean = {k: v.drop(ROW_ID) for k, v in tables.items()}
+    checks = sec_checks()
+    summary = run_checks(clean, checks)
+    assert not _scans_python_rows(summary)
+    assert [r.rule for r in summary.collect()] == [c.name for c in checks]
+    empty = run_checks(clean, [])
+    assert not _scans_python_rows(empty)
+    assert empty.columns == summary.columns and empty.collect() == []
+    stored = store_failures(clean, checks[:3], str(tmp_path / "audit"))
+    assert not _scans_python_rows(stored)
+    assert [r.rule for r in stored.collect()] == [c.name for c in checks[:3]]
 
 
 # ---------------------------------------------------------------------------
