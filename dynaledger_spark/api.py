@@ -196,9 +196,10 @@ class SecEngine:
 
     # -- POST /execute-custom-query (backend/main.py:109-134, §3.2)
     def execute_custom_query(self, query: str) -> dict:
-        df = self.spark.sql(query)
-        rows = [r.asDict() for r in sanitize_floats(df).collect()]
-        return {"data": rows}
+        """Nested rows become objects with their field names, and NaN/±Inf
+        at any depth become null, as in `describe_table`."""
+        rows = self.spark.sql(query).collect()
+        return {"data": [sanitize_value(r.asDict(recursive=True)) for r in rows]}
 
     # -- GET table info (backend/main.py:85-101, S12)
     def table_info(self, names: list[str]) -> list[dict]:

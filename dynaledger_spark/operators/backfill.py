@@ -98,8 +98,9 @@ def read_facts(spark: SparkSession, root: str) -> DataFrame:
 
 def _existing_path(spark: SparkSession, path: str) -> tuple | None:
     """`path` as a Hadoop Path with its FileSystem, or None when it does
-    not exist. A driver-side metadata call: no Spark job."""
-    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    not exist. A driver-side metadata call: no Spark job. The class is
+    looked up by its full name in one py4j call, not one per package."""
+    jpath = getattr(spark.sparkContext._jvm, "org.apache.hadoop.fs.Path")(path)
     fs = jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
     return (fs, jpath) if fs.exists(jpath) else None
 

@@ -4,6 +4,30 @@ One place to configure the engine. It runs `local[N]` with one task
 thread per CPU this process may use, and every knob is chosen to also
 make sense on a large cluster (AQE on, broadcast threshold explicit,
 UTC timezone pinned so results are reproducible against any oracle).
+
+Two settings cut what every plan pays before it touches data:
+
+* `spark.python.sql.dataFrameDebugging.enabled=false`. With it on (the
+  PySpark default), every DataFrame-API call (`F.col`, `withColumn`,
+  `where`, ...) walks the Python stack and sends its call site to the
+  JVM first: most of the py4j round trips of an append and its checks.
+  Off, `F.col` costs about a quarter of the CPU, and a backfill makes
+  less than half the round trips. The price: a runtime error in a
+  DataFrame-API expression (an ANSI cast failure, say) still names the
+  function but no longer the Python file and line that built it.
+  Errors in SQL text keep their position in the query.
+* `spark.sql.codegen.cache.maxEntries=CODEGEN_CACHE_ENTRIES`. Spark's
+  default keeps 100 compiled classes, fewer than one quarter's appends
+  compile (~110), so each quarter recompiled most of the last one's.
+  A two-quarter backfill with its refreshes and checks compiles ~160
+  distinct classes; the cache holds them with room for the serving
+  plans, and the second quarter compiles next to none.
+
+Both settings are static: they hold from the session's start, and
+`extra_conf` can override them. A session started without them (a
+harness's own, even when `get_spark` is called on it later) keeps
+Spark's defaults. The codegen cache is sized once per JVM, when the
+first code is compiled.
 """
 
 from __future__ import annotations
@@ -13,6 +37,8 @@ import os
 from pyspark.sql import SparkSession
 
 from dynaledger_spark.sources.parquet_io import PARQUET_CODEC
+
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def _default_driver_mem() -> str:
@@ -56,6 +82,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", PARQUET_CODEC)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),

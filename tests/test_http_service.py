@@ -329,6 +329,31 @@ def test_table_info_json_is_strict_nested_json(service):
     assert any(row["raw_json"]["data"]["bs"] for row in info["sample_data"])
 
 
+def test_custom_query_nested_json_is_strict(service):
+    """A pass-through query over the document table, by POST and GET:
+    its rows keep their nested field names and send NaN as null."""
+    svc, _ = service
+    sql = f"SELECT symbol, raw_json FROM {DOC_TABLE} ORDER BY symbol"
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{svc.port}/execute-custom-query?data_source=Raw",
+        data=json.dumps({"query": sql}).encode(),
+        headers={"Content-Type": "application/json"},
+        method="POST",
+    )
+    with urllib.request.urlopen(req) as r:
+        posted = r.read()
+    got = _get_body(svc, "/query-data?query=" + urllib.parse.quote(sql))
+    assert got == posted
+    rows = json.loads(got, parse_constant=_reject_constant)["data"]
+    assert rows and all(set(row) == {"symbol", "raw_json"} for row in rows)
+    for row in rows:
+        doc = row["raw_json"]
+        assert doc["symbol"] == row["symbol"]
+        assert set(doc["data"]) == {"bs", "cf", "ic"}
+        assert all(e["value"] is None for e in doc["data"]["bs"])
+    assert any(row["raw_json"]["data"]["bs"] for row in rows)
+
+
 def test_invalid_source_is_400(service):
     svc, _ = service
     with pytest.raises(urllib.error.HTTPError) as e:
