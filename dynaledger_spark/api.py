@@ -83,6 +83,44 @@ def _pull_tables(year: int, q: str, data_type: str, source: str) -> tuple[str, .
     return (f"view_{stem}_{year}_Q{q}",)
 
 
+_LOGICAL = "org.apache.spark.sql.catalyst.plans.logical."
+# Parsed statements that the pass-through refuses: every Command (SET,
+# RESET, CREATE, DROP, CACHE, USE, ADD JAR, REFRESH, SHOW, DESCRIBE,
+# EXPLAIN, ...), which spark.sql runs as soon as it parses it, and the
+# writes and indirections that Spark parses as something else.
+_NOT_QUERIES = (
+    _LOGICAL + "Command",
+    _LOGICAL + "InsertIntoStatement",
+    _LOGICAL + "InsertIntoDir",
+    _LOGICAL + "Call",
+    "org.apache.spark.sql.catalyst.analysis.UnresolvedExecuteImmediate",
+)
+# The only nodes whose children can be statements: the CTEs over an
+# INSERT, and the union of a multi-insert (FROM t INSERT ... INSERT ...).
+_STATEMENT_PARENTS = (_LOGICAL + "UnresolvedWith", _LOGICAL + "Union")
+
+
+class NotAQueryError(ValueError):
+    """A pass-through statement that would change the session or write:
+    the client's error, so HTTP answers it with 400 on both routes."""
+
+
+def _check_is_query(spark: SparkSession, query: str) -> None:
+    """Parse `query` without running it, and raise NotAQueryError unless
+    it only reads. Unparseable SQL raises Spark's ParseException."""
+    # py4j's is_instance_of, with the JVM helper looked up once
+    is_a = spark._jvm.py4j.reflection.TypeUtil.isInstanceOf
+    stack = [spark._jsparkSession.sessionState().sqlParser().parsePlan(query)]
+    while stack:
+        plan = stack.pop()
+        if any(is_a(c, plan) for c in _NOT_QUERIES):
+            raise NotAQueryError(f"only a query can be passed through, not {plan.nodeName()}")
+        if any(is_a(c, plan) for c in _STATEMENT_PARENTS):
+            children = plan.children().iterator()
+            while children.hasNext():
+                stack.append(children.next())
+
+
 @dataclass
 class _Entry:
     """A pull's cached rows and the table objects, by name, its plan read."""
@@ -196,8 +234,11 @@ class SecEngine:
 
     # -- POST /execute-custom-query (backend/main.py:109-134, §3.2)
     def execute_custom_query(self, query: str) -> dict:
-        """Nested rows become objects with their field names, and NaN/±Inf
-        at any depth become null, as in `describe_table`."""
+        """Only a query runs: a statement that would change the shared
+        session or write raises NotAQueryError before it runs. Nested rows
+        become objects with their field names, and NaN/±Inf at any depth
+        become null, as in `describe_table`."""
+        _check_is_query(self.spark, query)
         rows = self.spark.sql(query).collect()
         return {"data": [sanitize_value(r.asDict(recursive=True)) for r in rows]}
 

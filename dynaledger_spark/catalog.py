@@ -22,20 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 # difference.
 _NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
-# The driver's TPC-H-ish testdata tables (TESTDATA.md).
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata parquet table, normalizing timestamp physical types.
@@ -92,12 +78,10 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_tables(
-    spark: SparkSession,
-    sf_dir: str,
-    tables: tuple[str, ...] = TESTDATA_TABLES,
-    register_views: bool = True,
+    spark: SparkSession, sf_dir: str, tables: tuple[str, ...]
 ) -> dict[str, DataFrame]:
-    """Load parquet tables from ``sf_dir`` and register temp views.
+    """Load the named parquet tables from ``sf_dir`` and register each
+    as a temp view.
 
     Parquet scans give Catalyst pushdown + pruning for free; no schema
     inference cost (parquet is self-describing).
@@ -108,8 +92,7 @@ def load_tables(
         if not os.path.exists(path):
             continue
         df = read_table(spark, sf_dir, name)
-        if register_views:
-            df.createOrReplaceTempView(name)
+        df.createOrReplaceTempView(name)
         out[name] = df
     return out
 

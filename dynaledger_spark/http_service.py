@@ -32,7 +32,13 @@ from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import functions as F
 
-from dynaledger_spark.api import _FACT_NAMES, SecEngine, _quarter_number, describe_table
+from dynaledger_spark.api import (
+    _FACT_NAMES,
+    NotAQueryError,
+    SecEngine,
+    _quarter_number,
+    describe_table,
+)
 
 # data_source → raw-table-name templates for /get-table-info
 # (main.py:80-88). The reference suffixes physical table names per
@@ -158,6 +164,8 @@ def _make_handler(engine: SecEngine):
                     raise _ApiError(422, "query parameter required (min_length=1)")
                 try:
                     return engine.execute_custom_query(query)
+                except NotAQueryError as e:
+                    raise _ApiError(400, str(e))
                 except Exception as e:
                     # main.py:247 wraps ANY query failure as 500/str(e)
                     # (unlike POST's generic message).

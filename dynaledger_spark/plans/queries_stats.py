@@ -318,11 +318,10 @@ def weighted_avg_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def percentile_cont_priceband(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continuous (linearly interpolated) percentiles — the disc variant
-    is covered by quantiles_disc_by_priority; this adds the interpolating
-    family. Both engines define the quantile at rank p·(n−1) with linear
-    interpolation between neighbors; the interpolation arithmetic can
-    differ in the last ulp, and 2dp input data makes every true quantile
+    """Continuous (linearly interpolated) percentiles. Both engines
+    define the quantile at rank p·(n−1) with linear interpolation
+    between neighbors; the interpolation arithmetic can differ in the
+    last ulp, and 2dp input data makes every true quantile
     ≤4dp, so round(…,4) pins it far above the ulp and below data
     granularity. Spark's exact `percentile` is a sort-based aggregate
     per group — at 100 TB swap in approx_percentile or t-digest sketches

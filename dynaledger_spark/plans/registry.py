@@ -62,17 +62,14 @@ def load_all() -> dict[str, QuerySpec]:
         queries_graph,
         queries_pipeline,
         queries_sampling,
-        queries_sql_ext,
         queries_stats,
         queries_text,
         queries_timeseries,
         queries_mlprep,
         queries_featurestore,
         queries_behavior,
-        queries_finance,
         queries_quality,
         queries_retrieval,
-        queries_incremental,
         queries_tpch,
     )
 

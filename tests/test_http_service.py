@@ -290,6 +290,51 @@ def test_query_data_bad_sql_is_500_with_detail(service):
     assert json.loads(e.value.read())["detail"]
 
 
+def _pass_through(svc: SecHttpService, route: str, sql: str):
+    if route == "POST":
+        return _post(svc, "/execute-custom-query?data_source=Raw", {"query": sql})
+    return _get(svc, "/query-data?query=" + urllib.parse.quote(sql))
+
+
+def test_pass_through_refuses_statements_that_change_the_session(service, tmp_path):
+    """Both pass-through routes answer 400 to a statement that would
+    change the shared session, before it runs: the setting keeps its
+    value and `sec_sub` still answers. Queries (CTEs, set operations,
+    VALUES) still pass."""
+    svc, eng = service
+    setting = "spark.sql.shuffle.partitions"
+    before = eng.spark.conf.get(setting)
+    count = "SELECT COUNT(*) AS n FROM sec_sub WHERE period IS NOT NULL"
+    statements = [
+        f"SET {setting}=1",
+        "DROP VIEW sec_sub",
+        "EXECUTE IMMEDIATE 'DROP VIEW sec_sub'",
+        "WITH s AS (SELECT * FROM sec_sub) INSERT INTO sec_sub SELECT * FROM s",
+        "FROM sec_sub INSERT INTO sec_sub SELECT * INSERT INTO sec_sub SELECT *",
+        f"INSERT OVERWRITE DIRECTORY '{tmp_path}' USING parquet SELECT * FROM sec_sub",
+    ]
+    try:
+        for route in ("POST", "GET"):
+            for sql in statements:
+                with pytest.raises(urllib.error.HTTPError) as e:
+                    _pass_through(svc, route, sql)
+                assert e.value.code == 400, (route, sql)
+                assert json.loads(e.value.read())["detail"]
+                assert eng.spark.conf.get(setting) == before, (route, sql)
+                assert _pass_through(svc, route, count) == (200, {"data": [{"n": 4}]})
+            for sql in (
+                f"WITH s AS ({count}) SELECT n FROM s",
+                f"{count} UNION ALL {count}",
+                "VALUES (4)",
+            ):
+                status, _ = _pass_through(svc, route, sql)
+                assert status == 200, (route, sql)
+        assert not any(tmp_path.iterdir())
+    finally:
+        eng.spark.conf.set(setting, before)
+        eng.tables["sec_sub"].createOrReplaceTempView("sec_sub")
+
+
 def test_table_info_raw(service):
     svc, _ = service
     status, out = _get(svc, "/get-table-info?data_source=RAW&year=2023&quarter=Q1")
