@@ -100,6 +100,13 @@ _NOT_QUERIES = (
 _STATEMENT_PARENTS = (_LOGICAL + "UnresolvedWith", _LOGICAL + "Union")
 
 
+# Built-in functions that call any static Java method. They, and SQL on
+# files (`<format>.`<path>``, which reads any file the server can read),
+# let a query reach past the session's tables; both parse as queries, so
+# _check_is_query passes them. SecEngine turns both off in its session.
+_REFLECTION_FUNCTIONS = ("reflect", "java_method", "try_reflect")
+
+
 class NotAQueryError(ValueError):
     """A pass-through statement that would change the session or write:
     the client's error, so HTTP answers it with 400 on both routes."""
@@ -153,6 +160,11 @@ class SecEngine:
     so a repeat is never held up by another key's first pull. Two racing
     first pulls of one key both collect, and one of their replies is
     kept; two racing first HTTP pulls of a kept reply may both encode it.
+
+    Constructing an engine turns off SQL on files in its session and
+    drops the reflection functions from it, so pass-through SQL reads
+    only the session's tables and views. Both changes are session-wide
+    and idempotent.
     """
 
     spark: SparkSession
@@ -160,6 +172,13 @@ class SecEngine:
     # pull key (year, q, data_type, source) → its entry
     _replies: dict[tuple, _Entry] = field(default_factory=dict, init=False, repr=False)
     _lock: threading.Lock = field(default_factory=threading.Lock, init=False, repr=False)
+
+    def __post_init__(self) -> None:
+        self.spark.conf.set("spark.sql.runSQLOnFiles", "false")
+        functions = self.spark._jsparkSession.sessionState().functionRegistry()
+        ident = self.spark._jvm.org.apache.spark.sql.catalyst.FunctionIdentifier
+        for name in _REFLECTION_FUNCTIONS:
+            functions.dropFunction(ident(name))
 
     def register(self, name: str, df: DataFrame) -> None:
         self.tables[name] = df
@@ -235,7 +254,8 @@ class SecEngine:
     # -- POST /execute-custom-query (backend/main.py:109-134, §3.2)
     def execute_custom_query(self, query: str) -> dict:
         """Only a query runs: a statement that would change the shared
-        session or write raises NotAQueryError before it runs. Nested rows
+        session or write raises NotAQueryError before it runs, and a query
+        that calls Java or reads a file by path fails analysis. Nested rows
         become objects with their field names, and NaN/±Inf at any depth
         become null, as in `describe_table`."""
         _check_is_query(self.spark, query)

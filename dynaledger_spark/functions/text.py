@@ -1,5 +1,5 @@
-"""Text analysis for corpus curation: language-ID, quality scoring,
-token counting, document fingerprinting.
+"""Text analysis for corpus curation: language-ID, stopword counting,
+document fingerprinting.
 
 All operators are JVM-side expression trees (split/filter/aggregate/rlike)
 — whole-stage-codegen over the scan, no Python in the hot path.
@@ -7,7 +7,7 @@ All operators are JVM-side expression trees (split/filter/aggregate/rlike)
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Small public stopword marker profiles (top function words per language).
@@ -18,9 +18,6 @@ LANG_PROFILES: dict[str, list[str]] = {
     "fr": ["le", "la", "de", "et", "les", "des", "un", "une", "du", "est"],
     "zh": ["的", "是", "不", "了", "在", "人", "有", "我", "他", "这"],
 }
-
-# A BPE-ish pre-tokenization: letter runs, digit runs, single punctuation.
-BPE_ISH_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 
 MOD = 1_000_000_007
 
@@ -57,29 +54,6 @@ def predict_lang(text: Column) -> Column:
     for s in scores.values():
         total = s if total is None else total + s
     return F.when(total == 0, F.lit("und")).otherwise(best["lang"])
-
-
-def quality_features(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Per-document quality signals (the usual corpus-filtering features)."""
-    text = F.col(text_col)
-    toks = tokens_of(text)
-    n_tokens = F.size(toks)
-    n_chars = F.length(text)
-    n_punct = F.size(F.regexp_extract_all(text_col, F.lit("[^A-Za-z0-9 ]"), F.lit(0)))
-    all_stop = [w for ws in LANG_PROFILES.values() for w in ws]
-    n_stop = stopword_hits(text, sorted(set(all_stop)))
-    return docs.select(
-        F.col(id_col),
-        n_chars.cast("bigint").alias("n_chars"),
-        n_tokens.cast("bigint").alias("n_tokens"),
-        F.size(F.regexp_extract_all(text_col, F.lit(BPE_ISH_PATTERN), F.lit(0)))
-        .cast("bigint")
-        .alias("n_bpe_tokens"),
-        (n_chars.cast("double") / F.greatest(n_tokens, F.lit(1))).alias("avg_token_len"),
-        (n_punct.cast("double") / F.greatest(n_chars, F.lit(1))).alias("punct_ratio"),
-        (n_stop.cast("double") / F.greatest(n_tokens, F.lit(1))).alias("stopword_ratio"),
-        predict_lang(text).alias("pred_lang"),
-    )
 
 
 def rolling_fingerprint(text: Column) -> Column:

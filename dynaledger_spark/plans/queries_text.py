@@ -1303,9 +1303,8 @@ def char_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character-distribution Shannon entropy per document — the
     classic gibberish/boilerplate screen (low entropy = repeated
     characters / templates; RefinedWeb and MassiveText both gate on
-    natural-language entropy bands). Same exactness recipe as
-    l_diversity_audit: integer char counts, each −p·ln p term pinned
-    at 12 dp, folded over the per-doc char set SORTED by character
+    natural-language entropy bands). Exactness: integer char counts,
+    each −p·ln p term pinned at 12 dp, folded over the per-doc char set SORTED by character
     (bounded: |alphabet| ≈ 40), final round(9) + 0.0 to collapse -0.0.
     Empty-string chars are filtered on both sides (Spark split('')
     yields [''] where DuckDB yields [] — the filter makes the

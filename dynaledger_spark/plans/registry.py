@@ -66,9 +66,6 @@ def load_all() -> dict[str, QuerySpec]:
         queries_text,
         queries_timeseries,
         queries_mlprep,
-        queries_featurestore,
-        queries_behavior,
-        queries_quality,
         queries_retrieval,
         queries_tpch,
     )

@@ -1,12 +1,7 @@
-"""Python mirrors for the sequence-statistics query (Markov sequence
-scoring) and the incremental-MinHash subset property. The mirrors
-reproduce the repo's float discipline (sequential folds, round-at-12 ln
-terms), so comparisons are exact, not approximate."""
+"""The incremental-MinHash subset property: the incremental run's pairs
+are exactly the full run's pairs restricted to the new batch."""
 
 from __future__ import annotations
-
-import math
-from collections import Counter, defaultdict
 
 from dynaledger_spark.plans.registry import load_all
 
@@ -43,44 +38,3 @@ def test_minhash_incremental_is_exact_subset(spark, sf_dir):
     assert inc == want
     assert inc, "testdata must exercise the incremental path"
 
-
-# ---------------------------------------------------------------------------
-# Markov sequence score ≡ python mirror
-# ---------------------------------------------------------------------------
-def test_markov_score_matches_python(spark, sf_dir):
-    from dynaledger_spark.catalog import read_table
-
-    got = {
-        r["user_id"]: (r["n_transitions"], r["avg_loglik"])
-        for r in REGISTRY["markov_sequence_score"].build(spark, sf_dir).collect()
-    }
-
-    rows = (
-        read_table(spark, sf_dir, "events")
-        .select("user_id", "ts", "event_id", "event_type")
-        .collect()
-    )
-    by_user: dict[int, list] = defaultdict(list)
-    for r in rows:
-        by_user[r["user_id"]].append((r["ts"], r["event_id"], r["event_type"]))
-    pairs = []
-    for u, evs in by_user.items():
-        evs.sort()
-        pairs += [(u, a[2], b[2]) for a, b in zip(evs, evs[1:])]
-    trans = Counter((p, c) for _, p, c in pairs)
-    margins = Counter(p for _, p, _ in pairs)
-    per_user = Counter((u, p, c) for u, p, c in pairs)
-    want = {}
-    users = {u for u, _, _ in pairs}
-    for u in users:
-        terms = sorted(
-            n * round(math.log(trans[(p, c)] / margins[p]), 12)
-            for (uu, p, c), n in per_user.items()
-            if uu == u
-        )
-        total = sum(n for (uu, _, _), n in per_user.items() if uu == u)
-        acc = 0.0
-        for t in terms:
-            acc += t
-        want[u] = (total, round(acc / total, 9))
-    assert got == want

@@ -34,7 +34,6 @@ from dynaledger_spark.plans import (
     queries_approx,
     queries_graph,
     queries_mlprep,
-    queries_quality,
     queries_retrieval,
     queries_stats,
     queries_text,
@@ -76,7 +75,6 @@ PLAN_MUTATIONS = [
     ("fellegi_sunter_linkage", queries_stats, "_FS_LINK_T", 0.0),
     ("link_prediction_common_neighbors", queries_mlprep, "_LP_DEG_CAP", 2),
     ("char_entropy_quality", queries_text, "_ENTROPY_KEEP", 2.0),
-    ("quality_ensemble_gate", queries_quality, "_ENSEMBLE_MIN_VOTES", 2),
     # round-10: a shrunken feedback set and a dropped iteration are the
     # classic silent-misconfig bugs for these two families
     ("rm3_query_expansion", queries_retrieval, "_RM3_FB_DOCS", 3),
@@ -213,8 +211,6 @@ def _date_off_by_one(df):
 RESULT_MUTATIONS = [
     ("fact_build", _ulp_drift),
     ("priority_sample_subset_sum", _int_off_by_one),
-    ("shapley_channel_attribution", _int_off_by_one),
-    ("sequential_pattern_support", _int_off_by_one),
     ("entity_golden_record", _drop_one_row),
     ("statement_query", _drop_one_row),
     ("dedup_exact", _duplicate_one_row),

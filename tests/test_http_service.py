@@ -335,6 +335,36 @@ def test_pass_through_refuses_statements_that_change_the_session(service, tmp_pa
         eng.tables["sec_sub"].createOrReplaceTempView("sec_sub")
 
 
+def test_pass_through_cannot_call_java_or_read_files(service, tmp_path):
+    """A query that calls a static Java method (plainly, in a CTE or in a
+    scalar subquery) or reads a file by path fails on both routes: no
+    JVM system property is set and no body holds the file's text. A
+    query over a registered table still answers."""
+    svc, eng = service
+    system = eng.spark._jvm.java.lang.System
+    secret = tmp_path / "secret.txt"
+    secret.write_text("dl-secret-7f3a\n")
+    probes = [
+        "SELECT java_method('java.lang.System', 'setProperty', 'dl_probe', 'x')",
+        "WITH p AS (SELECT reflect('java.lang.System', 'setProperty', 'dl_probe', 'x') AS v)"
+        " SELECT v FROM p",
+        "SELECT (SELECT try_reflect('java.lang.System', 'setProperty', 'dl_probe', 'x')) AS v",
+        f"SELECT value FROM text.`{secret}`",
+    ]
+    try:
+        for route in ("POST", "GET"):
+            for sql in probes:
+                with pytest.raises(urllib.error.HTTPError) as e:
+                    _pass_through(svc, route, sql)
+                assert e.value.code >= 400, (route, sql)
+                assert "dl-secret-7f3a" not in e.value.read().decode(), (route, sql)
+                assert system.getProperty("dl_probe") is None, (route, sql)
+            status, _ = _pass_through(svc, route, "SELECT COUNT(*) AS n FROM sec_sub")
+            assert status == 200
+    finally:
+        system.clearProperty("dl_probe")
+
+
 def test_table_info_raw(service):
     svc, _ = service
     status, out = _get(svc, "/get-table-info?data_source=RAW&year=2023&quarter=Q1")

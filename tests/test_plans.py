@@ -56,20 +56,12 @@ def test_no_cartesian_products(plans):
         "quantile_binning_migration",  # 1-row broadcast of decile bounds
         "sliding_7d_active_users",  # 1-row broadcast of the date bounds
         "rfm_segmentation",  # 1-row broadcast of the recency anchor date
-        "acf_daily_revenue",  # 1-row stats/denominator + 7-row lag broadcast
-        "basket_association_rules",  # 1-row broadcast of the basket total
-        "cms_heavy_hitters",  # 4-row broadcast of the sketch seeds
-        "mad_outlier_days",  # 1-row broadcasts of median and MAD
         "minhash_portable_incremental",  # 1-row broadcast of the id cutoff
-        "km_churn_curve",  # 1-row broadcast of the censoring horizon
         "hll_portable_estimate",  # 1-row broadcast of the exact count
         "priority_sample_subset_sum",  # 1-row broadcast of tau (the k+1-th priority)
-        "shapley_channel_attribution",  # lattice-sized (16-row) containment joins + 1-row n broadcast
-        "sequential_pattern_support",  # 1-row broadcast of the user total
         "cusum_changepoint",  # 1-row broadcasts of totals and the peak
         "benford_first_digit",  # 1-row broadcast of the grand total
         "temperature_resample_sources",  # 1-row broadcasts of corpus totals
-        "decay_weighted_engagement",  # 1-row broadcast of the time anchor
         "mann_whitney_u_test",  # 1-row broadcast of the group sizes
         "cuped_adjusted_ab",  # 1-row broadcast of the pooled moments
         "bootstrap_mean_ci",  # 1-row broadcasts of the CI order statistics
@@ -80,13 +72,7 @@ def test_no_cartesian_products(plans):
         "shard_round_robin",  # ≤1024-row bucket-offset inequality self-join (grid-sized)
         "rm3_query_expansion",  # 1-row corpus-stats + expansion-weight-sum broadcasts
         "theil_sen_daily_trend",  # calendar-bounded |days|x|days| pair loop
-        "schema_drift_report",  # 1-row × 1-row half-stats combine
-        "freshness_lag_by_type",  # 1-row broadcast of the corpus watermark
-        "fk_orphan_scorecard",  # six 1-row × 1-row edge-metric combines
         "bm25_topk_docs",  # 1-row broadcasts of df counts and avgdl
-        "psi_feature_drift",  # 10-row bin-grid broadcast fan-out
-        "join_key_skew_report",  # 1-row top-key/stats scalar combines
-        "t_closeness_audit",  # 1-row global-total broadcast
         "ks_two_sample_values",  # 1-row sample-size broadcasts
         "ab_conversion_ztest",  # 1-row × 1-row arm-stats combine
         "tpch_q22_global_sales_opportunity",  # 1-row broadcast of the avg balance
@@ -416,7 +402,7 @@ def test_embedding_covariance_broadcasts_means(plans):
 GLOBAL_WINDOW_WHITELIST = {
     # bounded: daily / calendar rollup series (≤ |days| rows)
     "seasonal_decompose_dow", "cusum_changepoint",
-    "theil_sen_daily_trend", "km_churn_curve", "mad_outlier_days",
+    "theil_sen_daily_trend",
     # bounded: post-aggregation grids (deciles, per-group stats, ranks
     # over an already-reduced result)
     "bootstrap_mean_ci", "woe_iv_acctbal_urgent", "lift_gains_deciles",
@@ -427,9 +413,6 @@ GLOBAL_WINDOW_WHITELIST = {
     # bounded: the UniMax waterfill windows run on the 20-row per-source
     # aggregate (|sources|, never corpus-sized)
     "unimax_allocation",
-    # bounded: channel-bit assignment ranks the |channels| distinct
-    # event types (schema-sized, 4 rows)
-    "shapley_channel_attribution",
     # bounded: rank transform over the two A/B samples' value column
     # (events.value measurements, one global ECDF/rank by construction)
     "ks_two_sample_values", "mann_whitney_u_test",
@@ -618,13 +601,10 @@ def test_unpersist_discipline(spark, sf_dir):
     base_ids = persistent_ids()
     persisters = [
         "copurchase_triangles", "anomaly_dow_hour_baseline",
-        "basket_association_rules", "cms_heavy_hitters",
-        "cusum_changepoint", "item_cf_cosine",
-        "jaccard_prefix_filter_join", "mad_outlier_days",
-        "markov_sequence_score", "rolling_purchase_features",
+        "cusum_changepoint", "jaccard_prefix_filter_join",
         "theil_sen_daily_trend", "triplet_sample_contrastive",
         "pagerank_portable_fixedpoint", "kmv_theta_sketch_pairs",
-        "lpa_communities_fixed", "sequential_pattern_support",
+        "lpa_communities_fixed",
     ]
     for name in persisters:
         df = REGISTRY[name].build(spark, sf_dir)
@@ -672,26 +652,20 @@ def test_unpersist_discipline(spark, sf_dir):
 
 
 def test_round9_query_plan_shapes(plans):
-    """Round-9 additions: the corpus-sized joins must be hash/equi
-    (user_id extracted as the equi key in the pattern probe; the FS
-    blocking join equi on (segment, bucket)); priority sampling's
+    """Round-9 additions: the corpus-sized join must be hash/equi (the
+    FS blocking join equi on (segment, bucket)); priority sampling's
     top-(k+1) must be a TakeOrderedAndProject (per-partition top-k +
     driver merge — the shape that samples 100 TB without a shuffle),
-    and nothing cartesian anywhere (the 1-row/lattice BNLJs are
-    whitelisted in test_no_cartesian_products)."""
-    for name in (
-        "sequential_pattern_support",
-        "entity_golden_record",
-        "priority_sample_subset_sum",
-        "shapley_channel_attribution",
-    ):
+    and nothing cartesian anywhere (the 1-row BNLJs are whitelisted in
+    test_no_cartesian_products)."""
+    for name in ("entity_golden_record", "priority_sample_subset_sum"):
         assert "CartesianProduct" not in plans[name], name
     assert "TakeOrderedAndProject" in plans["priority_sample_subset_sum"]
-    # equi joins planned as hash joins (broadcast at test SF; the keys,
-    # not the strategy, are what survive a 1000-executor scale-up)
-    for name in ("sequential_pattern_support", "entity_golden_record"):
-        assert (
-            "BroadcastHashJoin" in plans[name]
-            or "SortMergeJoin" in plans[name]
-            or "ShuffledHashJoin" in plans[name]
-        ), name
+    # the equi join planned as a hash join (broadcast at test SF; the
+    # keys, not the strategy, are what survive a 1000-executor scale-up)
+    plan = plans["entity_golden_record"]
+    assert (
+        "BroadcastHashJoin" in plan
+        or "SortMergeJoin" in plan
+        or "ShuffledHashJoin" in plan
+    )

@@ -273,7 +273,7 @@ def test_length_grouped_batching_vs_python(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-7 batch 7: winnowing pairs, filter kappa
+# Round-7 batch 7: winnowing pairs
 # ---------------------------------------------------------------------------
 def _winnow_py(sf_dir):
     from dynaledger_spark.plans.queries_text import _WIN_GRAM, _WIN_W
@@ -337,41 +337,6 @@ def test_winnowing_pairs_vs_python(spark, sf_dir):
     assert got == expect
 
 
-def test_filter_kappa_vs_python(spark, sf_dir):
-    """Contingency integers and kappa must equal a python replay of the
-    four integer-exact gates; kappa must be chance-corrected (<= po
-    after rescaling) and inside [-1, 1]."""
-    STOP = {"the", "a", "of", "and", "to", "in", "is", "it", "for", "on"}
-    d = _documents(sf_dir)
-    flags = []
-    for text in d["text"]:
-        ws = text.split(" ")
-        n_tok, n_chars = len(ws), len(text)
-        n_alpha = sum(1 for c in text if c.isalpha() and c.isascii())
-        letters = n_chars - n_tok + 1
-        flags.append((
-            1 if 20 <= n_tok <= 90 else 0,
-            1 if sum(1 for w in ws if w in STOP) >= 2 else 0,
-            1 if 500 * n_alpha >= 411 * n_chars else 0,
-            1 if 2 * letters <= 9 * n_tok else 0,
-        ))
-    names = ("len_gate", "stopword_gate", "alpha_gate", "wordlen_gate")
-    n = len(flags)
-    for r in rows(spark, sf_dir, "filter_agreement_kappa"):
-        i, j = names.index(r.filter_a), names.index(r.filter_b)
-        sa = sum(f[i] for f in flags)
-        sb = sum(f[j] for f in flags)
-        sab = sum(f[i] * f[j] for f in flags)
-        assert (r.n11, r.n10, r.n01, r.n00) == (
-            sab, sa - sab, sb - sab, n - sa - sb + sab)
-        po = (sab + n - sa - sb + sab) / n
-        pe = (sa * sb + (n - sa) * (n - sb)) / (n * n)
-        assert math.isclose(r.po, round(po, 9), rel_tol=1e-12)
-        assert math.isclose(r.kappa, round((po - pe) / (1 - pe), 9),
-                            rel_tol=1e-12)
-        assert -1.0 <= r.kappa <= 1.0
-
-
 # ---------------------------------------------------------------------------
 # Round-7 batch 8: Hill tail index, stratified k-fold
 # ---------------------------------------------------------------------------
@@ -417,37 +382,6 @@ def test_stratified_kfold_balance(spark, sf_dir):
     for lang in per_lang:
         sizes = [got.get((lang, f), 0) for f in range(_KFOLD)]
         assert max(sizes) - min(sizes) <= 1
-
-
-# ---------------------------------------------------------------------------
-# Round-7 batch 9: ensemble gate, bits-per-byte
-# ---------------------------------------------------------------------------
-def test_ensemble_gate_vs_python(spark, sf_dir):
-    """Per-source yields must equal a python replay of the 3-of-4
-    majority vote over the same integer gates as the kappa test."""
-    STOP = {"the", "a", "of", "and", "to", "in", "is", "it", "for", "on"}
-    d = _documents(sf_dir)
-    agg = defaultdict(lambda: [0, 0, 0, 0])  # n, n_pass, tok_in, tok_kept
-    for text, source in zip(d["text"], d["source"]):
-        ws = text.split(" ")
-        n_tok, n_chars = len(ws), len(text)
-        n_alpha = sum(1 for c in text if c.isalpha() and c.isascii())
-        letters = n_chars - n_tok + 1
-        votes = (
-            (20 <= n_tok <= 90)
-            + (sum(1 for w in ws if w in STOP) >= 2)
-            + (500 * n_alpha >= 411 * n_chars)
-            + (2 * letters <= 9 * n_tok)
-        )
-        a = agg[source]
-        a[0] += 1; a[2] += n_tok
-        if votes >= 3:
-            a[1] += 1; a[3] += n_tok
-    for r in rows(spark, sf_dir, "quality_ensemble_gate"):
-        n, np_, ti, tk = agg[r.source]
-        assert (r.n_docs, r.n_pass, r.tokens_in, r.tokens_kept) == (n, np_, ti, tk)
-        assert math.isclose(r.pass_rate, round(np_ / n, 9), rel_tol=1e-12)
-        assert math.isclose(r.token_yield, round(tk / ti, 9), rel_tol=1e-12)
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,5 @@
 """Independent-evidence tests for the round-8 additions (GK portable
-quantiles, KMV theta sketches, the ALS half-step and
-Fellegi-Sunter linkage).
+quantiles, KMV theta sketches and Fellegi-Sunter linkage).
 
 Same doctrine as test_round5/7_ops: every check is evidence the DuckDB
 oracle cannot manufacture — a brute-force python recomputation from the
@@ -84,44 +83,6 @@ def test_kmv_theta_estimates_within_bounds(spark):
                 assert abs(
                     r["jaccard_est"] - r["inter_exact"] / r["union_exact"]
                 ) < 4 / math.sqrt(64)
-
-
-def test_als_half_step_solves_normal_equations(spark):
-    """Python integer replay of the scaled normal equations; the query's
-    theta must equal Cramer's solution to 9 dp, and A@theta ~ b (the
-    ridge optimality condition) within rounding."""
-    t = pq.read_table(os.path.join(SF, "lineitem.parquet"),
-                      columns=["l_orderkey", "l_partkey", "l_quantity"])
-    o = pq.read_table(os.path.join(SF, "orders.parquet"),
-                      columns=["o_orderkey", "o_custkey"])
-    cust_of = dict(zip(o.to_pydict()["o_orderkey"], o.to_pydict()["o_custkey"]))
-    r = defaultdict(int)
-    d = t.to_pydict()
-    for ok, pk, q in zip(d["l_orderkey"], d["l_partkey"], d["l_quantity"]):
-        r[(cust_of[ok], pk)] += int(q)
-    sums = defaultdict(lambda: [0, 0, 0, 0, 0, 0])  # n, s11, s12, s22, sb1, sb2
-    for (ck, pk), rv in r.items():
-        xs1, xs2 = 3 * ((pk * 3) % 7 - 3), 2 * ((pk * 5) % 11 - 5)
-        s = sums[ck]
-        s[0] += 1
-        s[1] += xs1 * xs1
-        s[2] += xs1 * xs2
-        s[3] += xs2 * xs2
-        s[4] += xs1 * rv
-        s[5] += xs2 * rv
-    got = {row["custkey"]: row for row in rows(spark, "als_half_step_portable")}
-    assert set(got) == set(sums)
-    for ck, (n, s11, s12, s22, sb1, sb2) in sums.items():
-        a11, a12, a22 = s11 + 9, s12, s22 + 9
-        b1, b2 = 12 * sb1, 12 * sb2
-        det = a11 * a22 - a12 * a12
-        th1, th2 = (a22 * b1 - a12 * b2) / det, (a11 * b2 - a12 * b1) / det
-        assert got[ck]["n_items"] == n
-        assert got[ck]["theta1"] == round(th1, 9)
-        assert got[ck]["theta2"] == round(th2, 9)
-        # optimality: A @ theta == b up to float solve error
-        assert abs(a11 * th1 + a12 * th2 - b1) < 1e-6 * max(1, abs(b1))
-        assert abs(a12 * th1 + a22 * th2 - b2) < 1e-6 * max(1, abs(b2))
 
 
 def test_fellegi_sunter_quality_and_replay(spark):

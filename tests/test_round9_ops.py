@@ -120,119 +120,6 @@ def test_oriented_triangles_match_naive_python(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_shapley_efficiency_and_replay(spark, sf_dir):
-    """Shapley efficiency axiom: sum(phi_i) = v(N) - v(empty) — total
-    attributed credit equals the converters any channel could have
-    influenced (organic zero-touch conversions stay unattributed).
-    Verified against a transparent python replay of the whole lattice
-    computation (masks, subset-containment v, factorial weights)."""
-    import math
-    import os
-    from collections import Counter
-
-    out = REGISTRY["shapley_channel_attribution"].build(spark, sf_dir).collect()
-    assert len(out) >= 2
-    assert all(r["n_converters_touched"] > 0 for r in out)
-
-    from dynaledger_spark.catalog import read_table
-
-    ev = read_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", "ts"
-    ).collect()
-    first_p: dict[int, object] = {}
-    for r in ev:
-        if r["event_type"] == "purchase":
-            if r["user_id"] not in first_p or r["ts"] < first_p[r["user_id"]]:
-                first_p[r["user_id"]] = r["ts"]
-    channels = sorted({r["event_type"] for r in ev} - {"purchase"})
-    bit = {c: i for i, c in enumerate(channels)}
-    n = len(channels)
-    masks: dict[int, int] = {u: 0 for u in first_p}
-    for r in ev:
-        u = r["user_id"]
-        if u in first_p and r["event_type"] != "purchase" and r["ts"] < first_p[u]:
-            masks[u] |= 1 << bit[r["event_type"]]
-    tm = Counter(masks.values())
-    v = [
-        sum(c for m, c in tm.items() if (m & s) == m) for s in range(1 << n)
-    ]
-    nfact = math.factorial(n)
-    phi = {}
-    for c in channels:
-        i = bit[c]
-        num = sum(
-            math.factorial(bin(s).count("1"))
-            * math.factorial(n - 1 - bin(s).count("1"))
-            * (v[s | (1 << i)] - v[s])
-            for s in range(1 << n)
-            if not (s >> i) & 1
-        )
-        phi[c] = num
-    got = {r["channel"]: r["shapley_num"] for r in out}
-    assert got == phi
-    # efficiency: sum phi = n! * (v(N) - v(0))
-    assert sum(phi.values()) == nfact * (v[(1 << n) - 1] - v[0])
-    for r in out:
-        assert r["shapley"] == pytest.approx(phi[r["channel"]] / nfact, rel=0, abs=0)
-
-
-def test_sequential_pattern_replay(spark, sf_dir):
-    """Replay subsequence support in plain python (direct existential
-    scan over each user's ordered timeline, NOT the rank-bounds trick)
-    — proving the bounds shortcut computes exactly GSP support."""
-    from collections import defaultdict
-
-    from dynaledger_spark.catalog import read_table
-    from dynaledger_spark.plans.queries_behavior import _SEQ_MIN_SUPPORT
-
-    ev = read_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", "ts", "event_id"
-    ).collect()
-    timelines = defaultdict(list)
-    for r in ev:
-        timelines[r["user_id"]].append((r["ts"], r["event_id"], r["event_type"]))
-    for u in timelines:
-        timelines[u].sort()
-    sup2, sup3 = defaultdict(int), defaultdict(int)
-    for u, tl in timelines.items():
-        seq = [t for _, _, t in tl]
-        # genuine existential subsequence scan (ADVICE r9 item 5): a
-        # pattern is supported iff ordered indices exist — derived from
-        # prefix/suffix SEEN SETS per position, never from the
-        # first[a]/last[c] bounds the query under test uses.
-        n_ev = len(seq)
-        prefix: list[set] = [set() for _ in range(n_ev)]
-        for j in range(1, n_ev):
-            prefix[j] = prefix[j - 1] | {seq[j - 1]}
-        suffix: list[set] = [set() for _ in range(n_ev)]
-        for j in range(n_ev - 2, -1, -1):
-            suffix[j] = suffix[j + 1] | {seq[j + 1]}
-        pats2, pats3 = set(), set()
-        for j in range(n_ev):
-            b = seq[j]
-            for a in prefix[j]:
-                pats2.add((a, b))  # exists i<j with seq[i]=a, seq[j]=b
-            for a in prefix[j]:
-                for c in suffix[j]:
-                    pats3.add((a, b, c))  # exists i<j<k
-        for p in pats2:
-            sup2[p] += 1
-        for p in pats3:
-            sup3[p] += 1
-    want = {}
-    for (a, b), n in sup2.items():
-        if n >= _SEQ_MIN_SUPPORT:
-            want[f"{a}->{b}"] = n
-    for (a, b, c), n in sup3.items():
-        if n >= _SEQ_MIN_SUPPORT:
-            want[f"{a}->{b}->{c}"] = n
-    out = REGISTRY["sequential_pattern_support"].build(spark, sf_dir).collect()
-    got = {r["pattern"]: r["n_support"] for r in out}
-    assert got == want
-    assert len(got) > 10  # non-vacuous
-    spark.catalog.clearCache()
-
-
 def test_golden_record_purity_and_replay(spark, sf_dir):
     """Entity clusters must be exactly the transitive closure of the FS
     link pairs (python union-find replay), and the purity flag must

@@ -1,5 +1,5 @@
 """Unit tests for the training-data operators: MinHash-LSH, SimHash,
-language-ID, quality features, fingerprints —
+language-ID, fingerprints —
 on crafted corpora where ground truth is known."""
 
 from __future__ import annotations
@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from dynaledger_spark.functions.text import predict_lang, quality_features, rolling_fingerprint
+from dynaledger_spark.functions.text import predict_lang, rolling_fingerprint
 from dynaledger_spark.operators.dedup import (
     exact_jaccard,
     lsh_candidate_pairs,
@@ -125,19 +125,6 @@ def test_predict_lang(spark):
     got = {r.doc_id: r.p for r in df.select("doc_id", predict_lang(F.col("text")).alias("p")).collect()}
     assert got[0] == "en" and got[1] == "es" and got[2] == "fr" and got[3] == "de"
     assert got[4] == "und" and got[5] == "und"
-
-
-def test_quality_features(spark):
-    df = spark.createDataFrame(
-        [(0, "Hello, world! The test has 42 tokens?")], "doc_id long, text string"
-    )
-    r = quality_features(df).collect()[0]
-    assert r.n_tokens == 7
-    assert r.n_chars == 37
-    assert r.punct_ratio == pytest.approx(3 / 37)  # , ! ?
-    # BPE-ish split: Hello , world ! The test has 42 tokens ?  → 10 pieces
-    assert r.n_bpe_tokens == 10
-    assert r.avg_token_len == pytest.approx(37 / 7)
 
 
 def test_rolling_fingerprint_stability(spark):
