@@ -385,7 +385,7 @@ def seasonal_decompose_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: corpus-sized work is ONE hash aggregate to |days| rows; the
     windows and the 7-row seasonal join run on the calendar-bounded
-    series.
+    series (precedent: acf_daily_revenue).
     """
     daily = _daily(spark, sf_dir)
     w7 = W.orderBy("day").rowsBetween(-3, 3)

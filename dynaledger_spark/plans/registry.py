@@ -66,6 +66,7 @@ def load_all() -> dict[str, QuerySpec]:
         queries_text,
         queries_timeseries,
         queries_mlprep,
+        queries_featurestore,
         queries_retrieval,
         queries_tpch,
     )

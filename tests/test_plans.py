@@ -56,7 +56,12 @@ def test_no_cartesian_products(plans):
         "quantile_binning_migration",  # 1-row broadcast of decile bounds
         "sliding_7d_active_users",  # 1-row broadcast of the date bounds
         "rfm_segmentation",  # 1-row broadcast of the recency anchor date
+        "acf_daily_revenue",  # 1-row stats/denominator + 7-row lag broadcast
+        "basket_association_rules",  # 1-row broadcast of the basket total
+        "cms_heavy_hitters",  # 4-row broadcast of the sketch seeds
+        "mad_outlier_days",  # 1-row broadcasts of median and MAD
         "minhash_portable_incremental",  # 1-row broadcast of the id cutoff
+        "km_churn_curve",  # 1-row broadcast of the censoring horizon
         "hll_portable_estimate",  # 1-row broadcast of the exact count
         "priority_sample_subset_sum",  # 1-row broadcast of tau (the k+1-th priority)
         "cusum_changepoint",  # 1-row broadcasts of totals and the peak
@@ -402,7 +407,7 @@ def test_embedding_covariance_broadcasts_means(plans):
 GLOBAL_WINDOW_WHITELIST = {
     # bounded: daily / calendar rollup series (≤ |days| rows)
     "seasonal_decompose_dow", "cusum_changepoint",
-    "theil_sen_daily_trend",
+    "theil_sen_daily_trend", "km_churn_curve", "mad_outlier_days",
     # bounded: post-aggregation grids (deciles, per-group stats, ranks
     # over an already-reduced result)
     "bootstrap_mean_ci", "woe_iv_acctbal_urgent", "lift_gains_deciles",
@@ -601,7 +606,9 @@ def test_unpersist_discipline(spark, sf_dir):
     base_ids = persistent_ids()
     persisters = [
         "copurchase_triangles", "anomaly_dow_hour_baseline",
+        "basket_association_rules", "cms_heavy_hitters",
         "cusum_changepoint", "jaccard_prefix_filter_join",
+        "mad_outlier_days", "rolling_purchase_features",
         "theil_sen_daily_trend", "triplet_sample_contrastive",
         "pagerank_portable_fixedpoint", "kmv_theta_sketch_pairs",
         "lpa_communities_fixed",
