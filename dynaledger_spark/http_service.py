@@ -47,6 +47,11 @@ from dynaledger_spark.api import (
 _RAW_TABLES = ("sec_num", "sec_pre", "sec_sub", "sec_tag")
 _RAW_SOURCES = ("RAW", "Raw")
 
+# A POST body is a pass-through query's SQL text. A larger declared
+# length is refused before any of it is read: read(n) allocates n bytes
+# up front and then waits for the client to send them.
+MAX_BODY_BYTES = 1 << 20
+
 
 def _table_names(data_source: str, tag: str) -> list[str]:
     if data_source in _RAW_SOURCES:
@@ -134,6 +139,10 @@ def _make_handler(engine: SecEngine):
                 if n < 0:
                     # read(-1) would wait for the client to close
                     raise ValueError(f"Invalid Content-Length: {n}")
+                if n > MAX_BODY_BYTES:
+                    # the unread body must not be parsed as a next request
+                    self.close_connection = True
+                    raise _ApiError(413, f"Request body over {MAX_BODY_BYTES} bytes")
                 body = json.loads(self.rfile.read(n) or b"{}")
                 self._reply(200, self._post(self._route(), self._params(), body))
             except _ApiError as e:

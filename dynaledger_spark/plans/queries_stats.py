@@ -1948,8 +1948,8 @@ def mann_whitney_u_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one cents-grain hash aggregate, one window over the distinct
     value axis (domain-bounded — "aggregate first, then window the
-    rollup", the KS/quantile-normalize shape), two 1-row folds combined
-    by broadcast. One corpus exchange total.
+    rollup", the KS shape), two 1-row folds combined by broadcast. One
+    corpus exchange total.
     """
     ev = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     s = ev.select(
@@ -3105,9 +3105,9 @@ _HILL_K = 50
 )
 def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hill estimator (Hill 1975) of the tail index of the document
-    length distribution — the companion diagnostic to zipf_fit_vocab:
-    web-corpus doc lengths are heavy-tailed, and the tail exponent
-    decides how length caps and packing bins should be sized.
+    length distribution: web-corpus doc lengths are heavy-tailed, and
+    the tail exponent decides how length caps and packing bins should
+    be sized.
     gamma = (1/k) * sum_(i<=k) ln(X_(i) / X_(k+1)) over the descending
     order statistics; alpha = 1/gamma. Rows TIED at the threshold
     contribute ln(1)=0, so which tied row the LIMIT keeps cannot change

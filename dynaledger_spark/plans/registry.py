@@ -65,9 +65,6 @@ def load_all() -> dict[str, QuerySpec]:
         queries_stats,
         queries_text,
         queries_timeseries,
-        queries_mlprep,
-        queries_featurestore,
-        queries_retrieval,
         queries_tpch,
     )
 

@@ -1,20 +1,16 @@
-"""Feature-store family (queries_featurestore): python-mirror property
-tests for the non-trivial semantics (point-in-time lookup, rolling
-frames, CMS guarantees, MAD) and plan-shape pins for the scale claims
-made in the docstrings."""
+"""Feature-store point-in-time join (queries_core.asof_purchase_attribution
+over operators/temporal.asof_join): a python brute-force mirror of the
+"latest purchase at-or-before the click" semantics, and a plan-shape pin
+for the union + running-window form the docstrings claim."""
 
 from __future__ import annotations
 
 import datetime as dt
-import math
-from collections import Counter
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from dynaledger_spark.plans.registry import load_all
 
@@ -55,276 +51,48 @@ def _write_events(spark, tmp_path_factory, rows):
 @given(
     rows=st.lists(
         st.tuples(
-            st.integers(min_value=0, max_value=3600),  # seconds offset
+            st.integers(min_value=0, max_value=20),  # seconds offset: ties are common
             st.integers(min_value=1, max_value=3),  # user
             st.sampled_from(["purchase", "click"]),
-            st.integers(min_value=0, max_value=199),  # value -> tier 0-3
+            st.integers(min_value=0, max_value=199),  # value
         ),
         min_size=1,
         max_size=24,
+        # one purchase per (user, instant): the latest one is then unique,
+        # while a click may still share its instant with a purchase
+        unique_by=lambda r: (r[0], r[1], r[2]),
     )
 )
 def test_pit_join_matches_bruteforce(spark, tmp_path_factory, rows):
     d = _write_events(spark, tmp_path_factory, rows)
     got = {
-        r["event_id"]: (r["pit_tier"], r["tier_since"])
-        for r in REGISTRY["pit_join_click_tier"].build(spark, d).collect()
+        r["event_id"]: (r["asof_ts"], r["asof_value"])
+        for r in REGISTRY["asof_purchase_attribution"].build(spark, d).collect()
     }
 
-    # python mirror: per-user change log -> latest change with ts <= click ts
-    events = [
-        (i, _EPOCH + dt.timedelta(seconds=s), u, t, v)
-        for i, (s, u, t, v) in enumerate(rows)
-    ]
-    changes: dict[int, list[tuple[dt.datetime, int, int]]] = {}
-    for i, ts, u, t, v in sorted(events, key=lambda e: (e[2], e[1], e[0])):
-        if t != "purchase":
-            continue
-        tier = v // 50
-        log = changes.setdefault(u, [])
-        if not log or log[-1][2] != tier:
-            log.append((ts, i, tier))
-    # dedupe same-instant changes to max event_id
-    for u, log in changes.items():
-        dedup: dict[dt.datetime, tuple[dt.datetime, int, int]] = {}
-        for ts, i, tier in log:
-            if ts not in dedup or i > dedup[ts][1]:
-                dedup[ts] = (ts, i, tier)
-        changes[u] = sorted(dedup.values())
-
+    # python mirror: the same user's latest purchase with ts <= click ts
     want = {}
-    for i, ts, u, t, v in events:
+    for i, (s, u, t, _) in enumerate(rows):
         if t != "click":
             continue
-        best = None
-        for cts, _, tier in changes.get(u, []):
-            if cts <= ts:
-                best = (tier, cts)
-        want[i] = best if best else (None, None)
+        seen = [(ps, pv) for ps, pu, pt, pv in rows if pt == "purchase" and pu == u and ps <= s]
+        if seen:
+            ps, pv = max(seen)
+            want[i] = (_EPOCH + dt.timedelta(seconds=ps), float(pv))
+        else:
+            want[i] = (None, None)
     assert got == want
 
 
 # ---------------------------------------------------------------------------
-# Rolling 7d/30d features ≡ python brute force
+# Plan shape: the scale claim in the docstrings, pinned
 # ---------------------------------------------------------------------------
-@PROP
-@given(
-    rows=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=40 * 86400),
-            st.integers(min_value=1, max_value=2),
-            st.just("purchase"),
-            st.integers(min_value=0, max_value=50000),  # cents*? value dollars
-        ),
-        min_size=1,
-        max_size=20,
-    )
-)
-def test_rolling_features_match_bruteforce(spark, tmp_path_factory, rows):
-    d = _write_events(spark, tmp_path_factory, rows)
-    got = {
-        r["event_id"]: (r["n_7d"], r["cents_7d"], r["n_30d"], r["cents_30d"])
-        for r in REGISTRY["rolling_purchase_features"].build(spark, d).collect()
-    }
-    events = [
-        (i, s, u, v * 100)  # value is an integer -> cents exact
-        for i, (s, u, _, v) in enumerate(rows)
-    ]
-    want = {}
-    for i, s, u, cents in events:
-        n7 = sum(1 for _, s2, u2, _ in events if u2 == u and s - 7 * 86400 <= s2 <= s)
-        c7 = sum(c for _, s2, u2, c in events if u2 == u and s - 7 * 86400 <= s2 <= s)
-        n30 = sum(1 for _, s2, u2, _ in events if u2 == u and s - 30 * 86400 <= s2 <= s)
-        c30 = sum(c for _, s2, u2, c in events if u2 == u and s - 30 * 86400 <= s2 <= s)
-        want[i] = (n7, c7, n30, c30)
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
-# Quantile normalization ≡ python percent_rank (tie semantics pinned)
-# ---------------------------------------------------------------------------
-@PROP
-@given(
-    vals=st.lists(
-        st.integers(min_value=0, max_value=5), min_size=1, max_size=16
-    )
-)
-def test_quantile_normalize_matches_python(spark, tmp_path_factory, vals):
-    d = _write_events(
-        spark,
-        tmp_path_factory,
-        [(i, 1, "purchase", v) for i, v in enumerate(vals)],
-    )
-    got = {
-        r["event_id"]: r["pct"]
-        for r in REGISTRY["quantile_normalize_by_type"].build(spark, d).collect()
-    }
-    n = len(vals)
-    cents = [v * 100 for v in vals]
-    want = {
-        i: (0.0 if n == 1 else round(sum(1 for o in cents if o < c) / (n - 1), 9))
-        for i, c in enumerate(cents)
-    }
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
-# CMS guarantees on real testdata: est >= exact, and min-row is tight
-# ---------------------------------------------------------------------------
-def test_cms_never_undercounts(spark, sf_dir):
-    rows = REGISTRY["cms_heavy_hitters"].build(spark, sf_dir).collect()
-    assert len(rows) == 20
-    for r in rows:
-        assert r["cms_est"] >= r["exact_n"], r  # the one-sided CMS guarantee
-        assert r["overcount"] == r["cms_est"] - r["exact_n"]
-
-
-# ---------------------------------------------------------------------------
-# MAD ≡ python mirror on real testdata
-# ---------------------------------------------------------------------------
-def test_mad_matches_python(spark, sf_dir):
-    got = {
-        r["day"]: (r["cents"], r["dev"], r["is_outlier"])
-        for r in REGISTRY["mad_outlier_days"].build(spark, sf_dir).collect()
-    }
-    from dynaledger_spark.catalog import read_table
-
-    daily: dict[str, int] = {}
-    for r in (
-        read_table(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select(F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"), "value")
-        .collect()
-    ):
-        # Decimal-exact cents, same as round(value*100) on a 2dp double
-        cents = int(round(r["value"] * 100))
-        daily[r["day"]] = daily.get(r["day"], 0) + cents
-
-    def lower_median(pairs):  # pairs of (sortval, tiebreak)
-        s = sorted(pairs)
-        return s[(len(s) + 1) // 2 - 1][0]
-
-    med = lower_median([(c, d) for d, c in daily.items()])
-    devs = {d: abs(c - med) for d, c in daily.items()}
-    mad = lower_median([(v, d) for d, v in devs.items()])
-    want = {
-        d: (c, devs[d], devs[d] * 10000 > 44478 * mad) for d, c in daily.items()
-    }
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
-# ACF sanity: lag-0 identity would be 1; computed lags are in [-1, 1]
-# ---------------------------------------------------------------------------
-def test_acf_bounded(spark, sf_dir):
-    rows = REGISTRY["acf_daily_revenue"].build(spark, sf_dir).collect()
-    assert [r["k"] for r in rows] == list(range(1, 8))
-    for r in rows:
-        # Cauchy-Schwarz: |sum(a*b)| <= sqrt(sum a^2 * sum b^2) <= den
-        assert abs(r["acf"]) <= 1.0 + 1e-12, r
-
-
-# ---------------------------------------------------------------------------
-# Association rules: identities that must hold exactly
-# ---------------------------------------------------------------------------
-def test_association_rule_identities(spark, sf_dir):
-    rows = REGISTRY["basket_association_rules"].build(spark, sf_dir).collect()
-    assert rows, "testdata must produce at least one rule"
-    for r in rows:
-        assert r["pa"] < r["pb"]
-        assert r["support"] >= 2
-        assert 0.0 < r["conf_ab"] <= 1.0 and 0.0 < r["conf_ba"] <= 1.0
-        assert r["lift"] > 0.0
-        # recover the item counts the ratios imply and cross-check them:
-        # n_a = support / conf_ab must be a positive integer (ratios were
-        # computed from exact integers, so the reconstruction is clean)
-        n_a = r["support"] / r["conf_ab"]
-        n_b = r["support"] / r["conf_ba"]
-        assert math.isclose(n_a, round(n_a), rel_tol=1e-6) and round(n_a) >= r["support"]
-        assert math.isclose(n_b, round(n_b), rel_tol=1e-6) and round(n_b) >= r["support"]
-
-
-# ---------------------------------------------------------------------------
-# Kaplan-Meier ≡ python mirror + estimator invariants
-# ---------------------------------------------------------------------------
-def test_km_churn_matches_python(spark, sf_dir):
-    rows = REGISTRY["km_churn_curve"].build(spark, sf_dir).collect()
-    assert rows
-
-    from dynaledger_spark.catalog import read_table
-
-    spans = (
-        read_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("f"), F.max("ts").alias("l"))
-        .collect()
-    )
-    m = max(r["l"] for r in spans)
-    horizon = m - dt.timedelta(days=1)
-    life = [
-        (
-            int((r["l"] - r["f"]).total_seconds() * 1_000_000) // 3_600_000_000,
-            r["l"] >= horizon,
-        )
-        for r in spans
-    ]
-    deaths = Counter(t for t, cen in life if not cen)
-    cum, dead = 0.0, False
-    want = []
-    for t in sorted(deaths):
-        d = deaths[t]
-        n = sum(1 for lt, _ in life if lt >= t)
-        if d == n:
-            dead = True
-        if not dead:
-            cum += round(math.log((n - d) / n), 12)
-        want.append(
-            (t, d, n, None if dead else round(cum, 9),
-             0.0 if dead else round(math.exp(cum), 9))
-        )
-    got = [
-        (r["t"], r["d"], r["n_at_risk"], r["log_survival"], r["survival"])
-        for r in rows
-    ]
-    assert got == want
-    # estimator invariants
-    surv = [r["survival"] for r in rows]
-    assert all(a >= b for a, b in zip(surv, surv[1:]))  # non-increasing
-    ns = [r["n_at_risk"] for r in rows]
-    assert all(a >= b for a, b in zip(ns, ns[1:]))  # risk sets shrink
-
-
-# ---------------------------------------------------------------------------
-# Plan shapes: the scale claims in the docstrings, pinned
-# ---------------------------------------------------------------------------
-def test_rolling_features_no_sliding_frame(spark, sf_dir):
-    """The prefix-difference rewrite must never reintroduce a bounded
-    sliding RANGE frame: Spark re-aggregates a sliding frame's buffer
-    per row (no retraction), which the skew probe measured as a 586x
-    cliff on a hot user. Running (unbounded-preceding) frames are the
-    only window frames allowed in this plan."""
-    from tests.test_plans import plan_of
-
-    plan = plan_of(REGISTRY["rolling_purchase_features"].build(spark, sf_dir))
-    low = plan.lower()
-    assert str(-7 * 86_400 * 1_000_000) not in plan  # no bounded 7d frame
-    assert str(-30 * 86_400 * 1_000_000) not in plan  # no bounded 30d frame
-    assert "unboundedpreceding" in low
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-
-
-def test_association_rules_broadcasts_dims(spark, sf_dir):
-    from tests.test_plans import plan_of
-
-    plan = plan_of(REGISTRY["basket_association_rules"].build(spark, sf_dir))
-    # item counts + basket total reach the pair stream as broadcasts
-    assert plan.count("BroadcastHashJoin") >= 2, plan
-
-
 def test_pit_join_no_range_join(spark, sf_dir):
-    from tests.test_plans import plan_of
+    from tests.test_plans import _nodes, plan_of
 
-    plan = plan_of(REGISTRY["pit_join_click_tier"].build(spark, sf_dir))
-    # the as-of is the union+window form: no nested-loop, no theta join
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
+    plan = plan_of(REGISTRY["asof_purchase_attribution"].build(spark, sf_dir))
+    # the as-of is the union+window form: no join of any kind, one shuffle
+    assert "Join" not in plan and "CartesianProduct" not in plan
+    assert "Union" in plan
+    assert _nodes(plan, "Exchange") == 1 and "hashpartitioning(user_id" in plan
+    assert "unboundedpreceding" in plan.lower()

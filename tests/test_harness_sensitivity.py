@@ -10,7 +10,7 @@ every family, with two mutation classes:
   at call time while the oracle SQL (baked at import with the original
   value) stays fixed. This is a REAL semantic perturbation of the plan:
   an off-by-factor sketch size, a moved linkage threshold, a dropped
-  propagation round, a smaller feedback set. The gate must fail.
+  propagation round. The gate must fail.
 * RESULT mutations — perturb the built DataFrame in ways that mimic
   classic plan bugs: a lost boundary row (dropped/flipped filter), a
   duplicated row (broken dedup), a single-ulp float drift (wrong
@@ -33,8 +33,6 @@ from pyspark.sql import functions as F
 from dynaledger_spark.plans import (
     queries_approx,
     queries_graph,
-    queries_mlprep,
-    queries_retrieval,
     queries_stats,
     queries_text,
 )
@@ -73,11 +71,9 @@ PLAN_MUTATIONS = [
     ("gk_portable_quantiles", queries_approx, "_GK_EPS_DEN", 16),
     ("lpa_communities_fixed", queries_graph, "_LPA_ROUNDS", 1),
     ("fellegi_sunter_linkage", queries_stats, "_FS_LINK_T", 0.0),
-    ("link_prediction_common_neighbors", queries_mlprep, "_LP_DEG_CAP", 2),
     ("char_entropy_quality", queries_text, "_ENTROPY_KEEP", 2.0),
-    # round-10: a shrunken feedback set and a dropped iteration are the
-    # classic silent-misconfig bugs for these two families
-    ("rm3_query_expansion", queries_retrieval, "_RM3_FB_DOCS", 3),
+    # round-10: a dropped iteration is the classic silent-misconfig bug
+    # for TextRank
     ("textrank_keywords", queries_text, "_TR_ROUNDS", 2),
 ]
 
@@ -230,15 +226,12 @@ RESULT_MUTATIONS = [
     ("validation_summary", _int_off_by_one),
     # round-10
     ("rendezvous_hash_shard", _int_off_by_one),
-    ("rm3_query_expansion", _cross_row_value_swap),
     # round-12: the decimal-text money emit, the boundary-scored RFM
-    # rewrite, the distributed round-robin rank,
-    # and the collapsed prefix-filter oracle must all still be
+    # rewrite and the distributed round-robin rank must all still be
     # constrained by their gates
     ("tpch_q1_pricing_summary", _money_text_tail_bump),
     ("rfm_segmentation", _drop_one_row),
     ("shard_round_robin", _int_off_by_one),
-    ("jaccard_prefix_filter_join", _drop_one_row),
 ]
 
 

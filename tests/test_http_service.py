@@ -458,6 +458,20 @@ def test_negative_content_length_is_400(service):
     assert head.split()[1] == b"400"
 
 
+def test_oversized_content_length_is_413(service):
+    """A declared length over the limit is answered at once, before the
+    body is read: no buffer of that size and no wait for the rest."""
+    svc, _ = service
+    for length in (1 << 40, 10**9):
+        with socket.create_connection(("127.0.0.1", svc.port), timeout=3) as sock:
+            sock.sendall(
+                b"POST /execute-custom-query HTTP/1.1\r\n"
+                b"Content-Length: %d\r\n\r\n{}" % length
+            )
+            head = sock.recv(64)
+        assert head.split()[1] == b"413", length
+
+
 def test_client_disconnect_is_quiet(service, capfd):
     """A client that resets the connection before its reply is written
     costs the server nothing: no traceback on stderr, and the next

@@ -1,17 +1,13 @@
-"""Property and reference-mirror tests for the late round-4 families
-(queries_feature / queries_mlprep): transparent python/numpy mirrors for
-the arithmetic we wrote ourselves, plus the short-document edge cases the
-synthetic corpus never exercises (the ngram_top_bigrams latent-crash
-class from round-3 advice)."""
+"""Property and reference-mirror tests for the late round-4 feature family
+(queries_feature): transparent python mirrors for the arithmetic we wrote
+ourselves, plus the short-document edge cases the synthetic corpus never
+exercises (the ngram_top_bigrams latent-crash class from round-3 advice)."""
 
 from __future__ import annotations
 
-import hashlib
-import math
 import os
 from fractions import Fraction
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -21,9 +17,9 @@ PROP = settings(
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
 
-# populate QUERY_REGISTRY (queries_feature / queries_mlprep register on
-# import through load_all — a standalone run of this module would
-# otherwise see an empty registry)
+# populate QUERY_REGISTRY (queries_feature registers on import through
+# load_all — a standalone run of this module would otherwise see an empty
+# registry)
 from dynaledger_spark.plans.registry import load_all  # noqa: E402
 
 REGISTRY = load_all()
@@ -53,104 +49,6 @@ def _write_events(spark, tmp_path_factory, rows):
 
 def _doc(i, text):
     return (i, text, "en", "src0", len(text))
-
-
-# ---------------------------------------------------------------------------
-# feature hashing ≡ python md5-prefix mirror
-# ---------------------------------------------------------------------------
-@PROP
-@given(
-    texts=st.lists(
-        st.lists(
-            st.text(alphabet="abcdefg", min_size=1, max_size=5),
-            min_size=1,
-            max_size=12,
-        ).map(" ".join),
-        min_size=1,
-        max_size=4,
-    )
-)
-def test_feature_hash_matches_python(spark, tmp_path_factory, texts):
-    d = _write_docs(spark, tmp_path_factory, [_doc(i, t) for i, t in enumerate(texts)])
-    got = {
-        (r["doc_id"], r["bucket"]): r["weight"]
-        for r in REGISTRY["feature_hash_vectorize"].build(spark, d).collect()
-    }
-
-    want: dict[tuple[int, int], int] = {}
-    for i, t in enumerate(texts):
-        for w in t.split(" "):
-            h = int(hashlib.md5(w.encode()).hexdigest()[:10], 16)
-            sgn = 1 if (h & 64) == 0 else -1
-            key = (i, h % 64)
-            want[key] = want.get(key, 0) + sgn
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
-# embedding covariance ≡ numpy population covariance
-# ---------------------------------------------------------------------------
-@PROP
-@given(
-    mat=st.lists(
-        st.lists(
-            st.floats(
-                min_value=-4.0, max_value=4.0, allow_nan=False, width=32
-            ),
-            min_size=3,
-            max_size=3,
-        ),
-        min_size=2,
-        max_size=8,
-    )
-)
-def test_embedding_covariance_matches_numpy(spark, tmp_path_factory, mat):
-    import numpy as np
-
-    d = str(tmp_path_factory.mktemp("mlprep_emb"))
-    rows = [(i, [float(x) for x in v], 0) for i, v in enumerate(mat)]
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(d, "embeddings.parquet")
-    )
-    got = {
-        (r["dim_i"], r["dim_j"]): r["cov"]
-        for r in REGISTRY["embedding_covariance"].build(spark, d).collect()
-    }
-    a = np.array(mat, dtype=np.float32).astype(np.float64)
-    want = np.cov(a, rowvar=False, bias=True)  # population covariance
-    assert len(got) == 6  # 3*(3+1)/2 upper-triangle cells
-    for (i, j), cov in got.items():
-        assert abs(cov - want[i - 1, j - 1]) < 1e-9, (i, j, cov, want[i - 1, j - 1])
-
-
-# ---------------------------------------------------------------------------
-# Zipf fit ≡ numpy least squares on the same log-log points
-# ---------------------------------------------------------------------------
-def test_zipf_fit_matches_numpy(spark, tmp_path_factory):
-    import numpy as np
-
-    # Zipf-ish synthetic corpus: word w_k appears ~ N/k times
-    words = []
-    for k in range(1, 30):
-        words += [f"w{k:02d}"] * (300 // k)
-    docs = [_doc(0, " ".join(words))]
-    d = _write_docs(spark, tmp_path_factory, docs)
-    row = REGISTRY["zipf_fit_vocab"].build(spark, d).collect()[0]
-
-    freq: dict[str, int] = {}
-    for w in words:
-        freq[w] = freq.get(w, 0) + 1
-    ranked = sorted(freq.items(), key=lambda kv: (-kv[1], kv[0]))[:500]
-    x = np.array([round(math.log(r + 1), 12) for r in range(len(ranked))])
-    y = np.array([round(math.log(n), 12) for _, n in ranked])
-    slope, intercept = np.polyfit(x, y, 1)
-    assert row["n_ranks"] == len(ranked)
-    assert abs(row["zipf_slope"] - slope) < 1e-6
-    assert abs(row["zipf_intercept"] - intercept) < 1e-6
-    # a 1/k corpus must fit slope ≈ -1
-    assert -1.2 < row["zipf_slope"] < -0.8
 
 
 # ---------------------------------------------------------------------------
@@ -209,52 +107,6 @@ def test_twap_matches_rational_reference(spark, tmp_path_factory, series):
 
 
 # ---------------------------------------------------------------------------
-# linear attribution conserves attributed purchase value
-# ---------------------------------------------------------------------------
-def test_attribution_conserves_value(spark, tmp_path_factory):
-    from datetime import datetime, timezone
-
-    base = datetime(2024, 3, 1, tzinfo=timezone.utc).timestamp()
-
-    def ev(i, sec, u, typ, v, k):
-        return (
-            i,
-            datetime.fromtimestamp(base + sec, tz=timezone.utc),
-            u,
-            typ,
-            v,
-            '{"k": %d}' % k,
-        )
-
-    day = 86400
-    rows = [
-        # user 1: 3 views then a purchase -> 1/3 credit each
-        ev(1, 0, 1, "view", 0.0, 0),
-        ev(2, 10, 1, "view", 0.0, 1),
-        ev(3, 20, 1, "view", 0.0, 5),  # campaign 5 % 4 = 1
-        ev(4, 30, 1, "purchase", 90.0, 0),
-        # user 2: a view 8 days before the purchase -> OUT of window
-        ev(5, 0, 2, "view", 0.0, 2),
-        ev(6, 8 * day, 2, "purchase", 50.0, 0),
-        # user 3: purchase with no views at all -> unattributed
-        ev(7, 0, 3, "purchase", 70.0, 0),
-        # user 4: view exactly at purchase ts -> excluded (strict <)
-        ev(8, 100, 4, "view", 0.0, 3),
-        ev(9, 100, 4, "purchase", 40.0, 0),
-    ]
-    d = _write_events(spark, tmp_path_factory, rows)
-    got = {
-        r["campaign"]: (r["n_touches"], r["total_credit"])
-        for r in REGISTRY["attribution_linear"].build(spark, d).collect()
-    }
-    # only user 1's purchase is attributed: campaigns 0, 1 (k=1), 1 (k=5)
-    assert set(got) == {0, 1}
-    assert got[0][0] == 1 and abs(got[0][1] - 30.0) < 1e-6
-    assert got[1][0] == 2 and abs(got[1][1] - 60.0) < 1e-6
-    assert abs(sum(c for _, c in got.values()) - 90.0) < 1e-6
-
-
-# ---------------------------------------------------------------------------
 # dup-span: exact copies mark 100%, unique docs 0%, short docs survive
 # ---------------------------------------------------------------------------
 def test_dup_span_copies_and_short_docs(spark, tmp_path_factory):
@@ -304,73 +156,6 @@ def test_readability_proxy_counts(spark, tmp_path_factory):
 
 
 # ---------------------------------------------------------------------------
-# link prediction ≡ brute-force common-neighbor mirror
-# ---------------------------------------------------------------------------
-def test_link_prediction_matches_bruteforce(spark, tmp_path_factory):
-    from itertools import combinations
-
-    # baskets repeated twice so every within-basket pair clears support=2
-    baskets = {
-        1: [1, 2, 3],
-        2: [1, 2, 3],
-        3: [3, 4],
-        4: [3, 4],
-        5: [4, 5],
-        6: [4, 5],
-    }
-    rows = []
-    from datetime import datetime, timezone
-
-    ship = datetime(2024, 1, 1, tzinfo=timezone.utc)
-    ln = 0
-    for ok, parts in baskets.items():
-        for p in parts:
-            ln += 1
-            rows.append(
-                (ok, p, 1, ln, 1.0, 10.0, 0.0, 0.0, "N", "O", ship)
-            )
-    d = str(tmp_path_factory.mktemp("mlprep_li"))
-    spark.createDataFrame(
-        rows,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
-        "l_quantity double, l_extendedprice double, l_discount double, "
-        "l_tax double, l_returnflag string, l_linestatus string, "
-        "l_shipdate timestamp",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(d, "lineitem.parquet")
-    )
-
-    got = {
-        (r["pa"], r["pb"]): r["common_neighbors"]
-        for r in REGISTRY["link_prediction_common_neighbors"]
-        .build(spark, d)
-        .collect()
-    }
-
-    # brute-force mirror (support-2 edges, canonical pa < pb)
-    from collections import Counter
-
-    pair_support = Counter()
-    for parts in baskets.values():
-        for a, b in combinations(sorted(set(parts)), 2):
-            pair_support[(a, b)] += 1
-    edges = {p for p, s in pair_support.items() if s >= 2}
-    adj: dict[int, set] = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    want = {}
-    for a, b in combinations(sorted(adj), 2):
-        if (a, b) in edges:
-            continue
-        cn = len(adj[a] & adj[b])
-        if cn > 0:
-            want[(a, b)] = cn
-    assert got == want
-    assert got, "mirror graph must produce at least one candidate"
-
-
-# ---------------------------------------------------------------------------
 # RFM: partition property — every ordering customer lands in one code
 # ---------------------------------------------------------------------------
 def test_rfm_partitions_all_customers(spark, sf_dir):
@@ -389,48 +174,3 @@ def test_rfm_partitions_all_customers(spark, sf_dir):
     codes = [r["rfm_code"] for r in seg.select("rfm_code").collect()]
     assert len(codes) == len(set(codes))
     assert all(len(c) == 3 and set(c) <= set("1234") for c in codes)
-
-
-# ---------------------------------------------------------------------------
-# prefix-filter join ≡ brute-force Jaccard (full-recall theorem check)
-# ---------------------------------------------------------------------------
-@PROP
-@given(
-    docs=st.lists(
-        st.lists(
-            st.sampled_from([f"w{i}" for i in range(12)]),
-            min_size=6,
-            max_size=14,
-        ).map(" ".join),
-        min_size=2,
-        max_size=8,
-    )
-)
-def test_prefix_filter_join_matches_bruteforce(spark, tmp_path_factory, docs):
-    d = _write_docs(
-        spark, tmp_path_factory, [_doc(i, t) for i, t in enumerate(docs)]
-    )
-    got = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in REGISTRY["jaccard_prefix_filter_join"].build(spark, d).collect()
-    }
-
-    def shingles(t):
-        toks = t.split(" ")
-        k = 5
-        n = max(len(toks) - k, 0)
-        return {" ".join(toks[i : i + k]) for i in range(n + 1)}
-
-    want = {}
-    sets = {i: shingles(t) for i, t in enumerate(docs)}
-    for a in sets:
-        for b in sets:
-            if a >= b:
-                continue
-            inter = len(sets[a] & sets[b])
-            union = len(sets[a] | sets[b])
-            if union and 5 * inter >= 4 * union:
-                want[(a, b)] = round(inter / union, 12)
-    assert got.keys() == want.keys()
-    for k in want:
-        assert abs(got[k] - want[k]) < 1e-9

@@ -56,12 +56,7 @@ def test_no_cartesian_products(plans):
         "quantile_binning_migration",  # 1-row broadcast of decile bounds
         "sliding_7d_active_users",  # 1-row broadcast of the date bounds
         "rfm_segmentation",  # 1-row broadcast of the recency anchor date
-        "acf_daily_revenue",  # 1-row stats/denominator + 7-row lag broadcast
-        "basket_association_rules",  # 1-row broadcast of the basket total
-        "cms_heavy_hitters",  # 4-row broadcast of the sketch seeds
-        "mad_outlier_days",  # 1-row broadcasts of median and MAD
         "minhash_portable_incremental",  # 1-row broadcast of the id cutoff
-        "km_churn_curve",  # 1-row broadcast of the censoring horizon
         "hll_portable_estimate",  # 1-row broadcast of the exact count
         "priority_sample_subset_sum",  # 1-row broadcast of tau (the k+1-th priority)
         "cusum_changepoint",  # 1-row broadcasts of totals and the peak
@@ -75,9 +70,7 @@ def test_no_cartesian_products(plans):
         "tpch_q1_pricing_summary",  # 1-row broadcast of the shipdate anchor
         "rendezvous_hash_shard",  # 9-row broadcast of the shard ring
         "shard_round_robin",  # ≤1024-row bucket-offset inequality self-join (grid-sized)
-        "rm3_query_expansion",  # 1-row corpus-stats + expansion-weight-sum broadcasts
         "theil_sen_daily_trend",  # calendar-bounded |days|x|days| pair loop
-        "bm25_topk_docs",  # 1-row broadcasts of df counts and avgdl
         "ks_two_sample_values",  # 1-row sample-size broadcasts
         "ab_conversion_ztest",  # 1-row × 1-row arm-stats combine
         "tpch_q22_global_sales_opportunity",  # 1-row broadcast of the avg balance
@@ -367,37 +360,6 @@ def test_dup_span_two_exchanges_no_join(plans):
     assert "Join" not in p
 
 
-def test_k_anonymity_single_exchange(plans):
-    """k_anonymity_audit is one map-side-combined hash aggregate."""
-    assert _nodes(plans["k_anonymity_audit"], "Exchange") == 1
-
-
-def test_feature_hash_single_exchange(plans):
-    """feature_hash_vectorize: explode + ONE (doc_id, bucket) hash
-    aggregate — memory O(buckets), never O(vocab)."""
-    assert _nodes(plans["feature_hash_vectorize"], "Exchange") == 1
-
-
-def test_link_prediction_no_cartesian(plans):
-    """Common-neighbor wedges come from an equi-join on the middle
-    vertex + TakeOrdered top-30 — never a cartesian or a global sort."""
-    p = plans["link_prediction_common_neighbors"]
-    assert "TakeOrderedAndProject" in p
-    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-
-
-def test_attribution_no_nested_loop(plans):
-    """The 7-day range join keys on user_id (equi) with the time bounds
-    as join conditions — never a nested-loop over all purchases×views."""
-    p = plans["attribution_linear"]
-    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-
-
-def test_embedding_covariance_broadcasts_means(plans):
-    """The d per-dim mean sums broadcast back onto the d² cell table."""
-    assert plans["embedding_covariance"].count("BroadcastExchange") >= 2
-
-
 # Queries allowed an UNPARTITIONED window (single-partition global sort
 # in WindowExec). One legitimate class only: the window input is a
 # post-aggregation series bounded by the calendar / decile grid / vocab
@@ -407,22 +369,19 @@ def test_embedding_covariance_broadcasts_means(plans):
 GLOBAL_WINDOW_WHITELIST = {
     # bounded: daily / calendar rollup series (≤ |days| rows)
     "seasonal_decompose_dow", "cusum_changepoint",
-    "theil_sen_daily_trend", "km_churn_curve", "mad_outlier_days",
+    "theil_sen_daily_trend",
     # bounded: post-aggregation grids (deciles, per-group stats, ranks
     # over an already-reduced result)
     "bootstrap_mean_ci", "woe_iv_acctbal_urgent", "lift_gains_deciles",
-    "isotonic_calibration_deciles", "zipf_fit_vocab", "vocab_build_topn",
+    "isotonic_calibration_deciles", "vocab_build_topn",
     "tokenize_to_ids", "chi_square_segment_priority",
     "revenue_share_by_nation", "pareto_abc_parts",
-    "triplet_sample_contrastive",
     # bounded: the UniMax waterfill windows run on the 20-row per-source
     # aggregate (|sources|, never corpus-sized)
     "unimax_allocation",
     # bounded: rank transform over the two A/B samples' value column
     # (events.value measurements, one global ECDF/rank by construction)
     "ks_two_sample_values", "mann_whitney_u_test",
-    # bounded: the rank window runs AFTER the top-10 limit (10 rows)
-    "rm3_query_expansion",
 }
 
 
@@ -549,18 +508,6 @@ def test_lsh_recall_eval_broadcasts_df_table(plans):
     assert "BroadcastHashJoin" in plan
 
 
-def test_adamic_adar_single_wedge_exchange(plans):
-    """adamic_adar: the degree table joins as a BROADCAST (the arc
-    stream never shuffles for the lookup), the per-pair score is a
-    hash aggregate with a partial (map-side) phase — never a per-wedge
-    collect_list — and the top-30 is a TakeOrdered, not a global sort."""
-    plan = plans["adamic_adar_link_prediction"]
-    assert "BroadcastHashJoin" in plan
-    assert "collect_list" not in plan
-    assert "TakeOrderedAndProject" in plan
-    assert plan.count("HashAggregate") >= 2
-
-
 def test_dpp_reaches_fact_scan(spark, sf_dir):
     """dpp_partition_pruned_join's whole point: the dim's runtime keys
     must appear as a dynamicpruning subquery in the partitioned fact
@@ -606,10 +553,7 @@ def test_unpersist_discipline(spark, sf_dir):
     base_ids = persistent_ids()
     persisters = [
         "copurchase_triangles", "anomaly_dow_hour_baseline",
-        "basket_association_rules", "cms_heavy_hitters",
-        "cusum_changepoint", "jaccard_prefix_filter_join",
-        "mad_outlier_days", "rolling_purchase_features",
-        "theil_sen_daily_trend", "triplet_sample_contrastive",
+        "cusum_changepoint", "theil_sen_daily_trend",
         "pagerank_portable_fixedpoint", "kmv_theta_sketch_pairs",
         "lpa_communities_fixed",
     ]

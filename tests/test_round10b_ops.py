@@ -1,5 +1,4 @@
-"""Round-10 operator tests: rendezvous sharding, RM3 query expansion
-and TextRank keywords.
+"""Round-10 operator tests: rendezvous sharding and TextRank keywords.
 
 Each operator gets a transparent python replay of the algorithm over
 the raw parquet (independent of the Spark plan AND the DuckDB oracle)
@@ -15,7 +14,6 @@ import os
 from collections import Counter, defaultdict
 
 import pandas as pd
-import pytest
 
 from dynaledger_spark.plans.registry import load_all
 
@@ -57,86 +55,6 @@ def test_rendezvous_replay_and_minimal_movement(spark, sf_dir):
     # ~1/9 of docs move; allow wide slack at tiny SFs but pin the order
     # of magnitude (mod-sharding would move ~8/9)
     assert 0 < moved / total < 3 / 9
-
-
-# ---------------------------------------------------------------------------
-# RM3 query expansion
-# ---------------------------------------------------------------------------
-def test_rm3_full_replay(spark, sf_dir):
-    from dynaledger_spark.plans.queries_retrieval import (
-        B,
-        K1,
-        QUERY_TERMS,
-        _RM3_EXP_TERMS,
-        _RM3_FB_DOCS,
-        _RM3_LAMBDA,
-    )
-
-    docs = pd.read_parquet(
-        os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
-    )
-    toks = {int(r.doc_id): r.text.split() for r in docs.itertuples(index=False)}
-    dl = {d: len(t) for d, t in toks.items()}
-    n_docs = len(toks)
-    avgdl = sum(dl.values()) / n_docs
-    tf = {d: Counter(t) for d, t in toks.items()}
-    df_all = Counter()
-    for d, c in tf.items():
-        df_all.update(c.keys())
-
-    def idf(t):
-        import math
-
-        return math.log((n_docs - df_all[t] + 0.5) / (df_all[t] + 0.5) + 1.0)
-
-    def bm25_contrib(t, d):
-        f = tf[d].get(t, 0)
-        if f == 0:
-            return 0.0
-        return idf(t) * (f * (K1 + 1.0)) / (f + K1 * (1.0 - B + B * dl[d] / avgdl))
-
-    bm25 = {
-        d: round(sum(bm25_contrib(t, d) for t in QUERY_TERMS), 9)
-        for d in toks
-        if any(t in tf[d] for t in QUERY_TERMS)
-    }
-    fb = [d for d, _ in sorted(bm25.items(), key=lambda kv: (-kv[1], kv[0]))][
-        :_RM3_FB_DOCS
-    ]
-
-    w_raw = Counter()
-    for d in fb:
-        for t, f in tf[d].items():
-            if t in QUERY_TERMS or len(t) < 3:
-                continue
-            w_raw[t] += round(f / dl[d], 9)
-    exp = sorted(w_raw.items(), key=lambda kv: (-kv[1], kv[0]))[:_RM3_EXP_TERMS]
-    assert len(exp) == _RM3_EXP_TERMS
-    wsum = sum(w for _, w in exp)
-    qw = {t: (1.0 - _RM3_LAMBDA) * (w / wsum) for t, w in exp}
-    for t in QUERY_TERMS:
-        qw[t] = _RM3_LAMBDA / len(QUERY_TERMS)
-
-    scores = {}
-    for d in toks:
-        s = sum(
-            qw[t] * bm25_contrib(t, d) for t in qw if tf[d].get(t, 0) > 0
-        )
-        if s > 0:
-            scores[d] = s
-    want = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-
-    out = REGISTRY["rm3_query_expansion"].build(spark, sf_dir).collect()
-    assert len(out) == 10
-    got = [(r["doc_id"], r["rm3_score"], r["rnk"]) for r in sorted(out, key=lambda r: r["rnk"])]
-    assert [g[0] for g in got] == [d for d, _ in want]
-    for (gd, gs, rk), (wd, ws) in zip(got, want):
-        assert gs == pytest.approx(ws, rel=1e-6)
-    assert [g[2] for g in got] == list(range(1, 11))
-    # expansion must actually change the ranking vs plain BM25 top-10
-    # (otherwise lambda=1 and the operator is the existing bm25_topk)
-    plain_top = fb
-    assert [g[0] for g in got] != plain_top
 
 
 # ---------------------------------------------------------------------------

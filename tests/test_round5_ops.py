@@ -79,24 +79,6 @@ def test_benford_shares_normalize(spark, sf_dir):
     assert abs(sum(r.benford_share for r in out) - 1.0) <= 1e-9
 
 
-def test_triplet_invariants(spark, sf_dir):
-    from dynaledger_spark.catalog import read_table
-
-    labels = {
-        r.vec_id: r.label
-        for r in read_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "label")
-        .collect()
-    }
-    out = rows(spark, sf_dir, "triplet_sample_contrastive")
-    assert out, "expected triplets"
-    for r in out:
-        assert r.anchor_id % 5 == 0
-        assert r.pos_id != r.anchor_id
-        assert labels[r.pos_id] == r.anchor_label == labels[r.anchor_id]
-        assert labels[r.neg_id] == r.neg_label != r.anchor_label
-
-
 def test_temperature_resampling_flattens_mixture(spark, sf_dir):
     """T=2 reweighting must shrink the head/tail share ratio and respect
     per-source quotas."""

@@ -1,5 +1,5 @@
 """Independent-evidence tests for the round-5 batch-2 entries that
-remain: retrieval, text and statistics.
+remain: text and statistics.
 
 Same doctrine as test_round5_ops: every check is evidence the DuckDB
 oracle cannot manufacture — a brute-force Python recomputation, an
@@ -20,58 +20,6 @@ REGISTRY = load_all()
 
 def rows(spark, sf_dir, name):
     return REGISTRY[name].build(spark, sf_dir).collect()
-
-
-def test_bm25_vs_brute_force(spark, sf_dir):
-    from dynaledger_spark.catalog import read_table
-    from dynaledger_spark.plans.queries_retrieval import B, K1, QUERY_TERMS
-
-    docs = [
-        (r.doc_id, r.text.split(" "))
-        for r in read_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
-    ]
-    n_docs = len(docs)
-    avgdl = sum(len(t) for _, t in docs) / n_docs
-    df = {
-        t: sum(1 for _, toks in docs if t in toks) for t in QUERY_TERMS
-    }
-    scored = []
-    for doc_id, toks in docs:
-        s = 0.0
-        hit = False
-        for t in QUERY_TERMS:
-            tf = toks.count(t)
-            if tf == 0:
-                s += 0.0
-                continue
-            hit = True
-            idf = math.log((n_docs - df[t] + 0.5) / (df[t] + 0.5) + 1.0)
-            s += idf * (tf * (K1 + 1.0)) / (
-                tf + K1 * (1.0 - B + B * (len(toks) / avgdl))
-            )
-        if hit:
-            scored.append((doc_id, round(s, 9)))
-    expect = sorted(scored, key=lambda t: (-t[1], t[0]))[:20]
-    got = [(r.doc_id, r.bm25) for r in rows(spark, sf_dir, "bm25_topk_docs")]
-    assert [d for d, _ in got] == [d for d, _ in expect]
-    for (_, g), (_, e) in zip(got, expect):
-        assert g == pytest.approx(e, abs=1e-8)
-
-
-def test_kwic_context_matches_text(spark, sf_dir):
-    from dynaledger_spark.catalog import read_table
-
-    got = rows(spark, sf_dir, "kwic_concordance")
-    assert got
-    texts = {
-        r.doc_id: r.text.split(" ")
-        for r in read_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
-    }
-    for r in got:
-        toks = texts[r.doc_id]
-        assert toks[r.pos] == "join"
-        lo, hi = max(0, r.pos - 3), min(len(toks) - 1, r.pos + 3)
-        assert r.context == " ".join(toks[lo : hi + 1])
 
 
 def test_lang_confusion_accounting(spark, sf_dir):

@@ -432,45 +432,8 @@ def test_lsh_recall_vs_python(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-7 batch 11: Adamic-Adar, MinHash estimator calibration
+# Round-7 batch 11: MinHash estimator calibration
 # ---------------------------------------------------------------------------
-def test_adamic_adar_vs_python(spark, sf_dir):
-    """Top-30 must equal a python replay over the SAME edge cache:
-    capped-degree wedges, fixed-point integer AA terms
-    (round(1/ln deg, 12) * 1e12 as exact ints), non-edge filter,
-    (score desc, pa, pb) order."""
-    from dynaledger_spark.plans.queries_graph import _edges
-    from dynaledger_spark.plans.queries_mlprep import _LP_DEG_CAP
-
-    edges = {(r.pa, r.pb) for r in _edges(spark, sf_dir).collect()}
-    adj = defaultdict(set)
-    for a, b in edges:
-        adj[a].add(b)
-        adj[b].add(a)
-    scaled = defaultdict(int)
-    ncn = Counter()
-    for s, nbrs in adj.items():
-        deg = len(nbrs)
-        if not (2 <= deg <= _LP_DEG_CAP):
-            continue
-        ts = round(round(1.0 / math.log(deg), 12) * 1e12)
-        ns = sorted(nbrs)
-        for i, pa in enumerate(ns):
-            for pb in ns[i + 1:]:
-                scaled[(pa, pb)] += ts
-                ncn[(pa, pb)] += 1
-    expect = []
-    for (pa, pb), sc in scaled.items():
-        if (pa, pb) in edges:
-            continue
-        expect.append((-round(sc / 1e12, 9), pa, pb, ncn[(pa, pb)]))
-    expect.sort()
-    expect = expect[:30]
-    got = [(-r.aa_score, r.pa, r.pb, r.common_neighbors)
-           for r in rows(spark, sf_dir, "adamic_adar_link_prediction")]
-    assert got == expect
-
-
 def test_minhash_calibration_vs_python(spark, sf_dir):
     """bias/MAE/max must equal a full python MinHash replay (shingles,
     rolling hashes, 16 permutations, 4-band bucketing with the 200
