@@ -51,6 +51,10 @@ _RAW_SOURCES = ("RAW", "Raw")
 # length is refused before any of it is read: read(n) allocates n bytes
 # up front and then waits for the client to send them.
 MAX_BODY_BYTES = 1 << 20
+# Seconds a connection may wait on its client for one read or write. A
+# request line, header or body that stalls longer is given up, so a slow
+# or silent client cannot hold a handler thread.
+REQUEST_TIMEOUT_S = 30
 
 
 def _table_names(data_source: str, tag: str) -> list[str]:
@@ -94,6 +98,10 @@ def _table_info(engine: SecEngine, data_source: str, year: int, quarter: str) ->
 
 def _make_handler(engine: SecEngine):
     class Handler(BaseHTTPRequestHandler):
+        # StreamRequestHandler sets it on the connection's socket; a
+        # request line or header that times out closes the connection
+        timeout = REQUEST_TIMEOUT_S
+
         # Silence per-request stderr logging.
         def log_message(self, fmt, *args):  # noqa: D102
             pass
@@ -112,8 +120,9 @@ def _make_handler(engine: SecEngine):
                 self.send_header("Content-Length", str(len(body)))
                 self.end_headers()
                 self.wfile.write(body)
-            except (BrokenPipeError, ConnectionResetError):
-                # the client hung up before reading its reply
+            except (BrokenPipeError, ConnectionResetError, TimeoutError):
+                # the client hung up, or stopped reading, before its reply
+                # was written
                 self.close_connection = True
 
         def _params(self) -> dict[str, str]:
@@ -143,7 +152,12 @@ def _make_handler(engine: SecEngine):
                     # the unread body must not be parsed as a next request
                     self.close_connection = True
                     raise _ApiError(413, f"Request body over {MAX_BODY_BYTES} bytes")
-                body = json.loads(self.rfile.read(n) or b"{}")
+                try:
+                    raw = self.rfile.read(n)
+                except TimeoutError:
+                    self.close_connection = True
+                    raise _ApiError(408, f"Request body not sent within {self.timeout} s")
+                body = json.loads(raw or b"{}")
                 self._reply(200, self._post(self._route(), self._params(), body))
             except _ApiError as e:
                 self._reply(e.status, {"detail": e.detail})

@@ -18,7 +18,7 @@ import urllib.request
 import pytest
 from pyspark.sql import functions as F
 
-from dynaledger_spark import api
+from dynaledger_spark import api, http_service
 from dynaledger_spark.api import SecEngine
 from dynaledger_spark.http_service import SecHttpService
 from dynaledger_spark.operators.documents import (
@@ -470,6 +470,27 @@ def test_oversized_content_length_is_413(service):
             )
             head = sock.recv(64)
         assert head.split()[1] == b"413", length
+
+
+def test_stalled_body_or_request_line_is_timed_out(monkeypatch):
+    """A client that stops sending partway holds its handler thread only
+    for the request timeout: a body shorter than its declared length is
+    a 408, and a request line never finished closes the connection."""
+    monkeypatch.setattr(http_service, "REQUEST_TIMEOUT_S", 1)
+    svc = SecHttpService(engine=None).start()
+    try:
+        for request, want in (
+            (b"POST /execute-custom-query HTTP/1.1\r\nContent-Length: 3\r\n\r\n{}", b"408"),
+            (b"GET /check-availab", None),
+        ):
+            t0 = time.perf_counter()
+            with socket.create_connection(("127.0.0.1", svc.port), timeout=3) as sock:
+                sock.sendall(request)
+                head = sock.recv(64)
+            assert time.perf_counter() - t0 < 3, request
+            assert (head.split()[1] if head else None) == want, (request, head)
+    finally:
+        svc.stop()
 
 
 def test_client_disconnect_is_quiet(service, capfd):
